@@ -24,31 +24,39 @@ that capability Spark-first:
   multimodal binary columns.
 """
 
-from streaming_spark.session import get_spark
-from streaming_spark.io import load_tables, table_path
-from streaming_spark.operators.stream import (
-    stream,
-    stream_arrow,
-    stream_map,
-    pack_func,
-    read_func,
-    ensure_parallelism,
-)
-from streaming_spark.operators.pipe import pipe_tsv, pipe_arrow, parse_tsv_response
+import importlib
 
-__all__ = [
-    "get_spark",
-    "load_tables",
-    "table_path",
-    "stream",
-    "stream_arrow",
-    "stream_map",
-    "ensure_parallelism",
-    "pack_func",
-    "read_func",
-    "pipe_tsv",
-    "pipe_arrow",
-    "parse_tsv_response",
-]
+# public name -> defining module, resolved on access (PEP 562): a child
+# program that imports only ``streaming_spark.client`` or
+# ``streaming_spark.operators.rserial`` then never imports pyspark.  Not
+# cached here, so a rebinding in the defining module shows through.
+_EXPORTS = {
+    "get_spark": "streaming_spark.session",
+    "load_tables": "streaming_spark.io",
+    "table_path": "streaming_spark.io",
+    "stream": "streaming_spark.operators.stream",
+    "stream_arrow": "streaming_spark.operators.stream",
+    "stream_map": "streaming_spark.operators.stream",
+    "ensure_parallelism": "streaming_spark.operators.stream",
+    "pack_func": "streaming_spark.operators.stream",
+    "read_func": "streaming_spark.operators.stream",
+    "pipe_tsv": "streaming_spark.operators.pipe",
+    "pipe_arrow": "streaming_spark.operators.pipe",
+    "parse_tsv_response": "streaming_spark.operators.pipe",
+}
+
+__all__ = list(_EXPORTS)
+
+
+def __getattr__(name: str):
+    module = _EXPORTS.get(name)
+    if module is None:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    return getattr(importlib.import_module(module), name)
+
+
+def __dir__() -> list[str]:
+    return sorted(set(globals()) | set(__all__))
+
 
 __version__ = "0.1.0"

@@ -82,13 +82,146 @@ def test_tricky_strings_roundtrip(spark):
         assert got[i] == c, f"case {i}: {c!r} -> {got[i]!r}"
 
 
-def test_pipe_allowlist(spark):
-    df = spark.range(10).coalesce(1)
-    with pytest.raises(PermissionError, match="allowlist"):
-        pipe_tsv(df, "cat", allowed_commands=["wc -l"])
-    # allowlisted command still runs
-    out = pipe_tsv(df, "cat", chunk_rows=100, allowed_commands=["cat"])
-    assert out.count() >= 1
+@pytest.mark.parametrize("source", ["argument", "env"])
+@pytest.mark.parametrize("pipe", ["pipe_tsv", "pipe_df", "pipe_arrow"])
+def test_pipe_allowlist(spark, monkeypatch, pipe, source):
+    """All three pipes share one allowlist: a command off the list is
+    refused before any child is forked, whether the list comes from
+    ``allowed_commands`` or from STREAMING_SPARK_PIPE_ALLOWLIST; a listed
+    command builds the plan (and, for the TSV pipe, whose ``cat`` child
+    speaks the protocol, runs)."""
+    from streaming_spark.operators import pipe as pipe_mod
+
+    df = spark.range(3).select(F.col("id").cast("double").alias("v"))
+    call = {
+        "pipe_tsv": lambda **kw: pipe_mod.pipe_tsv(df, "cat", **kw),
+        "pipe_df": lambda **kw: pipe_mod.pipe_df(df, "cat", "v DOUBLE", **kw),
+        "pipe_arrow": lambda **kw: pipe_mod.pipe_arrow(df, "cat", "v DOUBLE", **kw),
+    }[pipe]
+
+    def allow(commands):
+        if source == "env":
+            monkeypatch.setenv("STREAMING_SPARK_PIPE_ALLOWLIST", ":".join(commands))
+            return {}
+        return {"allowed_commands": commands}
+
+    with pytest.raises(PermissionError, match=f"{pipe}: .*allowlist"):
+        call(**allow(["wc -l", "sort"]))
+    out = call(**allow(["wc -l", "cat"]))
+    if pipe == "pipe_tsv":
+        assert out.count() >= 1
+
+
+def test_pipe_tsv_bytes_match_row_rule(spark):
+    r"""The columnar framing puts on the wire exactly the bytes of the
+    row-wise rule, ``escape_field`` over ``collect()`` rows joined by tabs,
+    for every scalar type, with batches smaller than a chunk and chunks
+    that do not divide a batch."""
+    import datetime
+    import decimal
+
+    cases = [
+        (1, 2**40, 0.5, decimal.Decimal("1.25"), True, datetime.date(2020, 1, 31),
+         datetime.datetime(2021, 3, 4, 5, 6, 7, 89), "plain", b"ab"),
+        (-2, -(2**62), float("nan"), decimal.Decimal("-0.01"), False,
+         datetime.date(1969, 12, 31), datetime.datetime(1999, 12, 31, 23, 59, 59),
+         "a\tb", b"\t\x00"),
+        (None, None, None, None, None, None, None, None, None),
+        (0, 0, float("inf"), decimal.Decimal("0.00"), True, datetime.date(2000, 2, 29),
+         datetime.datetime(2000, 1, 1), "", b""),
+        (3, 7, float("-inf"), decimal.Decimal("123456.78"), False,
+         datetime.date(2024, 7, 1), datetime.datetime(2024, 7, 1, 12, 0, 0, 500000),
+         "line\nbreak\rcr\\back\\slash", None),
+        (4, 8, -0.0, None, None, None, None, "\\N", b"x"),
+        (5, 9, 1e300, decimal.Decimal("9.99"), True, datetime.date(1, 1, 1), None,
+         "tab\there \\N\\\\", b"\xff"),
+    ]
+    rows = [c for _ in range(4) for c in cases]  # 28 rows
+    df = spark.createDataFrame(
+        rows,
+        "i INT, b BIGINT, d DOUBLE, m DECIMAL(10,2), f BOOLEAN, dt DATE, "
+        "ts TIMESTAMP, s STRING, bin BINARY",
+    ).coalesce(1)
+    lines = ["\t".join(escape_field(v) for v in r) for r in df.collect()]
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "6")
+    try:
+        for chunk_rows in (4, 5, 9):
+            got = [r.response for r in pipe_tsv(df, "cat", chunk_rows=chunk_rows).collect()]
+            want = [
+                "\n".join(lines[lo : lo + chunk_rows])
+                for lo in range(0, len(lines), chunk_rows)
+            ]
+            assert got == want + [None], chunk_rows
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_pipe_tsv_rejects_nested_columns(spark):
+    """Arrays, maps and structs have no form on the scalar TSV wire: the
+    call fails, naming the column, before any child is forked."""
+    base = spark.range(2)
+    for col in (
+        F.array(F.col("id")),
+        F.create_map(F.col("id"), F.col("id")),
+        F.struct(F.col("id")),
+    ):
+        with pytest.raises(TypeError, match="'nested'"):
+            pipe_tsv(base.select("id", col.alias("nested")), "cat")
+
+
+def test_pipe_tsv_forks_a_child_per_empty_partition(spark):
+    """Every partition gets its own child, even an empty one, and each
+    child's final message comes back (reference: one child per instance)."""
+    df = spark.range(0, 8, 1, 4).filter(F.col("id") < 2)
+    got = sorted(map(tuple, pipe_tsv(df, "cat").collect()))
+    assert got == [(0, 0, "0\n1"), (0, 1, None), (1, 0, None), (2, 0, None), (3, 0, None)]
+
+
+@pytest.mark.parametrize(
+    "module", ["streaming_spark.client", "streaming_spark.operators.rserial"]
+)
+def test_pipe_child_imports_skip_pyspark(module):
+    """A pipe child imports only the client or rserial module; the
+    package's lazy re-exports keep pyspark out of that process."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = f"import sys, {module}; assert 'pyspark' not in sys.modules"
+    env = dict(os.environ, PYTHONPATH=root)
+    subprocess.run([sys.executable, "-c", code], env=env, check=True)
+
+
+def test_package_reexports_resolve():
+    import streaming_spark
+
+    for name in streaming_spark.__all__:
+        assert callable(getattr(streaming_spark, name)), name
+        assert name in dir(streaming_spark)
+    with pytest.raises(AttributeError):
+        getattr(streaming_spark, "not_an_export")
+
+
+def test_pipe_arrow_side_input_broadcasts_are_bounded(spark):
+    """pipe_arrow ships its side input through the bounded broadcast
+    registry that stream() uses, so repeated calls cannot pile up
+    broadcast blocks."""
+    import pandas as pd2
+
+    from streaming_spark.operators import stream as stream_mod
+    from streaming_spark.operators.pipe import pipe_arrow
+
+    before = list(stream_mod._LIVE_BROADCASTS)
+    side = pd2.DataFrame({"k": [1, 2, 3]})
+    df = spark.range(3)
+    for _ in range(stream_mod._MAX_LIVE_BROADCASTS + 4):
+        pipe_arrow(df, "cat", "id BIGINT", side_input=side)
+    live = list(stream_mod._LIVE_BROADCASTS)
+    assert len(live) == stream_mod._MAX_LIVE_BROADCASTS
+    assert not any(any(bc is old for old in before) for bc in live)
 
 
 ARROW_CLIENT_COUNT = (
