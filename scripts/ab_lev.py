@@ -53,14 +53,16 @@ def main() -> None:
     arms = {"banded": _BANDED_VERIFY, "fullmat": _fullmat_verify}
     times: dict[str, list[float]] = {a: [] for a in arms}
     counts: dict[str, set[int]] = {a: set() for a in arms}
-    for _ in range(rounds):
-        for arm, verify in arms.items():
-            fuzzy_mod._verify_dist = verify
-            t0 = time.perf_counter()
-            n = REGISTRY[NAME](spark, SF_DIR).count()
-            times[arm].append(round(time.perf_counter() - t0, 3))
-            counts[arm].add(n)
-    fuzzy_mod._verify_dist = _BANDED_VERIFY
+    try:
+        for _ in range(rounds):
+            for arm, verify in arms.items():
+                fuzzy_mod._verify_dist = verify
+                t0 = time.perf_counter()
+                n = REGISTRY[NAME](spark, SF_DIR).count()
+                times[arm].append(round(time.perf_counter() - t0, 3))
+                counts[arm].add(n)
+    finally:
+        fuzzy_mod._verify_dist = _BANDED_VERIFY
     for arm in arms:
         ts = times[arm]
         print(

@@ -339,12 +339,12 @@ def _prune_main(
         minhash_dedup_pairs,
         minhash_signatures,
     )
+    from streaming_spark.operators.index_commit import read_table_or_empty
     from streaming_spark.operators.neardup_index import (
         _bands_schema,
         _combo_filter,
         _load_params,
         _pb_expr,
-        _read_or_empty,
         neardup_index_append,
         neardup_index_build,
         neardup_index_pairs,
@@ -397,7 +397,7 @@ def _prune_main(
             (r["band_id"], r["pb"])
             for r in dbands.select("band_id", "pb").distinct().collect()
         ]
-        full = _read_or_empty(spark, idx + "/bands", _bands_schema(p))
+        full = read_table_or_empty(spark, idx + "/bands", _bands_schema(p))
         pf, pr, pb_ = _scan_stats(full.filter(_combo_filter(combos)))
         tf, tb = _tree_bytes(idx + "/bands")
         print(json.dumps({

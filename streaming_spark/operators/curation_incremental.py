@@ -71,7 +71,12 @@ import shutil
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from streaming_spark.operators.index_commit import write_marker
+from streaming_spark.operators.index_commit import (
+    APPEND_PENDING,
+    partition_values,
+    read_table_or_empty,
+    write_marker,
+)
 from streaming_spark.operators.digest_index import (
     _load_params as _dig_params,
     digest_index_append,
@@ -420,7 +425,7 @@ def _heal_digest_index(spark, idx: str, expected_ids) -> None:
         digest_index_tombstone,
     )
 
-    marker = os.path.join(idx, ".append_pending")
+    marker = os.path.join(idx, APPEND_PENDING)
     if os.path.isfile(marker):
         with open(marker, encoding="utf-8") as f:
             ids = json.load(f).get("ids")
@@ -456,7 +461,7 @@ def _heal_neardup_index(spark, idx: str, expected_ids) -> None:
         with open(takedown, encoding="utf-8") as f:
             ids = json.load(f).get("ids", [])
         neardup_index_tombstone(spark, idx, ids)  # same-ids resume
-    append = os.path.join(idx, ".append_pending")
+    append = os.path.join(idx, APPEND_PENDING)
     if os.path.isfile(append):
         with open(append, encoding="utf-8") as f:
             ids = json.load(f).get("ids")
@@ -642,7 +647,7 @@ def curation_backfill(
     if not resuming:
         lp = DI._load_params(lines_idx)
         present = (
-            DI._read_or_empty(
+            read_table_or_empty(
                 spark, os.path.join(lines_idx, "occ"), DI._occ_schema(lp)
             )
             .select(id_col)
@@ -674,7 +679,7 @@ def curation_backfill(
         eager=True
     )
     n_present = (
-        DI._read_or_empty(
+        read_table_or_empty(
             spark, os.path.join(lines_idx, "occ"), DI._occ_schema(lp)
         )
         .select(id_col)
@@ -697,13 +702,8 @@ def curation_backfill(
     # with the late batch (pb-pruned probe), their removal sets from
     # the line index's ARGMIN owners, their cleaned hashes re-derived
     late_digests = dig_late.select("h").distinct()
-    pbs = sorted(
-        r[0]
-        for r in late_digests.select(
-            DI._pb_expr(F.col("h"), lp["n_prefixes"]).alias("pb")
-        )
-        .distinct()
-        .collect()
+    pbs = partition_values(
+        late_digests, DI._pb_expr(F.col("h"), lp["n_prefixes"])
     )
     affected_ids = (
         DI._live_occ(spark, lines_idx, lp, pbs=pbs)
@@ -721,13 +721,8 @@ def curation_backfill(
         .localCheckpoint(eager=True)
     )
     aff_digests = aff_occ.select("h").distinct()
-    dig_pbs = sorted(
-        r[0]
-        for r in aff_digests.select(
-            DI._pb_expr(F.col("h"), lp["n_prefixes"]).alias("pb")
-        )
-        .distinct()
-        .collect()
+    dig_pbs = partition_values(
+        aff_digests, DI._pb_expr(F.col("h"), lp["n_prefixes"])
     )
     owners = (
         DI._live_occ(spark, lines_idx, lp, pbs=dig_pbs)

@@ -60,16 +60,20 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from streaming_spark.operators.index_commit import (
+    APPEND_PENDING,
+    Compaction,
+    admit_recovery_takedown,
     clear_marker,
-    park_and_swap,
-    read_marker,
+    ledger_ids,
+    partition_values,
     read_table_or_empty,
+    refuse_parked_compact,
+    refuse_pending_append,
     write_marker,
 )
 
@@ -102,34 +106,15 @@ def _check_siblings(index_dir: str, what: str) -> None:
     """Refuse an index whose on-disk state says a previous operation
     crashed mid-mutation — same recover-first posture as the near-dup
     and ANN index families."""
-    park = os.path.join(index_dir, ".compact_old")
-    if os.path.isdir(park):
-        raise RuntimeError(
-            f"{what}: {park!r} exists — a previous digest_index_compact "
-            "crashed mid-swap and some partitions are parked there "
-            "(absent from the index).  Recover first: move each parked "
-            "directory back, remove the .compact/.compact_old siblings, "
-            "then re-run the compact."
-        )
-    pending = os.path.join(index_dir, ".append_pending")
-    if os.path.isfile(pending):
-        raise RuntimeError(
-            f"{what}: {pending!r} exists — a previous "
-            "digest_index_append crashed mid-landing (occurrence rows "
-            "may be partially live, so owners and decisions could "
-            "silently diverge from the batch arm).  Recover first: run "
-            "digest_index_tombstone with the ids recorded in the marker "
-            "(it clears this marker on completion), then "
-            "digest_index_compact, then re-ingest the batch under the "
-            "same ids."
-        )
+    refuse_parked_compact(index_dir, what, "digest_index")
+    refuse_pending_append(
+        index_dir, what, "digest_index",
+        "occurrence rows may be partially live, so owners and decisions "
+        "could silently diverge from the batch arm",
+    )
 
 
 # ------------------------------------------------------------- sub-tables
-
-
-def _dir(index_dir: str, name: str) -> str:
-    return os.path.join(index_dir, name)
 
 
 def _pb_expr(digest_col, n_prefixes: int):
@@ -146,14 +131,10 @@ def _occ_schema(p: dict) -> str:
     return ", ".join(cols) + ", pb INT, ib INT"
 
 
-def _read_or_empty(spark, path: str, schema: str) -> DataFrame:
-    return read_table_or_empty(spark, path, schema)
-
-
 def _doc_tombs(spark, index_dir: str, p: dict) -> DataFrame:
-    return _read_or_empty(
+    return read_table_or_empty(
         spark,
-        _dir(index_dir, "doc_tombstones"),
+        os.path.join(index_dir, "doc_tombstones"),
         f"{p['order_cols'][0]} {p['order_types'][0]}",
     ).distinct()
 
@@ -162,7 +143,9 @@ def _live_occ(spark, index_dir: str, p: dict, pbs=None) -> DataFrame:
     """Occurrence rows minus takedown victims (merge-on-read),
     optionally pruned to a ``pb=`` partition list (planning-time
     partition pruning — the filter reaches the scan)."""
-    occ = _read_or_empty(spark, _dir(index_dir, "occ"), _occ_schema(p))
+    occ = read_table_or_empty(
+        spark, os.path.join(index_dir, "occ"), _occ_schema(p)
+    )
     if pbs is not None:
         occ = occ.filter(F.col("pb").isin(pbs))
     tombs = _doc_tombs(spark, index_dir, p)
@@ -230,8 +213,8 @@ def digest_index_append(
     returned frame is eagerly checkpointed BEFORE the landing, so
     consuming it never re-probes a table that now contains the delta.
 
-    The landing is guarded by an ``.append_pending`` marker (atomic
-    tmp + rename, recording the batch's order ids) — while it exists
+    The landing is guarded by an append-pending marker (atomic tmp +
+    rename, recording the batch's order ids) — while it exists
     every other operation refuses the index; recovery = tombstone the
     marker's ids (clears the marker), compact, re-ingest.  Recovery is
     exact: a partially landed batch's rows vanish merge-on-read once
@@ -304,17 +287,12 @@ def digest_index_append(
     # d is already checkpointed, so the distinct is cheap to recompute —
     # no extra checkpoint/count jobs (gate-cost: every append runs this)
     delta_ids = d.select(id0).distinct()
-    ibs = sorted(
-        r[0]
-        for r in delta_ids.select(
-            _ib_expr(F.col(id0), p["n_id_buckets"]).alias("ib")
-        )
-        .distinct()
-        .collect()
-    )
+    ibs = partition_values(delta_ids, _ib_expr(F.col(id0), p["n_id_buckets"]))
     mb0 = F.broadcast if n_delta <= 50_000 else (lambda x: x)
     if not (
-        _read_or_empty(spark, _dir(index_dir, "occ"), _occ_schema(p))
+        read_table_or_empty(
+            spark, os.path.join(index_dir, "occ"), _occ_schema(p)
+        )
         .filter(F.col("ib").isin(ibs))
         .select(id0)
         .join(mb0(delta_ids), id0, "left_semi")
@@ -369,7 +347,7 @@ def digest_index_append(
     # DISTINCT order ids, not occurrence rows: the line family lands
     # many rows per doc, and the recovery tombstone needs the doc ids
     # (limit+1 keeps the collect bounded without a separate count job).
-    pending = _dir(index_dir, ".append_pending")
+    pending = os.path.join(index_dir, APPEND_PENDING)
     id_rows = d.select(ocols[0]).distinct().limit(100_001).collect()
     batch_ids = (
         sorted(r[0] for r in id_rows) if len(id_rows) <= 100_000 else None
@@ -380,7 +358,7 @@ def digest_index_append(
         "ib", _ib_expr(F.col(ocols[0]), p["n_id_buckets"])
     ).repartition("pb", "ib").write.mode("append").partitionBy(
         "pb", "ib"
-    ).parquet(_dir(index_dir, "occ"))
+    ).parquet(os.path.join(index_dir, "occ"))
     clear_marker(pending)
 
     if stats_out is not None:
@@ -413,58 +391,20 @@ def digest_index_tombstone(
     ledger file lands or it does not), so no pending marker is needed.
     Doubles as the crashed-append recovery entry point: a takedown
     covering ALL of a pending append's recorded ids proceeds and clears
-    the ``.append_pending`` marker."""
+    the append-pending marker."""
     p = _load_params(index_dir)
-    park = os.path.join(index_dir, ".compact_old")
-    if os.path.isdir(park):
-        raise RuntimeError(
-            f"digest_index_tombstone: {park!r} exists — recover the "
-            "crashed compact first (see digest_index_compact)."
-        )
-    if isinstance(ids, DataFrame):
-        # cast to the index's frozen id type: the ib partition expr
-        # hashes the value, and xxhash64(int) != xxhash64(bigint) — an
-        # uncast frame would prune to the wrong partitions silently
-        tomb = ids.select(
-            F.col(ids.columns[0])
-            .cast(p["order_types"][0])
-            .alias(p["order_cols"][0])
-        ).distinct()
-    else:
-        tomb = spark.createDataFrame(
-            [(i,) for i in ids],
-            f"{p['order_cols'][0]} {p['order_types'][0]}",
-        ).distinct()
-    tomb = tomb.localCheckpoint(eager=True)
+    refuse_parked_compact(index_dir, "digest_index_tombstone", "digest_index")
+    tomb = ledger_ids(
+        spark, ids, p["order_cols"][0], p["order_types"][0]
+    ).localCheckpoint(eager=True)
     id_list = sorted(r[0] for r in tomb.collect())  # ledger-small
-
-    append_marker = _dir(index_dir, ".append_pending")
-    am = read_marker(append_marker)
-    if am is not None:
-        am_ids = am.get("ids")
-        if am_ids is None:
-            raise RuntimeError(
-                f"digest_index_tombstone: {append_marker!r} exists but "
-                f"the crashed batch was too large ({am.get('n')} rows) "
-                "for its ids to be recorded — recover manually: DELETE "
-                "the marker file first (this takedown refuses while it "
-                "exists), then tombstone the batch's ids "
-                "(caller-known), compact, then re-ingest."
-            )
-        if not set(am_ids) <= set(id_list):
-            raise RuntimeError(
-                f"digest_index_tombstone: {append_marker!r} exists — a "
-                "previous digest_index_append crashed mid-landing.  "
-                "Recover first: re-run the takedown including ALL the "
-                "ids recorded in the marker (it clears the marker), "
-                "then compact, then re-ingest the batch."
-            )
+    recovering = admit_recovery_takedown(index_dir, "digest_index", id_list)
 
     tomb.coalesce(1).write.mode("append").parquet(
-        _dir(index_dir, "doc_tombstones")
+        os.path.join(index_dir, "doc_tombstones")
     )
-    if os.path.isfile(append_marker):
-        clear_marker(append_marker)  # crashed-append recovery complete
+    if recovering:
+        clear_marker(recovering)  # crashed-append recovery complete
     if stats_out is not None:
         stats_out.update(tombstoned=len(id_list))
 
@@ -473,32 +413,24 @@ def digest_index_compact(spark, index_dir: str) -> dict:
     """Fold the tombstone ledger into the files, rewriting ONLY the
     victims' ``ib=`` id-bucket partitions (computed driver-side from
     the bounded ledger) — unaffected buckets keep their exact files.
-    Crash-safe with the park-then-swap discipline of
-    neardup_index_compact / ann_index_compact: rewrites stage under
-    ``.compact``, replaced directories park under ``.compact_old``
-    until every swap lands (other operations refuse the index while a
-    park exists), then the park is removed BEFORE the ledger — a crash
-    between those two leaves a correct, idempotently re-compactable
-    index (merge-on-read already excludes the folded rows).
+    Crash-safe through the compaction all three index families share
+    (index_commit.Compaction): the rewrite stages inside the index,
+    replaced directories park there until every swap lands (other
+    operations refuse the index while a park exists), then the park is
+    removed BEFORE the ledger — a crash between those two leaves a
+    correct, idempotently re-compactable index (merge-on-read already
+    excludes the folded rows).
 
     Returns stats: occ_rows_removed, parts_rewritten."""
     p = _load_params(index_dir)
     _check_siblings(index_dir, "digest_index_compact")
     doc_t = _doc_tombs(spark, index_dir, p).localCheckpoint(eager=True)
     stats = {"occ_rows_removed": 0, "parts_rewritten": 0}
-    if doc_t.isEmpty():
-        return stats
-
     id0 = p["order_cols"][0]
-    ibs = sorted(
-        r[0]
-        for r in doc_t.select(
-            _ib_expr(F.col(id0), p["n_id_buckets"]).alias("ib")
-        )
-        .distinct()
-        .collect()
-    )
-    occ_root = _dir(index_dir, "occ")
+    ibs = partition_values(doc_t, _ib_expr(F.col(id0), p["n_id_buckets"]))
+    if not ibs:  # empty ledger
+        return stats
+    occ_root = os.path.join(index_dir, "occ")
     parts = []
     if os.path.isdir(occ_root):
         for pb_dir in sorted(os.listdir(occ_root)):
@@ -506,27 +438,19 @@ def digest_index_compact(spark, index_dir: str) -> dict:
                 continue
             for ib in ibs:
                 rel = f"occ/{pb_dir}/ib={ib}"
-                if os.path.isdir(_dir(index_dir, rel)):
+                if os.path.isdir(os.path.join(index_dir, rel)):
                     parts.append(rel)
 
-    comp = _dir(index_dir, ".compact")
-    park = _dir(index_dir, ".compact_old")
-    shutil.rmtree(comp, ignore_errors=True)
+    comp = Compaction(index_dir)
     if parts:
-        affected = _read_or_empty(spark, occ_root, _occ_schema(p)).filter(
-            F.col("ib").isin(ibs)
+        affected = read_table_or_empty(
+            spark, occ_root, _occ_schema(p)
+        ).filter(F.col("ib").isin(ibs))
+        _, stats["occ_rows_removed"] = comp.rewrite(
+            "occ", affected, [(doc_t, [id0])], ("pb", "ib"), parts
         )
-        survivors = affected.join(F.broadcast(doc_t), id0, "left_anti")
-        stats["occ_rows_removed"] = affected.count() - survivors.count()
-        survivors.repartition("pb", "ib").write.mode("overwrite").partitionBy(
-            "pb", "ib"
-        ).parquet(os.path.join(comp, "occ"))
-
-    park_and_swap(index_dir, comp, park, parts)
+    comp.commit(["doc_tombstones"])
     stats["parts_rewritten"] = len(parts)
-    shutil.rmtree(park, ignore_errors=True)  # park first, ledger second
-    shutil.rmtree(_dir(index_dir, "doc_tombstones"), ignore_errors=True)
-    shutil.rmtree(comp, ignore_errors=True)
     return stats
 
 

@@ -1,13 +1,13 @@
-"""Commit primitives shared by the staged-index families.
+"""The one owner of the staged-index lifecycle moves.
 
 The three staged-index families — exact-dedup digests
 (operators/digest_index.py), MinHash near-dup (operators/
 neardup_index.py) and ANN codes (operators/similarity.py
-``ann_index_*``) — guard their non-atomic multi-file mutations with the
-same three primitives, which used to be re-implemented per family
-(three copies of the same crash-window reasoning is how the ADVICE r12
-compact-ordering bug happened once already — VERDICT r13 #4 asked for
-this seam):
+``ann_index_*``) — guard their non-atomic multi-file mutations and fold
+their tombstone ledgers through this module alone.  These moves used to
+be re-implemented per family, and three copies of the same crash-window
+reasoning is how the ADVICE r12 compact-ordering bug happened once
+already (VERDICT r13 #4 asked for this seam).  Three commit primitives:
 
 - **Atomic marker** (:func:`write_marker` / :func:`read_marker` /
   :func:`clear_marker`): a small JSON file recording an in-flight
@@ -28,10 +28,19 @@ this seam):
   (never half-written) — recovery is renaming it back, and every
   operation refuses that state.
 
+The moves built on them: victim-partition compaction
+(:class:`Compaction` — stage the affected partitions minus the ledger
+victims under ``.compact``, swap them in through a ``.compact_old``
+park, rows removed observed on the write), the crash gates
+(:func:`refuse_parked_compact`, :func:`refuse_pending_append`,
+:func:`admit_recovery_takedown`), takedown id normalisation
+(:func:`ledger_ids`) and the victims' partition-value collect
+(:func:`partition_values`).
+
 The local-filesystem implementation below is the default and the only
 one this repository ships.  **Object-store contract** for a deployment
 on rename-less storage (S3-like — the 100 TB posture): an
-implementation must provide the same three operations with the same
+implementation must provide the same three primitives with the same
 crash guarantees, which maps naturally onto a manifest-committed table
 format —
 
@@ -54,6 +63,11 @@ from __future__ import annotations
 import json
 import os
 import shutil
+
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
+
+APPEND_PENDING = ".append_pending"
 
 
 def write_marker(path: str, payload: dict) -> None:
@@ -165,3 +179,188 @@ def read_table_or_empty(spark, path: str, schema: str):
         return spark.read.parquet(path)
     except AnalysisException:
         return spark.createDataFrame([], schema)
+
+
+def _compact_dirs(index_dir: str, sibling: bool = False) -> tuple[str, str]:
+    """``(staging, park)`` of a compaction: inside the index, or beside
+    it (``sibling``) for an ANN staged dir, which IS the table."""
+    base = index_dir.rstrip("/") if sibling else os.path.join(index_dir, "")
+    return base + ".compact", base + ".compact_old"
+
+
+def partition_values(df: DataFrame, col) -> list:
+    """The sorted distinct values of one partition expression over
+    ``df`` — the driver-side list a pruned read or a victim-partition
+    rewrite filters on.  The distinct runs in Spark, so the collect is
+    bounded by the partition count, not by ``df``."""
+    return sorted(r[0] for r in df.select(col).distinct().collect())
+
+
+def refuse_parked_compact(
+    index_dir: str, what: str, family: str, sibling: bool = False
+) -> None:
+    """Refuse an index whose compaction park exists: a compact crashed
+    mid-swap, so some partitions sit under the park and are absent from
+    the table — serving or extending it would silently drop rows."""
+    park = _compact_dirs(index_dir, sibling)[1]
+    if os.path.isdir(park):
+        raise RuntimeError(
+            f"{what}: {park!r} exists — a previous {family}_compact "
+            "crashed mid-swap and some partitions are parked there "
+            "(absent from the index).  Recover first: move each parked "
+            f"directory back under {index_dir!r}, remove the "
+            ".compact/.compact_old siblings, then re-run the compact."
+        )
+
+
+def refuse_pending_append(
+    index_dir: str, what: str, family: str, why: str
+) -> None:
+    """Refuse an index whose append marker exists: an append crashed
+    mid-landing (``why`` says what that leaves inconsistent)."""
+    pending = os.path.join(index_dir, APPEND_PENDING)
+    if os.path.isfile(pending):
+        raise RuntimeError(
+            f"{what}: {pending!r} exists — a previous {family}_append "
+            f"crashed mid-landing ({why}).  Recover first: run "
+            f"{family}_tombstone with the ids recorded in the marker (it "
+            f"clears this marker on completion), then {family}_compact, "
+            "then re-ingest the batch under the same ids."
+        )
+
+
+def admit_recovery_takedown(index_dir: str, family: str, ids) -> str | None:
+    """The crashed-append gate of a takedown: one covering ALL the ids
+    the append marker recorded is the documented recovery (the
+    half-landed rows vanish merge-on-read) and proceeds; any other
+    refuses, as does every takedown when the batch was too large for
+    its ids to be recorded.  Returns the marker path when this takedown
+    is the recovery — the caller clears it once its ledger landed."""
+    marker = os.path.join(index_dir, APPEND_PENDING)
+    pending = read_marker(marker)
+    if pending is None:
+        return None
+    what = f"{family}_tombstone: {marker!r} exists"
+    if pending.get("ids") is None:
+        raise RuntimeError(
+            f"{what} but the crashed batch was too large "
+            f"({pending.get('n')} rows) for its ids to be recorded — "
+            "recover manually: DELETE the marker file first (this "
+            "takedown refuses while it exists), then tombstone the "
+            "batch's ids (caller-known), compact, then re-ingest."
+        )
+    if not set(pending["ids"]) <= set(ids):
+        raise RuntimeError(
+            f"{what} — a previous {family}_append crashed mid-landing.  "
+            "Recover first: re-run the takedown including ALL the ids "
+            "recorded in the marker (it clears the marker), then "
+            "compact, then re-ingest the batch."
+        )
+    return marker
+
+
+def ledger_ids(spark, ids, col: str, dtype: str) -> DataFrame:
+    """A takedown's ids — a frame (its ``col`` column, else its first)
+    or a driver-side list — as a distinct one-column frame of the
+    index's id type.  The cast is load-bearing: partition expressions
+    hash the value and xxhash64(int) != xxhash64(bigint), so an uncast
+    frame would prune to the wrong partitions silently."""
+    if isinstance(ids, DataFrame):
+        src = col if col in ids.columns else ids.columns[0]
+        return ids.select(F.col(src).cast(dtype).alias(col)).distinct()
+    rows = [(i,) for i in ids]
+    return spark.createDataFrame(rows, f"`{col}` {dtype}").distinct()
+
+
+def _on_session_clone(df: DataFrame) -> DataFrame:
+    """``df``'s plan bound to a fresh clone of its session.  An
+    Observation registers with its session's ObservationManager, and
+    once that exists the session no longer serializes (Spark 4.1), so a
+    later task closure that captures the session — a fitted ML model's
+    training summary does — fails "Task not serializable".  Observing on
+    a clone leaves the caller's session as it was."""
+    spark = df.sparkSession
+    jdataset = spark._jvm.org.apache.spark.sql.classic.Dataset
+    clone = spark._jsparkSession.cloneSession()
+    return DataFrame(jdataset.ofRows(clone, df._jdf.logicalPlan()), spark)
+
+
+class Compaction:
+    """One victim-partition compaction of the index at ``root``: stage
+    each rewrite with :meth:`rewrite`, land them all with
+    :meth:`commit`.  A write that raises removes the staging, leaving
+    the table's files untouched and no park behind."""
+
+    def __init__(self, root: str, sibling: bool = False):
+        self.root = root
+        self.staged, self.park = _compact_dirs(root, sibling)
+        self.rel_paths: list[str] = []
+        shutil.rmtree(self.staged, ignore_errors=True)
+
+    def rewrite(
+        self,
+        sub: str,
+        rows: DataFrame,
+        ledgers,
+        part_cols=(),
+        rel_paths=(),
+        finish=None,
+    ) -> tuple[int, int]:
+        """Stage ``rows`` minus the victims of every ``(ledger, key
+        columns)`` pair (each ledger distinct on its key) at
+        ``<staging>/<sub>``, partitioned by ``part_cols`` or as one
+        file; ``rel_paths`` are the partition dirs it replaces and
+        ``finish`` shapes the survivors.  Returns (rows read, rows
+        removed), observed on the write job: each ledger joins as a
+        broadcast flag and ONE Observation ABOVE the layout shuffle
+        counts before the filter.  Observations below it (either side
+        of an anti-join) lose their metrics when every row is removed —
+        adaptive execution replaces the empty shuffle stage."""
+        marked, gone, flags = rows, F.lit(False), []
+        for i, (ledger, on) in enumerate(ledgers):
+            flag = f"_folded{i}"
+            marked = marked.join(
+                F.broadcast(ledger.select(*on).withColumn(flag, F.lit(True))),
+                list(on),
+                "left",
+            )
+            gone = gone | F.col(flag).isNotNull()
+            flags.append(flag)
+        marked = _on_session_clone(
+            marked.repartition(*part_cols) if part_cols else marked.coalesce(1)
+        )
+        seen = Observation()
+        kept = marked.observe(
+            seen, F.count(F.lit(1)).alias("rows"),
+            F.count_if(gone).alias("removed"),
+        ).filter(~gone).drop(*flags)
+        kept = finish(kept) if finish else kept
+        try:
+            kept.write.mode("overwrite").partitionBy(*part_cols).parquet(
+                os.path.join(self.staged, sub)
+            )
+        except BaseException:
+            shutil.rmtree(self.staged, ignore_errors=True)
+            raise
+        self.rel_paths += rel_paths
+        metrics = seen.get  # only after the write: it blocks until then
+        return metrics["rows"], metrics["removed"]
+
+    def commit(self, ledger_dirs=()) -> tuple[int, int]:
+        """ONE :func:`park_and_swap` over every staged rewrite, then
+        the park removed FIRST and the ``ledger_dirs`` (under the root)
+        second: once every swap landed the park is dead weight, and a
+        park-less index with its ledgers still present serves correctly
+        (merge-on-read excludes the folded rows) and re-compacts
+        idempotently.  The reverse order had a window where the
+        recovery hint ("move parked directories back") would silently
+        resurrect tombstoned rows with the ledgers already gone.
+        Returns ``(n_rewritten, n_removed)``."""
+        counts = park_and_swap(
+            self.root, self.staged, self.park, self.rel_paths
+        )
+        shutil.rmtree(self.park, ignore_errors=True)
+        for name in ledger_dirs:
+            shutil.rmtree(os.path.join(self.root, name), ignore_errors=True)
+        shutil.rmtree(self.staged, ignore_errors=True)
+        return counts

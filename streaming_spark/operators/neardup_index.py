@@ -97,11 +97,17 @@ from streaming_spark.operators.dedup import (
     verify_jaccard,
 )
 from streaming_spark.operators.index_commit import (
+    APPEND_PENDING,
+    Compaction,
+    admit_recovery_takedown,
     clear_marker,
+    ledger_ids,
     link_tree,
-    park_and_swap,
+    partition_values,
     read_marker,
     read_table_or_empty,
+    refuse_parked_compact,
+    refuse_pending_append,
     swap_directory,
     write_marker,
 )
@@ -141,22 +147,11 @@ def _load_params(index_dir: str) -> dict:
 
 
 def _check_siblings(index_dir: str, what: str) -> None:
-    """Refuse an index whose on-disk state says a compact crashed
-    mid-swap (same posture as similarity._check_index_siblings): some
-    partitions are parked under ``.compact_old`` and absent from the
-    tables, so serving or extending the index would silently drop
-    rows.  Recovery: move every directory under the park back to its
-    original place (its rewrite, if any, is under ``.compact``), delete
-    both siblings, then re-run the compact."""
-    park = os.path.join(index_dir, ".compact_old")
-    if os.path.isdir(park):
-        raise RuntimeError(
-            f"{what}: {park!r} exists — a previous neardup_index_compact "
-            "crashed mid-swap and some partitions are parked there "
-            "(absent from the index).  Recover first: move each parked "
-            "directory back, remove the .compact/.compact_old siblings, "
-            "then re-run the compact."
-        )
+    """Refuse an index whose on-disk state says a previous operation
+    crashed mid-mutation: a compact mid-swap (partitions parked, absent
+    from the tables), a takedown mid-mutation, or an append
+    mid-landing — same posture as the digest and ANN families."""
+    refuse_parked_compact(index_dir, what, "neardup_index")
     marker = os.path.join(index_dir, ".takedown_pending")
     if os.path.isfile(marker):
         raise RuntimeError(
@@ -167,18 +162,11 @@ def _check_siblings(index_dir: str, what: str) -> None:
             "(every step is idempotent); it clears the marker on "
             "completion."
         )
-    pending = os.path.join(index_dir, ".append_pending")
-    if os.path.isfile(pending):
-        raise RuntimeError(
-            f"{what}: {pending!r} exists — a previous "
-            "neardup_index_append crashed mid-landing (band rows may be "
-            "live without their batch's pairs, so the pair set has "
-            "silently diverged from the batch arm).  Recover first: run "
-            "neardup_index_tombstone with the ids recorded in the marker "
-            "(it clears this marker on completion), then "
-            "neardup_index_compact, then re-ingest the batch under the "
-            "same ids."
-        )
+    refuse_pending_append(
+        index_dir, what, "neardup_index",
+        "band rows may be live without their batch's pairs, so the pair "
+        "set has silently diverged from the batch arm",
+    )
 
 
 def _pb_combos(df: DataFrame, p: dict) -> list:
@@ -197,26 +185,7 @@ def _pb_combos(df: DataFrame, p: dict) -> list:
     )
 
 
-def _check_compact_park(index_dir: str, what: str) -> None:
-    """The compact-park half of :func:`_check_siblings` alone — the
-    takedown's resume path must pass its own pending marker but still
-    refuse a crashed compact's parked partitions."""
-    park = os.path.join(index_dir, ".compact_old")
-    if os.path.isdir(park):
-        raise RuntimeError(
-            f"{what}: {park!r} exists — a previous neardup_index_compact "
-            "crashed mid-swap and some partitions are parked there "
-            "(absent from the index).  Recover first: move each parked "
-            "directory back, remove the .compact/.compact_old siblings, "
-            "then re-run the compact."
-        )
-
-
 # ------------------------------------------------------------- sub-tables
-
-
-def _dir(index_dir: str, name: str) -> str:
-    return os.path.join(index_dir, name)
 
 
 def _sb_expr(id_col, n_id_buckets: int):
@@ -225,10 +194,6 @@ def _sb_expr(id_col, n_id_buckets: int):
 
 def _pb_expr(bh_col, n_prefixes: int):
     return F.pmod(bh_col, F.lit(n_prefixes)).cast("int")
-
-
-def _read_or_empty(spark, path: str, schema: str) -> DataFrame:
-    return read_table_or_empty(spark, path, schema)
 
 
 def _bands_schema(p: dict) -> str:
@@ -265,7 +230,9 @@ def _combo_filter(combos) -> "F.Column":
 def _live_bands(spark, index_dir: str, p: dict, combo_filter=None) -> DataFrame:
     """Band rows minus doc tombstones (merge-on-read), optionally pruned
     to a (band_id, pb) combo list."""
-    bands = _read_or_empty(spark, _dir(index_dir, "bands"), _bands_schema(p))
+    bands = read_table_or_empty(
+        spark, os.path.join(index_dir, "bands"), _bands_schema(p)
+    )
     if combo_filter is not None:
         bands = bands.filter(combo_filter)
     tombs = _doc_tombs(spark, index_dir, p)
@@ -273,15 +240,15 @@ def _live_bands(spark, index_dir: str, p: dict, combo_filter=None) -> DataFrame:
 
 
 def _doc_tombs(spark, index_dir: str, p: dict) -> DataFrame:
-    return _read_or_empty(
-        spark, _dir(index_dir, "doc_tombstones"), f"id {p['id_type']}"
+    return read_table_or_empty(
+        spark, os.path.join(index_dir, "doc_tombstones"), f"id {p['id_type']}"
     ).distinct()
 
 
 def _pair_tombs(spark, index_dir: str, p: dict) -> DataFrame:
-    return _read_or_empty(
+    return read_table_or_empty(
         spark,
-        _dir(index_dir, "pair_tombstones"),
+        os.path.join(index_dir, "pair_tombstones"),
         f"id_a {p['id_type']}, id_b {p['id_type']}",
     ).distinct()
 
@@ -293,15 +260,11 @@ def _sigs_for_ids(
     ``sb=`` partitions (their hash buckets are computed driver-side from
     a bounded id frame, or passed precomputed via ``sbs``), so a
     delta-bound candidate set never scans the whole signature table."""
-    sbs = sbs if sbs is not None else sorted(
-        r[0]
-        for r in ids.select(
-            _sb_expr(F.col("id"), p["n_id_buckets"]).alias("sb")
-        )
-        .distinct()
-        .collect()
+    if sbs is None:
+        sbs = partition_values(ids, _sb_expr(F.col("id"), p["n_id_buckets"]))
+    sigs = read_table_or_empty(
+        spark, os.path.join(index_dir, "sigs"), _sigs_schema(p)
     )
-    sigs = _read_or_empty(spark, _dir(index_dir, "sigs"), _sigs_schema(p))
     if sbs:
         sigs = sigs.filter(F.col("sb").isin(sbs))
     return sigs.join(ids, "id", "left_semi").select("id", "shingles", "sig")
@@ -460,8 +423,8 @@ def neardup_index_append(
     replay of a committed batch cannot silently double-land.
 
     Not atomic: the landing is three writes (sigs, bands, pairs), so an
-    ``.append_pending`` marker (atomic tmp + rename, recording the
-    batch's ids) is written before the first landing and cleared after
+    append-pending marker (atomic tmp + rename, recording the batch's
+    ids) is written before the first landing and cleared after
     the pairs/retraction step — while it exists every other operation
     REFUSES the index (a half-landed batch's band rows are otherwise
     live and silently divergent from the batch arm).  Recovery:
@@ -538,17 +501,14 @@ def neardup_index_append(
         # probe reads the sig table's id column pruned to the delta's
         # sb= partitions (any non-tombstoned id present in sigs is
         # indexed: orphan states are marker-refused above).
-        delta_sbs = sorted(
-            r[0]
-            for r in delta_sigs.select(
-                _sb_expr(F.col("id"), p["n_id_buckets"]).alias("sb")
-            )
-            .distinct()
-            .collect()
+        delta_sbs = partition_values(
+            delta_sigs, _sb_expr(F.col("id"), p["n_id_buckets"])
         )
         mb0 = F.broadcast if n_delta <= 50_000 else (lambda df: df)
         if not (
-            _read_or_empty(spark, _dir(index_dir, "sigs"), _sigs_schema(p))
+            read_table_or_empty(
+                spark, os.path.join(index_dir, "sigs"), _sigs_schema(p)
+            )
             .filter(F.col("sb").isin(delta_sbs))
             .select("id")
             .join(mb0(delta_sigs.select("id")), "id", "left_semi")
@@ -568,7 +528,7 @@ def neardup_index_append(
         )
         caches.append(delta_bands)
         delta_bands.count()
-        first_ingest = not os.path.isdir(_dir(index_dir, "bands"))
+        first_ingest = not os.path.isdir(os.path.join(index_dir, "bands"))
 
         # pending marker BEFORE the first landing (atomic tmp+rename,
         # same posture as .takedown_pending): a crash anywhere in the
@@ -576,7 +536,7 @@ def neardup_index_append(
         # operation refuses the index until the batch is recovered —
         # nothing proceeds silently over a half-landed batch.  Ids are
         # recorded (bounded) so the recovery tombstone can be verified.
-        pending = _dir(index_dir, ".append_pending")
+        pending = os.path.join(index_dir, APPEND_PENDING)
         batch_ids = (
             sorted(r["id"] for r in delta_sigs.select("id").collect())
             if n_delta <= 100_000
@@ -590,11 +550,13 @@ def neardup_index_append(
         delta_sigs.withColumn(
             "sb", _sb_expr(F.col("id"), p["n_id_buckets"])
         ).repartition("sb").write.mode("append").partitionBy("sb").parquet(
-            _dir(index_dir, "sigs")
+            os.path.join(index_dir, "sigs")
         )
         delta_bands.repartition("band_id", "pb").write.mode(
             "append"
-        ).partitionBy("band_id", "pb").parquet(_dir(index_dir, "bands"))
+        ).partitionBy("band_id", "pb").parquet(
+            os.path.join(index_dir, "bands")
+        )
 
         if first_ingest:
             # empty index: the probe IS the batch pipeline (no index
@@ -612,7 +574,7 @@ def neardup_index_append(
             n_new = new_pairs.count()
             if n_new:
                 new_pairs.write.mode("append").parquet(
-                    _dir(index_dir, "pairs")
+                    os.path.join(index_dir, "pairs")
                 )
             clear_marker(pending)
             if stats_out is not None:
@@ -693,7 +655,9 @@ def neardup_index_append(
         ).localCheckpoint(eager=True)
         n_new = new_pairs.count()
         if n_new:
-            new_pairs.write.mode("append").parquet(_dir(index_dir, "pairs"))
+            new_pairs.write.mode("append").parquet(
+                os.path.join(index_dir, "pairs")
+            )
 
         # cap crossings: buckets whose OLD (index-only) live size was
         # within the cap but whose base ∪ delta size now exceeds it —
@@ -747,8 +711,8 @@ def _retract_unsupported(
     ``sb=``, the shared buckets' current sizes by ``(band_id, pb)=``."""
     cap = p["max_bucket"]
     aff_keys = _expand_pairs(crossed, require_delta=False, idx_only=True)
-    live_pairs = _read_or_empty(
-        spark, _dir(index_dir, "pairs"), _pairs_schema(p)
+    live_pairs = read_table_or_empty(
+        spark, os.path.join(index_dir, "pairs"), _pairs_schema(p)
     ).join(_pair_tombs(spark, index_dir, p), ["id_a", "id_b"], "left_anti")
     aff = (
         live_pairs.join(aff_keys, ["id_a", "id_b"], "left_semi")
@@ -802,7 +766,7 @@ def _retract_unsupported(
     n = retract.count()
     if n:
         retract.write.mode("append").parquet(
-            _dir(index_dir, "pair_tombstones")
+            os.path.join(index_dir, "pair_tombstones")
         )
     return n
 
@@ -843,50 +807,20 @@ def neardup_index_tombstone(
     tombstones" set so it is stable whether or not the final landing
     already happened."""
     p = _load_params(index_dir)
-    _check_compact_park(index_dir, "neardup_index_tombstone")
+    # the takedown's resume path must pass its own pending marker, so
+    # it refuses only a crashed compact's park, not every sibling state
+    refuse_parked_compact(
+        index_dir, "neardup_index_tombstone", "neardup_index"
+    )
     cap = p["max_bucket"]
-    if isinstance(ids, DataFrame):
-        # cast to the index's frozen id type: the sb partition expr
-        # hashes the value, and xxhash64(int) != xxhash64(bigint) — an
-        # uncast frame would prune to the wrong partitions silently
-        tomb = ids.select(
-            F.col(ids.columns[0]).cast(p["id_type"]).alias("id")
-        ).distinct()
-    else:
-        tomb = spark.createDataFrame(
-            [(i,) for i in ids], f"id {p['id_type']}"
-        ).distinct()
-    tomb = tomb.localCheckpoint(eager=True)
+    tomb = ledger_ids(spark, ids, "id", p["id_type"]).localCheckpoint(
+        eager=True
+    )
     id_list = sorted(r["id"] for r in tomb.collect())  # ledger-small
+    # the crashed-append recovery entry point (see neardup_index_append)
+    recovering = admit_recovery_takedown(index_dir, "neardup_index", id_list)
 
-    # crashed-append recovery entry point: a takedown covering ALL of a
-    # pending append's ids is exactly the documented recovery (the
-    # half-landed rows vanish merge-on-read; see neardup_index_append),
-    # so it proceeds and clears the append marker on completion.  Any
-    # other takedown is refused while the marker exists.
-    append_marker = _dir(index_dir, ".append_pending")
-    am = read_marker(append_marker)
-    if am is not None:
-        am_ids = am.get("ids")
-        if am_ids is None:
-            raise RuntimeError(
-                f"neardup_index_tombstone: {append_marker!r} exists but "
-                f"the crashed batch was too large ({am.get('n')} rows) "
-                "for its ids to be recorded — recover manually: DELETE "
-                "the marker file first (this takedown refuses while it "
-                "exists), then tombstone the batch's ids (caller-known), "
-                "compact, then re-ingest."
-            )
-        if not set(am_ids) <= set(id_list):
-            raise RuntimeError(
-                f"neardup_index_tombstone: {append_marker!r} exists — a "
-                "previous neardup_index_append crashed mid-landing.  "
-                "Recover first: re-run the takedown including ALL the "
-                "ids recorded in the marker (it clears the marker), then "
-                "compact, then re-ingest the batch."
-            )
-
-    marker = _dir(index_dir, ".takedown_pending")
+    marker = os.path.join(index_dir, ".takedown_pending")
     existing_marker = read_marker(marker)
     if existing_marker is not None:
         pending = existing_marker.get("ids", [])
@@ -901,7 +835,7 @@ def neardup_index_tombstone(
     # ledger parked but the rewrite not yet renamed in → restore the
     # park (the recompute below reproduces the same rewrite); a stale
     # park next to a complete ledger just gets dropped
-    ledger_dir = _dir(index_dir, "pair_tombstones")
+    ledger_dir = os.path.join(index_dir, "pair_tombstones")
     old_ledger = ledger_dir + ".old"
     new_ledger = ledger_dir + ".new"
     if os.path.isdir(old_ledger) and not os.path.isdir(ledger_dir):
@@ -931,7 +865,9 @@ def neardup_index_tombstone(
     n_resurrected = 0
     if hit_combos:
         pruned = (
-            _read_or_empty(spark, _dir(index_dir, "bands"), _bands_schema(p))
+            read_table_or_empty(
+                spark, os.path.join(index_dir, "bands"), _bands_schema(p)
+            )
             .filter(_combo_filter(hit_combos))
             .join(F.broadcast(prev_tombs), "id", "left_anti")
         )
@@ -976,8 +912,8 @@ def neardup_index_tombstone(
             verified = verify_jaccard(
                 cand, cand_sigs, p["threshold"]
             ).localCheckpoint(eager=True)
-            existing = _read_or_empty(
-                spark, _dir(index_dir, "pairs"), _pairs_schema(p)
+            existing = read_table_or_empty(
+                spark, os.path.join(index_dir, "pairs"), _pairs_schema(p)
             ).select("id_a", "id_b")
             to_append = verified.join(
                 existing, ["id_a", "id_b"], "left_anti"
@@ -1006,20 +942,20 @@ def neardup_index_tombstone(
     if not os.path.isfile(marker):
         write_marker(marker, {"ids": id_list})
     if n_readmitted:
-        to_append.write.mode("append").parquet(_dir(index_dir, "pairs"))
+        to_append.write.mode("append").parquet(
+            os.path.join(index_dir, "pairs")
+        )
     if n_resurrected:
         keep.coalesce(1).write.mode("overwrite").parquet(new_ledger)
-        os.rename(ledger_dir, old_ledger)
-        os.rename(new_ledger, ledger_dir)
-        shutil.rmtree(old_ledger, ignore_errors=True)
+        swap_directory(ledger_dir, new_ledger)
     # the doc-ledger landing is last (one coalesced file; a resume's
     # duplicate append is collapsed by the reader's distinct)
     tomb.coalesce(1).write.mode("append").parquet(
-        _dir(index_dir, "doc_tombstones")
+        os.path.join(index_dir, "doc_tombstones")
     )
     clear_marker(marker)
-    if os.path.isfile(append_marker):
-        clear_marker(append_marker)  # crashed-append recovery complete
+    if recovering:
+        clear_marker(recovering)  # crashed-append recovery complete
     if stats_out is not None:
         stats_out.update(
             tombstoned=len(id_list),
@@ -1037,11 +973,12 @@ def neardup_index_compact(spark, index_dir: str) -> dict:
     it rewrites whole).  The live pair set is UNCHANGED by construction
     — re-admissions happened at tombstone time — which tests pin.
 
-    Crash-safe with the same park-then-swap discipline as
-    ann_index_compact: rewrites stage under ``<index_dir>/.compact``,
-    replaced directories park under ``<index_dir>/.compact_old`` until
-    every swap lands, and every other operation refuses the index while
-    a park exists (nothing is ever only in process-scoped scratch).
+    Crash-safe through the compaction all three index families share
+    (index_commit.Compaction): rewrites stage inside the index,
+    replaced directories park there until every swap lands — a
+    partition whose every row was tombstoned parks without replacement
+    — and every other operation refuses the index while a park exists
+    (nothing is ever only in process-scoped scratch).
 
     Returns stats: sig_rows_removed, band_rows_removed,
     pair_rows_removed, sig_parts_rewritten, band_parts_rewritten."""
@@ -1059,97 +996,58 @@ def neardup_index_compact(spark, index_dir: str) -> dict:
     if doc_t.isEmpty() and pair_t.isEmpty():
         return stats
 
-    comp = _dir(index_dir, ".compact")
-    park = _dir(index_dir, ".compact_old")
-    shutil.rmtree(comp, ignore_errors=True)
-    swaps: list[tuple[str, str]] = []  # (relative part dir, has rewrite)
-
+    comp = Compaction(index_dir)
     # one driver-side sb derivation shared by the pruned victim-sig
     # read and the partition list
-    sbs = sorted(
-        r[0]
-        for r in doc_t.select(
-            _sb_expr(F.col("id"), p["n_id_buckets"]).alias("sb")
-        )
-        .distinct()
-        .collect()
-    )
+    sbs = partition_values(doc_t, _sb_expr(F.col("id"), p["n_id_buckets"]))
     victim_sigs = _sigs_for_ids(spark, index_dir, p, doc_t, sbs=sbs)
     sig_parts = [
         f"sigs/sb={sb}"
         for sb in sbs
-        if os.path.isdir(_dir(index_dir, f"sigs/sb={sb}"))
+        if os.path.isdir(os.path.join(index_dir, f"sigs/sb={sb}"))
     ]
     if sig_parts:
-        affected = _read_or_empty(
-            spark, _dir(index_dir, "sigs"), _sigs_schema(p)
+        affected = read_table_or_empty(
+            spark, os.path.join(index_dir, "sigs"), _sigs_schema(p)
         ).filter(F.col("sb").isin(sbs))
-        survivors = affected.join(F.broadcast(doc_t), "id", "left_anti")
-        stats["sig_rows_removed"] = affected.count() - survivors.count()
-        survivors.repartition("sb").write.mode("overwrite").partitionBy(
-            "sb"
-        ).parquet(os.path.join(comp, "sigs"))
-        swaps += sig_parts
+        _, stats["sig_rows_removed"] = comp.rewrite(
+            "sigs", affected, [(doc_t, ["id"])], ("sb",), sig_parts
+        )
 
     victim_bands = _banded(victim_sigs, p["bands"], sig_len=p["num_perm"])
     combos = _pb_combos(victim_bands, p)
     band_parts = [
         f"bands/band_id={b}/pb={pb}"
         for b, pb in combos
-        if os.path.isdir(_dir(index_dir, f"bands/band_id={b}/pb={pb}"))
+        if os.path.isdir(os.path.join(index_dir, f"bands/band_id={b}/pb={pb}"))
     ]
     if band_parts:
-        affected = _read_or_empty(
-            spark, _dir(index_dir, "bands"), _bands_schema(p)
+        affected = read_table_or_empty(
+            spark, os.path.join(index_dir, "bands"), _bands_schema(p)
         ).filter(_combo_filter(combos))
-        survivors = affected.join(F.broadcast(doc_t), "id", "left_anti")
-        stats["band_rows_removed"] = affected.count() - survivors.count()
-        survivors.repartition("band_id", "pb").write.mode(
-            "overwrite"
-        ).partitionBy("band_id", "pb").parquet(os.path.join(comp, "bands"))
-        swaps += band_parts
-
-    pairs_raw = _read_or_empty(
-        spark, _dir(index_dir, "pairs"), _pairs_schema(p)
-    )
-    live = (
-        pairs_raw.join(pair_t, ["id_a", "id_b"], "left_anti")
-        .join(
-            F.broadcast(doc_t.select(F.col("id").alias("id_a"))),
-            "id_a",
-            "left_anti",
+        _, stats["band_rows_removed"] = comp.rewrite(
+            "bands", affected, [(doc_t, ["id"])], ("band_id", "pb"),
+            band_parts,
         )
-        .join(
-            F.broadcast(doc_t.select(F.col("id").alias("id_b"))),
-            "id_b",
-            "left_anti",
-        )
-        .select("id_a", "id_b", "jaccard")
-    )
-    stats["pair_rows_removed"] = pairs_raw.count() - live.count()
-    live.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(comp, "pairs")
-    )
-    swaps.append("pairs")
 
-    # swap loop: park each replaced directory, rename the rewrite in.
-    # A missing rewrite (every row of the partition was tombstoned)
-    # parks without replacement — exactly ann_index_compact's contract.
-    park_and_swap(index_dir, comp, park, swaps)
+    # the pairs table rewrites whole: both ledgers fold in, a doc
+    # tombstone on either side of the pair
+    _, stats["pair_rows_removed"] = comp.rewrite(
+        "pairs",
+        read_table_or_empty(
+            spark, os.path.join(index_dir, "pairs"), _pairs_schema(p)
+        ),
+        [
+            (pair_t, ["id_a", "id_b"]),
+            (doc_t.select(F.col("id").alias("id_a")), ["id_a"]),
+            (doc_t.select(F.col("id").alias("id_b")), ["id_b"]),
+        ],
+        rel_paths=["pairs"],
+        finish=lambda live: live.select("id_a", "id_b", "jaccard"),
+    )
+    comp.commit(["doc_tombstones", "pair_tombstones"])
     stats["sig_parts_rewritten"] = len(sig_parts)
     stats["band_parts_rewritten"] = len(band_parts)
-    # park FIRST, ledgers second: once every swap has landed the park is
-    # dead weight, so removing it before the ledgers makes the remaining
-    # crash window harmless — a park-less index with ledgers still
-    # present serves correctly (merge-on-read excludes the already-
-    # folded rows) and a re-run compact is idempotent.  The reverse
-    # order had a window where the recovery hint ("move parked
-    # directories back") would silently resurrect tombstoned rows with
-    # the ledgers already gone.
-    shutil.rmtree(park, ignore_errors=True)
-    for ledger in ("doc_tombstones", "pair_tombstones"):
-        shutil.rmtree(_dir(index_dir, ledger), ignore_errors=True)
-    shutil.rmtree(comp, ignore_errors=True)
     return stats
 
 
@@ -1161,7 +1059,9 @@ def neardup_index_members(spark, index_dir: str) -> DataFrame:
     not yet members are appended)."""
     p = _load_params(index_dir)
     _check_siblings(index_dir, "neardup_index_members")
-    sigs = _read_or_empty(spark, _dir(index_dir, "sigs"), _sigs_schema(p))
+    sigs = read_table_or_empty(
+        spark, os.path.join(index_dir, "sigs"), _sigs_schema(p)
+    )
     return sigs.select("id").join(
         F.broadcast(_doc_tombs(spark, index_dir, p)), "id", "left_anti"
     )
@@ -1261,8 +1161,8 @@ def neardup_index_reshard(
     doc_t = _doc_tombs(spark, index_dir, p).localCheckpoint(eager=True)
     n_doc_t = doc_t.count()
     pair_t_n = _pair_tombs(spark, index_dir, p).count()
-    live_full = _read_or_empty(
-        spark, _dir(index_dir, "sigs"), _sigs_schema(p)
+    live_full = read_table_or_empty(
+        spark, os.path.join(index_dir, "sigs"), _sigs_schema(p)
     ).join(F.broadcast(doc_t), "id", "left_anti")
     # cache ONLY (id, sig): banding and counting never touch the
     # shingle arrays, which are ~8x the corpus TEXT bytes (a char
@@ -1283,7 +1183,9 @@ def neardup_index_reshard(
             # + empty ledger ⇒ stage it zero-copy (hardlinks to the
             # same immutable files) instead of decoding and re-writing
             # the shingle arrays through Spark
-            link_tree(_dir(index_dir, "sigs"), os.path.join(tmp, "sigs"))
+            link_tree(
+                os.path.join(index_dir, "sigs"), os.path.join(tmp, "sigs")
+            )
         else:
             live_full.withColumn(
                 "sb", _sb_expr(F.col("id"), new_p["n_id_buckets"])
@@ -1352,7 +1254,9 @@ def neardup_index_pairs(spark, index_dir: str) -> DataFrame:
     _check_siblings(index_dir, "neardup_index_pairs")
     doc_t = _doc_tombs(spark, index_dir, p)
     return (
-        _read_or_empty(spark, _dir(index_dir, "pairs"), _pairs_schema(p))
+        read_table_or_empty(
+            spark, os.path.join(index_dir, "pairs"), _pairs_schema(p)
+        )
         .join(_pair_tombs(spark, index_dir, p), ["id_a", "id_b"], "left_anti")
         .join(
             F.broadcast(doc_t.select(F.col("id").alias("id_a"))),

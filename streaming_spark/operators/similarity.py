@@ -3000,26 +3000,6 @@ def ann_index_load(path: str) -> dict:
     return artifact
 
 
-def _tombstone_df(spark, tombstones, id_col: str, id_type=None) -> DataFrame:
-    """Normalize a tombstone spec (DataFrame with ``id_col``, or a
-    driver-side id list) to a distinct single-column DataFrame.  The
-    ledger is small by contract — it broadcasts into every consumer —
-    so a list is a legitimate input shape.  ``id_type`` is the staged
-    table's id column type (callers derive it from the frame they hold)
-    so a list of string doc ids builds a string-typed ledger instead of
-    raising or mis-joining against a non-bigint index."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    if isinstance(tombstones, DataFrame):
-        return tombstones.select(id_col).distinct()
-    schema = StructType(
-        [StructField(id_col, id_type or LongType(), False)]
-    )
-    return spark.createDataFrame(
-        [(t,) for t in tombstones], schema
-    ).distinct()
-
-
 def _restamp(frame: DataFrame, source: DataFrame, cols: tuple) -> DataFrame:
     """Re-apply the quantizer fingerprint metadata of ``source``'s
     ``cols`` onto ``frame`` — joins/filters usually carry column
@@ -3067,11 +3047,11 @@ def _check_index_siblings(staged_dir: str, what: str) -> None:
     disk, but NOT all under ``staged_dir``, so proceeding would silently
     serve or extend a partial table:
 
-    - a ``<staged_dir>.compact_old`` sibling means ann_index_compact
+    - a compaction park beside ``staged_dir`` means ann_index_compact
       crashed mid-swap: some affected cells are PARKED there and absent
       from the table.  Recovery: move each ``cell=*`` under it back into
-      ``staged_dir`` (its rewrite, if any, sits under ``.compact``),
-      then delete both siblings and re-run the compact.
+      ``staged_dir`` (its rewrite, if any, sits under the staging
+      sibling), then delete both siblings and re-run the compact.
     - a ``<staged_dir>.old`` sibling next to a MISSING ``staged_dir``
       means ann_index_refresh crashed between its two renames: the real
       table is the ``.old`` one.  Recovery: rename it back.  (``.old``
@@ -3084,16 +3064,10 @@ def _check_index_siblings(staged_dir: str, what: str) -> None:
     ``.old``."""
     import os
 
+    from streaming_spark.operators.index_commit import refuse_parked_compact
+
+    refuse_parked_compact(staged_dir, what, "ann_index", sibling=True)
     base = staged_dir.rstrip("/")
-    park = base + ".compact_old"
-    if os.path.isdir(park):
-        raise RuntimeError(
-            f"{what}: {park!r} exists — a previous ann_index_compact "
-            "crashed mid-swap and some cells are parked there (absent "
-            "from the table).  Recover first: move each cell= directory "
-            "under it back into the staged dir, remove the .compact/"
-            ".compact_old siblings, then re-run the compact."
-        )
     old = base + ".old"
     if os.path.isdir(old) and not os.path.isdir(base):
         raise RuntimeError(
@@ -3122,7 +3096,7 @@ def _require_bycell_layout(staged_dir: str, what: str) -> None:
 
 def ann_index_open(spark, staged_dir: str) -> DataFrame:
     """Serve-side read of a staged index table that REFUSES a
-    mid-crash on-disk state (a ``.compact_old`` park, or a table left
+    mid-crash on-disk state (a parked compaction, or a table left
     at ``.old`` by a crashed refresh) instead of silently serving a
     table with parked cells missing — the read-path counterpart to the
     write-path gates in ann_index_append/compact.  Use this instead of
@@ -3235,7 +3209,7 @@ def ann_index_refresh(
     import os
     import shutil
 
-    # a parked .compact_old (or a table left wholly at .old) must be
+    # a parked compaction (or a table left wholly at .old) must be
     # recovered before a refresh discards the old table's directories
     _check_index_siblings(staged_dir, "ann_index_refresh")
     tmp = staged_dir.rstrip("/") + ".refresh"
@@ -3435,9 +3409,11 @@ def ann_tombstone_filter(
     appearing as a neighbor).  The quantizer fingerprint stamp is
     re-applied to the filtered frame, keeping the serve-path mismatch
     gate active."""
-    tomb = _tombstone_df(
+    from streaming_spark.operators.index_commit import ledger_ids
+
+    tomb = ledger_ids(
         encoded.sparkSession, tombstones, id_col,
-        encoded.schema[id_col].dataType,
+        encoded.schema[id_col].dataType.simpleString(),
     )
     out = encoded.join(F.broadcast(tomb), id_col, "left_anti")
     return _restamp(out, encoded, ("codes", "cell", id_col))
@@ -3458,39 +3434,43 @@ def ann_index_compact(
     tombstones' cell footprint, not the table.
 
     Mechanics (the local-filesystem stand-in for an object-store
-    manifest commit): survivors of the affected cells are written to a
-    caller-owned ``<staged_dir>.compact`` sibling with the same by-cell
-    layout, then each affected cell directory is PARKED at
-    ``<staged_dir>.compact_old`` and the rewrite renamed in — a cell
-    whose every row was tombstoned is simply parked without a
-    replacement.  Nothing ever exists only in process-scoped scratch,
-    so a crash at ANY point leaves every row on disk: before the swap
-    loop the table is untouched; mid-loop a missing cell's old contents
-    sit intact under ``.compact_old`` (recovery is renaming them back)
-    and its rewrite under ``.compact``.  Both siblings are removed only
-    after the loop completes.  Finding the affected cells scans the
-    table's (id, cell) columns only (column pruning keeps the codes
-    unread).  Returns stats: ``cells_total``, ``cells_rewritten``,
-    ``cells_removed``, ``rows_before``, ``rows_removed``.
+    manifest commit; the compaction all three index families share,
+    index_commit.Compaction): survivors of the affected cells are
+    written to a caller-owned staging sibling of ``staged_dir`` with
+    the same by-cell layout (removed again if the write raises), then
+    each affected cell directory is PARKED at a park sibling and the
+    rewrite renamed in — a cell whose every row was tombstoned is
+    simply parked without a replacement.  Nothing ever exists only in
+    process-scoped scratch, so a crash at ANY point leaves every row on
+    disk: before the swap loop the table is untouched; mid-loop a
+    missing cell's old contents sit intact under the park (recovery is
+    renaming them back) and its rewrite under the staging.  Both
+    siblings are removed only after the loop completes.  Finding the
+    affected cells scans the table's (id, cell) columns only (column
+    pruning keeps the codes unread).  Returns stats: ``cells_total``,
+    ``cells_rewritten``, ``cells_removed``, ``rows_before``,
+    ``rows_removed``.
 
     Measured (scripts/stress_ann.py maintenance arm): compacting 100
     tombstones out of a staged index costs 2.3 / 2.5 / 3.5 s at
     N = 100k / 500k / 1M, rewriting only the 52 / 75 / 69 cells they
     touch of 77 / 176 / 250 total — footprint-bound, not N-bound."""
     import os
-    import shutil
+
+    from streaming_spark.operators.index_commit import (
+        Compaction,
+        ledger_ids,
+        partition_values,
+    )
 
     _require_bycell_layout(staged_dir, "ann_index_compact")
     staged = spark.read.parquet(staged_dir)
-    tomb = _tombstone_df(
-        spark, tombstones, id_col, staged.schema[id_col].dataType
+    tomb = ledger_ids(
+        spark, tombstones, id_col,
+        staged.schema[id_col].dataType.simpleString(),
     )
-    affected = sorted(
-        r[0]
-        for r in staged.join(F.broadcast(tomb), id_col, "left_semi")
-        .select("cell")
-        .distinct()
-        .collect()
+    affected = partition_values(
+        staged.join(F.broadcast(tomb), id_col, "left_semi"), "cell"
     )
     cells_total = sum(
         1 for e in os.listdir(staged_dir) if e.startswith("cell=")
@@ -3504,41 +3484,19 @@ def ann_index_compact(
     }
     if not affected:
         return stats
-    hit = staged.filter(F.col("cell").isin([int(c) for c in affected]))
-    survivors = _restamp(
-        hit.join(F.broadcast(tomb), id_col, "left_anti"),
-        staged,
-        ("codes", "cell", id_col),
-    )
     # caller-owned siblings (same filesystem, outside the scratch
     # sweep/atexit): survivors must never exist ONLY in process-scoped
     # scratch while live cell directories are being replaced
-    tmp = staged_dir.rstrip("/") + ".compact"
-    park = staged_dir.rstrip("/") + ".compact_old"
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(park, ignore_errors=True)
-    try:
-        survivors.repartition("cell").write.mode("overwrite").partitionBy(
-            "cell"
-        ).parquet(tmp)
-    except Exception:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    rows_before = hit.count()
-    rows_after = spark.read.parquet(tmp).count() if any(
-        e.startswith("cell=") for e in os.listdir(tmp)
-    ) else 0
-    from streaming_spark.operators.index_commit import park_and_swap
-
-    rewritten, removed = park_and_swap(
-        staged_dir, tmp, park, [f"cell={c}" for c in affected]
+    comp = Compaction(staged_dir, sibling=True)
+    stats["rows_before"], stats["rows_removed"] = comp.rewrite(
+        "",
+        staged.filter(F.col("cell").isin([int(c) for c in affected])),
+        [(tomb, [id_col])],
+        ("cell",),
+        [f"cell={c}" for c in affected],
+        finish=lambda kept: _restamp(kept, staged, ("codes", "cell", id_col)),
     )
-    stats["cells_rewritten"] = rewritten
-    stats["cells_removed"] = removed
-    shutil.rmtree(park, ignore_errors=True)
-    shutil.rmtree(tmp, ignore_errors=True)
-    stats["rows_before"] = int(rows_before)
-    stats["rows_removed"] = int(rows_before - rows_after)
+    stats["cells_rewritten"], stats["cells_removed"] = comp.commit()
     return stats
 
 

@@ -191,15 +191,15 @@ def test_digest_index_probe_reads_are_partition_pruned(spark, tmp_path):
     from streaming_spark.operators.digest_index import (
         _occ_schema,
         _load_params,
-        _read_or_empty,
     )
+    from streaming_spark.operators.index_commit import read_table_or_empty
     from streaming_spark.telemetry import scan_files_rows
 
     occ = _occ(_docs_with_dups(spark))
     d = str(tmp_path / "idx")
     digest_index_build(d, occ, digest_col="h", n_prefixes=4, n_id_buckets=2)
     p = _load_params(d)
-    full = _read_or_empty(spark, os.path.join(d, "occ"), _occ_schema(p))
+    full = read_table_or_empty(spark, os.path.join(d, "occ"), _occ_schema(p))
     files_total = scan_files_rows(full).first()["files"]
     files_pruned = scan_files_rows(
         full.filter(F.col("pb").isin([0, 1]))

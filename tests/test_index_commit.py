@@ -216,3 +216,144 @@ def test_read_table_or_empty(spark, tmp_path):
         real
     )
     assert read_table_or_empty(spark, real, "id BIGINT, h STRING").count() == 1
+
+
+def _partitioned_table(spark, root):
+    """200 rows, ids 0..199, partitioned by p = id % 4 under
+    ``<root>/t`` — the shape of every family's victim-partition
+    rewrite (occ/pb=/ib=, sigs/sb=, bands/band_id=/pb=, cell=)."""
+    from pyspark.sql import functions as F
+
+    spark.range(200).withColumn(
+        "p", (F.col("id") % 4).cast("int")
+    ).write.partitionBy("p").parquet(os.path.join(root, "t"))
+    return spark.read.parquet(os.path.join(root, "t"))
+
+
+def _listing(root):
+    return sorted(
+        (os.path.relpath(path, root), os.path.getsize(path))
+        for d, _dirs, files in os.walk(root)
+        for path in (os.path.join(d, f) for f in files)
+    )
+
+
+def test_compaction_observed_rows_removed_equals_counts(spark, tmp_path):
+    """The rows-removed figure rides on the write job (an Observation),
+    yet equals an independent before/after count; the commit swaps the
+    rewritten partitions in, leaves the untouched ones alone and clears
+    the park, the staging and the ledger."""
+    from pyspark.sql import functions as F
+
+    from streaming_spark.operators.index_commit import Compaction
+
+    root = str(tmp_path)
+    table = _partitioned_table(spark, root)
+    os.makedirs(os.path.join(root, "ledger"))
+    victims = spark.createDataFrame([(0,), (4,), (9,), (13,)], "id BIGINT")
+    affected = table.filter(F.col("p").isin([0, 1]))
+    expect_before = affected.count()
+    expect_removed = expect_before - affected.join(
+        victims, "id", "left_anti"
+    ).count()
+    untouched = _listing(os.path.join(root, "t", "p=2"))
+
+    comp = Compaction(root)
+    assert comp.rewrite(
+        "t", affected, [(victims, ["id"])], ("p",), ["t/p=0", "t/p=1"]
+    ) == (expect_before, expect_removed) == (100, 4)
+    assert comp.commit(["ledger"]) == (2, 0)
+
+    assert _listing(os.path.join(root, "t", "p=2")) == untouched
+    assert sorted(
+        r[0] for r in spark.read.parquet(os.path.join(root, "t")).collect()
+    ) == [i for i in range(200) if i not in (0, 4, 9, 13)]
+    for gone in (".compact", ".compact_old", "ledger"):
+        assert not os.path.exists(os.path.join(root, gone))
+
+
+def test_compaction_leaves_the_session_serializable(spark, tmp_path):
+    """The observed rewrite must not leave an ObservationManager on the
+    caller's session: that makes the session unserializable, and a
+    fitted model's transform (its closure captures the session through
+    the training summary) then fails "Task not serializable"."""
+    from pyspark.ml.classification import LogisticRegression
+    from pyspark.ml.linalg import Vectors
+
+    from streaming_spark.operators.index_commit import Compaction
+
+    root = str(tmp_path)
+    table = _partitioned_table(spark, root)
+    victims = spark.createDataFrame([(0,)], "id BIGINT")
+    comp = Compaction(root)
+    assert comp.rewrite("t", table, [(victims, ["id"])], ("p",)) == (200, 1)
+
+    train = spark.createDataFrame(
+        [(float(i % 2), Vectors.dense([i % 2, 1.0])) for i in range(8)],
+        ["label", "features"],
+    )
+    model = LogisticRegression(maxIter=5).fit(train)
+    scored = model.transform(train).select("prediction", "label").collect()
+    assert [r["prediction"] for r in scored] == [r["label"] for r in scored]
+
+
+def test_compaction_fully_tombstoned_partition_parks_without_replacement(
+    spark, tmp_path
+):
+    """A partition whose every row is a victim stages no rewrite, so the
+    commit parks it without replacement (its directory disappears) —
+    and the observation still counts its rows, although adaptive
+    execution drops an empty shuffle stage."""
+    from pyspark.sql import functions as F
+
+    from streaming_spark.operators.index_commit import Compaction
+
+    root = str(tmp_path)
+    table = _partitioned_table(spark, root)
+    victims = table.filter("p = 0").select("id").union(
+        spark.createDataFrame([(1,)], "id BIGINT")
+    )
+    comp = Compaction(root)
+    assert comp.rewrite(
+        "t", table.filter(F.col("p").isin([0, 1])), [(victims, ["id"])],
+        ("p",), ["t/p=0", "t/p=1"],
+    ) == (100, 51)
+    assert comp.commit() == (1, 1)
+    assert not os.path.exists(os.path.join(root, "t", "p=0"))
+    assert spark.read.parquet(os.path.join(root, "t")).count() == 149
+
+    # every affected row removed: the write stages nothing at all
+    comp = Compaction(root)
+    assert comp.rewrite(
+        "t", spark.read.parquet(os.path.join(root, "t")).filter("p = 3"),
+        [(spark.range(200).select("id"), ["id"])], ("p",), ["t/p=3"],
+    ) == (50, 50)
+    assert comp.commit() == (0, 1)
+    assert sorted(os.listdir(os.path.join(root, "t")))[-2:] == ["p=1", "p=2"]
+
+
+def test_compaction_failed_write_leaves_table_untouched(spark, tmp_path):
+    """A rewrite whose write job raises removes its staging and never
+    creates the park: the table's files are byte-for-byte what they
+    were, so nothing refuses the index afterwards."""
+    from pyspark.sql import functions as F
+
+    from streaming_spark.operators.index_commit import Compaction
+
+    root = str(tmp_path)
+    table = _partitioned_table(spark, root)
+    before = _listing(root)
+    boom = F.when(F.col("id") >= 0, F.raise_error(F.lit("boom")))
+    comp = Compaction(root)
+    with pytest.raises(Exception, match="boom"):
+        comp.rewrite(
+            "t", table.filter("p = 0"),
+            [(spark.createDataFrame([(0,)], "id BIGINT"), ["id"])],
+            ("p",), ["t/p=0"],
+            finish=lambda kept: kept.withColumn(
+                "id", boom.otherwise(F.col("id"))
+            ),
+        )
+    assert _listing(root) == before
+    assert not os.path.exists(os.path.join(root, ".compact"))
+    assert not os.path.exists(os.path.join(root, ".compact_old"))

@@ -327,10 +327,10 @@ def test_neardup_probe_reads_are_partition_pruned(spark, tmp_path):
     files than the table holds (planning-time partition pruning — the
     same files_read discriminator as the ANN cell layout), and the
     partition directories exist on disk as written."""
+    from streaming_spark.operators.index_commit import read_table_or_empty
     from streaming_spark.operators.neardup_index import (
         _combo_filter,
         _load_params,
-        _read_or_empty,
         _bands_schema,
     )
     from streaming_spark.telemetry import scan_files_rows
@@ -347,7 +347,7 @@ def test_neardup_probe_reads_are_partition_pruned(spark, tmp_path):
         for b in band_dirs
     )
 
-    full = _read_or_empty(spark, bands_dir, _bands_schema(p))
+    full = read_table_or_empty(spark, bands_dir, _bands_schema(p))
     files_total = scan_files_rows(full).first()["files"]
     pruned = full.filter(_combo_filter([(0, 0), (0, 1)]))
     files_pruned = scan_files_rows(pruned).first()["files"]
@@ -384,7 +384,6 @@ def test_neardup_crashed_append_recovery(spark, tmp_path):
 
     from streaming_spark.operators.dedup import minhash_signatures
     from streaming_spark.operators.neardup_index import (
-        _dir,
         _load_params,
         _sb_expr,
     )
@@ -397,7 +396,7 @@ def test_neardup_crashed_append_recovery(spark, tmp_path):
     )
     sigs.withColumn("sb", _sb_expr(F.col("id"), p["n_id_buckets"])).write.mode(
         "append"
-    ).partitionBy("sb").parquet(_dir(d, "sigs"))
+    ).partitionBy("sb").parquet(os.path.join(d, "sigs"))
 
     assert _pairs(neardup_index_pairs(spark, d)) == base_pairs  # inert
 
