@@ -22,20 +22,30 @@ next step would not.  The cap is itself the documented scale behavior
 (the telemetry warns and the sanctioned escape is the ANN family);
 the clustered regime runs the full sweep comfortably.
 
+Each result is digested over every column (row count plus an
+order-insensitive xxhash64 sum, floats rounded to 9 decimals) instead of
+counted, so the timed plan is the one a consumer of the result runs and
+two engines can be compared row for row.  One JSON line per
+measurement; its ``case`` field names the (op, corpus, n) cell, which
+is how ``scripts/ab.py`` pairs the arms.
+
 Usage:
-    PYTHONPATH=/root/repo python scripts/stress_blocked.py [max_n]
+    PYTHONPATH=. python scripts/stress_blocked.py \
+        [--n 200000,300000] [--corpus clustered|uniform] [--op nn|pairs]
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import shutil
-import sys
 import time
 import warnings
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from streaming_spark import get_spark
 from streaming_spark import scratch
@@ -77,10 +87,42 @@ def release(stats: dict, *extra_dirs: str) -> None:
         shutil.rmtree(p, ignore_errors=True)
 
 
+def digest(df) -> str:
+    """``rows:hash_sum`` over every column of ``df``, in name order;
+    doubles are rounded to 9 decimals (the oracle's normalization)."""
+    cols = [
+        F.round(F.col(f.name), 9) if isinstance(f.dataType, T.DoubleType)
+        else F.col(f.name)
+        for f in sorted(df.schema.fields, key=lambda f: f.name)
+    ]
+    r = df.select(F.xxhash64(*cols).alias("h")).agg(
+        F.count(F.lit(1)).alias("rows"),
+        F.coalesce(F.sum(F.col("h").cast("decimal(38,0)")), F.lit(0)).alias("s"),
+    ).first()
+    return f"{r['rows']}:{r['s']}"
+
+
+DEFAULT_NS = (2_000, 20_000, 50_000, 100_000, 200_000)
+
+
+def parse_args(argv=None) -> argparse.Namespace:
+    p = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    p.add_argument(
+        "--n",
+        default=",".join(map(str, DEFAULT_NS)),
+        help="comma-separated corpus sizes (default: %(default)s)",
+    )
+    p.add_argument("--corpus", choices=("clustered", "uniform"))
+    p.add_argument("--op", choices=("nn", "pairs"))
+    args = p.parse_args(argv)
+    args.n = [int(x) for x in args.n.split(",") if x]
+    return args
+
+
 def main() -> None:
     from streaming_spark.operators.similarity import cosine_pairs, exact_nn_topk
 
-    max_n = int(sys.argv[1]) if len(sys.argv) > 1 else 200_000
+    args = parse_args()
     warnings.filterwarnings(
         "default", category=Warning
     )  # keep the quadratic warning visible in the log
@@ -89,17 +131,16 @@ def main() -> None:
     # warm both worker pools and the JVM before timing (CLAUDE.md)
     warm_dir, warm = stage_corpus(spark, "uniform", 1_000)
     st: dict = {}
-    exact_nn_topk(warm, k=2, mode="blocked", stats_out=st).count()
+    digest(exact_nn_topk(warm, k=2, mode="blocked", stats_out=st))
     release(st)
     st = {}
-    cosine_pairs(warm, threshold=0.7, mode="blocked", stats_out=st).count()
+    digest(cosine_pairs(warm, threshold=0.7, mode="blocked", stats_out=st))
     release(st, warm_dir)
 
-    ns = [n for n in (2_000, 20_000, 50_000, 100_000, 200_000) if n <= max_n]
     plan = []
-    for n in ns:
-        for kind in ("clustered", "uniform"):
-            for op in ("pairs", "nn"):
+    for n in args.n:
+        for kind in (args.corpus,) if args.corpus else ("clustered", "uniform"):
+            for op in (args.op,) if args.op else ("pairs", "nn"):
                 if kind == "uniform" and n > 200_000:
                     plan.append((op, kind, n, "skipped: ~N*sqrt(N) vector "
                                  "shuffle rows exceed local disk at zero "
@@ -110,31 +151,26 @@ def main() -> None:
     plan.sort(key=lambda p: (p[2], p[1] == "uniform"))
 
     for op, kind, n, skip in plan:
+        case = f"{op}/{kind}/{n}"
         if skip:
-            print(json.dumps({"op": op, "corpus": kind, "n": n, "skipped": skip}),
-                  flush=True)
+            print(json.dumps({"case": case, "skipped": skip}), flush=True)
             continue
         d, df = stage_corpus(spark, kind, n)
         stats: dict = {}
         t0 = time.perf_counter()
         if op == "pairs":
             thr = 0.7 if kind == "uniform" else 0.92
-            rows = cosine_pairs(
-                df, threshold=thr, mode="blocked", stats_out=stats
-            ).count()
+            out = cosine_pairs(df, threshold=thr, mode="blocked", stats_out=stats)
         else:
-            rows = exact_nn_topk(
-                df, k=2, mode="blocked", stats_out=stats
-            ).count()
+            out = exact_nn_topk(df, k=2, mode="blocked", stats_out=stats)
+        dig = digest(out)
         dt = time.perf_counter() - t0
         print(
             json.dumps(
                 {
-                    "op": op,
-                    "corpus": kind,
-                    "n": n,
+                    "case": case,
                     "seconds": round(dt, 2),
-                    "rows": rows,
+                    "digest": dig,
                     "candidates": stats.get("candidates"),
                     "total_pairs": stats.get("total_pairs"),
                 }

@@ -42,7 +42,7 @@ def _verify_dist(joined: DataFrame, a: str, b: str, max_dist: int) -> DataFrame:
     their dist values are identical to the full form by the function's
     contract (≤ threshold ⇒ true distance), nulls propagate the same,
     and a -1 can never leak into the output.  Interleaved A/B on
-    q_fuzzy_name_pairs (scripts/ab_lev.py, r15): banded medians
+    q_fuzzy_name_pairs (r15): banded medians
     1.97/2.76 s vs full-matrix 2.22/2.97 s in two matched-load series,
     identical 262,500 rows — and the gap grows with string length at
     deployment (names here are only ~18 chars)."""

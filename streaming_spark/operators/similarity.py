@@ -768,15 +768,6 @@ def _self_topk_broadcast(
 # subtask); module constant so tests can force the salted path small.
 _PASS_B_TASK_BYTES = 64 << 20
 
-# minimum (plan-estimated) input bytes before exact_nn_topk's blocked
-# arm stages its assign map to scratch instead of recomputing it per
-# consumer — below it three cheap evaluations beat one write job's
-# fixed cost, above it the write amortizes two full N·dim·n_cells
-# matmul passes (r15; module constant so tests can force the staged
-# branch on a small corpus).  64 MB ≈ the ~100 k-vector scale where
-# mode="auto" starts choosing the blocked arm at all.
-_STAGE_ASSIGN_MIN_BYTES = 64 << 20
-
 
 def _topk_against(q_ids, q_mat, m_ids, m_mat, k, s_q=None):
     """The one exact per-task top-k loop every arm of ``exact_nn_topk``
@@ -954,20 +945,26 @@ def exact_nn_topk(
     any scale — one write job costs less than one re-run of the
     lineage.  A ``persist()`` instead would outlive the returned lazy
     frame and degrade later same-session queries (CLAUDE.md).  The
-    assign map is ALSO staged above ``_STAGE_ASSIGN_MIN_BYTES`` of
-    estimated input (r15, refining the r9 "never stage the assign"
-    ruling): it has three consumers — the stats collect, pass A's
-    grouped input, and pass B's member side — and unstaged each
-    re-plans the corpus scan plus the N·dim·n_cells assign matmul;
-    staged, both run once and the stats fold reads a column-pruned
-    parquet scan instead of an unprunable Python-node output.  Below
-    the threshold (forced-mode demos, gates) the three evaluations are
-    each cheaper than the write job's fixed cost and the recompute
-    shape is kept.  The pinned dirs are reported in
-    ``stats_out["staged_dirs"]`` — a caller that knows the returned
-    frame is fully consumed should pass it to
-    :func:`streaming_spark.scratch.unpin` so a long session's pins
-    cannot starve the scratch sweep (ADVICE r8).
+    assign map is staged too (:func:`streaming_spark.scratch.stage`):
+    it has three consumers — the stats fold, pass A's grouped input,
+    and pass B's member and query sides — and unstaged each re-plans
+    the corpus scan plus the N·dim·n_cells assign matmul.  Staged and
+    recomputed medians, clustered 64-dim corpus, one warm local[4]
+    session on a 4-vCPU VM, first arm alternating:
+
+    ========  ===============  ===============
+    N         staged           recompute
+    ========  ===============  ===============
+    1 000     2.10 s           2.13 s
+    100 000   16.16 s          16.72 s
+    200 000   36.36 s          41.52 s
+    300 000   66.62 s          68.77 s
+    ========  ===============  ===============
+
+    Both pinned dirs are reported in ``stats_out["staged_dirs"]`` — a
+    caller that knows the returned frame is fully consumed should pass
+    them to :func:`streaming_spark.scratch.unpin` so a long session's
+    pins cannot starve the scratch sweep (ADVICE r8).
 
     ``centroids`` accepts a pre-trained quantizer (e.g. the session-
     memoized cache the ANN stack shares) — any centroids are EXACT
@@ -983,13 +980,12 @@ def exact_nn_topk(
     arm-dependent.  Output: (query_id, neighbor_id, sim, rank), sim
     UNROUNDED float64 so a downstream reciprocity join breaks ties
     identically to an oracle."""
-    from streaming_spark.scratch import scratch_dir
+    from streaming_spark.scratch import stage, unpin
 
     spark = vectors.sparkSession
     base = vectors.select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__vec")
     )
-    staged_dirs: list[str] = []
     if mode == "auto":
         probe = base.select("vec_id").limit(broadcast_limit + 1).count()
         mode = "broadcast" if probe <= broadcast_limit else "blocked"
@@ -1012,95 +1008,47 @@ def exact_nn_topk(
                     n_blocks=0,
                     candidates=0,
                     total_pairs=0,
-                    staged_dirs=list(staged_dirs),
+                    staged_dirs=[],
                 )
             return spark.createDataFrame([], empty_schema)
     else:
         cent = centroids
 
-    def _stage_table(df: DataFrame, tag: str) -> DataFrame:
-        # pin=True: the returned frame READS these files lazily with
-        # unbounded lifetime, and the sweep's mtime signal cannot see
-        # reads — an unpinned staged dir would eventually be evicted
-        # under a query that still needs it (scratch.py module docs).
-        # The staged table is bounded by N*k + probe volume; the pinned
-        # dirs surface in stats_out["staged_dirs"] so a caller that
-        # knows the frame is consumed can scratch.unpin() them
-        # (ADVICE r8 — pins are releasable, not process-lifetime).
-        d = scratch_dir("nn_" + tag, pin=True)
-        staged_dirs.append(d)
-        df.write.parquet(d + "/t")
-        return spark.read.parquet(d + "/t")
-
-    # The assign map has THREE consumers (the stats collect, pass A's
-    # grouped input, pass B's member side), and a mapInPandas output
-    # cannot be column-pruned or shared across lineage branches — so
-    # unstaged, each consumer re-plans the corpus scan plus the
-    # N·dim·n_cells assign matmul.  Above _STAGE_ASSIGN_MIN_BYTES of
-    # (plan-estimated) input the assign output is therefore staged ONCE
-    # to scratch: the matmul and the corpus scan run once, every
-    # consumer reads the staged table, and the stats fold scans only
-    # (cell, cent_sim) — parquet CAN prune columns where the Python
-    # node could not; keep_vec upcasts float32→float64 exactly and the
-    # parquet round-trip is bit-exact, so downstream math is unchanged.
-    # BELOW the threshold the three evaluations are each cheaper than
-    # the extra write job's fixed cost, so the r14 recompute shape is
-    # kept (alternating-session A/B at the 2 k-vector fixture measured
-    # the staged shape ~0.3 s slower; at 100 TB one corpus-sized write
-    # replaces two full assign matmul passes of N·dim·√N flops each).
-    # Size-adaptive like mode="auto"'s broadcast_limit — and since auto
-    # only takes the blocked arm above 100 k rows, the staged branch is
-    # the one that actually runs at deployment scale; the sub-threshold
-    # branch serves the forced-mode demos and gates.
-    # estimates at/near Long.Max are Spark's "no statistics" sentinel
-    # (spark.sql.defaultSizeInBytes), not a real size — an in-memory /
-    # RDD-backed input has no file-source stats, and guessing "huge"
-    # there would pay the write job on every small forced-mode demo, so
-    # unknown keeps the r14 recompute shape
-    _est = int(base._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    stage_assign = _STAGE_ASSIGN_MIN_BYTES <= _est < (1 << 62)
-    assigned_vec = ivf_assign(
-        base,
-        cent,
-        id_col="vec_id",
-        vec_col="__vec",
-        with_sim=True,
-        keep_vec="__vec",
+    # The assign map has THREE consumers (the stats fold, pass A's
+    # grouped input, pass B's member and query sides).  A mapInPandas
+    # output cannot be column-pruned or shared across lineage branches,
+    # so it is staged once: the corpus scan and the N·dim·n_cells
+    # assign matmul run once, and the stats fold scans only
+    # (cell, cent_sim).  keep_vec upcasts float32→float64 exactly.
+    assigned_vec, assign_dir = stage(
+        ivf_assign(
+            base,
+            cent,
+            id_col="vec_id",
+            vec_col="__vec",
+            with_sim=True,
+            keep_vec="__vec",
+        ),
+        "nn_assign",
     )
-    if stage_assign:
-        assigned_vec = _stage_table(assigned_vec, "assign")
-        stats_src = assigned_vec
-        qvec_src = assigned_vec
-    else:
-        # vector-FREE twin for the stats fold: aggregating the keep_vec
-        # frame would ship all N float64 vectors through Arrow just for
-        # a min/count that discards them
-        stats_src = ivf_assign(
-            base, cent, id_col="vec_id", vec_col="__vec", with_sim=True
-        )
-        qvec_src = base
     stats = (
-        stats_src.groupBy("cell")
+        assigned_vec.groupBy("cell")
         .agg(F.min("cent_sim").alias("r"), F.count(F.lit(1)).alias("n"))
         .collect()
     )
     if not stats:
         # empty table under supplied centroids: fill the same stats_out
-        # contract as the populated path (ADVICE r8).  A staged assign
+        # contract as the populated path (ADVICE r8).  The staged assign
         # dir holds nothing the returned (local, empty) frame reads —
-        # release its pin immediately so this return path still reports
-        # staged_dirs=[] and never leaks a pin
-        if staged_dirs:
-            from streaming_spark.scratch import unpin
-
-            unpin(staged_dirs.pop())
+        # release its pin now so this path reports staged_dirs=[]
+        unpin(assign_dir)
         if stats_out is not None:
             stats_out.update(
                 n_rows=0,
                 n_blocks=0,
                 candidates=0,
                 total_pairs=0,
-                staged_dirs=list(staged_dirs),
+                staged_dirs=[],
             )
         return spark.createDataFrame([], empty_schema)
     stats.sort(key=lambda r: r["cell"])
@@ -1183,11 +1131,11 @@ def exact_nn_topk(
             )
         return pd.concat(parts, ignore_index=True)
 
-    fused = _stage_table(
+    fused, fused_dir = stage(
         assigned_vec.select("vec_id", "__vec", "cell")
         .groupBy("cell")
         .applyInPandas(pass_a, fused_schema),
-        "pass_a",
+        "nn_pass_a",
     )
     scored_a = fused.filter(F.col("kind") == 0).select("qa", "vec_id", "cos_sim")
     probes = fused.filter(F.col("kind") == 1).select(
@@ -1219,7 +1167,7 @@ def exact_nn_topk(
             n_blocks=len(cell_ids),
             candidates=candidates,
             total_pairs=ordered_total,
-            staged_dirs=list(staged_dirs),
+            staged_dirs=[assign_dir, fused_dir],
         )
 
     if not probe_counts:
@@ -1243,11 +1191,10 @@ def exact_nn_topk(
             "cell INT, n_sub INT",
         )
         qside = (
-            # query vectors come off the staged assign table when it
-            # exists (float64, value-identical to the source — not
-            # another corpus scan), else the source table
+            # query vectors come off the staged assign table (float64,
+            # value-identical to the source — not another corpus scan)
             probes.join(
-                qvec_src.select(F.col("vec_id").alias("qa"), "__vec"), "qa"
+                assigned_vec.select(F.col("vec_id").alias("qa"), "__vec"), "qa"
             )
             .join(F.broadcast(salt_df), "cell")
             .select(
@@ -1688,24 +1635,20 @@ def _cosine_pairs_blocked(
                 n_tasks=0,
                 candidates=0,
                 total_pairs=0,
-                staged_dirs=[],
             )
         return spark.createDataFrame([], out_schema)
     # deliberately NOT persisted: a persist here would outlive the call
     # (the returned frame is lazy), which measurably degrades later
-    # same-session queries (CLAUDE.md).  Like exact_nn_topk's blocked
-    # arm (r15), the assign map IS staged to scratch above
-    # _STAGE_ASSIGN_MIN_BYTES of estimated input: it has two consumers
-    # (the stats fold and the task join) and a mapInPandas output is
-    # neither column-prunable nor shareable across lineage branches, so
-    # unstaged each consumer re-runs the corpus scan plus the
-    # N·dim·n_cells assign matmul.  Below the threshold (gates,
-    # forced-mode demos) the two evaluations are cheaper than the write
-    # job's fixed cost and the r9 recompute shape is kept; unknown
-    # stats (no file source, estimate = Long.Max sentinel) also keep
-    # it.  Pinned staged dirs surface in stats_out["staged_dirs"]
-    # (exact_nn_topk's releasability contract) — [] on the recompute
-    # branch.
+    # same-session queries (CLAUDE.md).  Nor staged: the assign map has
+    # two consumers (the stats fold and the task join), and recomputing
+    # it for each never lost to staging it once.  Staged and recomputed
+    # medians at threshold 0.92, clustered 64-dim corpus, one warm
+    # local[4] session on a 4-vCPU VM, first arm alternating:
+    #
+    #   N        staged    recompute
+    #   100 000  11.59 s   11.94 s
+    #   200 000  28.73 s   28.63 s
+    #   300 000  56.02 s   50.36 s
     def _assign_blocks(keep_vec: str | None = None) -> DataFrame:
         return _with_block(
             ivf_assign(
@@ -1719,25 +1662,14 @@ def _cosine_pairs_blocked(
             n_rings,
         )
 
-    staged_dirs: list[str] = []
-    _est = int(base._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    if _STAGE_ASSIGN_MIN_BYTES <= _est < (1 << 62):
-        from streaming_spark.scratch import scratch_dir
-
-        d = scratch_dir("pairs_assign", pin=True)
-        staged_dirs.append(d)
-        _assign_blocks(keep_vec="__vec").write.parquet(d + "/t")
-        blocks = spark.read.parquet(d + "/t")
-        stats_src = blocks  # parquet prunes to (block, cent_sim)
-    else:
-        blocks = _assign_blocks(keep_vec="__vec")
-        # the stats action runs on a VECTOR-FREE twin of the assign
-        # map: mapInPandas output cannot be column-pruned, so
-        # aggregating the keep_vec frame would ship all N float64
-        # vectors through Arrow just for a min/count that discards them
-        stats_src = _assign_blocks()
+    blocks = _assign_blocks(keep_vec="__vec")
+    # the stats action runs on a VECTOR-FREE twin of the assign map:
+    # mapInPandas output cannot be column-pruned, so aggregating the
+    # keep_vec frame would ship all N float64 vectors through Arrow
+    # just for a min/count that discards them
     stats = (
-        stats_src.groupBy("block")
+        _assign_blocks()
+        .groupBy("block")
         .agg(F.min("cent_sim").alias("r"), F.count(F.lit(1)).alias("n"))
         .collect()
     )
@@ -1763,13 +1695,7 @@ def _cosine_pairs_blocked(
             [sizes[cells_of == c].sum() for c in cell_ids], dtype=np.int64
         )
         n_rings = 1
-        if staged_dirs:
-            # cell = block DIV old n_rings is already a staged column —
-            # re-derive block = cell·1+0 from the staged table instead
-            # of a THIRD assign evaluation
-            blocks = blocks.withColumn("block", F.col("cell").cast("int"))
-        else:
-            blocks = _assign_blocks(keep_vec="__vec")  # rebound n_rings
+        blocks = _assign_blocks(keep_vec="__vec")  # rebound n_rings
         block_ids, radii, sizes = cell_ids, cell_r, cell_n
         ii, jj, _same, volume = _block_pair_allowlist(
             cent, block_ids, radii, sizes, threshold, n_rings
@@ -1798,18 +1724,8 @@ def _cosine_pairs_blocked(
             n_tasks=len(ii),
             candidates=volume,
             total_pairs=n_rows * (n_rows - 1) // 2,
-            staged_dirs=list(staged_dirs),
         )
     if len(ii) == 0:
-        # nothing survives the allowlist: the returned (local, empty)
-        # frame reads no staged file — release any pin now so this
-        # path never leaks one
-        if staged_dirs:
-            from streaming_spark.scratch import unpin
-
-            unpin(staged_dirs.pop())
-            if stats_out is not None:
-                stats_out["staged_dirs"] = []
         return spark.createDataFrame([], out_schema)
     # group surviving block pairs by their CELL pair (r9): blocks
     # partition the vectors and every surviving block pair maps to

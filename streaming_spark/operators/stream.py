@@ -242,12 +242,8 @@ def stream_arrow(
 # consumers (minhash, brute-force ANN, broadcast cosine) showing the
 # same ≤1 scaling from 8→32 partitions and lineitem-sized consumers
 # (binned-grid overlap joins, ~3.4 MB projected) degrading below 32 —
-# one bytes target separates the two regimes.  Env-overridable
-# ($SPARK_GRAFT_FANOUT_KB) for deployments whose Python cost per byte
-# differs.
-import os as _os
-
-_FANOUT_TARGET_BYTES = int(_os.environ.get("SPARK_GRAFT_FANOUT_KB", "64")) * 1024
+# one bytes target separates the two regimes.
+_FANOUT_TARGET_BYTES = 64 << 10
 
 
 def _fanout_key(df: DataFrame):

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from streaming_spark.scratch import scratch_dir
+from streaming_spark.scratch import scratch_dir, stage
 from streaming_spark.operators import curation
 from streaming_spark.queries.registry import T, query
 
@@ -453,9 +453,7 @@ def layout_zorder_pruning(spark, sf_dir):
     return probe(lin_dir, "linear").unionByName(probe(z_dir, "zorder"))
 
 
-@query(
-    "pipeline_curate_corpus",
-    oracle="""
+_CURATE_CORPUS_ORACLE = """
     WITH t AS (
       SELECT doc_id, source, text,
              CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
@@ -497,8 +495,10 @@ def layout_zorder_pruning(spark, sf_dir):
            count(*) AS n_chunks,
            CAST(sum(length(chunk)) AS BIGINT) AS sum_chunk_chars
     FROM chunks GROUP BY source
-    """,
-)
+    """
+
+
+@query("pipeline_curate_corpus", oracle=_CURATE_CORPUS_ORACLE)
 def pipeline_curate_corpus(spark, sf_dir):
     """The training-data curation pipeline END TO END, one declarative
     plan: language-ID filter (stopword vote = 'en') → quality gate
@@ -538,9 +538,7 @@ def pipeline_curate_corpus(spark, sf_dir):
     )
 
 
-@query(
-    "text_decontaminate",
-    oracle="""
+_DECONTAMINATE_ORACLE = """
     WITH t AS (
       SELECT doc_id, source,
              CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
@@ -565,8 +563,10 @@ def pipeline_curate_corpus(spark, sf_dir):
            COALESCE(hits.n_hits, 0) > 0 AS contaminated
     FROM g LEFT JOIN hits USING (doc_id)
     WHERE g.doc_id % 97 <> 0
-    """,
-)
+    """
+
+
+@query("text_decontaminate", oracle=_DECONTAMINATE_ORACLE)
 def text_decontaminate(spark, sf_dir):
     """Benchmark decontamination: flag corpus documents sharing any word
     5-gram with a held-out benchmark set (here the deterministic
@@ -1789,14 +1789,9 @@ def q_dsir_weights(spark, sf_dir):
     # consumers read the much smaller tf table (distinct (doc, bucket)
     # pairs — the scoring plan's scan is scratch, not documents).  tf is
     # an integral count, so the parquet round-trip is value-exact and
-    # the oracle hash is unchanged.  pin=True: the returned lazy frame
-    # reads these files for an unbounded lifetime the scratch sweep's
-    # mtime signal cannot see (exact_nn_topk's staging contract).
-    from streaming_spark.scratch import scratch_dir
-
-    d = scratch_dir("dsir_tf", pin=True)
-    dtf.write.parquet(d + "/t")
-    return dsir_scores(spark.read.parquet(d + "/t"))
+    # the oracle hash is unchanged.  The dir stays pinned: the returned
+    # lazy frame reads it for an unbounded lifetime.
+    return dsir_scores(stage(dtf, "dsir_tf")[0])
 
 
 @query(

@@ -572,17 +572,17 @@ def q_array_functions(spark, sf_dir):
     )
 
 
-@query(
-    "dedup_embedding_cosine",
-    oracle="""
+_EMBEDDING_COSINE_ORACLE = """
     SELECT a.vec_id AS id_a, b.vec_id AS id_b,
            round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
                                         CAST(b.embedding AS DOUBLE[])), 4) AS cos_sim
     FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
     WHERE round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
                                        CAST(b.embedding AS DOUBLE[])), 4) >= 0.4
-    """,
-)
+    """
+
+
+@query("dedup_embedding_cosine", oracle=_EMBEDDING_COSINE_ORACLE)
 def dedup_embedding_cosine(spark, sf_dir):
     """Embedding-cosine near-duplicate pairs (semantic dedup): all pairs
     with cosine >= 0.4, via ``cosine_pairs`` in auto mode — EXACT at
@@ -606,17 +606,7 @@ def dedup_embedding_cosine(spark, sf_dir):
     )
 
 
-@query(
-    "dedup_embedding_cosine_blocked",
-    oracle="""
-    SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                                        CAST(b.embedding AS DOUBLE[])), 4) AS cos_sim
-    FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-    WHERE round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                                       CAST(b.embedding AS DOUBLE[])), 4) >= 0.4
-    """,
-)
+@query("dedup_embedding_cosine_blocked", oracle=_EMBEDDING_COSINE_ORACLE)
 def dedup_embedding_cosine_blocked(spark, sf_dir):
     """The recall-1 SCALE path of semantic dedup, FORCED (round 7,
     VERDICT r6 #1): blocked-exact IVF-cell pair generation — the coarse
@@ -1672,9 +1662,7 @@ def q_fuzzy_name_pairs_damerau(spark, sf_dir):
     return fuzzy_self_pairs_damerau(cust, "c_name", "c_custkey")
 
 
-@query(
-    "q_bm25_topk",
-    oracle="""
+_BM25_ORACLE = """
     WITH toks AS (
       SELECT doc_id, t.tok, t.pos
       FROM documents,
@@ -1719,8 +1707,10 @@ def q_fuzzy_name_pairs_damerau(spark, sf_dir):
                                 ORDER BY score DESC, doc_id) AS rank
       FROM scored) t
     WHERE rank <= 10
-    """,
-)
+    """
+
+
+@query("q_bm25_topk", oracle=_BM25_ORACLE)
 def q_bm25_topk(spark, sf_dir):
     """Lexical retrieval: BM25 top-10 documents for three queries (each
     query = the first four distinct tokens of a probe document, by
@@ -1987,9 +1977,7 @@ def q_qgram_cosine_pairs(spark, sf_dir):
     )
 
 
-@query(
-    "q_phrase_match",
-    oracle="""
+_PHRASE_MATCH_ORACLE = """
     WITH toks AS (
       SELECT doc_id, t.tok, t.pos
       FROM documents,
@@ -2014,8 +2002,10 @@ def q_qgram_cosine_pairs(spark, sf_dir):
       GROUP BY b.query_id, a.doc_id)
     SELECT query_id, doc_id, n_occurrences
     FROM hits WHERE doc_id <> query_id
-    """,
-)
+    """
+
+
+@query("q_phrase_match", oracle=_PHRASE_MATCH_ORACLE)
 def q_phrase_match(spark, sf_dir):
     """Exact-PHRASE retrieval over positional postings: for each probe
     query (the first two tokens of documents 0/37/74 as a bigram
@@ -2642,9 +2632,7 @@ def q_qgram_cosine_weighted(spark, sf_dir):
     )
 
 
-@query(
-    "q_dup_spans",
-    oracle="""
+_DUP_SPANS_ORACLE = """
     WITH d AS (
       SELECT doc_id, text FROM documents WHERE length(text) >= 40),
     w AS (
@@ -2659,8 +2647,10 @@ def q_qgram_cosine_weighted(spark, sf_dir):
     SELECT c.doc_id, length(d.text) - 39 AS n_windows, c.n_dup_windows
     FROM counts c JOIN d USING (doc_id)
     ORDER BY doc_id
-    """,
-)
+    """
+
+
+@query("q_dup_spans", oracle=_DUP_SPANS_ORACLE)
 def q_dup_spans(spark, sf_dir):
     """EXACT duplicate-SPAN detection (Lee et al. 2022, "Deduplicating
     Training Data Makes Language Models Better"): for every document,
@@ -3677,9 +3667,8 @@ def q_dup_span_components(spark, sf_dir):
     )
 
 
-@query(
-    "q_entity_resolve",
-    oracle=_DIRTY_CUSTOMERS_CTE
+_ENTITY_RESOLVE_ORACLE = (
+    _DIRTY_CUSTOMERS_CTE
     + """,
     links AS (
       SELECT d.dirty_id, m.c_custkey AS master_id,
@@ -3694,8 +3683,11 @@ def q_dup_span_components(spark, sf_dir):
     SELECT dirty_id, master_id, dist,
            (dirty_id = master_id) AS resolved_self
     FROM best WHERE rk = 1 ORDER BY dirty_id
-    """,
+    """
 )
+
+
+@query("q_entity_resolve", oracle=_ENTITY_RESOLVE_ORACLE)
 def q_entity_resolve(spark, sf_dir):
     """Entity RESOLUTION, not just candidate linkage: each dirty record
     (q_fuzzy_link_dirty's deterministic typo batch) is assigned its ONE

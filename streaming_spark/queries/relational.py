@@ -116,7 +116,10 @@ def q_limit(spark, sf_dir):
     )
 
 
-@query("q_count", oracle="SELECT count(*) AS n_rows FROM lineitem")
+_COUNT_LINEITEM_ORACLE = "SELECT count(*) AS n_rows FROM lineitem"
+
+
+@query("q_count", oracle=_COUNT_LINEITEM_ORACLE)
 def q_count(spark, sf_dir):
     """op_count(A) (reference tests/test.sh:16)."""
     return T(spark, sf_dir, "lineitem").agg(F.count(F.lit(1)).alias("n_rows"))
@@ -341,15 +344,15 @@ def q_sg_gather(spark, sf_dir):
     )
 
 
-@query(
-    "q_input_jsonl",
-    oracle="""
+_INPUT_JSONL_ORACLE = """
     SELECT count(*) AS n_docs,
            CAST(sum(length(text)) AS BIGINT) AS sum_chars,
            count(DISTINCT source) AS n_sources
     FROM documents
-    """,
-)
+    """
+
+
+@query("q_input_jsonl", oracle=_INPUT_JSONL_ORACLE)
 def q_input_jsonl(spark, sf_dir):
     """JSON-lines ingestion with a DECLARED schema — the de facto
     interchange format for pretraining corpora (one JSON doc per line,
@@ -373,15 +376,7 @@ def q_input_jsonl(spark, sf_dir):
     )
 
 
-@query(
-    "q_input_jsonl_gz",
-    oracle="""
-    SELECT count(*) AS n_docs,
-           CAST(sum(length(text)) AS BIGINT) AS sum_chars,
-           count(DISTINCT source) AS n_sources
-    FROM documents
-    """,
-)
+@query("q_input_jsonl_gz", oracle=_INPUT_JSONL_ORACLE)
 def q_input_jsonl_gz(spark, sf_dir):
     """GZIP-compressed JSONL shards — the de facto distribution format
     for public pretraining corpora (one .jsonl.gz per shard).  The

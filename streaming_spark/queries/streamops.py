@@ -18,6 +18,7 @@ from pyspark.sql.window import Window
 
 from streaming_spark.operators.pipe import parse_tsv_response, pipe_tsv, unescape_field
 from streaming_spark.operators.stream import pack_func, read_func, stream, stream_map
+from streaming_spark.queries.relational import _COUNT_LINEITEM_ORACLE
 from streaming_spark.queries.registry import T, query
 
 _LI_COLS = (
@@ -102,7 +103,7 @@ def q_chunk_count(spark, sf_dir):
     )
 
 
-@query("q_chunk_count_total", oracle="SELECT count(*) AS n_rows FROM lineitem")
+@query("q_chunk_count_total", oracle=_COUNT_LINEITEM_ORACLE)
 def q_chunk_count_total(spark, sf_dir):
     """Chunk counts composed with a relational reduction — total equals
     count(*) regardless of partitioning."""
@@ -366,7 +367,7 @@ def q_ml_train_combine_predict(spark, sf_dir):
     )
 
 
-@query("q_tsv_pipe", oracle="SELECT count(*) AS n_rows FROM lineitem")
+@query("q_tsv_pipe", oracle=_COUNT_LINEITEM_ORACLE)
 def q_tsv_pipe(spark, sf_dir):
     """Pipe TSV through an external non-Python binary with the reference's
     framed protocol, parse the response, count round-tripped rows

@@ -16,18 +16,31 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from streaming_spark.scratch import scratch_dir
+from streaming_spark.queries.curation import (
+    _CURATE_CORPUS_ORACLE,
+    _DECONTAMINATE_ORACLE,
+    _DSIR_ORACLE,
+    _LINE_DEDUP_ORACLE,
+)
+from streaming_spark.queries.northstar import (
+    _BM25_ORACLE,
+    _DUP_SPANS_ORACLE,
+    _ENTITY_RESOLVE_ORACLE,
+    _PHRASE_MATCH_ORACLE,
+    _SEMANTIC_DECON_ORACLE,
+)
 from streaming_spark.queries.registry import T, events_table, query
 
 
-@query(
-    "q_tumbling_window",
-    oracle="""
+_TUMBLING_ORACLE = """
     SELECT CAST(epoch(time_bucket(INTERVAL '1 hour', ts)) AS BIGINT) AS win_start,
            count(*) AS n_events,
            round(sum(value), 4) AS sum_value
     FROM events GROUP BY win_start
-    """,
-)
+    """
+
+
+@query("q_tumbling_window", oracle=_TUMBLING_ORACLE)
 def q_tumbling_window(spark, sf_dir):
     """Tumbling 1-hour event-time window aggregate.  Spark's window() is
     epoch-aligned, matching DuckDB's time_bucket."""
@@ -69,9 +82,7 @@ def q_sliding_window(spark, sf_dir):
     )
 
 
-@query(
-    "q_session_window",
-    oracle="""
+_SESSION_WINDOW_ORACLE = """
     WITH marks AS (
       SELECT user_id, ts,
              CASE WHEN lag(ts) OVER w IS NULL
@@ -91,8 +102,10 @@ def q_sliding_window(spark, sf_dir):
            CAST(floor(epoch(max(ts) + INTERVAL '10 minutes')) AS BIGINT) AS sess_end,
            count(*) AS n_events
     FROM sessions GROUP BY user_id, session_id
-    """,
-)
+    """
+
+
+@query("q_session_window", oracle=_SESSION_WINDOW_ORACLE)
 def q_session_window(spark, sf_dir):
     """Session windows with a 10-minute inactivity gap, per user.  The
     oracle is the classic gaps-and-islands formulation; Spark's
@@ -682,15 +695,7 @@ def _run_to_memory_sink(
     return df.sparkSession.table(sink_name)
 
 
-@query(
-    "q_streaming_tumbling",
-    oracle="""
-    SELECT CAST(epoch(time_bucket(INTERVAL '1 hour', ts)) AS BIGINT) AS win_start,
-           count(*) AS n_events,
-           round(sum(value), 4) AS sum_value
-    FROM events GROUP BY win_start
-    """,
-)
+@query("q_streaming_tumbling", oracle=_TUMBLING_ORACLE)
 def q_streaming_tumbling(spark, sf_dir):
     """A REAL Structured Streaming execution inside the correctness gate:
     the events table is re-materialized as four part files, consumed as a
@@ -718,30 +723,7 @@ def q_streaming_tumbling(spark, sf_dir):
     return _run_to_memory_sink(agg, "q_streaming_tumbling_sink", "complete")
 
 
-@query(
-    "q_streaming_sessionization",
-    oracle="""
-    WITH marks AS (
-      SELECT user_id, ts,
-             CASE WHEN lag(ts) OVER w IS NULL
-                    OR ts - lag(ts) OVER w >= INTERVAL '10 minutes'
-                  THEN 1 ELSE 0 END AS new_session
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-    ),
-    sessions AS (
-      SELECT user_id, ts,
-             sum(new_session) OVER (PARTITION BY user_id ORDER BY ts
-                                    ROWS UNBOUNDED PRECEDING) AS session_id
-      FROM marks
-    )
-    SELECT user_id,
-           CAST(floor(epoch(min(ts))) AS BIGINT) AS sess_start,
-           CAST(floor(epoch(max(ts) + INTERVAL '10 minutes')) AS BIGINT) AS sess_end,
-           count(*) AS n_events
-    FROM sessions GROUP BY user_id, session_id
-    """,
-)
+@query("q_streaming_sessionization", oracle=_SESSION_WINDOW_ORACLE)
 def q_streaming_sessionization(spark, sf_dir):
     """Sessionization executed AS A STREAM: per-user 10-minute-gap
     session windows over the file-source event stream, one micro-batch
@@ -825,10 +807,10 @@ def q_streaming_join(spark, sf_dir):
     return _run_to_memory_sink(joined, "q_streaming_join_sink", "append")
 
 
-@query(
-    "q_streaming_dedup",
-    oracle="SELECT DISTINCT user_id, event_type FROM events",
-)
+_STREAMING_DEDUP_ORACLE = "SELECT DISTINCT user_id, event_type FROM events"
+
+
+@query("q_streaming_dedup", oracle=_STREAMING_DEDUP_ORACLE)
 def q_streaming_dedup(spark, sf_dir):
     """Streaming deduplication: dropDuplicates state carried ACROSS
     micro-batches (one per staged file) — each (user, event_type) key is
@@ -1107,9 +1089,7 @@ def q_rollup_multires(spark, sf_dir):
     return out(minute, "minute").unionAll(out(hour, "hour")).unionAll(out(day, "day"))
 
 
-@query(
-    "q_event_funnel",
-    oracle="""
+_FUNNEL_ORACLE = """
     WITH v AS (
       SELECT user_id, min(ts) AS t1 FROM events
       WHERE event_type = 'view' GROUP BY user_id),
@@ -1125,8 +1105,10 @@ def q_rollup_multires(spark, sf_dir):
            (SELECT count(*) FROM v) AS n_view,
            (SELECT count(*) FROM c) AS n_view_click,
            (SELECT count(*) FROM p) AS n_full_funnel
-    """,
-)
+    """
+
+
+@query("q_event_funnel", oracle=_FUNNEL_ORACLE)
 def q_event_funnel(spark, sf_dir):
     """Ordered conversion funnel (first view → first click after it →
     first purchase after that), corpus-wide counts per stage.
@@ -1365,35 +1347,7 @@ def q_streaming_incremental_rollup(spark, sf_dir):
     )
 
 
-@query(
-    "q_streaming_decontaminate",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, source,
-             CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-                  ELSE string_split_regex(trim(text), '\\s+') END AS toks
-      FROM documents),
-    g AS (
-      SELECT doc_id, source,
-             list_transform(range(1, len(toks) - 3),
-                            i -> array_to_string(toks[i:i+4], ' ')) AS grams
-      FROM t),
-    b AS (
-      SELECT DISTINCT gram
-      FROM g, UNNEST(grams) AS u(gram)
-      WHERE doc_id % 97 = 0),
-    hits AS (
-      SELECT g.doc_id, count(DISTINCT gram) AS n_hits
-      FROM g, UNNEST(grams) AS u(gram)
-      WHERE doc_id % 97 <> 0 AND gram IN (SELECT gram FROM b)
-      GROUP BY g.doc_id)
-    SELECT g.doc_id, g.source,
-           CAST(COALESCE(hits.n_hits, 0) AS BIGINT) AS n_hits,
-           COALESCE(hits.n_hits, 0) > 0 AS contaminated
-    FROM g LEFT JOIN hits USING (doc_id)
-    WHERE g.doc_id % 97 <> 0
-    """,
-)
+@query("q_streaming_decontaminate", oracle=_DECONTAMINATE_ORACLE)
 def q_streaming_decontaminate(spark, sf_dir):
     """Streaming decontamination: documents arrive as an ingest stream
     (one micro-batch per staged file) and each batch is flagged against
@@ -1484,9 +1438,7 @@ def q_scd2_intervals(spark, sf_dir):
     )
 
 
-@query(
-    "q_anomaly_zscore",
-    oracle="""
+_ANOMALY_ZSCORE_ORACLE = """
     WITH stats AS (
       SELECT user_id, event_id, value,
              avg(value) OVER w AS mu,
@@ -1499,8 +1451,10 @@ def q_scd2_intervals(spark, sf_dir):
            round((value - mu) / sigma, 4) AS zscore
     FROM stats
     WHERE n_hist >= 5 AND sigma > 0 AND abs((value - mu) / sigma) > 2.5
-    """,
-)
+    """
+
+
+@query("q_anomaly_zscore", oracle=_ANOMALY_ZSCORE_ORACLE)
 def q_anomaly_zscore(spark, sf_dir):
     """Per-key streaming-style anomaly detection: each event's value
     scored against its OWN user's trailing-20 window (current row
@@ -1535,10 +1489,7 @@ def q_anomaly_zscore(spark, sf_dir):
     )
 
 
-@query(
-    "q_streaming_dedup_watermark",
-    oracle="SELECT DISTINCT user_id, event_type FROM events",
-)
+@query("q_streaming_dedup_watermark", oracle=_STREAMING_DEDUP_ORACLE)
 def q_streaming_dedup_watermark(spark, sf_dir):
     """Streaming dedup with BOUNDED state: `dropDuplicatesWithinWatermark`
     holds each key only until the event-time watermark passes its
@@ -1620,26 +1571,7 @@ def q_streaming_static_join(spark, sf_dir):
     )
 
 
-@query(
-    "q_streaming_funnel",
-    oracle="""
-    WITH v AS (
-      SELECT user_id, min(ts) AS t1 FROM events
-      WHERE event_type = 'view' GROUP BY user_id),
-    c AS (
-      SELECT e.user_id, min(e.ts) AS t2
-      FROM events e JOIN v USING (user_id)
-      WHERE e.event_type = 'click' AND e.ts > v.t1 GROUP BY e.user_id),
-    p AS (
-      SELECT e.user_id, min(e.ts) AS t3
-      FROM events e JOIN c USING (user_id)
-      WHERE e.event_type = 'purchase' AND e.ts > c.t2 GROUP BY e.user_id)
-    SELECT (SELECT count(DISTINCT user_id) FROM events) AS n_users,
-           (SELECT count(*) FROM v) AS n_view,
-           (SELECT count(*) FROM c) AS n_view_click,
-           (SELECT count(*) FROM p) AS n_full_funnel
-    """,
-)
+@query("q_streaming_funnel", oracle=_FUNNEL_ORACLE)
 def q_streaming_funnel(spark, sf_dir):
     """The ordered conversion funnel as a REAL streaming run: per-user
     (t1, t2, t3) stage state carried across micro-batches by
@@ -1743,23 +1675,7 @@ def q_streaming_ann_index(spark, sf_dir):
     )
 
 
-@query(
-    "q_streaming_anomaly",
-    oracle="""
-    WITH stats AS (
-      SELECT user_id, event_id, value,
-             avg(value) OVER w AS mu,
-             stddev_samp(value) OVER w AS sigma,
-             count(*) OVER w AS n_hist
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-                   ROWS BETWEEN 20 PRECEDING AND 1 PRECEDING))
-    SELECT user_id, event_id, round(value, 4) AS value,
-           round((value - mu) / sigma, 4) AS zscore
-    FROM stats
-    WHERE n_hist >= 5 AND sigma > 0 AND abs((value - mu) / sigma) > 2.5
-    """,
-)
+@query("q_streaming_anomaly", oracle=_ANOMALY_ZSCORE_ORACLE)
 def q_streaming_anomaly(spark, sf_dir):
     """Per-key anomaly detection as a REAL streaming run: trailing-20
     history carried across micro-batches by ``stateful_anomaly_zscore``
@@ -1965,25 +1881,7 @@ def q_streaming_kmeans_update(spark, sf_dir):
     )
 
 
-@query(
-    "q_streaming_dup_spans",
-    oracle="""
-    WITH d AS (
-      SELECT doc_id, text FROM documents WHERE length(text) >= 40),
-    w AS (
-      SELECT doc_id, substring(text, CAST(i.i AS INT), 40) AS span
-      FROM d,
-      LATERAL (SELECT unnest(range(1, length(text) - 40 + 2)) AS i) i),
-    dup AS (
-      SELECT span FROM w GROUP BY span HAVING count(DISTINCT doc_id) > 1),
-    counts AS (
-      SELECT doc_id, count(*) AS n_dup_windows
-      FROM w JOIN dup USING (span) GROUP BY doc_id)
-    SELECT c.doc_id, length(d.text) - 39 AS n_windows, c.n_dup_windows
-    FROM counts c JOIN d USING (doc_id)
-    ORDER BY doc_id
-    """,
-)
+@query("q_streaming_dup_spans", oracle=_DUP_SPANS_ORACLE)
 def q_streaming_dup_spans(spark, sf_dir):
     """INCREMENTAL exact duplicate-span index: documents arrive as an
     ingest stream (one micro-batch per staged file); each batch rolls
@@ -2066,9 +1964,7 @@ def q_streaming_dup_spans(spark, sf_dir):
     )
 
 
-@query(
-    "q_ewma",
-    oracle="""
+_EWMA_ORACLE = """
     WITH t AS (
       SELECT user_id, event_id, value,
              row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)
@@ -2084,8 +1980,10 @@ def q_streaming_dup_spans(spark, sf_dir):
     SELECT user_id, event_id, round(value, 4) AS value,
            round(num / den, 4) AS ewma
     FROM s
-    """,
-)
+    """
+
+
+@query("q_ewma", oracle=_EWMA_ORACLE)
 def q_ewma(spark, sf_dir):
     """Exponentially-weighted moving average of each user's value
     stream (decay 0.9, adjusted form — the pandas ``ewm(adjust=True)``
@@ -2140,9 +2038,7 @@ def q_ewma(spark, sf_dir):
     )
 
 
-@query(
-    "q_event_transitions",
-    oracle="""
+_TRANSITIONS_ORACLE = """
     WITH t AS (
       SELECT user_id, event_type,
              lead(event_type) OVER (PARTITION BY user_id
@@ -2155,8 +2051,10 @@ def q_ewma(spark, sf_dir):
     FROM t WHERE next_type IS NOT NULL
     GROUP BY event_type, next_type
     ORDER BY from_type, to_type
-    """,
-)
+    """
+
+
+@query("q_event_transitions", oracle=_TRANSITIONS_ORACLE)
 def q_event_transitions(spark, sf_dir):
     """First-order Markov transition matrix over each user's event
     stream: for every (from_type → to_type) adjacency in time order,
@@ -2193,26 +2091,7 @@ def q_event_transitions(spark, sf_dir):
     )
 
 
-@query(
-    "q_streaming_ewma",
-    oracle="""
-    WITH t AS (
-      SELECT user_id, event_id, value,
-             row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)
-               AS j
-      FROM events),
-    s AS (
-      SELECT user_id, event_id, value, j,
-             sum(value * pow(0.9, -j)) OVER w AS num,
-             sum(pow(0.9, -j)) OVER w AS den
-      FROM t
-      WINDOW w AS (PARTITION BY user_id ORDER BY j
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-    SELECT user_id, event_id, round(value, 4) AS value,
-           round(num / den, 4) AS ewma
-    FROM s
-    """,
-)
+@query("q_streaming_ewma", oracle=_EWMA_ORACLE)
 def q_streaming_ewma(spark, sf_dir):
     """q_ewma's streaming twin, executed as a REAL run: per-user EWMA
     state (just num and den — two floats per key, streaming/core.py
@@ -2240,23 +2119,7 @@ def q_streaming_ewma(spark, sf_dir):
     )
 
 
-@query(
-    "q_streaming_transitions",
-    oracle="""
-    WITH t AS (
-      SELECT user_id, event_type,
-             lead(event_type) OVER (PARTITION BY user_id
-                                    ORDER BY ts, event_id) AS next_type
-      FROM events)
-    SELECT event_type AS from_type, next_type AS to_type,
-           count(*) AS n_transitions,
-           round(count(*) * 1.0 / sum(count(*)) OVER
-                   (PARTITION BY event_type), 4) AS p_next
-    FROM t WHERE next_type IS NOT NULL
-    GROUP BY event_type, next_type
-    ORDER BY from_type, to_type
-    """,
-)
+@query("q_streaming_transitions", oracle=_TRANSITIONS_ORACLE)
 def q_streaming_transitions(spark, sf_dir):
     """q_event_transitions' streaming twin, executed as a REAL run: the
     Markov adjacency extraction carries ONE string per user (the last
@@ -2548,55 +2411,7 @@ def q_streaming_minhash_index(spark, sf_dir):
     return neardup_index_pairs(spark, idx).orderBy("id_a", "id_b")
 
 
-@query(
-    "q_streaming_bm25_index",
-    oracle="""
-    WITH toks AS (
-      SELECT doc_id, t.tok, t.pos
-      FROM documents,
-      LATERAL (SELECT unnest(string_split_regex(trim(text), '\\s+')) AS tok,
-               generate_subscripts(string_split_regex(trim(text), '\\s+'), 1)
-                 AS pos) t
-      WHERE length(trim(text)) > 0),
-    tf AS (
-      SELECT doc_id, tok, count(*) AS tf FROM toks GROUP BY doc_id, tok),
-    dlen AS (
-      SELECT doc_id, count(*) AS dl FROM toks GROUP BY doc_id),
-    stats AS (
-      SELECT (SELECT count(*) FROM documents) AS n_docs,
-             (SELECT avg(dl) FROM dlen) AS avg_dl),
-    df AS (
-      SELECT tok, count(*) AS df FROM tf GROUP BY tok),
-    qfirst AS (
-      SELECT doc_id AS query_id, tok, min(pos) AS first_pos
-      FROM toks WHERE doc_id IN (0, 37, 74) GROUP BY doc_id, tok),
-    qterms AS (
-      SELECT query_id, tok FROM (
-        SELECT query_id, tok,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY first_pos) AS rnk
-        FROM qfirst) z
-      WHERE rnk <= 4),
-    scored AS (
-      SELECT qt.query_id, tf.doc_id,
-             sum(ln((stats.n_docs - df.df + 0.5) / (df.df + 0.5) + 1)
-                 * tf.tf * 2.2
-                 / (tf.tf + 1.2 * (0.25 + 0.75 * dlen.dl / stats.avg_dl)))
-               AS score
-      FROM qterms qt
-      JOIN tf ON tf.tok = qt.tok
-      JOIN dlen ON dlen.doc_id = tf.doc_id
-      CROSS JOIN stats
-      JOIN df ON df.tok = qt.tok
-      GROUP BY qt.query_id, tf.doc_id)
-    SELECT query_id, doc_id, round(score, 4) AS score, rank FROM (
-      SELECT query_id, doc_id, score,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY score DESC, doc_id) AS rank
-      FROM scored) t
-    WHERE rank <= 10
-    """,
-)
+@query("q_streaming_bm25_index", oracle=_BM25_ORACLE)
 def q_streaming_bm25_index(spark, sf_dir):
     """Incrementally-maintained BM25 index: each ingest micro-batch
     tokenizes its documents ONCE and lands their per-(doc, term) stats
@@ -2690,32 +2505,7 @@ def q_streaming_bm25_index(spark, sf_dir):
     )
 
 
-@query(
-    "q_streaming_entity_resolve",
-    oracle="""
-    WITH dirty AS (
-      SELECT c_custkey AS dirty_id,
-             CASE WHEN c_custkey % 3 = 0 THEN
-               substring(c_name, 1, CAST(c_custkey % 8 + 10 AS INT))
-               || 'x'
-               || substring(c_name, CAST(c_custkey % 8 + 12 AS INT))
-             ELSE c_name END AS dirty_name
-      FROM customer),
-    links AS (
-      SELECT d.dirty_id, m.c_custkey AS master_id,
-             levenshtein(d.dirty_name, m.c_name) AS dist
-      FROM dirty d JOIN customer m
-        ON levenshtein(d.dirty_name, m.c_name) <= 1),
-    best AS (
-      SELECT dirty_id, master_id, dist,
-             row_number() OVER (PARTITION BY dirty_id
-                                ORDER BY dist, master_id) AS rk
-      FROM links)
-    SELECT dirty_id, master_id, dist,
-           (dirty_id = master_id) AS resolved_self
-    FROM best WHERE rk = 1 ORDER BY dirty_id
-    """,
-)
+@query("q_streaming_entity_resolve", oracle=_ENTITY_RESOLVE_ORACLE)
 def q_streaming_entity_resolve(spark, sf_dir):
     """q_entity_resolve as the deployment its docstring describes: the
     MASTER's deletion-variant index is built ONCE (and persisted for
@@ -2808,35 +2598,7 @@ def _run_entity_resolve_stream(spark, stream_cust, master_index, sink_dir):
     )
 
 
-@query(
-    "q_streaming_phrase_index",
-    oracle="""
-    WITH toks AS (
-      SELECT doc_id, t.tok, t.pos
-      FROM documents,
-      LATERAL (SELECT unnest(string_split_regex(trim(text), '\\s+')) AS tok,
-               generate_subscripts(string_split_regex(trim(text), '\\s+'), 1)
-                 AS pos) t
-      WHERE length(trim(text)) > 0),
-    probe AS (
-      SELECT doc_id AS query_id, tok, pos FROM toks
-      WHERE doc_id IN (0, 37, 74) AND pos <= 2),
-    bigram AS (
-      SELECT p1.query_id,
-             max(CASE WHEN p1.pos = 1 THEN p1.tok END) AS w1,
-             max(CASE WHEN p1.pos = 2 THEN p1.tok END) AS w2
-      FROM probe p1 GROUP BY p1.query_id),
-    hits AS (
-      SELECT b.query_id, a.doc_id, count(*) AS n_occurrences
-      FROM bigram b
-      JOIN toks a ON a.tok = b.w1
-      JOIN toks c ON c.doc_id = a.doc_id AND c.pos = a.pos + 1
-                  AND c.tok = b.w2
-      GROUP BY b.query_id, a.doc_id)
-    SELECT query_id, doc_id, n_occurrences
-    FROM hits WHERE doc_id <> query_id
-    """,
-)
+@query("q_streaming_phrase_index", oracle=_PHRASE_MATCH_ORACLE)
 def q_streaming_phrase_index(spark, sf_dir):
     """Positional postings as an INCREMENTAL index: each ingest
     micro-batch lands its documents' full (doc, token, position) rows
@@ -2900,52 +2662,7 @@ def q_streaming_phrase_index(spark, sf_dir):
     )
 
 
-@query(
-    "q_streaming_curate_corpus",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, source, text,
-             CASE WHEN length(trim(text)) = 0 THEN []::VARCHAR[]
-                  ELSE string_split_regex(trim(text), '\\s+') END AS toks
-      FROM documents),
-    h AS (
-      SELECT doc_id, source, text, len(toks) AS n_tokens,
-             len(list_filter(toks, t -> t IN ('the','a','of','and','to','is'))) AS hits_en,
-             len(list_filter(toks, t -> t IN ('der','die','das','und','ist','ein'))) AS hits_de,
-             len(list_filter(toks, t -> t IN ('le','la','et','les','des','un'))) AS hits_fr,
-             len(list_filter(toks, t -> t IN ('el','los','y','una','este','por'))) AS hits_es
-      FROM t),
-    lang AS (
-      SELECT doc_id, source, text, n_tokens,
-             CASE WHEN greatest(hits_en, hits_de, hits_fr, hits_es) <= 0 THEN 'unknown'
-                  WHEN hits_en = greatest(hits_en, hits_de, hits_fr, hits_es) THEN 'en'
-                  WHEN hits_de = greatest(hits_en, hits_de, hits_fr, hits_es) THEN 'de'
-                  WHEN hits_fr = greatest(hits_en, hits_de, hits_fr, hits_es) THEN 'fr'
-                  ELSE 'es' END AS pred_lang
-      FROM h),
-    filtered AS (
-      SELECT doc_id, source, text FROM lang
-      WHERE pred_lang = 'en' AND n_tokens >= 20),
-    deduped AS (
-      SELECT doc_id, source, text FROM (
-        SELECT doc_id, source, text,
-               row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-        FROM filtered)
-      WHERE rn = 1),
-    chunks AS (
-      SELECT doc_id, source,
-             substring(text, gs.start, 200) AS chunk
-      FROM deduped,
-      LATERAL (SELECT unnest(generate_series(
-                 1, greatest(length(text) - 40, 1), 160)) AS start) gs
-      WHERE length(text) > 0)
-    SELECT source,
-           CAST(count(DISTINCT doc_id) AS BIGINT) AS docs_kept,
-           count(*) AS n_chunks,
-           CAST(sum(length(chunk)) AS BIGINT) AS sum_chunk_chars
-    FROM chunks GROUP BY source
-    """,
-)
+@query("q_streaming_curate_corpus", oracle=_CURATE_CORPUS_ORACLE)
 def q_streaming_curate_corpus(spark, sf_dir):
     """Composed pipeline #1 as CONTINUOUS INGEST — end-to-end streaming
     curation under the batch pipeline's own oracle.  The per-document
@@ -3009,10 +2726,6 @@ def q_streaming_curate_corpus(spark, sf_dir):
         F.count(F.lit(1)).alias("n_chunks"),
         F.sum(F.length("chunk")).alias("sum_chunk_chars"),
     )
-
-
-from streaming_spark.queries.curation import _DSIR_ORACLE as _DSIR_SQL
-from streaming_spark.queries.curation import _LINE_DEDUP_ORACLE
 
 
 @query("q_streaming_line_index", oracle=_LINE_DEDUP_ORACLE)
@@ -3080,7 +2793,7 @@ def q_streaming_line_index(spark, sf_dir):
     return apply_line_removals(docs_static, removals, "text", "doc_id")
 
 
-@query("q_streaming_dsir_index", oracle=_DSIR_SQL)
+@query("q_streaming_dsir_index", oracle=_DSIR_ORACLE)
 def q_streaming_dsir_index(spark, sf_dir):
     """Incrementally-maintained DSIR feature index (the streaming twin
     of q_dsir_weights): each ingest micro-batch tokenizes ITS OWN
@@ -3134,12 +2847,7 @@ def q_streaming_dsir_index(spark, sf_dir):
     return dsir_scores(index)
 
 
-from streaming_spark.queries.northstar import (  # noqa: E402
-    _SEMANTIC_DECON_ORACLE as _SEMDECON_SQL,
-)
-
-
-@query("q_streaming_semantic_decontaminate", oracle=_SEMDECON_SQL)
+@query("q_streaming_semantic_decontaminate", oracle=_SEMANTIC_DECON_ORACLE)
 def q_streaming_semantic_decontaminate(spark, sf_dir):
     """q_semantic_decontaminate at INGEST time — the deployment the
     batch query's asymmetry already implies: the benchmark slice is

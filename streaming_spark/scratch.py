@@ -1,57 +1,33 @@
-"""Process-scoped scratch space for staged sinks / checkpoints.
+"""Process-scoped scratch space for staged sinks, checkpoints and
+staged read inputs.
 
-Several queries materialize runtime artifacts (streaming sinks,
-checkpoint dirs, staged CSV/JSONL shards, layout experiments, staged
-ANN assignment maps).  Before round 6 each call mkdtemp'd into the
-system temp dir and never cleaned up, so every gate/bench/test
-invocation leaked directories holding full table copies (ADVICE r5).
-All such dirs now live under ONE per-process root that is removed at
-interpreter exit — bounded lifetime, one rmtree, and a single prefix
-(``spark_graft_scratch_``) an operator can sweep if a process dies
-uncleanly.
+The contract:
 
-Round 7 (VERDICT r6 #3): atexit bounds the lifetime of gate/bench/test
-processes, but a long-lived notebook session would still accumulate
-staged table copies until exit.  ``scratch_dir`` therefore sweeps tag
-directories whenever the root's total size exceeds a cap
-(``SPARK_GRAFT_SCRATCH_CAP_BYTES``, default 8 GiB) BEFORE carving the
-new directory — disk use stays bounded within a session, and the dir
-being handed out is never itself a sweep candidate.
-
-Round 8 (ADVICE r7): victims are picked by RECURSIVE max-mtime, not the
-top-level dir stat.  A directory's own mtime only changes when entries
-are created directly in it, and Spark sinks write nested part files —
-so an ACTIVE long-running sink kept its creation-time mtime and was the
-first sweep candidate, deleting live data mid-query in the exact
-long-session scenario the sweep targets.  The recursive max-mtime is
-computed in the same single walk that sizes the dir, so "oldest" now
-means "least recent write activity anywhere inside".  (Exempting every
-dir handed out by this process was considered and rejected: the root is
-per-process, so EVERY dir under it came from this process and a blanket
-exemption would disable the sweep outright.)  An idle-but-still-open
-sink can in principle still be swept; the cap is generous by default
-for that reason — set it lower only in bounded environments.
-
-Round 8 follow-up: mtime measures WRITE activity, but a staged parquet
-a returned LAZY DataFrame still READS never writes again — its
-max-mtime freezes at staging time, so in a long session the sweep
-would eventually evict files an outstanding query plan depends on and
-the next action fails mid-query with FileNotFoundException
-(``exact_nn_topk``'s staged assign map is exactly this shape).
-``scratch_dir(tag, pin=True)`` therefore exempts a dir from sweeping
-for the life of the process (it still dies with the root atexit).
-Pinning is for METADATA-SIZED staged read inputs only — pinned bytes
-still count toward the cap, so oversized pins would starve the
-sweepable pool; big artifacts (sinks, table copies) must stay
-unpinned.
-
-Round 9 (ADVICE r8): pins are RELEASABLE — :func:`unpin` returns a dir
-to the ordinary sweep pool once its consuming frame is known to be
-consumed (stagers expose their dirs: ``exact_nn_topk`` puts them in
-``stats_out["staged_dirs"]``), and the sweep warns once per process
-when pinned bytes alone exceed half the cap, so pin starvation is now
-both bounded (release) and observable (warning) instead of merely
-documented."""
+- **Root.**  Every dir lives under ONE per-process root
+  (:func:`scratch_root`, prefix ``spark_graft_scratch_``), created
+  lazily and removed at interpreter exit.  A process that dies
+  uncleanly leaves one prefixed dir to sweep by hand.
+- **Cap sweep.**  :func:`scratch_dir` carves a fresh tag dir, first
+  removing least-recently-ACTIVE tag dirs while the root exceeds
+  ``SPARK_GRAFT_SCRATCH_CAP_BYTES`` (default 8 GiB; a malformed value
+  warns once and falls back to the default).  Activity is the
+  recursive max-mtime, so a sink writing nested part files reads as
+  recent; the dir being handed out is never a victim.
+- **Pin.**  ``scratch_dir(tag, pin=True)`` exempts a dir from the sweep
+  for the life of the process.  It is for staged READ inputs of a lazy
+  DataFrame: reads leave no mtime, so the sweep cannot see that a
+  returned frame still needs the files.  Pinned bytes still count
+  toward the cap, and a one-time ``ResourceWarning`` fires when they
+  alone pass half of it.
+- **Unpin.**  :func:`unpin` returns a pinned dir to the sweep pool
+  (idempotent; it does not delete).  Stagers report their pinned dirs
+  (``exact_nn_topk`` in ``stats_out["staged_dirs"]``) so a caller that
+  knows the frame is consumed can release them.
+- **Stage.**  :func:`stage` writes a frame once to a pinned dir and
+  reads it back — the one place a pinned dir is paired with a parquet
+  write.  A mapInPandas output can be neither column-pruned nor shared
+  across lineage branches; the staged parquet can be both, and its
+  round-trip is bit-exact."""
 
 from __future__ import annotations
 
@@ -60,6 +36,10 @@ import os
 import shutil
 import tempfile
 import warnings
+from typing import TYPE_CHECKING
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame
 
 _ROOT: str | None = None
 
@@ -205,3 +185,12 @@ def unpin(path: str) -> None:
     known to be consumed (collected, written, or discarded) so a long
     session's pins cannot starve the sweepable budget (ADVICE r8)."""
     _PINNED.discard(path)
+
+
+def stage(df: DataFrame, tag: str) -> tuple[DataFrame, str]:
+    """Write ``df`` once to a fresh pinned scratch dir and read it back.
+    Returns ``(staged frame, dir)``; the caller reports the dir so the
+    pin can be released with :func:`unpin` once the frame is consumed."""
+    d = scratch_dir(tag, pin=True)
+    df.write.parquet(d + "/t")
+    return df.sparkSession.read.parquet(d + "/t"), d

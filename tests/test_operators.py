@@ -818,7 +818,7 @@ def test_exact_nn_topk_staged_dirs_are_releasable(spark):
     out = exact_nn_topk(df, k=1, mode="blocked", n_cells=4, stats_out=stats)
     assert out.count() == 50  # frame fully consumed
     staged = stats["staged_dirs"]
-    assert len(staged) == 1  # the fused pass-A/probe table
+    assert len(staged) == 2  # the assign map and the fused pass-A/probe table
     assert all(d in scratch._PINNED for d in staged)
     for d in staged:
         scratch.unpin(d)
@@ -4343,103 +4343,6 @@ def test_ivfpq_local_prestaged_serve_agrees_and_validates(spark, tmp_path):
             rerank=32, centroids=cent_b, codebooks=books_b,
             encoded=staged,
         )
-
-
-def test_exact_nn_topk_staged_assign_branch_identical(
-    spark, monkeypatch, tmp_path
-):
-    """r15: above _STAGE_ASSIGN_MIN_BYTES of ESTIMATED input the
-    blocked arm stages its assign map once for all three consumers
-    (stats fold, pass A, pass B's member/query sides); below it — and
-    when stats are unknown (no file source) — it keeps the r14
-    recompute shape.  Forcing the threshold to 0 on a parquet-backed
-    small corpus must (a) take the staged branch — two pinned scratch
-    dirs — and (b) return rows identical to the recompute branch:
-    staging is a physical choice, never a semantic one (parquet
-    round-trips the float64 keep_vec column bit-exactly)."""
-    from streaming_spark.operators import similarity
-
-    rng = np.random.default_rng(43)
-    vecs = rng.standard_normal((60, 10)).astype(np.float32)
-    rows = [(i, vecs[i].tolist()) for i in range(60)]
-    spark.createDataFrame(
-        rows, "vec_id BIGINT, embedding ARRAY<FLOAT>"
-    ).repartition(3).write.parquet(str(tmp_path / "v"))
-    df = spark.read.parquet(str(tmp_path / "v"))
-
-    def snap(out):
-        return {
-            (r.query_id, r.rank): (r.neighbor_id, round(r.sim, 9))
-            for r in out.collect()
-        }
-
-    # real (file-source) stats, tiny table -> below the 64 MB default
-    unstaged_stats: dict = {}
-    unstaged = snap(
-        similarity.exact_nn_topk(
-            df, k=2, mode="blocked", n_cells=5, stats_out=unstaged_stats
-        )
-    )
-    assert len(unstaged_stats["staged_dirs"]) == 1  # fused table only
-
-    monkeypatch.setattr(similarity, "_STAGE_ASSIGN_MIN_BYTES", 0)
-    staged_stats: dict = {}
-    staged = snap(
-        similarity.exact_nn_topk(
-            df, k=2, mode="blocked", n_cells=5, stats_out=staged_stats
-        )
-    )
-    assert len(staged_stats["staged_dirs"]) == 2  # assign + fused
-    assert staged == unstaged
-    assert staged_stats["candidates"] == unstaged_stats["candidates"]
-
-
-def test_cosine_pairs_blocked_staged_assign_branch_identical(
-    spark, monkeypatch, tmp_path
-):
-    """r15: cosine_pairs' blocked arm stages its assign map above
-    _STAGE_ASSIGN_MIN_BYTES of estimated input (two consumers — the
-    stats fold and the task join — each re-ran the assign unstaged).
-    Forcing the threshold to 0 on a parquet-backed corpus must take the
-    staged branch (one pinned dir, surfaced in stats_out) and emit the
-    identical pair set."""
-    from streaming_spark import scratch
-    from streaming_spark.operators import similarity
-
-    rng = np.random.default_rng(59)
-    vecs = rng.standard_normal((80, 12)).astype(np.float32)
-    rows = [(i, vecs[i].tolist()) for i in range(80)]
-    spark.createDataFrame(
-        rows, "vec_id BIGINT, embedding ARRAY<FLOAT>"
-    ).repartition(3).write.parquet(str(tmp_path / "v"))
-    df = spark.read.parquet(str(tmp_path / "v"))
-
-    def snap(out):
-        return {
-            (r.id_a, r.id_b): round(r.cos_sim, 9) for r in out.collect()
-        }
-
-    un_stats: dict = {}
-    unstaged = snap(
-        similarity.cosine_pairs(
-            df, threshold=0.3, mode="blocked", n_cells=5, stats_out=un_stats
-        )
-    )
-    assert un_stats["staged_dirs"] == []
-
-    monkeypatch.setattr(similarity, "_STAGE_ASSIGN_MIN_BYTES", 0)
-    st_stats: dict = {}
-    staged = snap(
-        similarity.cosine_pairs(
-            df, threshold=0.3, mode="blocked", n_cells=5, stats_out=st_stats
-        )
-    )
-    assert len(st_stats["staged_dirs"]) == 1
-    assert all(d in scratch._PINNED for d in st_stats["staged_dirs"])
-    assert staged == unstaged
-    assert st_stats["candidates"] == un_stats["candidates"]
-    for d in st_stats["staged_dirs"]:
-        scratch.unpin(d)
 
 
 def test_fuzzy_hot_bucket_tiling_exact_and_bounded(spark):

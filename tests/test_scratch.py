@@ -159,3 +159,24 @@ def test_scratch_cap_env_parsed_defensively(monkeypatch):
     with pytest.warns(RuntimeWarning, match="not an integer"):
         d = scratch.scratch_dir("badcap")
     assert os.path.isdir(d)
+
+
+def test_stage_reads_back_its_input_from_a_pinned_dir(spark, monkeypatch, tmp_path):
+    """``stage`` writes a frame once to a pinned dir and returns the
+    read-back frame with the dir: the rows come back bit-exact, the
+    dir survives a cap-0 sweep while pinned, and ``unpin`` returns it
+    to the sweep pool."""
+    monkeypatch.setattr(scratch, "_ROOT", str(tmp_path))
+    monkeypatch.setattr(scratch, "_WARNED_PIN_PRESSURE", True)  # silence it
+    rows = [(i, 1.0 / (i + 3), [0.1 * i, -(i ** 0.5)]) for i in range(40)]
+    df = spark.createDataFrame(rows, "id BIGINT, x DOUBLE, v ARRAY<DOUBLE>")
+    staged, d = scratch.stage(df, "stagetest")
+    assert sorted(staged.collect()) == sorted(df.collect())
+    assert d in scratch._PINNED
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH_CAP_BYTES", "0")
+    scratch.scratch_dir("trigger")
+    assert os.path.isdir(d)
+    scratch.unpin(d)
+    assert d not in scratch._PINNED
+    scratch.scratch_dir("trigger")
+    assert not os.path.isdir(d)
