@@ -18,9 +18,11 @@ the reference's ``<response:string>`` output schema
 ``parse()``, reference README.md:81-99).
 
 Execution model: one child process per partition (the reference forks one
-child per instance, ChildProcess.cpp:49-102).  A writer thread feeds all
-chunks while the main thread reads responses in order — same pipelining,
-deadlock-free for children that buffer.  Like every other operator that
+child per instance, ChildProcess.cpp:49-102), driven by :class:`_Child`,
+the one child core of all three pipes.  Its single ``select`` loop drains
+the child's stdout while it writes, so ``pipe_tsv`` can send every chunk
+before it reads the first reply — the pipelining a child that buffers
+needs — without a second thread.  Like every other operator that
 crosses the Python boundary it runs under ``mapInArrow``: chunks are
 framed from Arrow record batches (string columns escaped in Arrow) and
 the responses go back as one Arrow batch per partition.
@@ -29,8 +31,9 @@ the responses go back as one Arrow batch per partition.
 from __future__ import annotations
 
 import os
+import select
+import struct
 import subprocess
-import threading
 from typing import Iterator
 
 import numpy as np
@@ -50,7 +53,10 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from streaming_spark.operators.stream import _broadcast_bounded
+from streaming_spark.operators.stream import (
+    _broadcast_bounded,
+    _with_provenance_schema,
+)
 
 RESPONSE_SCHEMA = StructType(
     [
@@ -107,13 +113,130 @@ def _check_allowed(op: str, command: str, allowed_commands: list[str] | None) ->
     operator rights."""
     allow = allowed_commands
     if allow is None:
-        env = os.environ.get("STREAMING_SPARK_PIPE_ALLOWLIST")
-        allow = env.split(":") if env else None
+        listed = os.environ.get("STREAMING_SPARK_PIPE_ALLOWLIST")
+        allow = listed.split(":") if listed else None
     if allow is not None and command not in allow:
         raise PermissionError(
             f"{op}: command {command!r} is not on the allowlist "
             "(reference etc/stream_allowed semantics)"
         )
+
+
+# How long a child may go without reading a byte or writing one (or, after
+# its final reply, without exiting) before the task fails.  Read when a
+# pipe is built, so the value ships with the plan.
+_CHILD_TIMEOUT_S = 600.0
+_IO_BYTES = 1 << 20  # reference read buffer is 1 MiB (ChildProcess.h:47)
+
+
+class _Child:
+    """One external child: the core of all three pipes (the reference's
+    ChildProcess, ChildProcess.cpp:49-225).
+
+    The child runs as ``/bin/bash -c command`` (the reference's
+    ``execle("/bin/bash","-c",cmd)``, ChildProcess.cpp:84-88).  Its stdin
+    is non-blocking and one ``select`` loop serves both pipe ends:
+    :meth:`write` drains the child's stdout into a buffer while it waits,
+    so an echoing child cannot deadlock the parent, and :meth:`read` /
+    :meth:`readline` serve from that buffer — the file object the wire
+    framings read and write.  A child that neither reads nor writes for
+    ``timeout`` seconds fails the task, and leaving the ``with`` block on
+    any error kills it (kill-query-on-wedge, ChildProcess.cpp:147-156).
+    """
+
+    def __init__(self, op: str, command: str, timeout: float):
+        self._op = op
+        self._timeout = timeout
+        self._proc = subprocess.Popen(
+            ["/bin/bash", "-c", command],
+            stdin=subprocess.PIPE,
+            stdout=subprocess.PIPE,
+            bufsize=0,
+        )
+        self._in = self._proc.stdin.fileno()
+        self._out = self._proc.stdout.fileno()
+        # a blocking write(2) of more than PIPE_BUF bytes waits for the
+        # whole write, which select's writability cannot prevent
+        os.set_blocking(self._in, False)
+        self._buf = bytearray()
+        self._eof = False
+
+    def __enter__(self) -> _Child:
+        return self
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        if exc_type is not None:
+            self._proc.kill()
+            self._proc.wait()
+        self._proc.stdin.close()
+        self._proc.stdout.close()
+
+    def _poll(self, writing: bool) -> bool:
+        """Wait for the child's stdout (and, when ``writing``, its stdin);
+        buffer what stdout has.  True when stdin can take bytes."""
+        ready_r, ready_w, _ = select.select(
+            [] if self._eof else [self._out],
+            [self._in] if writing else [],
+            [],
+            self._timeout,
+        )
+        if not ready_r and not ready_w:
+            raise TimeoutError(
+                f"{self._op}: child neither read nor wrote for "
+                f"{self._timeout}s mid-protocol; killed"
+            )
+        if ready_r:
+            got = os.read(self._out, _IO_BYTES)
+            self._buf += got
+            self._eof = not got
+        return bool(ready_w)
+
+    def write(self, data) -> None:
+        view = memoryview(data).cast("B")
+        sent = 0
+        while sent < len(view):
+            if self._poll(writing=True):
+                try:
+                    sent += os.write(self._in, view[sent : sent + _IO_BYTES])
+                except BlockingIOError:
+                    pass
+
+    def read(self, n: int) -> bytes:
+        """``n`` bytes of the child's output; fewer only at its end."""
+        while len(self._buf) < n and not self._eof:
+            self._poll(writing=False)
+        out = bytes(self._buf[:n])
+        del self._buf[:n]
+        return out
+
+    def readline(self) -> bytes:
+        """One line with its newline; at the output's end, what is left."""
+        seen = 0
+        while (i := self._buf.find(b"\n", seen)) < 0 and not self._eof:
+            seen = len(self._buf)
+            self._poll(writing=False)
+        return self.read(i + 1 if i >= 0 else len(self._buf))
+
+    def end_input(self) -> None:
+        self._proc.stdin.close()
+
+    def wait(self) -> None:
+        """Bound the child's exit and fail the task on a non-zero status
+        (child death is a query error, ChildProcess.cpp:147-156).  It
+        waits for the end of the child's output first, which ``select``
+        sees at once; ``Popen.wait`` with a timeout polls, sleeping up to
+        50 ms between checks.  Output past the final reply is dropped."""
+        while not self._eof:
+            self._poll(writing=False)
+        try:
+            rc = self._proc.wait(timeout=self._timeout)
+        except subprocess.TimeoutExpired:
+            raise TimeoutError(
+                f"{self._op}: child sent its final reply but did not exit "
+                f"within {self._timeout}s; killed"
+            ) from None
+        if rc != 0:
+            raise RuntimeError(f"{self._op} child exited with status {rc}")
 
 
 def _tsv_fields(col: pa.ChunkedArray) -> pa.Array:
@@ -170,7 +293,6 @@ def pipe_tsv(
     command: str,
     chunk_rows: int = 100_000,
     allowed_commands: list[str] | None = None,
-    silence_timeout: float = 600.0,
 ) -> DataFrame:
     """Pipe ``df`` through ``command`` (run via ``/bin/bash -c``, like the
     reference's ``execle("/bin/bash","-c",cmd)`` — ChildProcess.cpp:84-88)
@@ -182,6 +304,9 @@ def pipe_tsv(
     Only scalar columns cross the TSV wire: a nested column (array, map,
     struct) is rejected with a ``TypeError`` before any process is
     forked, as is a command off the allowlist (:func:`_check_allowed`).
+    The child owes one reply per chunk sent plus the final one; a child
+    that closes its output sooner fails the task (child early exit is a
+    query error, TSVInterface.cpp:317-360).
     """
     _check_allowed("pipe_tsv", command, allowed_commands)
     for field in df.schema.fields:
@@ -191,107 +316,36 @@ def pipe_tsv(
                 f"{field.dataType.simpleString()} — only scalar columns "
                 "cross the TSV wire"
             )
+    timeout = _CHILD_TIMEOUT_S
+
+    def read_line(child: _Child) -> bytes:
+        line = child.readline()
+        if not line.endswith(b"\n"):
+            raise RuntimeError("pipe_tsv: child closed its output mid-protocol")
+        return line
+
+    def read_message(child: _Child) -> str | None:
+        n = int(read_line(child).strip() or 0)
+        # header and the single trailing newline stripped, as the
+        # reference does (TSVInterface.cpp:58-64 / README.md:81)
+        body = b"".join(read_line(child) for _ in range(n))[:-1]
+        return body.decode("utf-8") or None
 
     def run_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         ctx = TaskContext.get()
         instance_id = ctx.partitionId() if ctx is not None else 0
-        proc = subprocess.Popen(
-            ["/bin/bash", "-c", command],
-            stdin=subprocess.PIPE,
-            stdout=subprocess.PIPE,
-            bufsize=1024 * 1024,  # reference read buffer is 1 MiB (ChildProcess.h:47)
-        )
-
-        write_error: list[BaseException] = []
-
-        def writer() -> None:
-            try:
-                for table in _rechunk(batches, chunk_rows):
-                    proc.stdin.write(_tsv_chunk(table))
-                    proc.stdin.flush()
-                # end-of-stream terminator (reference README.md:52-56)
-                proc.stdin.write(b"0\n")
-                proc.stdin.flush()
-                proc.stdin.close()
-            except BaseException as exc:  # surfaced by the reader loop
-                write_error.append(exc)
-
-        t = threading.Thread(target=writer, daemon=True)
-        t.start()
-
-        # line reader over the RAW stream with a silence watchdog: a
-        # wedged child (stopped reading AND writing without closing
-        # stdout) fails the task instead of blocking readline forever.
-        # select() must see the raw fd — the BufferedReader would slurp
-        # bytes the fd no longer shows.
-        import select as _select
-
-        raw = proc.stdout.raw if hasattr(proc.stdout, "raw") else proc.stdout
-        fd = proc.stdout.fileno()
-        rbuf = bytearray()
-        eof = [False]
-
-        def read_line() -> bytes:
-            while True:
-                i = rbuf.find(b"\n")
-                if i >= 0:
-                    line = bytes(rbuf[: i + 1])
-                    del rbuf[: i + 1]
-                    return line
-                if eof[0]:
-                    line = bytes(rbuf)
-                    rbuf.clear()
-                    return line
-                ready, _, _ = _select.select([fd], [], [], silence_timeout)
-                if not ready:
-                    proc.kill()
-                    proc.wait()
-                    raise RuntimeError(
-                        f"pipe_tsv: child produced no output for "
-                        f"{silence_timeout}s mid-protocol; killed"
-                    )
-                got = raw.read(1 << 20)
-                if not got:
-                    eof[0] = True
-                else:
-                    rbuf.extend(got)
-
-        def read_message() -> str | None:
-            header = read_line()
-            if not header:
-                return None
-            n = int(header.strip() or 0)
-            if n == 0:
-                return ""
-            body = b"".join(read_line() for _ in range(n)).decode("utf-8")
-            # strip single trailing newline, as the reference does
-            # (TSVInterface.cpp:58-64 / README.md:81)
-            return body[:-1] if body.endswith("\n") else body
-
-        responses: list[str | None] = []
-        while True:
-            msg = read_message()
-            if msg is None:
-                break
-            responses.append(msg if msg != "" else None)
-        t.join(timeout=60)
-        if t.is_alive():
-            # writer still blocked feeding a stalled child — kill it so the
-            # task FAILS instead of hanging on proc.wait() (the reference
-            # kills the query when the child wedges, ChildProcess.cpp:147-156)
-            proc.kill()
-            proc.wait()
-            raise RuntimeError(
-                "pipe_tsv: child stopped consuming stdin (writer stalled "
-                ">60s); killed child and failed the task"
-            )
-        rc = proc.wait()
-        if write_error:
-            raise write_error[0]
-        if rc != 0:
-            # child early exit fails the task (reference kills the query on
-            # child death — ChildProcess.cpp:147-156; Spark retries the task)
-            raise RuntimeError(f"pipe_tsv child exited with status {rc}")
+        with _Child("pipe_tsv", command, timeout) as child:
+            # every chunk goes out before the first reply is read: a
+            # child may hold its replies until the terminator
+            sent = 0
+            for table in _rechunk(batches, chunk_rows):
+                child.write(_tsv_chunk(table))
+                sent += 1
+            # end-of-stream terminator (reference README.md:52-56)
+            child.write(b"0\n")
+            child.end_input()
+            responses = [read_message(child) for _ in range(sent + 1)]
+            child.wait()
         n = len(responses)
         yield pa.RecordBatch.from_arrays(
             [
@@ -336,8 +390,6 @@ def pipe_df(
     side_input=None,
     chunk_rows: int = 100_000,
     allowed_commands: list[str] | None = None,
-    env: dict[str, str] | None = None,
-    read_timeout: float = 60.0,
 ) -> DataFrame:
     """The reference's ``format=df`` external pipe: each chunk crosses the
     child's stdin/stdout as one R-serialized named list of column vectors
@@ -356,9 +408,8 @@ def pipe_df(
     output dimensions (DFInterface.cpp:82-85).
 
     The exchange is strictly synchronous request/response per chunk (the
-    reference's streamData :137-158), so no writer thread is needed; a
-    child that stops replying trips ``read_timeout`` and fails the task
-    (kill-query-on-wedge, ChildProcess.cpp:147-156).
+    reference's streamData :137-158); a child that stops reading or
+    replying fails the task (:class:`_Child`).
 
     ``side_input`` (a pandas DataFrame) is sent FIRST, before any data
     chunks, as one df message whose response is discarded — the
@@ -367,8 +418,6 @@ def pipe_df(
     poLCA.Rmd:70-78).  A child using ``df_child_loop(..., n_side=1,
     on_side=...)`` pops it.
     """
-    import select
-
     from pyspark.sql.types import (
         DoubleType,
         FloatType,
@@ -399,195 +448,98 @@ def pipe_df(
     out_schema = StructType.fromDDL(schema) if isinstance(schema, str) else schema
     out_rtypes = [rtype_of(f) for f in out_schema.fields]
     out_names = [f.name for f in out_schema.fields]
-    if provenance:
-        full_schema = StructType(
-            [
-                StructField("instance_id", LongType(), False),
-                StructField("chunk_no", LongType(), False),
-                StructField("value_no", LongType(), False),
-            ]
-            + list(out_schema.fields)
-        )
-    else:
-        full_schema = out_schema
-    child_env = dict(env or {})
+    full_schema = _with_provenance_schema(out_schema) if provenance else out_schema
     side_bc = (
         _broadcast_bounded(df.sparkSession.sparkContext, side_input)
         if side_input is not None
         else None
     )
+    timeout = _CHILD_TIMEOUT_S
 
-    class _TimeoutReader:
-        """File-like over the child's stdout that fails instead of
-        blocking forever when the child wedges mid-protocol."""
-
-        def __init__(self, stream):
-            # Use the UNBUFFERED raw stream: selecting on the fd while
-            # reading through a BufferedReader deadlocks (the buffer
-            # slurps bytes the fd no longer shows).  _read_exact loops,
-            # so raw short reads are fine.
-            self._raw = stream.raw if hasattr(stream, "raw") else stream
-            self._fd = stream.fileno()
-
-        def read(self, n: int) -> bytes:
-            ready, _, _ = select.select([self._fd], [], [], read_timeout)
-            if not ready:
-                raise TimeoutError(
-                    f"pipe_df: child produced no output for {read_timeout}s"
+    def exchange(child: _Child, pdf_or_none, instance_id: int, chunk_no: int):
+        if pdf_or_none is None:
+            rserial.write_empty_message(child)
+            child.end_input()
+        else:
+            rserial.write_df_message(
+                child, rserial.pandas_to_columns(pdf_or_none, in_rtypes)
+            )
+        cols = rserial.read_df_message(child)
+        if cols == {}:
+            return None
+        if len(cols) != len(out_names):
+            raise RuntimeError(
+                f"pipe_df: child returned {len(cols)} columns, declared "
+                f"{len(out_names)} (reference readDF:291-295)"
+            )
+        out = rserial.columns_to_pandas(cols)
+        out.columns = out_names  # positional, like the reference reader
+        for name, rt in zip(out_names, out_rtypes):
+            want = {"double": "Float64", "int32": "Int32", "string": "string"}[rt]
+            if str(out[name].dtype) != want:
+                raise RuntimeError(
+                    f"pipe_df: child column {name!r} arrived as "
+                    f"{out[name].dtype}, declared {rt}"
                 )
-            return self._raw.read(n)
-
-    class _TimeoutWriter:
-        """Write-side twin: a child that stops CONSUMING stdin would
-        block a plain write forever once the pipe buffer fills (the
-        chunk is typically MBs, the pipe 64 KB) — select on writability
-        and fail the task instead."""
-
-        def __init__(self, stream):
-            self._fd = stream.fileno()
-            # MUST be non-blocking: on a blocking pipe, write(2) of more
-            # than PIPE_BUF blocks until the WHOLE chunk transfers, and
-            # select's writability (≥ PIPE_BUF free) cannot prevent that
-            os.set_blocking(self._fd, False)
-
-        def write(self, data) -> int:
-            view = memoryview(bytes(data))
-            total = 0
-            while total < len(view):
-                _, ready, _ = select.select([], [self._fd], [], read_timeout)
-                if not ready:
-                    raise TimeoutError(
-                        f"pipe_df: child stopped consuming stdin for {read_timeout}s"
-                    )
-                try:
-                    total += os.write(self._fd, view[total : total + (1 << 20)])
-                except BlockingIOError:
-                    continue  # raced: buffer refilled before our write
-            return total
-
-        def flush(self) -> None:
-            pass  # writes go straight to the fd
+        if provenance:
+            out.insert(0, "value_no", np.arange(len(out), dtype=np.int64))
+            out.insert(0, "chunk_no", np.int64(chunk_no))
+            out.insert(0, "instance_id", np.int64(instance_id))
+        return out
 
     def run_partition(batches):
         ctx = TaskContext.get()
         instance_id = ctx.partitionId() if ctx is not None else 0
-        full_env = dict(os.environ)
-        full_env.update(child_env)
-        proc = subprocess.Popen(
-            ["/bin/bash", "-c", command],
-            stdin=subprocess.PIPE,
-            stdout=subprocess.PIPE,
-            env=full_env,
-        )
-        reader = _TimeoutReader(proc.stdout)
-        writer = _TimeoutWriter(proc.stdin)
-
-        def exchange(pdf_or_none, chunk_no: int):
-            try:
-                if pdf_or_none is None:
-                    rserial.write_empty_message(writer)
-                else:
-                    rserial.write_df_message(
-                        writer,
-                        rserial.pandas_to_columns(pdf_or_none, in_rtypes),
-                    )
-                cols = rserial.read_df_message(reader)
-            except BaseException:
-                proc.kill()
-                proc.wait()
-                raise
-            if cols == {}:
-                return None
-            if len(cols) != len(out_names):
-                proc.kill()
-                proc.wait()
-                raise RuntimeError(
-                    f"pipe_df: child returned {len(cols)} columns, declared "
-                    f"{len(out_names)} (reference readDF:291-295)"
-                )
-            out = rserial.columns_to_pandas(cols)
-            out.columns = out_names  # positional, like the reference reader
-            for name, rt in zip(out_names, out_rtypes):
-                want = {"double": "Float64", "int32": "Int32", "string": "string"}[rt]
-                if str(out[name].dtype) != want:
-                    proc.kill()
-                    proc.wait()
-                    raise RuntimeError(
-                        f"pipe_df: child column {name!r} arrived as "
-                        f"{out[name].dtype}, declared {rt}"
-                    )
-            if provenance:
-                out.insert(0, "value_no", np.arange(len(out), dtype=np.int64))
-                out.insert(0, "chunk_no", np.int64(chunk_no))
-                out.insert(0, "instance_id", np.int64(instance_id))
-            return out
-
-        if side_bc is not None:
-            # second-array semantics: the side chunk goes down the same
-            # wire first; its response is discarded (the reference
-            # streams the extra array's chunks before the main one,
-            # PhysicalStream.cpp:74-100)
-            side_pdf = side_bc.value
-            try:
+        with _Child("pipe_df", command, timeout) as child:
+            if side_bc is not None:
+                # second-array semantics: the side chunk goes down the same
+                # wire first; its response is discarded (the reference
+                # streams the extra array's chunks before the main one,
+                # PhysicalStream.cpp:74-100)
+                side_pdf = side_bc.value
                 rserial.write_df_message(
-                    writer,
-                    rserial.pandas_to_columns(
-                        side_pdf, rserial.infer_rtypes(side_pdf)
-                    ),
+                    child,
+                    rserial.pandas_to_columns(side_pdf, rserial.infer_rtypes(side_pdf)),
                 )
-                rserial.read_df_message(reader)
-            except BaseException:
-                proc.kill()
-                proc.wait()
-                raise
+                rserial.read_df_message(child)
 
-        # coalesce Arrow batches up to chunk_rows per wire message: each
-        # exchange is a synchronous round trip, so bigger chunks amortize
-        # the per-message serialization + handshake (the reference's
-        # chunk == SciDB chunk; ours is a tunable batch)
-        chunk_no = 0
-        pending: list[pd.DataFrame] = []
-        pending_rows = 0
+            # coalesce Arrow batches up to chunk_rows per wire message: each
+            # exchange is a synchronous round trip, so bigger chunks amortize
+            # the per-message serialization + handshake (the reference's
+            # chunk == SciDB chunk; ours is a tunable batch)
+            chunk_no = 0
+            pending: list[pd.DataFrame] = []
+            pending_rows = 0
 
-        def flush_pending():
-            nonlocal pending, pending_rows, chunk_no
-            if not pending:
-                return None
-            pdf = pending[0] if len(pending) == 1 else pd.concat(
-                pending, ignore_index=True
-            )
-            pending, pending_rows = [], 0
-            out = exchange(pdf, chunk_no)
-            if out is not None and len(out):
-                chunk_no += 1
-            return out
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            pending.append(pdf)
-            pending_rows += len(pdf)
-            if pending_rows >= chunk_rows:
-                out = flush_pending()
+            def flush_pending():
+                nonlocal pending, pending_rows, chunk_no
+                if not pending:
+                    return None
+                pdf = pending[0] if len(pending) == 1 else pd.concat(
+                    pending, ignore_index=True
+                )
+                pending, pending_rows = [], 0
+                out = exchange(child, pdf, instance_id, chunk_no)
                 if out is not None and len(out):
-                    yield out
-        out = flush_pending()
-        if out is not None and len(out):
-            yield out
-        out = exchange(None, chunk_no)
-        if out is not None and len(out):
-            yield out
-        try:
-            rc = proc.wait(timeout=read_timeout)
-        except subprocess.TimeoutExpired:
-            proc.kill()
-            proc.wait()
-            raise RuntimeError(
-                "pipe_df: child replied to the final handshake but did not "
-                f"exit within {read_timeout}s; killed"
-            )
-        if rc != 0:
-            raise RuntimeError(f"pipe_df child exited with status {rc}")
+                    chunk_no += 1
+                return out
+
+            for pdf in batches:
+                if len(pdf) == 0:
+                    continue
+                pending.append(pdf)
+                pending_rows += len(pdf)
+                if pending_rows >= chunk_rows:
+                    out = flush_pending()
+                    if out is not None and len(out):
+                        yield out
+            out = flush_pending()
+            if out is not None and len(out):
+                yield out
+            out = exchange(child, None, instance_id, chunk_no)
+            if out is not None and len(out):
+                yield out
+            child.wait()
 
     return df.mapInPandas(run_partition, full_schema)
 
@@ -599,7 +551,6 @@ def pipe_arrow(
     side_input=None,
     chunk_rows: int = 65536,
     allowed_commands: list[str] | None = None,
-    env: dict[str, str] | None = None,
 ) -> DataFrame:
     """The feather-protocol external pipe: each chunk crosses the child's
     stdin/stdout as an 8-byte LE size + Arrow IPC record batch, the child
@@ -616,8 +567,6 @@ def pipe_arrow(
     Output schema must be declared (the reference's ``types:``/``names:``
     keywords, README.md:23-27).
     """
-    import struct
-
     _check_allowed("pipe_arrow", command, allowed_commands)
     out_schema = (
         StructType.fromDDL(schema) if isinstance(schema, str) else schema
@@ -627,70 +576,55 @@ def pipe_arrow(
         if side_input is not None
         else None
     )
-    child_env = dict(env or {})
+    timeout = _CHILD_TIMEOUT_S
+
+    def write_message(child: _Child, batch_or_none) -> None:
+        if batch_or_none is None:
+            child.write(struct.pack("<Q", 0))
+            child.end_input()
+            return
+        sink = pa.BufferOutputStream()
+        with pa.ipc.new_stream(sink, batch_or_none.schema) as w:
+            w.write_batch(batch_or_none)
+        buf = sink.getvalue()
+        child.write(struct.pack("<Q", buf.size))
+        child.write(buf)
+
+    def read_message(child: _Child):
+        header = child.read(8)
+        if len(header) < 8:
+            raise RuntimeError("pipe_arrow: child closed its output mid-protocol")
+        (size,) = struct.unpack("<Q", header)
+        if size == 0:
+            return None
+        payload = child.read(size)
+        if len(payload) < size:
+            raise RuntimeError("pipe_arrow: child closed its output mid-protocol")
+        return pa.ipc.open_stream(payload).read_all()
+
+    def emit(table) -> Iterator[pa.RecordBatch]:
+        # schema enforcement happens in mapInArrow against out_schema
+        if table is None or table.num_rows == 0:
+            return
+        yield from table.to_batches(max_chunksize=chunk_rows)
 
     def run_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        full_env = dict(os.environ)
-        full_env.update(child_env)
-        proc = subprocess.Popen(
-            ["/bin/bash", "-c", command],
-            stdin=subprocess.PIPE,
-            stdout=subprocess.PIPE,
-            env=full_env,
-        )
-        sout, sin = proc.stdin, proc.stdout
-
-        def write_message(batch_or_none) -> None:
-            if batch_or_none is None:
-                sout.write(struct.pack("<Q", 0))
-                sout.flush()
-                return
-            sink = pa.BufferOutputStream()
-            with pa.ipc.new_stream(sink, batch_or_none.schema) as w:
-                w.write_batch(batch_or_none)
-            buf = sink.getvalue()
-            sout.write(struct.pack("<Q", buf.size))
-            sout.write(buf.to_pybytes())
-            sout.flush()
-
-        def read_message():
-            header = sin.read(8)
-            if len(header) < 8:
-                raise RuntimeError("pipe_arrow: child closed stream mid-protocol")
-            (size,) = struct.unpack("<Q", header)
-            if size == 0:
-                return None
-            payload = sin.read(size)
-            reader = pa.ipc.open_stream(payload)
-            return reader.read_all()
-
-        import pandas as _pd
-
-        if side_bc is not None:
-            side_tbl = pa.Table.from_pandas(
-                side_bc.value, preserve_index=False
-            ).replace_schema_metadata(None)
-            for b in side_tbl.to_batches(max_chunksize=chunk_rows) or [
-                pa.record_batch([], schema=side_tbl.schema)
-            ]:
-                write_message(b)
-            ack = read_message()  # child acks the side input (read_func)
-            del ack
-
-        def emit(table) -> Iterator[pa.RecordBatch]:
-            # schema enforcement happens in mapInArrow against out_schema
-            if table is None or table.num_rows == 0:
-                return
-            yield from table.to_batches(max_chunksize=chunk_rows)
-
-        for batch in batches:
-            for lo in range(0, batch.num_rows, chunk_rows):
-                write_message(batch.slice(lo, chunk_rows))
-                yield from emit(read_message())
-        write_message(None)
-        yield from emit(read_message())
-        rc = proc.wait()
-        if rc != 0:
-            raise RuntimeError(f"pipe_arrow child exited with status {rc}")
+        with _Child("pipe_arrow", command, timeout) as child:
+            if side_bc is not None:
+                side_tbl = pa.Table.from_pandas(
+                    side_bc.value, preserve_index=False
+                ).replace_schema_metadata(None)
+                for b in side_tbl.to_batches(max_chunksize=chunk_rows) or [
+                    pa.record_batch([], schema=side_tbl.schema)
+                ]:
+                    write_message(child, b)
+                read_message(child)  # child acks the side input (read_func)
+            for batch in batches:
+                for lo in range(0, batch.num_rows, chunk_rows):
+                    write_message(child, batch.slice(lo, chunk_rows))
+                    yield from emit(read_message(child))
+            write_message(child, None)
+            yield from emit(read_message(child))
+            child.wait()
 
     return df.mapInArrow(run_partition, out_schema)

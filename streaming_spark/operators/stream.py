@@ -50,10 +50,6 @@ from pyspark.sql.types import (
 )
 
 
-def _as_struct(schema: StructType | str) -> StructType | str:
-    return schema
-
-
 _LIVE_BROADCASTS: deque = deque()
 _MAX_LIVE_BROADCASTS = 16
 

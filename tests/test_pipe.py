@@ -1,6 +1,8 @@
 r"""TSV pipe protocol conformance — escaping rules byte-for-byte per
 reference TSVInterface.cpp:200-222 and framing per README.md:37-56."""
 
+import re
+
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -497,20 +499,6 @@ def test_pipe_df_rejects_int64(spark):
         pipe_df(spark.range(5), "cat", "id BIGINT")
 
 
-def test_pipe_df_child_death_fails_task(spark):
-    """A child that exits mid-protocol fails the task (the reference kills
-    the query on child death, ChildProcess.cpp:147-156)."""
-    import pytest as _pytest
-    from pyspark.sql import functions as F2
-
-    from streaming_spark.operators.pipe import pipe_df
-
-    df = spark.range(10).select(F2.col("id").cast("double").alias("v")).coalesce(1)
-    out = pipe_df(df, "head -c 4 > /dev/null", "v DOUBLE")
-    with _pytest.raises(Exception):
-        out.collect()
-
-
 def test_pipe_df_side_input(spark):
     """Second-array semantics over the df wire: a lookup table is shipped
     first, the child joins it into every chunk (the poLCA vignette's
@@ -585,27 +573,76 @@ def test_pipe_df_ships_program(spark):
     assert sorted(r.v2 for r in out.collect()) == [3.0, 5.0, 7.0, 9.0, 11.0]
 
 
-def test_pipe_df_stalled_consumer_fails_fast(spark):
-    """A child that never reads stdin must FAIL the task via the write
-    watchdog once the message exceeds the pipe buffer — not hang the
-    write forever."""
-    import time as _time
+# ------------------------------------------------------------ child faults
 
-    import pytest as _pytest
-    from pyspark.sql import functions as F2
 
-    from streaming_spark.operators.pipe import pipe_df
+def _pipe_failure(spark, out, limit: float = 120.0):
+    """Collect ``out`` in its own job group and return the error it fails
+    with.  A collect still running after ``limit`` seconds is cancelled
+    and fails the test, so a pipe that wedges cannot hang the suite."""
+    import threading
+    import time
 
-    # ~1.6 MB message >> 64 KB pipe buffer; 'sleep 600' consumes nothing.
-    # Acceptable failures: the write watchdog (TimeoutError) or, on a
-    # Spark task retry, EPIPE from the dead child — either way the task
-    # FAILS long before the child would have exited on its own.
-    df = (
-        spark.range(200_000)
-        .select(F2.col("id").cast("double").alias("v"))
-        .coalesce(1)
+    sc = spark.sparkContext
+    box = {}
+
+    def run():
+        sc.setJobGroup("pipe-fault", "pipe fault", interruptOnCancel=True)
+        try:
+            out.collect()
+        except Exception as exc:
+            box["error"] = exc
+
+    t0 = time.monotonic()
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(limit)
+    if t.is_alive():
+        sc.cancelJobGroup("pipe-fault")
+        t.join(60)
+        pytest.fail(f"the task was still running after {time.monotonic() - t0:.0f}s")
+    assert "error" in box, "a faulty child did not fail the task"
+    return str(box["error"])
+
+
+def _faulty_pipe(spark, monkeypatch, pipe: str, command: str, rows: int):
+    from streaming_spark.operators import pipe as pipe_mod
+
+    monkeypatch.setattr(pipe_mod, "_CHILD_TIMEOUT_S", 4.0)
+    df = spark.range(rows).select(F.col("id").cast("double").alias("v")).coalesce(1)
+    if pipe == "pipe_tsv":
+        return pipe_mod.pipe_tsv(df, command)
+    return getattr(pipe_mod, pipe)(df, command, "v DOUBLE")
+
+
+@pytest.mark.parametrize("rows", [10, 200_000])
+@pytest.mark.parametrize("pipe", ["pipe_tsv", "pipe_df", "pipe_arrow"])
+def test_pipe_stalled_child_fails_task(spark, monkeypatch, pipe, rows):
+    """A child that neither reads nor writes (``sleep 600``) fails the task
+    once the child timeout passes — whether the parent waits on a reply
+    (10 rows fit the pipe buffer) or on a write (200k rows, MBs against
+    a 64 KB buffer) — not when the child would have exited on its own
+    (the reference kills the query on a wedged child,
+    ChildProcess.cpp:147-156)."""
+    out = _faulty_pipe(spark, monkeypatch, pipe, "sleep 600", rows)
+    assert "neither read nor wrote" in _pipe_failure(spark, out)
+
+
+@pytest.mark.parametrize("pipe", ["pipe_tsv", "pipe_df", "pipe_arrow"])
+def test_pipe_silent_child_fails_task(spark, monkeypatch, pipe):
+    """A child that reads everything and never replies (``cat >
+    /dev/null``) fails the task instead of returning a truncated result
+    or waiting forever (child early exit is a query error,
+    TSVInterface.cpp:317-360)."""
+    out = _faulty_pipe(spark, monkeypatch, pipe, "cat > /dev/null", 1000)
+    assert re.search(
+        "mid-protocol|stream closed|neither read nor wrote", _pipe_failure(spark, out)
     )
-    t0 = _time.monotonic()
-    with _pytest.raises(Exception, match="consuming|no output|Broken pipe"):
-        pipe_df(df, "sleep 600", "v DOUBLE", read_timeout=4.0).collect()
-    assert _time.monotonic() - t0 < 120  # failed fast, not after 600s
+
+
+@pytest.mark.parametrize("pipe", ["pipe_tsv", "pipe_df", "pipe_arrow"])
+def test_pipe_child_death_fails_task(spark, monkeypatch, pipe):
+    """A child that exits mid-protocol fails the task (the reference kills
+    the query on child death, ChildProcess.cpp:147-156)."""
+    out = _faulty_pipe(spark, monkeypatch, pipe, "head -c 4 > /dev/null", 10)
+    assert re.search("mid-protocol|stream closed|Broken pipe", _pipe_failure(spark, out))
