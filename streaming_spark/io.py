@@ -9,7 +9,20 @@ from __future__ import annotations
 
 import os
 
+import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    DateType,
+    MapType,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+    _parse_datatype_string,
+)
 
 TABLES = (
     "region",
@@ -107,6 +120,71 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLES}
+
+
+def _has_datetime(dt: DataType) -> bool:
+    if isinstance(dt, (TimestampType, TimestampNTZType, DateType)):
+        return True
+    if isinstance(dt, ArrayType):
+        return _has_datetime(dt.elementType)
+    if isinstance(dt, MapType):
+        return _has_datetime(dt.keyType) or _has_datetime(dt.valueType)
+    if isinstance(dt, StructType):
+        return any(_has_datetime(f.dataType) for f in dt.fields)
+    return False
+
+
+def local_frame(
+    spark: SparkSession,
+    data,
+    schema: StructType | str | None = None,
+) -> DataFrame:
+    """A table built on the driver, handed to Spark as an Arrow local
+    relation — the one way ``streaming_spark`` calls ``createDataFrame``.
+
+    ``createDataFrame(list)`` parallelizes the rows into a pickled
+    Python RDD, and that RDD runs on a ``pyspark.daemon`` of its own,
+    beside the one the Arrow UDFs share: a second daemon and its
+    workers, forked for a handful of rows.  Here the rows become a
+    ``pyarrow.Table`` column by column (the reference's one columnar
+    wire, FeatherInterface.cpp:254-355) and Spark keeps it as a local
+    relation: collecting it runs no Spark job and starts no Python
+    worker.
+
+    ``data`` is a list of rows (tuples or ``Row``s, read by position as
+    the list path reads them) or a pandas DataFrame.  List input needs
+    ``schema`` (a ``StructType`` or DDL string).  Rows under a timestamp
+    or date field raise ``TypeError``: the list path reads naive
+    datetimes as local time, and no site here sends one (an empty list
+    carries no value to misread, so it is allowed).  Pandas input
+    without a schema takes the schema Spark's Arrow path infers.
+    """
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    if isinstance(data, pd.DataFrame):
+        if schema is None:
+            schema = from_arrow_schema(
+                pa.Schema.from_pandas(data, preserve_index=False)
+            )
+        table = pa.Table.from_pandas(data, preserve_index=False)
+    else:
+        if schema is None:
+            raise TypeError("local_frame: list input needs a schema")
+        rows = list(data)
+        if rows and _has_datetime(schema):
+            raise TypeError(
+                f"local_frame: list rows with a timestamp or date field "
+                f"({schema.simpleString()}); send a pandas DataFrame instead"
+            )
+        arrow_schema = to_arrow_schema(schema)
+        table = pa.Table.from_arrays(
+            [
+                pa.array([r[i] for r in rows], type=f.type)
+                for i, f in enumerate(arrow_schema)
+            ],
+            schema=arrow_schema,
+        )
+    return spark.createDataFrame(table, schema)
 
 
 def load_table_avro(spark: SparkSession, path: str) -> DataFrame:

@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from streaming_spark.io import local_frame
 from streaming_spark.operators.text import token_count
 
 
@@ -413,7 +414,8 @@ def compact_files(
     writer = df.repartition(n_out) if shuffle else df.coalesce(n_out)
     writer.write.mode("overwrite").parquet(dst_dir)
     files_after, bytes_after = dir_stats(dst_dir)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 files_before,

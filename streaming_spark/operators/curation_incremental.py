@@ -71,6 +71,7 @@ import shutil
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from streaming_spark.io import local_frame
 from streaming_spark.operators.index_commit import (
     APPEND_PENDING,
     partition_values,
@@ -943,7 +944,7 @@ def curation_survivors(spark, work_dir: str) -> DataFrame:
         try:
             df = spark.read.parquet(path)
         except AnalysisException:
-            return spark.createDataFrame([], f"{id_col} {id_type}")
+            return local_frame(spark, [], f"{id_col} {id_type}")
         return df.select(id_col)
 
     exact_ids = sink_ids(_EXACT_SINK)

@@ -23,6 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from streaming_spark.io import local_frame
 from streaming_spark.operators.stream import ensure_parallelism, stream
 
 _MERSENNE = (1 << 61) - 1
@@ -546,7 +547,8 @@ def _components_driver(edges: DataFrame, pdf: "pd.DataFrame") -> DataFrame:
             StructField("component", u_field.dataType, False),
         ]
     )
-    return edges.sparkSession.createDataFrame(
+    return local_frame(
+        edges.sparkSession,
         pd.DataFrame({"id": ids, "component": comps}), schema
     )
 

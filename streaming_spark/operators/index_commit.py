@@ -67,6 +67,8 @@ import shutil
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from streaming_spark.io import local_frame
+
 APPEND_PENDING = ".append_pending"
 
 
@@ -172,13 +174,13 @@ def read_table_or_empty(spark, path: str, schema: str):
     keeps a fresh index's first reads from logging Spark's missing-path
     WARN stack traces into every gate run."""
     if not os.path.isdir(path):
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     from pyspark.errors import AnalysisException
 
     try:
         return spark.read.parquet(path)
     except AnalysisException:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
 
 
 def _compact_dirs(index_dir: str, sibling: bool = False) -> tuple[str, str]:
@@ -269,7 +271,7 @@ def ledger_ids(spark, ids, col: str, dtype: str) -> DataFrame:
         src = col if col in ids.columns else ids.columns[0]
         return ids.select(F.col(src).cast(dtype).alias(col)).distinct()
     rows = [(i,) for i in ids]
-    return spark.createDataFrame(rows, f"`{col}` {dtype}").distinct()
+    return local_frame(spark, rows, f"`{col}` {dtype}").distinct()
 
 
 def _on_session_clone(df: DataFrame) -> DataFrame:

@@ -91,6 +91,7 @@ import shutil
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from streaming_spark.io import local_frame
 from streaming_spark.operators.dedup import (
     _banded,
     minhash_signatures,
@@ -1196,7 +1197,7 @@ def neardup_index_reshard(
             _banded(live_sigs, new_p["bands"], sig_len=new_p["num_perm"])
             .withColumn("pb", _pb_expr(F.col("bh"), new_p["n_band_prefixes"]))
             if n_live
-            else spark.createDataFrame([], _bands_schema(new_p))
+            else local_frame(spark, [], _bands_schema(new_p))
         )
         new_bands.repartition("band_id", "pb").write.mode(
             "overwrite"

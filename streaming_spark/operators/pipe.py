@@ -615,7 +615,7 @@ def pipe_arrow(
                     side_bc.value, preserve_index=False
                 ).replace_schema_metadata(None)
                 for b in side_tbl.to_batches(max_chunksize=chunk_rows) or [
-                    pa.record_batch([], schema=side_tbl.schema)
+                    pa.RecordBatch.from_pylist([], schema=side_tbl.schema)
                 ]:
                     write_message(child, b)
                 read_message(child)  # child acks the side input (read_func)

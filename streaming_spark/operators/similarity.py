@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from streaming_spark.io import local_frame
 from streaming_spark.operators.stream import (
     _broadcast_bounded,
     ensure_parallelism,
@@ -712,7 +713,7 @@ def _self_topk_broadcast(
             staged_dirs=[],
         )
     if len(rows) < 2:
-        return base.sparkSession.createDataFrame([], out_schema)
+        return local_frame(base.sparkSession, [], out_schema)
     all_ids = np.array([r[0] for r in rows])
     all_mat = _norm_rows(_matrix([r[1] for r in rows]))
 
@@ -1010,7 +1011,7 @@ def exact_nn_topk(
                     total_pairs=0,
                     staged_dirs=[],
                 )
-            return spark.createDataFrame([], empty_schema)
+            return local_frame(spark, [], empty_schema)
     else:
         cent = centroids
 
@@ -1050,7 +1051,7 @@ def exact_nn_topk(
                 total_pairs=0,
                 staged_dirs=[],
             )
-        return spark.createDataFrame([], empty_schema)
+        return local_frame(spark, [], empty_schema)
     stats.sort(key=lambda r: r["cell"])
     cell_ids = np.array([r["cell"] for r in stats], dtype=np.int64)
     alpha = np.arccos(
@@ -1178,7 +1179,8 @@ def exact_nn_topk(
         # subtasks (members replicated per subtask, queries hashed)
         dim = cent.shape[1]
         q_cap = max(1, _PASS_B_TASK_BYTES // (8 * dim))
-        salt_df = spark.createDataFrame(
+        salt_df = local_frame(
+            spark,
             pd.DataFrame(
                 {
                     "cell": np.array(list(probe_counts), dtype=np.int32),
@@ -1349,7 +1351,8 @@ def _cosine_pairs_broadcast(
                 candidates=0,
                 total_pairs=0,
             )
-        return vectors.sparkSession.createDataFrame(
+        return local_frame(
+            vectors.sparkSession,
             [], "id_a BIGINT, id_b BIGINT, cos_sim DOUBLE"
         )
     ids = np.array([r[0] for r in rows])
@@ -1636,7 +1639,7 @@ def _cosine_pairs_blocked(
                 candidates=0,
                 total_pairs=0,
             )
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     # deliberately NOT persisted: a persist here would outlive the call
     # (the returned frame is lazy), which measurably degrades later
     # same-session queries (CLAUDE.md).  Nor staged: the assign map has
@@ -1726,7 +1729,7 @@ def _cosine_pairs_blocked(
             total_pairs=n_rows * (n_rows - 1) // 2,
         )
     if len(ii) == 0:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     # group surviving block pairs by their CELL pair (r9): blocks
     # partition the vectors and every surviving block pair maps to
     # exactly one cell pair, so scoring the surviving ring combos
@@ -1762,7 +1765,8 @@ def _cosine_pairs_blocked(
         ship.add((t, bi))
         ship.add((t, bj))
     ship_rows = sorted(ship)
-    task_df = spark.createDataFrame(
+    task_df = local_frame(
+        spark,
         pd.DataFrame(
             {
                 "task": np.array([s[0] for s in ship_rows], dtype=np.int64),
@@ -3166,7 +3170,8 @@ def _cell_stats(
     spark = vectors.sparkSession
     n_cells = len(centroids)
     cnorm = np.linalg.norm(np.asarray(centroids, dtype=np.float64), axis=1)
-    norm_df = spark.createDataFrame(
+    norm_df = local_frame(
+        spark,
         [(int(c), float(cnorm[c])) for c in range(n_cells)],
         "cell INT, cnorm DOUBLE",
     )
@@ -3449,7 +3454,8 @@ def semdedup(
         vectors, dim, k=k, n_iters=n_iters, id_col=id_col, vec_col=vec_col
     )
     spark = vectors.sparkSession
-    cent_df = spark.createDataFrame(
+    cent_df = local_frame(
+        spark,
         [(c, [float(x) for x in cents[c]]) for c in range(len(cents))],
         "cell INT, centroid ARRAY<DOUBLE>",
     )

@@ -49,6 +49,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from streaming_spark.io import local_frame
 
 _LIVE_BROADCASTS: deque = deque()
 _MAX_LIVE_BROADCASTS = 16
@@ -202,7 +203,7 @@ def stream_map(
                 "cannot infer schema: map_fun and finalize_fun returned None; "
                 "pass schema= explicitly (the reference's types:/names: params)"
             )
-        schema = df.sparkSession.createDataFrame(probe).schema
+        schema = local_frame(df.sparkSession, probe).schema
     return stream(df, map_fun, schema, finalize=finalize_fun)
 
 

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from streaming_spark.io import local_frame
 from streaming_spark.scratch import scratch_dir, stage
 from streaming_spark.operators import curation
 from streaming_spark.queries.registry import T, query
@@ -1698,7 +1699,7 @@ def dsir_scores(tf_index):
         / F.lit(float(n_t + _DSIR_BUCKETS))
     ) - F.log((F.col("c_r") + 1.0) / F.lit(float(n_r + _DSIR_BUCKETS)))
     ratio = (
-        tf_index.sparkSession.createDataFrame(rows, schema=bucket_counts.schema)
+        local_frame(tf_index.sparkSession, rows, schema=bucket_counts.schema)
         .select("bucket", lr.alias("lr"))
     )
     return (
@@ -1935,7 +1936,7 @@ def q_lm_perplexity(spark, sf_dir):
             "q_lm_perplexity: target slice source='src0' holds no "
             "non-empty documents — the unigram LM has nothing to train on"
         )
-    tgt = spark.createDataFrame(tgt_rows, schema=tgt_counts.schema)
+    tgt = local_frame(spark, tgt_rows, schema=tgt_counts.schema)
     denom = float(sum(r["c"] for r in tgt_rows) + len(tgt_rows) + 1)
     nll = -F.log((F.coalesce(F.col("c"), F.lit(0)) + 1.0) / F.lit(denom))
     return (
@@ -2444,7 +2445,8 @@ def data_recipe_manifest(spark, docs, weights, budget_mult=2.0):
             F.md5(F.col("doc_id").cast("string")).alias("ord"),
         )
     )
-    w = spark.createDataFrame(
+    w = local_frame(
+        spark,
         list(weights.items()), "source STRING, wt DOUBLE"
     )
     tot = t.groupBy("source").agg(F.sum("n_tokens").alias("t_d"))
@@ -2679,7 +2681,8 @@ def incremental_curation_maintenance(spark, sf_dir):
         ))
     finally:
         spark.conf.set(key, prev)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "phase STRING, rows BIGINT, info BIGINT, "
         "incremental_md5 STRING, batch_md5 STRING",

@@ -8,6 +8,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import functions as F
 
+from streaming_spark.io import local_frame
 from streaming_spark.queries.registry import T, query
 
 
@@ -887,7 +888,7 @@ def q_sketch_countmin(spark, sf_dir):
         }
     )
     pdf["overshoot"] = pdf["estimate_n"] - pdf["exact_n"]
-    return spark.createDataFrame(pdf)
+    return local_frame(spark, pdf)
 
 
 @query("q_sketch_bloom")  # rows-only: bloom bits are engine-internal;
@@ -923,4 +924,4 @@ def q_sketch_bloom(spark, sf_dir):
             "n_false_pos": [n_false_pos],
         }
     )
-    return spark.createDataFrame(pdf)
+    return local_frame(spark, pdf)

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from streaming_spark.io import local_frame
 from streaming_spark.scratch import scratch_dir
 from streaming_spark.operators import multimodal
 from streaming_spark.operators.dedup import minhash_dedup_pairs, simhash_dedup_pairs
@@ -1422,7 +1423,8 @@ def text_bpe_train(spark, sf_dir):
         (i, a, b, a + b, round(coverage, 4))
         for i, (a, b) in enumerate(merges)
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "rank BIGINT, left STRING, right STRING, merged STRING,"
         " train_coverage DOUBLE",
@@ -2357,7 +2359,7 @@ def q_kmeans_doc_clusters(spark, sf_dir):
     emb = T(spark, sf_dir, "embeddings")
     cent, assign = spherical_kmeans_full(emb, dim=64, k=8, n_iters=3)
     cent_rows = [(int(c), cent[c].tolist()) for c in range(cent.shape[0])]
-    cent_df = spark.createDataFrame(cent_rows, "cell INT, centroid ARRAY<DOUBLE>")
+    cent_df = local_frame(spark, cent_rows, "cell INT, centroid ARRAY<DOUBLE>")
     from streaming_spark.operators.similarity import _cosine_expr
 
     member_sims = (
@@ -2991,7 +2993,8 @@ def ann_topk_ivfpq_pruned(spark, sf_dir):
             int(total["rows"]), int(pruned["rows"]), md5,
         )
 
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [layout_row(flat_dir, "flat"), layout_row(part_dir, "cell_partitioned")],
         "layout STRING, files_total INT, files_read INT, "
         "rows_total BIGINT, rows_matched BIGINT, result_md5 STRING",
@@ -3055,15 +3058,13 @@ def ann_index_maintenance(spark, sf_dir):
     )
     codes_dir = os.path.join(scratch_dir("annmaint"), "codes")
 
-    def serve(vectors, encoded):
-        # each index view is served ONCE; the collected top-k feeds
-        # both its md5 witness and the tombstone derivation below
-        return ivfpq_topk(vectors, queries, encoded=encoded, **serve_kw).collect()
-
-    def topk_md5(collected):
-        # the shared digest over a re-created Q·k-row frame (same
-        # JVM-side double→string formatting as every other witness)
-        return _topk_digest(spark.createDataFrame(collected))
+    def topk_md5(vectors, encoded):
+        # each index view is served ONCE and its top-k collected; the
+        # shared digest runs over the Q·k rows re-sent with the served
+        # schema (same JVM-side double→string formatting as every other
+        # witness)
+        served = ivfpq_topk(vectors, queries, encoded=encoded, **serve_kw)
+        return _topk_digest(local_frame(spark, served.collect(), served.schema))
 
     rows = []
     st: dict = {}
@@ -3080,10 +3081,11 @@ def ann_index_maintenance(spark, sf_dir):
         "serve_after_append",
         appended.count(),
         None,
-        topk_md5(serve(full, appended)),
-        topk_md5(serve(full, None)),  # inline encode over base ∪ delta
+        topk_md5(full, appended),
+        topk_md5(full, None),  # inline encode over base ∪ delta
     ))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "phase STRING, rows BIGINT, cells INT, "
         "served_md5 STRING, rebuild_md5 STRING",
@@ -3131,7 +3133,8 @@ def q_ann_index_drift(spark, sf_dir):
             arm, m["assignment_tv"], m["resid_ratio"], m["n_delta"],
             m["drifted"],
         ))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "arm STRING, assignment_tv DOUBLE, resid_ratio DOUBLE, "
         "n_delta BIGINT, drifted BOOLEAN",
@@ -3248,7 +3251,8 @@ def neardup_index_maintenance(spark, sf_dir):
         ))
     finally:
         spark.conf.set(key, prev)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "phase STRING, rows BIGINT, pairs BIGINT, "
         "index_md5 STRING, batch_md5 STRING",
@@ -3337,7 +3341,8 @@ def digest_index_maintenance(spark, sf_dir):
         ))
     finally:
         spark.conf.set(key, prev)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "phase STRING, rows BIGINT, info BIGINT, "
         "index_md5 STRING, batch_md5 STRING",
@@ -3388,7 +3393,8 @@ def text_unigram_train(spark, sf_dir):
         (i, p, round(lp, 6), len(p), round(coverage, 4))
         for i, (p, lp) in enumerate(top)
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "rank BIGINT, piece STRING, log_prob DOUBLE, piece_len INT,"
         " train_coverage DOUBLE",

@@ -15,6 +15,7 @@ import os
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from streaming_spark.io import local_frame
 from streaming_spark.scratch import scratch_dir
 from streaming_spark.queries.registry import T, query
 
@@ -724,7 +725,8 @@ def q_input_jsonl_dirty(spark, sf_dir):
         ).collect()[0]
     finally:
         back.unpersist()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [tuple(row)],
         "n_lines BIGINT, n_parsed BIGINT, n_quarantined BIGINT,"
         " parsed_chars BIGINT",

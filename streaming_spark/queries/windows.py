@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from streaming_spark.io import local_frame
 from streaming_spark.scratch import scratch_dir
 from streaming_spark.queries.curation import (
     _CURATE_CORPUS_ORACLE,
@@ -1750,7 +1751,8 @@ def q_streaming_progress(spark, sf_dir):
         ),
         default=0,
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(n_batches, input_rows, state_rows)],
         "n_data_batches BIGINT, input_rows BIGINT, peak_state_rows BIGINT",
     )
@@ -2193,7 +2195,8 @@ def q_streaming_countmin(spark, sf_dir):
     def land_sketch(batch_df, batch_id):
         mat = countmin_sketch(batch_df, "event_type", depth, width)
         _land_batch(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [(mat.reshape(-1).tolist(),)], "cells ARRAY<BIGINT>"
             ),
             batch_id,
@@ -2223,7 +2226,7 @@ def q_streaming_countmin(spark, sf_dir):
     )
     pdf["overshoot"] = pdf["estimate_n"] - pdf["exact_n"]
     pdf["n_cell_mismatch"] = n_mismatch
-    return spark.createDataFrame(pdf)
+    return local_frame(spark, pdf)
 
 
 @query("q_streaming_bloom_index")  # rows-only: bloom bits depend on
@@ -2260,7 +2263,8 @@ def q_streaming_bloom_index(spark, sf_dir):
     def land_bloom(batch_df, batch_id):
         words = bloom_build(batch_df, "user_id", n_bits=n_bits, k=k)
         _land_batch(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [(words.view(np.int64).tolist(),)], "words ARRAY<BIGINT>"
             ),
             batch_id,
@@ -2289,7 +2293,7 @@ def q_streaming_bloom_index(spark, sf_dir):
             "n_bits_set": [int(sum(bin(int(w)).count("1") for w in merged))],
         }
     )
-    return spark.createDataFrame(pdf)
+    return local_frame(spark, pdf)
 
 
 @query("q_streaming_hll_distinct")  # rows-only: sketch registers are

@@ -188,9 +188,11 @@ def unpin(path: str) -> None:
 
 
 def stage(df: DataFrame, tag: str) -> tuple[DataFrame, str]:
-    """Write ``df`` once to a fresh pinned scratch dir and read it back.
-    Returns ``(staged frame, dir)``; the caller reports the dir so the
-    pin can be released with :func:`unpin` once the frame is consumed."""
+    """Write ``df`` once to a fresh pinned scratch dir and read it back
+    with the writer's schema (what parquet inference would return, with
+    no inference job).  Returns ``(staged frame, dir)``; the caller
+    reports the dir so the pin can be released with :func:`unpin` once
+    the frame is consumed."""
     d = scratch_dir(tag, pin=True)
     df.write.parquet(d + "/t")
-    return df.sparkSession.read.parquet(d + "/t"), d
+    return df.sparkSession.read.schema(df.schema).parquet(d + "/t"), d

@@ -306,6 +306,31 @@ def test_pipe_arrow_side_input_read_func(spark):
     assert sorted(r.v3 for r in out.collect()) == [float(i * 3) for i in range(1, 11)]
 
 
+def test_pipe_arrow_empty_side_input(spark):
+    """A zero-row side input goes down as ONE empty message carrying its
+    schema: the child reads it, acks it, and maps the data as usual."""
+    import pandas as pd2
+
+    from streaming_spark.operators.pipe import pipe_arrow
+
+    child = (
+        "import pandas as pd\n"
+        "import streaming_spark.client as scidbstrm\n"
+        "side = scidbstrm.read()\n"
+        "scidbstrm.write(None)\n"
+        "scidbstrm.map(lambda df: pd.DataFrame({'v': df['v'],"
+        " 'side_rows': len(side), 'side_cols': ','.join(side.columns)}))\n"
+    )
+    side = pd2.DataFrame({"k": pd2.Series([], dtype="int64")})
+    df = spark.range(1, 6).select(F.col("id").cast("double").alias("v")).coalesce(1)
+    out = pipe_arrow(
+        df, _py_cmd(child), "v DOUBLE, side_rows BIGINT, side_cols STRING",
+        side_input=side,
+    ).collect()
+    assert sorted(r.v for r in out) == [1.0, 2.0, 3.0, 4.0, 5.0]
+    assert {(r.side_rows, r.side_cols) for r in out} == {(0, "k")}
+
+
 # --------------------------------------------------------------- df protocol
 
 DF_CLIENT_IDENTITY = (

@@ -7,8 +7,12 @@ the relational hot path must stay inside WholeStageCodegen with no
 Python stages.
 """
 
+import ast
+import pathlib
+
 import pytest
 
+import streaming_spark
 from streaming_spark.queries import REGISTRY
 from tests.conftest import SF_SMOKE
 
@@ -584,3 +588,32 @@ def test_ivf_staged_join_gets_dynamic_partition_pruning(spark, tmp_path):
     )
     expl = str(plan._jdf.queryExecution().executedPlan())
     assert "dynamicpruning" in expl.lower(), expl[:2000]
+
+
+def test_create_dataframe_only_inside_local_frame():
+    """Every driver-built frame goes through ``io.local_frame`` (an Arrow
+    local relation).  A ``createDataFrame`` call anywhere else — a list
+    makes Spark parallelize a pickled Python RDD on a second
+    ``pyspark.daemon`` — fails here instead of shipping."""
+    root = pathlib.Path(streaming_spark.__file__).parent
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        allowed = set()
+        for node in ast.walk(tree):
+            if (
+                path.name == "io.py"
+                and isinstance(node, ast.FunctionDef)
+                and node.name == "local_frame"
+            ):
+                allowed |= {id(n) for n in ast.walk(node)}
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"
+                and id(node) not in allowed
+            ):
+                offenders.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert offenders == [], f"createDataFrame outside local_frame: {offenders}"
+

@@ -164,13 +164,41 @@ def test_scratch_cap_env_parsed_defensively(monkeypatch):
 def test_stage_reads_back_its_input_from_a_pinned_dir(spark, monkeypatch, tmp_path):
     """``stage`` writes a frame once to a pinned dir and returns the
     read-back frame with the dir: the rows come back bit-exact, the
+    read-back carries the schema parquet would infer (nullability and
+    column metadata included) without running the inference job, the
     dir survives a cap-0 sweep while pinned, and ``unpin`` returns it
     to the sweep pool."""
+    from pyspark.sql import functions as F
+
     monkeypatch.setattr(scratch, "_ROOT", str(tmp_path))
     monkeypatch.setattr(scratch, "_WARNED_PIN_PRESSURE", True)  # silence it
     rows = [(i, 1.0 / (i + 3), [0.1 * i, -(i ** 0.5)]) for i in range(40)]
-    df = spark.createDataFrame(rows, "id BIGINT, x DOUBLE, v ARRAY<DOUBLE>")
-    staged, d = scratch.stage(df, "stagetest")
+    df = (
+        spark.createDataFrame(rows, "id BIGINT, x DOUBLE, v ARRAY<DOUBLE>")
+        .withColumn("k", F.coalesce(F.col("id"), F.lit(0)))  # NOT NULL
+        .withMetadata("x", {"unit": "m"})
+    )
+    assert not df.schema["k"].nullable
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup("stagetest-idle", "")
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    _, write_jobs = jobs(
+        "stagetest-write", lambda: df.write.parquet(str(tmp_path / "w"))
+    )
+    (staged, d), stage_jobs = jobs(
+        "stagetest-stage", lambda: scratch.stage(df, "stagetest")
+    )
+    assert stage_jobs == write_jobs  # the read-back runs no job
+    inferred = spark.read.parquet(d + "/t").schema
+    assert staged.schema == inferred
+    assert staged.schema["x"].metadata == {"unit": "m"}
     assert sorted(staged.collect()) == sorted(df.collect())
     assert d in scratch._PINNED
     monkeypatch.setenv("SPARK_GRAFT_SCRATCH_CAP_BYTES", "0")
