@@ -184,6 +184,11 @@ def local_frame(
             ],
             schema=arrow_schema,
         )
+    for f, column in zip(schema.fields, table.columns):
+        if not f.nullable and column.null_count:
+            raise ValueError(
+                f"local_frame: NULL in non-nullable field {f.name!r}"
+            )
     return spark.createDataFrame(table, schema)
 
 

@@ -185,6 +185,15 @@ def test_local_frame_refusals(spark):
     with pytest.raises(TypeError, match="timestamp or date"):
         local_frame(spark, [([None],)], "ds ARRAY<DATE>")
     assert local_frame(spark, [], "ts TIMESTAMP").collect() == []
+    # the list path's schema check refuses a NULL in a NOT NULL field;
+    # an Arrow relation would carry it silently
+    with pytest.raises(ValueError, match="non-nullable field 'c'"):
+        local_frame(spark, [("a", None)], "tok STRING, c BIGINT NOT NULL")
+    with pytest.raises(ValueError, match="non-nullable field 'id'"):
+        local_frame(
+            spark, pd.DataFrame({"id": [1.0, None]}),
+            T.StructType([T.StructField("id", T.DoubleType(), False)]),
+        )
 
 
 @pytest.mark.parametrize("name", ["q_dsir_weights", "q_lm_perplexity"])
