@@ -84,15 +84,9 @@ def pack_func(func: Callable) -> pd.DataFrame:
     """Serialize a function into a 1-cell binary DataFrame for shipping
     as the side input (contract of scidbstrm.pack_func,
     reference __init__.py:98-105)."""
-    try:
-        from pyspark import cloudpickle  # type: ignore
+    from pyspark import cloudpickle
 
-        payload = cloudpickle.dumps(func)
-    except Exception:
-        import cloudpickle  # type: ignore
-
-        payload = cloudpickle.dumps(func)
-    return pd.DataFrame({"function": [payload]})
+    return pd.DataFrame({"function": [cloudpickle.dumps(func)]})
 
 
 def read_func() -> Callable:

@@ -5,7 +5,7 @@ near-dup: operators/neardup_index.py) makes each GLOBAL curation stage
 maintainable per ingest batch — but the composition itself (which index
 feeds which stage, what lands in which sink, how the end-of-stream fold
 turns maintained state into the survivor set) lived in
-scripts/stress_pipeline.py's incremental arm, unreachable from the
+the old pipeline stress script's incremental arm, unreachable from the
 library.  This module is that composition as two calls:
 
 - :func:`curation_ingest_batch` — the per-batch half: quality filters →
@@ -558,7 +558,8 @@ def curation_backfill(
     metadata-scale price of an exceptional-path resync, vs the ordered
     fast path that touches neither.  Churn sets are ledger-small by
     contract (the same bound as the index markers).  Measured
-    (stress_pipeline ``backfill`` mode, a 1k late batch whose docs all
+    (scripts/scale.py --family pipeline --case backfill, a 1k late
+    batch whose docs all
     steal ownership — 2000 affected, 1991 re-keys, 992+992 near-dup
     churn, survivor sets identical to the batch pipeline at every N):
     78/69/174 s at N=20k/100k/500k vs 35/65/142 s for the batch

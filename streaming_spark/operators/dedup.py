@@ -317,7 +317,7 @@ def simhash_dedup_pairs(
     xor + bit_count (all JVM-side).
 
     **Choosing the knobs — measured recall envelope** (planted 3-of-60
-    -word mutations, scripts/stress_dedup.py protocol):
+    -word mutations, the scripts/scale.py text corpus):
 
     - Candidate generation is LOSSLESS for pairs within Hamming
       distance ``bands − 1`` (pigeonhole: ≤ bands−1 flipped bits cannot
@@ -331,7 +331,7 @@ def simhash_dedup_pairs(
       flip MORE than 3 signature bits, and those pairs are excluded by
       the RADIUS, with banding blameless (8×8 banding at the same
       ham ≤ 3 measures the identical 0.24).  MinHash-LSH at the same
-      threshold intent measures ~0.995 (stress_dedup).
+      threshold intent measures ~0.995 (scale.py --family dedup).
     - Widening radius AND bands together moves recall the right way
       (pinned by test_simhash_banding_recall_tradeoff): 8×8 bands with
       ham ≤ 7 → **0.73**; 16×4 bands with ham ≤ 11 → **0.94**.  The

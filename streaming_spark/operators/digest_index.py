@@ -220,7 +220,8 @@ def digest_index_append(
     exact: a partially landed batch's rows vanish merge-on-read once
     tombstoned.
 
-    Cost shape (measured, stress_dedup ``digmaint``, idle box): every
+    Cost shape (measured, scale.py --family dedup --case digmaint, idle
+    box): every
     move is FLAT in N — 10k append ~7 s at N = 100k/500k/1M, takedown
     ~0.5 s, compact 2-3 s, owners equality held throughout.  Honest
     framing: the batch recompute (one digest scan + window) costs under
@@ -228,7 +229,7 @@ def digest_index_append(
     its value is corpus BYTES (the recompute re-reads O(corpus) text
     per refresh; the append reads O(delta) text plus the delta's
     digest-prefix partitions — 1.56% of the digest table for a 1-doc
-    trickle, stress_dedup ``prune``) and bounded takedown/compact,
+    trickle, scale.py dedup case ``prune``) and bounded takedown/compact,
     which the recompute has no answer to.
 
     ``stats_out`` keys: rows_appended, digests_probed, digests_seen,

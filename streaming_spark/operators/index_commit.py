@@ -26,7 +26,8 @@ already (VERDICT r13 #4 asked for this seam).  Three commit primitives:
   index/table directory with a fully-staged sibling via two renames; a
   crash between them leaves the complete old directory at ``.old``
   (never half-written) — recovery is renaming it back, and every
-  operation refuses that state.
+  operation refuses that state.  :func:`staged_swap` is the whole
+  move around it: stage into the sibling, drop it on failure, swap.
 
 The moves built on them: victim-partition compaction
 (:class:`Compaction` — stage the affected partitions minus the ledger
@@ -60,6 +61,7 @@ implementation is one seam, not a per-family audit.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
@@ -164,6 +166,25 @@ def swap_directory(target: str, staged: str) -> None:
         os.rename(target, old)
     os.rename(staged, target)
     shutil.rmtree(old, ignore_errors=True)
+
+
+@contextlib.contextmanager
+def staged_swap(target: str, suffix: str):
+    """Stage a whole replacement of ``target`` in the sibling
+    ``<target><suffix>`` (yielded) and swap it in on success.  A stale
+    sibling from an earlier failed attempt is removed first; a failure
+    while staging removes the half-written sibling (table-sized, and
+    outside the scratch sweep) and re-raises, leaving ``target``
+    untouched; a completed stage replaces ``target`` through
+    :func:`swap_directory`."""
+    staged = target.rstrip("/") + suffix
+    shutil.rmtree(staged, ignore_errors=True)
+    try:
+        yield staged
+    except Exception:
+        shutil.rmtree(staged, ignore_errors=True)
+        raise
+    swap_directory(target, staged)
 
 
 def read_table_or_empty(spark, path: str, schema: str):

@@ -109,6 +109,7 @@ from streaming_spark.operators.index_commit import (
     read_table_or_empty,
     refuse_parked_compact,
     refuse_pending_append,
+    staged_swap,
     swap_directory,
     write_marker,
 )
@@ -387,7 +388,8 @@ def neardup_index_append(
     DELTA-vs-INDEX plus DELTA-vs-DELTA only — never index-vs-index —
     with candidate buckets read through the (band_id, pb)-pruned scan.
 
-    Cost shape (measured, scripts/stress_dedup.py maint arm, 10k delta
+    Cost shape (measured, scripts/scale.py --family dedup --case
+    maint-16x16, 10k delta
     into N = 100k/500k/1M under load): append 16/22/35 s vs the
     accumulated re-join's 18/45/115 s, exact pair-set equality at every
     point.  What is strictly delta-bound: the signature map (the
@@ -400,16 +402,17 @@ def neardup_index_append(
     partitions — sub-linear in N (2.2× cost for 10× N) versus the
     re-join's linear re-hash of the text.  The partition knobs are a
     DATA-VOLUME sizing (target ~128 MB per partition), not a delta-size
-    one: a measured 100k-doc comparison (stress_dedup maint, idle box)
+    one: a measured 100k-doc comparison (scale.py case
+    ``maint-256x64`` against ``maint-16x16``, idle box)
     found 256 prefixes × 64 id-buckets 3-4× SLOWER than 16×16 across
     every move — 4096 tiny band files cost more in listing/write
     overhead than their pruning saves, the classic small-files trap —
     and a 100-doc trickle append costs about the same as a 10k one at
     this scale (job + digest-scan overhead dominates the delta axis;
     delta-boundedness shows on the N axis).  Pruning pays once
-    partitions hold real data volume — measured (stress_dedup ``prune``
-    mode, r13): with 64 prefixes a 1-doc trickle probe reads 1.56% of
-    band-table bytes, 10 docs ~14%, 100 docs ~75% (per band the delta
+    partitions hold real data volume — measured (scale.py --family
+    dedup --case prune, r13): with 64 prefixes a 1-doc trickle probe
+    reads 1.56% of band-table bytes, 10 docs ~14%, 100 docs ~75% (per band the delta
     hits ≤ min(delta_docs, n_prefixes) prefixes), the fraction
     byte-identical from a 208 MB real table (pair-set equality held) to
     a 3.9 GB synthetic one — the ratio is planning-time, so it
@@ -1125,7 +1128,8 @@ def neardup_index_reshard(
     column-pruned scan ~the size of num_perm·8 bytes/doc), shingles are
     read per-candidate at verify time, and an unchanged-layout sigs
     table stages as hardlinks (zero bytes moved; a manifest re-point on
-    object storage).  Measured honestly (stress_dedup ``reshard`` mode,
+    object storage).  Measured honestly (scale.py --family dedup --case
+    reshard,
     300-char fixture docs): the ORIGINAL implementation cached the
     shingle arrays (~8× the corpus text bytes) corpus-wide and LOST to
     a from-scratch rebuild at 500k (169 s vs 96 s) — at these tiny doc
@@ -1157,8 +1161,6 @@ def neardup_index_reshard(
             "corpus re-scan: build a fresh index)."
         )
 
-    tmp = index_dir.rstrip("/") + ".reshard"
-    shutil.rmtree(tmp, ignore_errors=True)
     doc_t = _doc_tombs(spark, index_dir, p).localCheckpoint(eager=True)
     n_doc_t = doc_t.count()
     pair_t_n = _pair_tombs(spark, index_dir, p).count()
@@ -1168,69 +1170,72 @@ def neardup_index_reshard(
     # cache ONLY (id, sig): banding and counting never touch the
     # shingle arrays, which are ~8x the corpus TEXT bytes (a char
     # 9-gram hash per position) — caching them made reshard SLOWER
-    # than a from-scratch rebuild at 500k (measured, stress_dedup
-    # reshard mode: 169 s vs 96 s; slim cache + disk-backed verify
+    # than a from-scratch rebuild at 500k (measured, scale.py dedup
+    # case reshard: 169 s vs 96 s; slim cache + disk-backed verify
     # restores the no-re-sign win).  Shingles are read per-candidate
     # at verify time through a column-pruned columnar scan instead.
     live_sigs = live_full.select("id", "sig").persist()
     try:
-        n_live = live_sigs.count()
-        os.makedirs(tmp)
-        with open(os.path.join(tmp, _PARAMS_NAME), "w", encoding="utf-8") as f:
-            json.dump(new_p, f)
-        if new_p["n_id_buckets"] == p["n_id_buckets"] and n_doc_t == 0:
-            # the sigs table's layout depends only on n_id_buckets and
-            # its rows only on the doc-tombstone fold: unchanged layout
-            # + empty ledger ⇒ stage it zero-copy (hardlinks to the
-            # same immutable files) instead of decoding and re-writing
-            # the shingle arrays through Spark
-            link_tree(
-                os.path.join(index_dir, "sigs"), os.path.join(tmp, "sigs")
+        with staged_swap(index_dir, ".reshard") as tmp:
+            n_live = live_sigs.count()
+            os.makedirs(tmp)
+            params = os.path.join(tmp, _PARAMS_NAME)
+            with open(params, "w", encoding="utf-8") as f:
+                json.dump(new_p, f)
+            if new_p["n_id_buckets"] == p["n_id_buckets"] and n_doc_t == 0:
+                # the sigs table's layout depends only on n_id_buckets
+                # and its rows only on the doc-tombstone fold: unchanged
+                # layout + empty ledger ⇒ stage it zero-copy (hardlinks
+                # to the same immutable files) instead of decoding and
+                # re-writing the shingle arrays through Spark
+                link_tree(
+                    os.path.join(index_dir, "sigs"),
+                    os.path.join(tmp, "sigs"),
+                )
+            else:
+                live_full.withColumn(
+                    "sb", _sb_expr(F.col("id"), new_p["n_id_buckets"])
+                ).repartition("sb").write.mode("overwrite").partitionBy(
+                    "sb"
+                ).parquet(os.path.join(tmp, "sigs"))
+            new_bands = (
+                _banded(
+                    live_sigs, new_p["bands"], sig_len=new_p["num_perm"]
+                ).withColumn(
+                    "pb", _pb_expr(F.col("bh"), new_p["n_band_prefixes"])
+                )
+                if n_live
+                else local_frame(spark, [], _bands_schema(new_p))
             )
-        else:
-            live_full.withColumn(
-                "sb", _sb_expr(F.col("id"), new_p["n_id_buckets"])
-            ).repartition("sb").write.mode("overwrite").partitionBy(
-                "sb"
-            ).parquet(os.path.join(tmp, "sigs"))
-        new_bands = (
-            _banded(live_sigs, new_p["bands"], sig_len=new_p["num_perm"])
-            .withColumn("pb", _pb_expr(F.col("bh"), new_p["n_band_prefixes"]))
-            if n_live
-            else local_frame(spark, [], _bands_schema(new_p))
-        )
-        new_bands.repartition("band_id", "pb").write.mode(
-            "overwrite"
-        ).partitionBy("band_id", "pb").parquet(os.path.join(tmp, "bands"))
-        # the whole-corpus candidate pass under the new banding — the
-        # same grouped single-shuffle expansion the batch arm runs
-        # (lsh_candidate_pairs), reusing this module's bucket helpers
-        members = new_bands.select(
-            "band_id", "bh", "id", F.lit(False).alias("d")
-        )
-        cand = _expand_pairs(
-            _group_buckets(members).filter(
-                (F.col("n_total") >= 2)
-                & (F.col("n_total") <= new_p["max_bucket"])
-            ),
-            require_delta=False,
-        )
-        new_pairs = verify_jaccard(
-            cand, live_full, new_p["threshold"]
-        ).localCheckpoint(eager=True)
-        n_pairs = new_pairs.count()
-        new_pairs.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(tmp, "pairs")
-        )
-    except Exception:
-        # staging is the expensive phase and tmp is caller-visible:
-        # never leave a half-written index-sized sibling behind
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
+            new_bands.repartition("band_id", "pb").write.mode(
+                "overwrite"
+            ).partitionBy("band_id", "pb").parquet(
+                os.path.join(tmp, "bands")
+            )
+            # the whole-corpus candidate pass under the new banding —
+            # the same grouped single-shuffle expansion the batch arm
+            # runs (lsh_candidate_pairs), reusing this module's bucket
+            # helpers
+            members = new_bands.select(
+                "band_id", "bh", "id", F.lit(False).alias("d")
+            )
+            cand = _expand_pairs(
+                _group_buckets(members).filter(
+                    (F.col("n_total") >= 2)
+                    & (F.col("n_total") <= new_p["max_bucket"])
+                ),
+                require_delta=False,
+            )
+            new_pairs = verify_jaccard(
+                cand, live_full, new_p["threshold"]
+            ).localCheckpoint(eager=True)
+            n_pairs = new_pairs.count()
+            new_pairs.coalesce(1).write.mode("overwrite").parquet(
+                os.path.join(tmp, "pairs")
+            )
     finally:
         live_sigs.unpersist()
 
-    swap_directory(index_dir, tmp)
     if stats_out is not None:
         stats_out.update(
             rows_live=n_live,

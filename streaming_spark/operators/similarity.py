@@ -199,7 +199,7 @@ def _nan_to_neginf(sims: np.ndarray) -> np.ndarray:
 def probed_from_qc(qc: np.ndarray, nprobe: int) -> np.ndarray:
     """(Q, p) probed-cell ids from a query×centroid similarity matrix —
     THE probe rule, shared by the IVF-PQ serve paths and the layout
-    probes (ann_topk_ivfpq_pruned, scripts/stress_ann.py) so the
+    probes (ann_topk_ivfpq_pruned, scripts/scale.py --family ann) so the
     driver-side scan accounting can never diverge from what the
     operator actually scans (including the min(nprobe, n_cells)
     clamp)."""
@@ -642,9 +642,9 @@ def ivf_topk(
     artifact.  Per-call assignment is the N × n_cells matmul over the
     whole corpus (the index BUILD); a deployment builds it once and
     serves many query batches against it — at 1M × 64-dim the build is
-    the dominant term of a cold call (measured in
-    scripts/stress_ann.py).  Assignment is a deterministic function of
-    (vectors, centroids), so passing the staged frame is result-
+    the dominant term of a cold call (measured by
+    scripts/scale.py --family ann).  Assignment is a deterministic
+    function of (vectors, centroids), so passing the staged frame is result-
     identical to inline assignment (pinned by test).
 
     On a CELL-PARTITIONED staged layout (``assigned`` written with
@@ -2246,7 +2246,8 @@ def ivfpq_topk(
     never listed, bounding scan I/O at Σ probed-cell rows ≈
     nprobe/n_cells of the table; demonstrated with files-read /
     rows-scanned accounting by ann_topk_ivfpq_pruned and measured at
-    1M vectors in scripts/stress_ann.py) and masked per-query in-map;
+    1M vectors by scripts/scale.py --family ann, ``bycell-q*`` steps)
+    and masked per-query in-map;
     the only shuffles are the O(Q·rerank·partitions) candidate window
     and the exact-rerank join.  Queries collect driver-side under the
     same bounded-queries contract as cosine_topk/pq_topk.
@@ -3061,7 +3062,8 @@ def ann_index_append(
     pass over the delta for the counts — fine for the bounded ingest
     batches this is for; skip it when the delta is huge.
 
-    Measured (scripts/stress_ann.py maintenance arm, clustered 64-dim):
+    Measured (scripts/scale.py --family ann, ``maintenance`` step,
+    clustered 64-dim):
     appending a 10k delta into a staged 250-cell index costs 2.0 / 2.9
     / 4.4 s at N = 100k / 500k / 1M — delta-bound, vs 62–106 s for the
     full re-encode at 1M — with serve identity holding at every
@@ -3126,30 +3128,18 @@ def ann_index_refresh(
     BETWEEN the two renames leaves the table at ``<staged_dir>.old``
     intact (never half-keyed) — recovery is renaming it back.  Save the
     new quantizer alongside with :func:`ann_index_save`."""
-    import os
-    import shutil
+    from streaming_spark.operators.index_commit import staged_swap
 
     # a parked compaction (or a table left wholly at .old) must be
     # recovered before a refresh discards the old table's directories
     _check_index_siblings(staged_dir, "ann_index_refresh")
-    tmp = staged_dir.rstrip("/") + ".refresh"
-    shutil.rmtree(tmp, ignore_errors=True)
     enc = _encode_index_rows(
         vectors, centroids, codebooks, rotation, id_col, vec_col
     )
-    try:
+    with staged_swap(staged_dir, ".refresh") as tmp:
         enc.repartition("cell").write.mode("overwrite").partitionBy(
             "cell"
         ).parquet(tmp)
-    except Exception:
-        # the re-encode is the expensive step and tmp is caller-owned
-        # (outside the scratch sweep): never leave a half-written
-        # table-sized sibling behind
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    from streaming_spark.operators.index_commit import swap_directory
-
-    swap_directory(staged_dir, tmp)
 
 
 def _cell_stats(
@@ -3372,7 +3362,8 @@ def ann_index_compact(
     ``cells_rewritten``, ``cells_removed``, ``rows_before``,
     ``rows_removed``.
 
-    Measured (scripts/stress_ann.py maintenance arm): compacting 100
+    Measured (scripts/scale.py --family ann, ``maintenance`` step):
+    compacting 100
     tombstones out of a staged index costs 2.3 / 2.5 / 3.5 s at
     N = 100k / 500k / 1M, rewriting only the 52 / 75 / 69 cells they
     touch of 77 / 176 / 250 total — footprint-bound, not N-bound."""

@@ -446,14 +446,9 @@ def pack_func(func: Callable) -> bytes:
     for API parity: the bytes can be broadcast as a ``side_input`` and
     revived with ``read_func``.
     """
-    try:
-        from pyspark import cloudpickle  # type: ignore
+    from pyspark import cloudpickle
 
-        return cloudpickle.dumps(func)
-    except Exception:
-        import cloudpickle  # type: ignore
-
-        return cloudpickle.dumps(func)
+    return cloudpickle.dumps(func)
 
 
 def read_func(packed: bytes) -> Callable:

@@ -2574,11 +2574,12 @@ def pipeline_training_order(spark, sf_dir):
 # visible in the emitted fold row; the composition's exactness is
 # additionally pinned (with takedown-free ordered-ingest contract) in
 # tests/test_curation_incremental.py and measured flat at 200k/1M in
-# scripts/stress_pipeline.py's incremental arm
+# scripts/scale.py --family pipeline --case incremental
 def incremental_curation_maintenance(spark, sf_dir):
     """The DELTA-BOUND curation tail as a library composition
     (operators/curation_incremental.py — promoted from
-    stress_pipeline's incremental arm the same way the digest index was
+    the pipeline scale sweep's incremental arm the same way the digest
+    index was
     promoted from its private helper): quality gate → cross-doc line
     dedup (line-digest index) → exact dedup on the cleaned digest
     (second digest index) → near-dup signature landing
@@ -2596,7 +2597,7 @@ def incremental_curation_maintenance(spark, sf_dir):
     decontamination) commute with any batching by construction and are
     pinned with the full stage set in
     tests/test_curation_incremental.py and measured at 200k/1M in
-    scripts/stress_pipeline.py's incremental arm.
+    scripts/scale.py --family pipeline --case incremental.
 
     Scale story: per-batch cost is delta-bound (digest probes read only
     the batch's prefix partitions, the banded join runs delta-vs-index

@@ -2866,7 +2866,7 @@ def q_ann_index_artifact(spark, sf_dir):
     codes_dir = os.path.join(d, "codes")
     # production layout: codes partitioned BY CELL, so the serve call's
     # batch-union probe filter prunes unprobed directories at scan time
-    # (measured in ann_topk_ivfpq_pruned / scripts/stress_ann.py)
+    # (measured in ann_topk_ivfpq_pruned / scripts/scale.py --family ann)
     ivfpq_encode(emb, cent, books, rotation=rot).repartition(
         "cell"
     ).write.mode("overwrite").partitionBy("cell").parquet(codes_dir)
@@ -2933,8 +2933,8 @@ def ann_topk_ivfpq_pruned(spark, sf_dir):
     rows-read is `rows_total` even though `rows_matched` equals the
     by-cell number.
 
-    Measured at 1M vectors / 250 cells / nprobe=8 (scripts/
-    stress_ann.py `ann_ivfpq_serve_bycell`): a Q=8 serve batch scans
+    Measured at 1M vectors / 250 cells / nprobe=8 (scripts/scale.py
+    --family ann, `bycell-q*` steps): a Q=8 serve batch scans
     25.8% of rows (59 probed cells) row-identically, and with the
     production staging used here (repartition("cell") before
     partitionBy — one file per cell, the load-bearing half of the
@@ -3059,12 +3059,9 @@ def ann_index_maintenance(spark, sf_dir):
     codes_dir = os.path.join(scratch_dir("annmaint"), "codes")
 
     def topk_md5(vectors, encoded):
-        # each index view is served ONCE and its top-k collected; the
-        # shared digest runs over the Q·k rows re-sent with the served
-        # schema (same JVM-side double→string formatting as every other
-        # witness)
-        served = ivfpq_topk(vectors, queries, encoded=encoded, **serve_kw)
-        return _topk_digest(local_frame(spark, served.collect(), served.schema))
+        return _topk_digest(
+            ivfpq_topk(vectors, queries, encoded=encoded, **serve_kw)
+        )
 
     rows = []
     st: dict = {}
@@ -3168,8 +3165,8 @@ def neardup_index_maintenance(spark, sf_dir):
       computed once and the banded join runs DELTA-vs-INDEX plus
       DELTA-vs-DELTA only — the probe reads the band table pruned to
       the delta's (band, prefix) combos and never shuffles the index.
-      Cost is delta-bound (measured in scripts/stress_dedup.py's
-      maintenance arm), yet the pair set is EXACTLY the batch arm's
+      Cost is delta-bound (measured by scripts/scale.py --family
+      dedup, case ``maint-16x16``), yet the pair set is EXACTLY the batch arm's
       over base ∪ delta — cap crossings retract via a pair-tombstone
       ledger.
     - RESHARD (neardup_index_reshard): the saturation-signal ACTION —

@@ -516,7 +516,8 @@ def _stream_conf(spark, state_partitions: int | None):
     oracle-parity contracts of every streaming twin are content-
     deterministic — so this is a physical knob only.
 
-    The knob is PER-OPERATOR (scripts/stress_streaming.py): the
+    The knob is PER-OPERATOR (scripts/scale.py --family streaming,
+    ``-p8`` vs ``-p32`` cases): the
     stateful rolling MAP inverts at volume — at 1M/4M events it runs
     ~2x faster at 32 state partitions than at 8 (21 vs 39 s, 59 vs
     143 s), because its compute scales with rows and amortizes the

@@ -3959,7 +3959,7 @@ def test_simhash_banding_recall_tradeoff(spark):
     on the stress corpus protocol (VERDICT r10 #3: the published 4×16 /
     ham ≤ 3 operating point silently delivers ~0.24 recall on lightly
     mutated near-dups, 4× worse than MinHash-LSH at the same threshold
-    intent).  Reuses scripts/stress_dedup.py's deterministic planted
+    intent).  Reuses scripts/scale.py's deterministic planted text
     corpus (every 5th doc a ~3-of-60-word mutation of its predecessor)
     so the floors here are the documented envelope, not a new metric.
 
@@ -3975,12 +3975,12 @@ def test_simhash_banding_recall_tradeoff(spark):
     sys.path.insert(
         0, os.path.join(os.path.dirname(__file__), "..", "scripts")
     )
-    from stress_dedup import _gen_texts
+    from scale import gen_texts
 
     n = 2500
     ids = np.arange(n)
     docs = spark.createDataFrame(
-        pd.DataFrame({"doc_id": ids, "text": _gen_texts(ids)})
+        pd.DataFrame({"doc_id": ids, "text": gen_texts(ids)})
     )
     planted = n // 5
 
@@ -4015,17 +4015,17 @@ def test_simhash_banding_recall_tradeoff(spark):
 @pytest.mark.slow  # ~85 s: 30k-vector build + exact baseline
 def test_ann_deploy_sizing_recall_floor(spark):
     """Regression pin for the published-standard PQ deployment sizing
-    (VERDICT r10 #4): the r10 sweep (scripts/stress_ann.py) found the
-    fixture-sized codes (m=8, ksub=16) collapse recall to 0.05-0.22 on
+    (VERDICT r10 #4): the r10 sweep (now scripts/scale.py --family ann)
+    found the fixture-sized codes (m=8, ksub=16) collapse recall to 0.05-0.22 on
     clustered corpora, while the published standard (m=16, ksub=256,
     sample_limit 16384, rerank >= 512) restores 0.98/0.89/0.82 at
     100k/500k/1M.  This pins the deploy sizing on a clustered synthetic
     slice so the published-standard path cannot silently regress —
     the sweep ran once; this runs every suite.
 
-    Corpus/protocol reuse scripts/stress_ann.py verbatim (32 unit-norm
-    clusters, splitmix64 noise, strict identity recall@10 vs the exact
-    brute-force scan)."""
+    Corpus/protocol reuse scripts/scale.py's ann family verbatim (32
+    unit-norm clusters, splitmix64 noise, strict identity recall@10 vs
+    the exact brute-force scan)."""
     import os
     import sys
 
@@ -4034,7 +4034,7 @@ def test_ann_deploy_sizing_recall_floor(spark):
     sys.path.insert(
         0, os.path.join(os.path.dirname(__file__), "..", "scripts")
     )
-    from stress_ann import _centers, _gen_vectors
+    from scale import gen_vectors
 
     from streaming_spark.operators.similarity import (
         cosine_topk,
@@ -4044,9 +4044,8 @@ def test_ann_deploy_sizing_recall_floor(spark):
     )
 
     n, n_q, k = 30_000, 64, 10
-    centers = _centers()
     ids = np.arange(n)
-    vecs = _gen_vectors(ids, "clustered", centers)
+    vecs = gen_vectors(ids, "clustered")
     corpus = spark.createDataFrame(
         pd.DataFrame(
             {"vec_id": ids, "embedding": [v.tolist() for v in vecs]}
