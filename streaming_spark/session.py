@@ -5,7 +5,9 @@ cluster: AQE on (runtime re-planning, skew-join handling), Arrow
 exchange on (the engine's core operator is Arrow-batch streaming, the
 Spark analog of the reference's per-chunk columnar exchange —
 reference FeatherInterface.cpp:254-355), UTC session timezone for
-deterministic timestamp semantics across engines.
+deterministic timestamp semantics across engines.  Python workers fork
+from the engine's daemon (``worker_daemon``), with the engine's own
+parent directory on their ``PYTHONPATH``.
 """
 
 from __future__ import annotations
@@ -18,6 +20,11 @@ from pyspark.sql import SparkSession
 # (reference StreamSettings.h:272 — default 1 GiB of values). 64k rows per
 # batch keeps per-batch memory bounded while amortizing Arrow framing.
 DEFAULT_ARROW_BATCH = 65536
+
+# the directory holding the imported streaming_spark package: workers
+# start the daemon from it, and closures that name an engine module
+# import the driver's copy of the engine
+ENGINE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -50,5 +57,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.daemon.module", "streaming_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", ENGINE_ROOT)
     )
     return builder.getOrCreate()
