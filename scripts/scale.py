@@ -1199,7 +1199,7 @@ def run_10x(spark, cases, r):
     from streaming_spark.operators.pipe import pipe_df
     from streaming_spark.operators.similarity import ivf_topk
     from streaming_spark.queries.curation import decontaminate_flags
-    from streaming_spark.queries.streamops import _DF_CHILD_SUM, _df_child_cmd
+    from streaming_spark.queries.streamops import _DF_CHILD_SUM, _child_cmd
     from streaming_spark.queries.windows import funnel_counts
 
     t = load_tables(spark, SF_DIR)
@@ -1245,7 +1245,7 @@ def run_10x(spark, cases, r):
         "pack-sequences": ("docs", curation.pack_sequences),
         "sorted-layout": ("lineitem", sorted_layout),
         "pipe-df": ("lineitem", lambda li: pipe_df(
-            li.select("l_quantity"), _df_child_cmd(_DF_CHILD_SUM), "s DOUBLE, n INT")),
+            li.select("l_quantity"), _child_cmd(_DF_CHILD_SUM), "s DOUBLE, n INT")),
         "ivf-topk": ("embeddings", lambda emb: ivf_topk(
             emb, t["embeddings"].filter(F.col("vec_id") < 8), dim=64, k=5, n_cells=8, nprobe=4)),
         "tar-ingest": ("samples", tar_ingest),

@@ -232,13 +232,17 @@ def stream_arrow(
 # estimated) input per partition when the caller does not pass an
 # explicit count.  This is a DATA-VOLUME knob in the guide-§2.5 sense,
 # sized for Python-heavy fan-outs where the per-partition cost floor is
-# the Python-worker round-trip (~30-100 ms on this box), not scan
-# bandwidth: interleaved A/B at sf0.1 measured the resize pipeline at
-# 0.65 s with ~64 KB/partition (12 partitions for its ~820 KB input)
-# vs 1.04 s fanned to all 32 cores, with the doc/embedding-sized
-# consumers (minhash, brute-force ANN, broadcast cosine) showing the
-# same ≤1 scaling from 8→32 partitions and lineitem-sized consumers
-# (binned-grid overlap joins, ~3.4 MB projected) degrading below 32 —
+# the Python-worker round-trip, not scan bandwidth.  That floor is ~70 ms
+# per wave of warm tasks and ~110 ms for a one-task job on a 4-vCPU box
+# (a trivial mapInArrow job less the same job without Python, warm
+# local[4], under the engine's worker daemon); the target was sized when
+# the floor was ~0.3 s and has not been re-tuned since.  Interleaved A/B
+# at sf0.1 measured the resize pipeline at 0.65 s with ~64 KB/partition
+# (12 partitions for its ~820 KB input) vs 1.04 s fanned to all 32
+# cores, with the doc/embedding-sized consumers (minhash, brute-force
+# ANN, broadcast cosine) showing the same ≤1 scaling from 8→32
+# partitions and lineitem-sized consumers (binned-grid overlap joins,
+# ~3.4 MB projected) degrading below 32 —
 # one bytes target separates the two regimes.
 _FANOUT_TARGET_BYTES = 64 << 10
 

@@ -510,21 +510,12 @@ def q_arrow_pipe(spark, sf_dir):
     framed Arrow IPC messages) computes per-partition sums; a relational
     reduction combines them (reference op_stream_feather,
     FeatherInterface.cpp:201-235 + scidbstrm contract)."""
-    import base64
-    import sys
-
     from streaming_spark.operators.pipe import pipe_arrow
 
-    b64 = base64.b64encode(_ARROW_CHILD_SUM.encode()).decode()
-    repo_root = __import__("os").path.dirname(
-        __import__("os").path.dirname(__import__("os").path.abspath(__file__))
-    )
-    cmd = (
-        f"PYTHONPATH={__import__('os').path.dirname(repo_root)} {sys.executable} -uc "
-        f"\"import base64; exec(base64.b64decode('{b64}'))\""
-    )
     li = T(spark, sf_dir, "lineitem").select("l_quantity")
-    partials = pipe_arrow(li, cmd, "s DOUBLE, n BIGINT", chunk_rows=50000)
+    partials = pipe_arrow(
+        li, _child_cmd(_ARROW_CHILD_SUM), "s DOUBLE, n BIGINT", chunk_rows=50000
+    )
     return partials.agg(
         F.round(F.sum("s"), 2).alias("sum_qty"),
         F.sum("n").alias("n_rows"),
@@ -550,17 +541,17 @@ _DF_CHILD_IDENTITY = (
 )
 
 
-def _df_child_cmd(code: str) -> str:
+def _child_cmd(code: str) -> str:
+    """A shell command running ``code`` in this Python, with the engine
+    importable."""
     import base64
-    import os
     import sys
 
+    from streaming_spark.session import ENGINE_ROOT
+
     b64 = base64.b64encode(code.encode()).decode()
-    repo_parent = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
     return (
-        f"PYTHONPATH={repo_parent} {sys.executable} -uc "
+        f"PYTHONPATH={ENGINE_ROOT} {sys.executable} -uc "
         f"\"import base64; exec(base64.b64decode('{b64}'))\""
     )
 
@@ -581,7 +572,7 @@ def q_df_pipe(spark, sf_dir):
     from streaming_spark.operators.pipe import pipe_df
 
     li = T(spark, sf_dir, "lineitem").select("l_quantity")
-    partials = pipe_df(li, _df_child_cmd(_DF_CHILD_SUM), "s DOUBLE, n INT")
+    partials = pipe_df(li, _child_cmd(_DF_CHILD_SUM), "s DOUBLE, n INT")
     return partials.agg(
         F.round(F.sum("s"), 2).alias("sum_qty"),
         F.sum("n").cast("int").alias("n_rows"),
@@ -615,7 +606,7 @@ def q_df_roundtrip(spark, sf_dir):
         .alias("status"),
     )
     return pipe_df(
-        typed, _df_child_cmd(_DF_CHILD_IDENTITY), "k INT, price DOUBLE, status STRING"
+        typed, _child_cmd(_DF_CHILD_IDENTITY), "k INT, price DOUBLE, status STRING"
     )
 
 
@@ -677,7 +668,7 @@ def q_model_selection_df(spark, sf_dir):
         .select("seed", F.col("l_extendedprice").alias("x"))
     )
     partials = pipe_df(
-        replicated, _df_child_cmd(_DF_CHILD_GAUSS), "seed INT, n INT, s1 DOUBLE, s2 DOUBLE"
+        replicated, _child_cmd(_DF_CHILD_GAUSS), "seed INT, n INT, s1 DOUBLE, s2 DOUBLE"
     )
     n = F.sum("n").cast("bigint")
     mu = F.sum("s1") / F.sum("n")
@@ -761,7 +752,7 @@ def q_ml_train_predict_df(spark, sf_dir):
     )
     partials = pipe_df(
         train,
-        _df_child_cmd(_DF_CHILD_LINREG_STATS),
+        _child_cmd(_DF_CHILD_LINREG_STATS),
         "n INT, sx DOUBLE, sy DOUBLE, sxx DOUBLE, sxy DOUBLE",
     )
     m = partials.agg(
@@ -784,7 +775,7 @@ def q_ml_train_predict_df(spark, sf_dir):
     )
     preds = pipe_df(
         test,
-        _df_child_cmd(_DF_CHILD_LINREG_PREDICT),
+        _child_cmd(_DF_CHILD_LINREG_PREDICT),
         "k INT, ln INT, pred DOUBLE",
         side_input=side,
     )

@@ -21,9 +21,9 @@ from pyspark.sql import SparkSession
 # batch keeps per-batch memory bounded while amortizing Arrow framing.
 DEFAULT_ARROW_BATCH = 65536
 
-# the directory holding the imported streaming_spark package: workers
-# start the daemon from it, and closures that name an engine module
-# import the driver's copy of the engine
+# the directory holding the imported streaming_spark package, on the
+# PYTHONPATH of Python workers (they start the daemon from it) and of the
+# registry's pipe children, so both import the driver's copy of the engine
 ENGINE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
