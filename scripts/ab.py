@@ -12,6 +12,12 @@ only the engine differs.  An argument of CMD containing ``{tree}`` is
 expanded to the arm's tree, for a harness that finds the engine from
 its own path (``python3 {tree}/perfbench/run.py ...``).
 
+Run it from a directory that holds no ``streaming_spark`` package (an
+empty temp dir, with absolute paths in CMD).  Spark starts the Python
+worker daemon with ``python -m``, which puts the current directory first
+on the daemon's and the workers' ``sys.path``; from the repo's root both
+arms' workers would run the working copy's daemon and engine.
+
 Every stdout line of CMD that parses as a JSON object is a record.  A
 record is labelled by its ``case`` field, else by its position among
 the run's records; nested objects are flattened to dotted names.  The

@@ -1,7 +1,9 @@
 """The engine's Python worker daemon (streaming_spark/worker_daemon.py):
 a task no longer re-reads pyspark.zip's directory, the guard re-reads an
-archive that changed, and a session's workers import the engine with no
-PYTHONPATH in the environment."""
+archive that changed, workers fork from a daemon that preloaded and froze
+the Arrow/pandas stack and survive many short tasks doing so, and a
+session's workers import the engine with no PYTHONPATH in the
+environment."""
 
 import importlib
 import os
@@ -64,6 +66,93 @@ def test_task_does_not_reread_zip_directories(spark):
             assert row.importers > 0, row  # pyspark is imported from the zip
             assert row.calls == 0, row
             assert row.seconds < 0.05, row
+
+
+def test_workers_fork_from_a_preloaded_frozen_daemon(spark):
+    """The daemon imported pyarrow before forking (its parent maps
+    libarrow) and froze its heap (gc.freeze), seen from two jobs, the
+    second on reused workers: the worker shares those pages instead of
+    importing them privately."""
+
+    def probe(batches):
+        import gc
+
+        with open(f"/proc/{os.getppid()}/maps") as f:
+            arrow = any("libarrow" in line for line in f)
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict(
+            {"arrow": [arrow], "frozen": [gc.get_freeze_count()]}
+        )
+
+    for _ in range(2):  # the second round runs on reused workers
+        rows = (
+            spark.range(4, numPartitions=2)
+            .mapInArrow(probe, "arrow BOOLEAN, frozen BIGINT")
+            .collect()
+        )
+        assert len(rows) == 2
+        for row in rows:
+            assert row.arrow, row
+            assert row.frozen > 0, row
+
+
+# 100 mapInArrow and 100 mapInPandas tasks, each allocating Arrow buffers
+# and converting them to pandas, with worker reuse on or off
+_MANY_TASKS = """
+import os, sys, time
+sys.path.insert(0, {root!r})
+import pyarrow as pa
+from streaming_spark import get_spark
+
+def arrow_task(batches):
+    for b in batches:
+        t = pa.table({{"x": pa.array(range(20_000)), "s": pa.array(["v"] * 20_000)}})
+        pdf = t.to_pandas()
+        yield pa.RecordBatch.from_pydict(
+            {{"n": [len(pdf) + b.num_rows], "pid": [os.getpid()]}})
+
+def pandas_task(frames):
+    import pandas as pd
+    for pdf in frames:
+        big = pa.Table.from_pandas(pd.DataFrame({{"x": range(20_000)}})).to_pandas()
+        yield pd.DataFrame({{"n": [len(big) + len(pdf)], "pid": [os.getpid()]}})
+
+spark = get_spark(cpus=2, shuffle_partitions=2)
+t0 = time.perf_counter()
+df = spark.range(100, numPartitions=100)
+a = df.mapInArrow(arrow_task, "n BIGINT, pid BIGINT").collect()
+p = df.mapInPandas(pandas_task, "n BIGINT, pid BIGINT").collect()
+seconds = time.perf_counter() - t0
+for rows in (a, p):
+    assert sorted(r.n for r in rows) == [20_001] * 100, rows[:3]
+    workers = len({{r.pid for r in rows}})
+    assert workers == 100 if {fresh} else workers < 100, workers
+assert seconds < 120, seconds  # far below the pipes' 600 s child timeout
+spark.stop()
+"""
+
+
+@pytest.mark.parametrize("reuse", ["false", "true"])
+def test_forked_workers_survive_many_arrow_and_pandas_tasks(reuse):
+    """The daemon forks with pyarrow's jemalloc background thread
+    running; jemalloc's atfork handlers keep that safe.  200 short tasks
+    that allocate Arrow buffers and convert them to pandas all finish,
+    on a fresh worker per task (reuse off) and on reused ones."""
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    env["PYSPARK_SUBMIT_ARGS"] = (
+        f"--conf spark.python.worker.reuse={reuse} pyspark-shell"
+    )
+    subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            _MANY_TASKS.format(root=ROOT, fresh=reuse == "false"),
+        ],
+        env=env,
+        check=True,
+        timeout=300,
+    )
 
 
 @pytest.fixture
