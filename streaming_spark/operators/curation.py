@@ -343,11 +343,18 @@ def write_zorder_layout(
     the wider column's high bits own the top of every z-value, and the
     narrow column's locality is lost (measured on the fixture: raw
     interleave of an 11-bit × 7-bit pair left a y-range query touching
-    all 16 files, exactly like the linear layout).  Cost shape: the
-    stats agg + one sampled range shuffle + in-partition sort; the z
-    computation is pure codegen.  At 100 TB this is the layout pass you
-    run once per ingest so every later selective scan on either
-    dimension prunes."""
+    all 16 files, exactly like the linear layout).
+
+    The file bounds are the exact ``i/n_files`` quantiles of the z-value,
+    so the same input always yields the same files.  A
+    ``repartitionByRange`` would draw them from a sample seeded by the
+    RDD id, which differs on every run (the per-file row counts, and
+    with them the files a range query touches, changed between two
+    writes in one session).  Cost shape: the stats agg, one exact
+    quantile agg (it holds each distinct z-value's count), one hash
+    shuffle and an in-partition sort; the z computation is pure
+    codegen.  At 100 TB this is the layout pass you run once per ingest
+    so every later selective scan on either dimension prunes."""
     stats = df.agg(
         F.min(x_col).alias("__xmin"),
         F.max(x_col).alias("__xmax"),
@@ -361,10 +368,21 @@ def write_zorder_layout(
         return F.least(F.floor(frac * 65536).cast("bigint"), F.lit(65535))
 
     z = zvalue2(scaled(x_col, "__xmin", "__xmax"), scaled(y_col, "__ymin", "__ymax"))
+    zdf = df.crossJoin(F.broadcast(stats)).withColumn("__z", z)
+    cuts = [i / n_files for i in range(1, n_files)]
+    bounds = zdf.agg(F.percentile("__z", cuts)).first()[0] if cuts else []
+    rank = sum(((F.col("__z") > b).cast("int") for b in bounds), F.lit(0))
+    # a hash shuffle sends key k to partition pmod(hash(k), n_files); key
+    # z-range i by the smallest id that hashes to i, so range i is file i
+    keys = dict(
+        df.sparkSession.range(64 * n_files)
+        .groupBy(F.pmod(F.hash("id"), F.lit(n_files)))
+        .agg(F.min("id"))
+        .collect()
+    )
+    key = F.array(*[F.lit(keys[i]) for i in range(n_files)])[rank]
     (
-        df.crossJoin(F.broadcast(stats))
-        .withColumn("__z", z)
-        .repartitionByRange(n_files, F.col("__z"))
+        zdf.repartition(n_files, key.cast("bigint"))
         .sortWithinPartitions("__z")
         .drop("__z", "__xmin", "__xmax", "__ymin", "__ymax")
         .write.mode("overwrite")

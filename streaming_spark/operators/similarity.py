@@ -1,18 +1,42 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search, pairs and quantizers over embedding columns
+(array<float>).
 
-Two paths:
+Families:
 
-- ``cosine_topk``: exact brute-force top-k.  The query set is broadcast
-  as a dense numpy matrix; each partition computes a blocked matmul over
-  its rows (Arrow batch → float64 ndarray) and emits only its local
-  top-k per query; a final window keeps the global top-k.  Shuffle volume
-  is O(num_queries · k · partitions), never O(N).
-- ``lsh_bucket_topk``: the scale path — random-hyperplane LSH (signed
-  projections, seeded) buckets both sides; candidates are scored only
-  within matching buckets.  Recall < 1 by construction; multi-probe is
-  emulated by hashing with ``n_tables`` independent hyperplane sets.
+- Exact top-k: ``cosine_topk`` broadcasts the query matrix and keeps a
+  running top-(k+1) per partition; ``exact_nn_topk`` (self top-k) and
+  ``cosine_pairs`` (threshold pairs) take a broadcast arm on small
+  tables, else an arm blocked over IVF cells with triangle-inequality
+  pruning (``cosine_pairs`` also has an LSH arm).
+- LSH: ``lsh_bucket_topk`` / ``lsh_multiprobe_topk`` bucket both sides
+  by random hyperplanes and score only within matching buckets.
+- IVF: ``ivf_centroids`` (spherical k-means on a sample),
+  ``ivf_assign``, ``ivf_topk``; ``spherical_kmeans_full`` runs Lloyd
+  over the whole corpus.
+- PQ: ``pq_topk``, ``ivfpq_topk`` and ``ivfpq_topk_local`` (shared or
+  per-cell residual codebooks), with OPQ rotations from ``opq_train``
+  / ``opq_train_residual``; all serve by ADC (asymmetric distance
+  computation) over stored codes, then rerank exactly.
+- The staged-index lifecycle (``ann_index_save`` … ``ann_index_compact``),
+  ``semdedup`` and ``decontamination_audit``.
 
-Both are deterministic (fixed seeds, float64 accumulation).
+Each shared step has one owner:
+
+- training sample: ``_md5_sample`` (md5-of-id order, bounded collect);
+- spherical Lloyd update: ``_spherical_lloyd``;
+- PQ codebook k-means: ``_train_pq_books``;
+- nearest sub-codeword: ``_nearest_codeword`` (``_pq_codes`` per row);
+- residual step (cell, then subtract): ``_residuals``;
+- OPQ alternation (Procrustes): ``_opq_alternation``;
+- IVF-PQ encode map: ``_ivfpq_encode_rows``;
+- IVF-PQ serve preamble: ``_ivfpq_serve_setup``;
+- ADC scan, candidate window and rerank: ``_adc_topk`` with its
+  per-partition ``_RunningTopR``; each variant passes only its score
+  function;
+- exact rerank of candidate pairs: ``_topk_on_candidates``.
+
+Everything is deterministic (fixed seeds and inits, md5-ordered
+samples, float64 accumulation, (sim DESC, id ASC) tie-breaks).
 """
 
 from __future__ import annotations
@@ -454,16 +478,71 @@ def _md5_sample(
     )
 
 
+def _normed_sample(
+    vectors: DataFrame, id_col: str, vec_col: str, limit: int
+) -> np.ndarray:
+    """The row-normalized matrix of :func:`_md5_sample` — the input of
+    every quantizer trainer."""
+    rows = _md5_sample(vectors, id_col, vec_col, limit)
+    return _norm_rows(_matrix([r[1] for r in rows]))
+
+
+def _nearest_codeword(sub: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """Index of the L2-nearest row of ``books`` (ksub, dsub) for each row
+    of ``sub`` (rows, dsub) — the one nearest-sub-codeword kernel the
+    PQ trainers, encoders and the OPQ reconstruction share."""
+    d2 = ((sub[:, None, :] - books[None, :, :]) ** 2).sum(axis=2)
+    return np.argmin(d2, axis=1)
+
+
+def _pq_codes(x: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """PQ codes (rows, m) int32 of ``x`` against ``books`` (m, ksub,
+    dsub): the nearest codeword per subspace."""
+    m, _, dsub = books.shape
+    codes = np.empty((len(x), m), dtype=np.int32)
+    for j in range(m):
+        sub = x[:, j * dsub : (j + 1) * dsub]
+        codes[:, j] = _nearest_codeword(sub, books[j])
+    return codes
+
+
+def _pq_codes_per_cell(
+    resid: np.ndarray, cells: np.ndarray, books: np.ndarray
+) -> np.ndarray:
+    """PQ codes of each row against ITS cell's books (n_cells, m, ksub,
+    dsub) — the per-cell codebook encode."""
+    codes = np.empty((len(resid), books.shape[1]), dtype=np.int32)
+    for cell in np.unique(cells):
+        sel = cells == cell
+        codes[sel] = _pq_codes(resid[sel], books[cell])
+    return codes
+
+
+def _residuals(
+    mat: np.ndarray, cent: np.ndarray, rot: np.ndarray | None = None
+) -> tuple[np.ndarray, np.ndarray]:
+    """Each row's nearest coarse cell (max inner product) and its
+    residual ``row - cent[cell]``, rotated by ``rot`` when given (OPQ:
+    cells are found in the unrotated space) — the one residual step of
+    every IVF-PQ trainer and encoder."""
+    cells = np.argmax(mat @ cent.T, axis=1)
+    resid = mat - cent[cells]
+    if rot is not None:
+        resid = resid @ rot
+    return cells, resid
+
+
 def _train_pq_books(
     data: np.ndarray, m: int, ksub: int, dsub: int, n_iters: int
 ) -> np.ndarray:
     """The one L2 k-means codebook loop every PQ trainer shares
-    (pq_codebooks / ivfpq_residual_codebooks / opq_train /
-    opq_train_residual / ivfpq_local_codebooks): per subspace, init from
-    the first ``ksub`` sample rows and run fixed Lloyd iterations —
-    deterministic, retry-stable.  Thin samples (fewer rows than
-    ``ksub``) CYCLE the rows for the init instead of crashing on the
-    ``books[j] = cent`` shape mismatch — duplicate centroids are
+    (pq_codebooks, ivfpq_residual_codebooks, ivfpq_local_codebooks and
+    the OPQ alternation behind opq_train / opq_train_residual): per
+    subspace, init from the first ``ksub`` sample rows and run fixed
+    Lloyd iterations — deterministic, retry-stable.  Thin samples
+    (fewer rows than ``ksub``) CYCLE the rows for the init instead of
+    crashing on the ``books[j] = cent`` shape mismatch — duplicate
+    centroids are
     harmless (argmin picks the first; empty cells keep their init) and
     the init is bit-identical to ``sub[:ksub]`` whenever the sample is
     big enough.  Raises loudly on an empty sample (there is nothing to
@@ -479,14 +558,52 @@ def _train_pq_books(
         sub = data[:, j * dsub : (j + 1) * dsub]
         cent = sub[init_idx].copy()
         for _ in range(n_iters):
-            d2 = ((sub[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-            assign = np.argmin(d2, axis=1)
+            assign = _nearest_codeword(sub, cent)
             for c in range(ksub):
                 members = sub[assign == c]
                 if len(members):
                     cent[c] = members.mean(axis=0)
         books[j] = cent
     return books
+
+
+def _opq_alternation(
+    x: np.ndarray, dim: int, m: int, ksub: int, n_opq_iters: int, n_iters: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """The OPQ loop opq_train and opq_train_residual share: from R = I,
+    alternate (1) train PQ books on ``x @ R`` and reconstruct it from
+    its codes, (2) set R to the Procrustes solution, the orthogonal map
+    closest to taking ``x`` onto that reconstruction (SVD of xᵀx̂).
+    Returns (R, books)."""
+    dsub = dim // m
+    rot = np.eye(dim)
+    books = None
+    for _ in range(n_opq_iters):
+        y = x @ rot
+        books = _train_pq_books(y, m, ksub, dsub, n_iters)
+        recon = books[np.arange(m), _pq_codes(y, books)].reshape(y.shape)
+        u, _, vt = np.linalg.svd(x.T @ recon)
+        rot = u @ vt
+    return rot, books
+
+
+def _spherical_lloyd(
+    mat: np.ndarray, cent: np.ndarray, n_iters: int
+) -> np.ndarray:
+    """Fixed-count spherical Lloyd iterations of ``cent`` (updated in
+    place and returned) over the normalized rows of ``mat``: assign by
+    max inner product, move each non-empty cell to its members'
+    normalized sum."""
+    for _ in range(n_iters):
+        assign = np.argmax(mat @ cent.T, axis=1)
+        for c in range(len(cent)):
+            members = mat[assign == c]
+            if len(members):
+                m = members.sum(axis=0)
+                norm = np.linalg.norm(m)
+                if norm > 0:
+                    cent[c] = m / norm
+    return cent
 
 
 def _spherical_kmeans(
@@ -504,17 +621,7 @@ def _spherical_kmeans(
             "cannot train a coarse quantizer on an empty sample: the "
             "vectors frame contributed no rows"
         )
-    cent = mat[:n_cells].copy()
-    for _ in range(n_iters):
-        assign = np.argmax(mat @ cent.T, axis=1)
-        for c in range(n_cells):
-            members = mat[assign == c]
-            if len(members):
-                m = members.sum(axis=0)
-                norm = np.linalg.norm(m)
-                if norm > 0:
-                    cent[c] = m / norm
-    return cent
+    return _spherical_lloyd(mat, mat[:n_cells].copy(), n_iters)
 
 
 def ivf_centroids(
@@ -530,8 +637,7 @@ def ivf_centroids(
     driver-side on a DETERMINISTIC md5-ordered sample (bounded collect —
     this is how IVF quantizers are trained at any scale: the quantizer
     sees a few thousand vectors, only assignment is distributed)."""
-    rows = _md5_sample(vectors, id_col, vec_col, sample_limit)
-    mat = _norm_rows(_matrix([r[1] for r in rows]))
+    mat = _normed_sample(vectors, id_col, vec_col, sample_limit)
     return _spherical_kmeans(mat, n_cells, n_iters)
 
 
@@ -1928,13 +2034,7 @@ def pq_codebooks(
     Returns (m, ksub, dsub) float64."""
     assert dim % m == 0, "dim must split evenly into m subspaces"
     dsub = dim // m
-    rows = (
-        vectors.select(id_col, vec_col)
-        .orderBy(F.md5(F.col(id_col).cast("string")))
-        .limit(sample_limit)
-        .collect()
-    )
-    mat = _norm_rows(_matrix([r[1] for r in rows]))
+    mat = _normed_sample(vectors, id_col, vec_col, sample_limit)
     if rotation is not None:
         mat = mat @ rotation
     return _train_pq_books(mat, m, ksub, dsub, n_iters)
@@ -1951,7 +2051,6 @@ def pq_encode(
     per subspace, L2) — a narrow Arrow-batch map with the codebooks as
     broadcast side input; no shuffle.  At 100 TB the encoded index is
     m bytes/vector instead of 4·dim — the point of PQ."""
-    m, ksub, dsub = codebooks.shape
 
     def encode(pdf: pd.DataFrame, side) -> pd.DataFrame:
         books, rot = side
@@ -1960,11 +2059,7 @@ def pq_encode(
         mat = _norm_rows(_matrix(pdf[vec_col]))
         if rot is not None:
             mat = mat @ rot
-        codes = np.empty((len(pdf), m), dtype=np.int32)
-        for j in range(m):
-            sub = mat[:, j * dsub : (j + 1) * dsub]
-            d2 = ((sub[:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
-            codes[:, j] = np.argmin(d2, axis=1)
+        codes = _pq_codes(mat, books)
         return pd.DataFrame(
             {id_col: pdf[id_col].to_numpy(), "codes": list(codes)}
         )
@@ -1979,12 +2074,12 @@ def pq_encode(
 
 class _RunningTopR:
     """Per-partition running top-``topr`` per query for the ADC scan
-    family — the single owner of the partial-merge contract all three
-    PQ variants (pq_topk, ivfpq_topk, ivfpq_topk_local) share: each
-    chunk OFFERs a query's candidate (sims, ids), the state keeps the
-    best ``topr`` seen so far, and FLUSH emits one partial frame per
-    partition.  This bounds the global candidate window's shuffle input
-    at O(partitions × Q × topr) instead of O(chunks × Q × topr) — same
+    (:func:`_adc_topk`, its one user, which serves pq_topk, ivfpq_topk
+    and ivfpq_topk_local): each chunk OFFERs a query's candidate
+    (sims, ids), the state keeps the best ``topr`` seen so far, and
+    FLUSH emits one partial frame per partition.  This bounds the
+    global candidate window's shuffle input at O(partitions × Q × topr)
+    instead of O(chunks × Q × topr) — same
     argument as cosine_topk's partial stage (a production 128 MB
     partition holds ~50 Arrow chunks).  Padding rows carry sim = -inf;
     flush drops on NON-FINITE SIM, never on the id (a corpus is free to
@@ -2029,6 +2124,80 @@ class _RunningTopR:
         )
 
 
+def _collect_queries(
+    queries: DataFrame, vec_col: str
+) -> tuple[np.ndarray, np.ndarray]:
+    """An ADC serve's query batch, collected driver-side to build the
+    LUTs (the bounded-queries contract of cosine_topk's broadcast):
+    ids and row-normalized vectors."""
+    q_rows = queries.select("vec_id", vec_col).collect()
+    q_ids = np.array([r[0] for r in q_rows])
+    return q_ids, _norm_rows(_matrix([r[1] for r in q_rows]))
+
+
+def _adc_topk(
+    vectors: DataFrame,
+    queries: DataFrame,
+    enc: DataFrame,
+    q_ids: np.ndarray,
+    side,
+    score,
+    k: int,
+    rerank: int,
+    vec_col: str,
+    row_cols: tuple = (),
+) -> DataFrame:
+    """The ADC scan every PQ serve shares (pq_topk, ivfpq_topk,
+    ivfpq_topk_local): broadcast (q_ids, ``side``, rerank), scan the
+    code table ``enc`` with ONE :class:`_RunningTopR` per partition,
+    keep the top ``rerank`` per query in a candidate window and
+    re-score that pool exactly (:func:`_topk_on_candidates`).
+
+    ``score(side, qi, qid, codes, cols, ids, *extra)`` is the variant's
+    mask-and-score step for query ``qi`` over one Arrow chunk: codes
+    (rows, m), ``cols`` = arange(m), vec_ids, then the chunk's
+    ``row_cols`` columns as arrays.  It returns the (sims, vec_ids) to
+    offer, or None when the chunk holds no candidate for the query."""
+    side_bc = _broadcast_bounded(
+        vectors.sparkSession.sparkContext, (q_ids, side, rerank)
+    )
+
+    def adc_part(batches):
+        qids, side, topr = side_bc.value
+        state = None
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            codes = np.vstack(pdf["codes"].to_numpy())  # (rows, m)
+            ids = pdf["vec_id"].to_numpy()
+            cols = np.arange(codes.shape[1])
+            extra = [pdf[c].to_numpy() for c in row_cols]
+            if state is None:
+                state = _RunningTopR(len(qids), topr)
+            for qi, qid in enumerate(qids):
+                hit = score(side, qi, qid, codes, cols, ids, *extra)
+                if hit is not None:
+                    state.offer(qi, *hit)
+        if state is None:
+            return
+        out = state.flush(qids)
+        if out is not None:
+            yield out
+
+    partial = ensure_parallelism(enc).mapInPandas(
+        adc_part, "query_id BIGINT, vec_id BIGINT, adc_sim DOUBLE"
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("adc_sim").desc(), F.col("vec_id")
+    )
+    cand = (
+        partial.withColumn("r", F.row_number().over(w))
+        .filter(F.col("r") <= rerank)
+        .select("query_id", "vec_id")
+    )
+    return _topk_on_candidates(cand, queries, vectors, k, vec_col)
+
+
 def pq_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -2065,9 +2234,7 @@ def pq_topk(
     index-vs-index (use cosine_pairs for that)."""
     books = pq_codebooks(vectors, dim, m, ksub, vec_col=vec_col, rotation=rotation)
     enc = pq_encode(vectors, books, vec_col=vec_col, rotation=rotation)
-    q_rows = queries.select("vec_id", vec_col).collect()
-    q_ids = np.array([r[0] for r in q_rows])
-    q_mat = _norm_rows(_matrix([r[1] for r in q_rows]))
+    q_ids, q_mat = _collect_queries(queries, vec_col)
     if rotation is not None:
         q_mat = q_mat @ rotation
     dsub = dim // m
@@ -2075,43 +2242,14 @@ def pq_topk(
     # subvector with every codebook entry
     luts = np.einsum("qjd,jkd->qjk", q_mat.reshape(len(q_ids), m, dsub), books)
 
-    side_bc = _broadcast_bounded(
-        vectors.sparkSession.sparkContext, (q_ids, luts, rerank)
-    )
+    def score(tables, qi, qid, codes, cols, ids):
+        sims = tables[qi][cols, codes].sum(axis=1)  # (rows,)
+        mask = ids != qid
+        return sims[mask], ids[mask]
 
-    def adc_part(batches):
-        qids, tables, topr = side_bc.value
-        state = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            codes = np.vstack(pdf["codes"].to_numpy())  # (rows, m)
-            ids = pdf["vec_id"].to_numpy()
-            cols = np.arange(codes.shape[1])
-            if state is None:
-                state = _RunningTopR(len(qids), topr)
-            for qi, qid in enumerate(qids):
-                sims = tables[qi][cols, codes].sum(axis=1)  # (rows,)
-                mask = ids != qid
-                state.offer(qi, sims[mask], ids[mask])
-        if state is None:
-            return
-        out = state.flush(qids)
-        if out is not None:
-            yield out
-
-    partial = ensure_parallelism(enc).mapInPandas(
-        adc_part, "query_id BIGINT, vec_id BIGINT, adc_sim DOUBLE"
+    return _adc_topk(
+        vectors, queries, enc, q_ids, luts, score, k, rerank, vec_col
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_sim").desc(), F.col("vec_id")
-    )
-    cand = (
-        partial.withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") <= rerank)
-        .select("query_id", "vec_id")
-    )
-    return _topk_on_candidates(cand, queries, vectors, k, vec_col)
 
 
 def ivfpq_residual_codebooks(
@@ -2139,17 +2277,8 @@ def ivfpq_residual_codebooks(
     Returns (m, ksub, dsub) float64."""
     assert dim % m == 0, "dim must split evenly into m subspaces"
     dsub = dim // m
-    rows = (
-        vectors.select(id_col, vec_col)
-        .orderBy(F.md5(F.col(id_col).cast("string")))
-        .limit(sample_limit)
-        .collect()
-    )
-    mat = _norm_rows(_matrix([r[1] for r in rows]))
-    assign = np.argmax(mat @ centroids.T, axis=1)
-    resid = mat - centroids[assign]
-    if rotation is not None:
-        resid = resid @ rotation
+    mat = _normed_sample(vectors, id_col, vec_col, sample_limit)
+    _, resid = _residuals(mat, centroids, rotation)
     return _train_pq_books(resid, m, ksub, dsub, n_iters)
 
 
@@ -2167,27 +2296,37 @@ def ivfpq_encode(
     ``rotation`` the residual is rotated before encoding (OPQ): inner
     products are rotation-invariant, so scoring only has to rotate the
     query side to match."""
-    m, ksub, dsub = codebooks.shape
+    return _ivfpq_encode_rows(
+        df, centroids, codebooks, rotation, id_col, vec_col,
+        lambda resid, cells, books: _pq_codes(resid, books),
+    )
+
+
+def _ivfpq_encode_rows(
+    df: DataFrame,
+    centroids: np.ndarray,
+    codebooks: np.ndarray,
+    rotation: np.ndarray | None,
+    id_col: str,
+    vec_col: str,
+    codes_of,
+) -> DataFrame:
+    """The (id, cell, codes) encode map ivfpq_encode and
+    ivfpq_encode_local share: normalize, take each row's cell and
+    (rotated) residual, then ``codes_of(resid, cells, codebooks)``.
+    The codes column is stamped with the quantizer fingerprint."""
 
     def encode(pdf: pd.DataFrame, side) -> pd.DataFrame:
         cent, books, rot = side
         if len(pdf) == 0:
             return None
         mat = _norm_rows(_matrix(pdf[vec_col]))
-        cells = np.argmax(mat @ cent.T, axis=1)
-        resid = mat - cent[cells]
-        if rot is not None:
-            resid = resid @ rot
-        codes = np.empty((len(pdf), m), dtype=np.int32)
-        for j in range(m):
-            sub = resid[:, j * dsub : (j + 1) * dsub]
-            d2 = ((sub[:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
-            codes[:, j] = np.argmin(d2, axis=1)
+        cells, resid = _residuals(mat, cent, rot)
         return pd.DataFrame(
             {
                 id_col: pdf[id_col].to_numpy(),
                 "cell": cells.astype(np.int32),
-                "codes": list(codes),
+                "codes": list(codes_of(resid, cells, books)),
             }
         )
 
@@ -2208,6 +2347,71 @@ def ivfpq_encode(
             )
         },
     )
+
+
+def _ivfpq_serve_setup(
+    vectors: DataFrame,
+    queries: DataFrame,
+    dim: int,
+    n_cells: int,
+    nprobe: int,
+    m: int,
+    ksub: int,
+    vec_col: str,
+    centroids: np.ndarray | None,
+    rotation: np.ndarray | None,
+    codebooks: np.ndarray | None,
+    encoded: DataFrame | None,
+    train,
+    encode,
+    what: str,
+):
+    """The preamble ivfpq_topk and ivfpq_topk_local share: default the
+    centroids (ivf_centroids) and the codebooks (``train``), take the
+    code table (``encoded``, else ``encode`` inline), collect the
+    queries, probe their cells and prune the table to the probed union.
+    Returns (books, enc, q_ids, q_lut, qc, probed): ``qc`` (Q, n_cells)
+    holds the q·c_cell terms, and ``q_lut`` is the query side of the
+    residual LUT — rotated under OPQ (q·r = (Rq)·(Rr)), where the
+    coarse term is not."""
+    cent = (
+        centroids
+        if centroids is not None
+        else ivf_centroids(vectors, dim, n_cells, vec_col=vec_col)
+    )
+    books = (
+        codebooks
+        if codebooks is not None
+        else train(vectors, cent, dim, m, ksub, vec_col=vec_col, rotation=rotation)
+    )
+    # ``encoded`` accepts the PRE-STAGED code table — the
+    # (vec_id, cell, codes) frame the encode map produces, persisted as
+    # parquet next to the ann_index_save artifact.  Encoding is the
+    # full-corpus map (the index BUILD); serving many query batches
+    # re-encodes nothing.  Codes are a deterministic function of
+    # (vectors, centroids, codebooks, rotation), so the staged frame is
+    # result-identical to inline encoding (pinned by test) — but it is
+    # only valid WITH the exact quantizer that produced it: the encode
+    # map stamps a quantizer fingerprint into the staged column
+    # metadata and a mismatch is refused here, not silently served.
+    if encoded is not None:
+        _check_staged_fingerprint(
+            encoded,
+            ("codes",),
+            ann_quantizer_fingerprint(
+                centroids=cent, codebooks=books, rotation=rotation
+            ),
+            what,
+        )
+        enc = encoded
+    else:
+        enc = encode(vectors, cent, books, vec_col=vec_col, rotation=rotation)
+    q_ids, q_mat = _collect_queries(queries, vec_col)
+    qc = q_mat @ cent.T  # (Q, n_cells): the q·c_cell scalar terms
+    probed = probed_from_qc(qc, nprobe)  # (Q, p)
+    enc = _prune_to_probed_cells(enc, probed, cent.shape[0])
+    q_lut = q_mat if rotation is None else q_mat @ rotation
+    return books, enc, q_ids, q_lut, qc, probed
 
 
 def ivfpq_topk(
@@ -2256,99 +2460,29 @@ def ivfpq_topk(
     index: residuals are rotated before quantization, and by q·r =
     (Rq)·(Rr) only the residual LUT switches to the rotated query —
     the q·c_cell coarse term and everything downstream are untouched."""
-    cent = (
-        centroids
-        if centroids is not None
-        else ivf_centroids(vectors, dim, n_cells, vec_col=vec_col)
+    books, enc, q_ids, q_lut, qc, probed = _ivfpq_serve_setup(
+        vectors, queries, dim, n_cells, nprobe, m, ksub, vec_col,
+        centroids, rotation, codebooks, encoded,
+        ivfpq_residual_codebooks, ivfpq_encode, "ivfpq_topk",
     )
-    books = (
-        codebooks
-        if codebooks is not None
-        else ivfpq_residual_codebooks(
-            vectors, cent, dim, m, ksub, vec_col=vec_col, rotation=rotation
-        )
-    )
-    # ``encoded`` accepts the PRE-STAGED code table — the
-    # (vec_id, cell, codes) frame ivfpq_encode produces, persisted as
-    # parquet next to the ann_index_save artifact.  Encoding is the
-    # full-corpus map (the index BUILD); serving many query batches
-    # re-encodes nothing.  Codes are a deterministic function of
-    # (vectors, centroids, codebooks, rotation), so the staged frame is
-    # result-identical to inline encoding (pinned by test) — but it is
-    # only valid WITH the exact quantizer that produced it: the encode
-    # map stamps a quantizer fingerprint into the staged column
-    # metadata and a mismatch is refused here, not silently served.
-    if encoded is not None:
-        _check_staged_fingerprint(
-            encoded,
-            ("codes",),
-            ann_quantizer_fingerprint(
-                centroids=cent, codebooks=books, rotation=rotation
-            ),
-            "ivfpq_topk",
-        )
-        enc = encoded
-    else:
-        enc = ivfpq_encode(
-            vectors, cent, books, vec_col=vec_col, rotation=rotation
-        )
-
-    q_rows = queries.select("vec_id", vec_col).collect()
-    q_ids = np.array([r[0] for r in q_rows])
-    q_mat = _norm_rows(_matrix([r[1] for r in q_rows]))
     dsub = dim // m
-    qc = q_mat @ cent.T  # (Q, n_cells): the q·c_cell scalar terms
-    probed = probed_from_qc(qc, nprobe)  # (Q, p)
-    enc = _prune_to_probed_cells(enc, probed, cent.shape[0])
-    q_lut = q_mat if rotation is None else q_mat @ rotation
     luts = np.einsum("qjd,jkd->qjk", q_lut.reshape(len(q_ids), m, dsub), books)
 
-    side_bc = _broadcast_bounded(
-        vectors.sparkSession.sparkContext, (q_ids, qc, probed, luts, rerank)
-    )
+    def score(side, qi, qid, codes, cols, ids, cells):
+        qc_terms, probe_sets, tables = side
+        mask = np.isin(cells, probe_sets[qi]) & (ids != qid)
+        if not mask.any():
+            return None
+        sims = (
+            tables[qi][cols, codes[mask]].sum(axis=1)
+            + qc_terms[qi][cells[mask]]
+        )
+        return sims, ids[mask]
 
-    # One partial emission per PARTITION, not per Arrow chunk — the
-    # shared _RunningTopR contract (see its docstring for the
-    # shuffle-volume argument).
-    def adc_part(batches):
-        qids, qc_terms, probe_sets, tables, topr = side_bc.value
-        state = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            codes = np.vstack(pdf["codes"].to_numpy())  # (rows, m)
-            cells = pdf["cell"].to_numpy()
-            ids = pdf["vec_id"].to_numpy()
-            cols = np.arange(codes.shape[1])
-            if state is None:
-                state = _RunningTopR(len(qids), topr)
-            for qi, qid in enumerate(qids):
-                mask = np.isin(cells, probe_sets[qi]) & (ids != qid)
-                if not mask.any():
-                    continue
-                sims = (
-                    tables[qi][cols, codes[mask]].sum(axis=1)
-                    + qc_terms[qi][cells[mask]]
-                )
-                state.offer(qi, sims, ids[mask])
-        if state is None:
-            return
-        out = state.flush(qids)
-        if out is not None:
-            yield out
-
-    partial = ensure_parallelism(enc).mapInPandas(
-        adc_part, "query_id BIGINT, vec_id BIGINT, adc_sim DOUBLE"
+    return _adc_topk(
+        vectors, queries, enc, q_ids, (qc, probed, luts), score,
+        k, rerank, vec_col, ("cell",),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_sim").desc(), F.col("vec_id")
-    )
-    cand = (
-        partial.withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") <= rerank)
-        .select("query_id", "vec_id")
-    )
-    return _topk_on_candidates(cand, queries, vectors, k, vec_col)
 
 
 def opq_train(
@@ -2376,29 +2510,8 @@ def opq_train(
     passing both to :func:`pq_topk` / :func:`pq_encode` — scoring is
     unchanged because inner products are rotation-invariant."""
     assert dim % m == 0, "dim must split evenly into m subspaces"
-    dsub = dim // m
-    rows = (
-        vectors.select(id_col, vec_col)
-        .orderBy(F.md5(F.col(id_col).cast("string")))
-        .limit(sample_limit)
-        .collect()
-    )
-    mat = _norm_rows(_matrix([r[1] for r in rows]))
-    rot = np.eye(dim)
-    books = None
-    for _ in range(n_opq_iters):
-        y = mat @ rot
-        books = _train_pq_books(y, m, ksub, dsub, n_iters)
-        recon = np.empty_like(y)
-        for j in range(m):
-            sub = y[:, j * dsub : (j + 1) * dsub]
-            cent = books[j]
-            d2 = ((sub[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-            recon[:, j * dsub : (j + 1) * dsub] = cent[np.argmin(d2, axis=1)]
-        # Procrustes: closest orthogonal map from mat to recon
-        u, _, vt = np.linalg.svd(mat.T @ recon)
-        rot = u @ vt
-    return rot, books
+    mat = _normed_sample(vectors, id_col, vec_col, sample_limit)
+    return _opq_alternation(mat, dim, m, ksub, n_opq_iters, n_iters)
 
 
 def opq_train_residual(
@@ -2426,30 +2539,9 @@ def opq_train_residual(
     term of the scoring identity is untouched and only the residual LUT
     rotates the query."""
     assert dim % m == 0, "dim must split evenly into m subspaces"
-    dsub = dim // m
-    rows = (
-        vectors.select(id_col, vec_col)
-        .orderBy(F.md5(F.col(id_col).cast("string")))
-        .limit(sample_limit)
-        .collect()
-    )
-    mat = _norm_rows(_matrix([r[1] for r in rows]))
-    assign = np.argmax(mat @ centroids.T, axis=1)
-    resid = mat - centroids[assign]
-    rot = np.eye(dim)
-    books = None
-    for _ in range(n_opq_iters):
-        y = resid @ rot
-        books = _train_pq_books(y, m, ksub, dsub, n_iters)
-        recon = np.empty_like(y)
-        for j in range(m):
-            sub = y[:, j * dsub : (j + 1) * dsub]
-            cent = books[j]
-            d2 = ((sub[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-            recon[:, j * dsub : (j + 1) * dsub] = cent[np.argmin(d2, axis=1)]
-        u, _, vt = np.linalg.svd(resid.T @ recon)
-        rot = u @ vt
-    return rot, books
+    mat = _normed_sample(vectors, id_col, vec_col, sample_limit)
+    _, resid = _residuals(mat, centroids)
+    return _opq_alternation(resid, dim, m, ksub, n_opq_iters, n_iters)
 
 
 def ivfpq_local_codebooks(
@@ -2485,18 +2577,9 @@ def ivfpq_local_codebooks(
     assert dim % m == 0, "dim must split evenly into m subspaces"
     dsub = dim // m
     n_cells = centroids.shape[0]
-    rows = (
-        vectors.select(id_col, vec_col)
-        .orderBy(F.md5(F.col(id_col).cast("string")))
-        .limit(sample_limit)
-        .collect()
-    )
-    mat = _norm_rows(_matrix([r[1] for r in rows]))
-    assign = np.argmax(mat @ centroids.T, axis=1)
-    resid = mat - centroids[assign]
-    if rotation is not None:  # OPQ composition: books live in R-space
-        resid = resid @ rotation
-
+    mat = _normed_sample(vectors, id_col, vec_col, sample_limit)
+    # with OPQ composed in, the books live in R-space
+    assign, resid = _residuals(mat, centroids, rotation)
     pooled = _train_pq_books(resid, m, ksub, dsub, n_iters)
     local = np.empty((n_cells, m, ksub, dsub))
     for cell in range(n_cells):
@@ -2522,47 +2605,9 @@ def ivfpq_encode_local(
     Arrow-map plan and 4 + m bytes/vector index as the shared-codebook
     :func:`ivfpq_encode`; the broadcast side is n_cells× larger but
     still centroid-table-sized."""
-    n_cells, m, ksub, dsub = local_books.shape
-
-    def encode(pdf: pd.DataFrame, side) -> pd.DataFrame:
-        cent, books, rot = side
-        if len(pdf) == 0:
-            return None
-        mat = _norm_rows(_matrix(pdf[vec_col]))
-        cells = np.argmax(mat @ cent.T, axis=1)
-        resid = mat - cent[cells]
-        if rot is not None:
-            resid = resid @ rot
-        codes = np.empty((len(pdf), m), dtype=np.int32)
-        for cell in np.unique(cells):
-            sel = cells == cell
-            for j in range(m):
-                sub = resid[sel, j * dsub : (j + 1) * dsub]
-                d2 = ((sub[:, None, :] - books[cell][j][None, :, :]) ** 2).sum(
-                    axis=2
-                )
-                codes[sel, j] = np.argmin(d2, axis=1)
-        return pd.DataFrame(
-            {
-                id_col: pdf[id_col].to_numpy(),
-                "cell": cells.astype(np.int32),
-                "codes": list(codes),
-            }
-        )
-
-    id_type = df.schema[id_col].dataType.simpleString()
-    return stream(
-        df.select(id_col, vec_col),
-        encode,
-        f"{id_col} {id_type}, cell INT, codes ARRAY<INT>",
-        side_input=(centroids, local_books, rotation),
-    ).withMetadata(
-        "codes",
-        {
-            _ANN_FP_KEY: ann_quantizer_fingerprint(
-                centroids=centroids, codebooks=local_books, rotation=rotation
-            )
-        },
+    return _ivfpq_encode_rows(
+        df, centroids, local_books, rotation, id_col, vec_col,
+        _pq_codes_per_cell,
     )
 
 
@@ -2603,92 +2648,34 @@ def ivfpq_topk_local(
     variant the same train-once / encode-once / query-many deployment
     boundary as ivf_topk(assigned=) / ivfpq_topk(encoded=) — the staged
     frame's quantizer fingerprint is validated before serving."""
-    cent = (
-        centroids
-        if centroids is not None
-        else ivf_centroids(vectors, dim, n_cells, vec_col=vec_col)
+    books, enc, q_ids, q_lut, qc, probed = _ivfpq_serve_setup(
+        vectors, queries, dim, n_cells, nprobe, m, ksub, vec_col,
+        centroids, rotation, codebooks, encoded,
+        ivfpq_local_codebooks, ivfpq_encode_local, "ivfpq_topk_local",
     )
-    books = (
-        codebooks
-        if codebooks is not None
-        else ivfpq_local_codebooks(
-            vectors, cent, dim, m, ksub, vec_col=vec_col, rotation=rotation
-        )
-    )
-    if encoded is not None:
-        _check_staged_fingerprint(
-            encoded,
-            ("codes",),
-            ann_quantizer_fingerprint(
-                centroids=cent, codebooks=books, rotation=rotation
-            ),
-            "ivfpq_topk_local",
-        )
-        enc = encoded
-    else:
-        enc = ivfpq_encode_local(
-            vectors, cent, books, vec_col=vec_col, rotation=rotation
-        )
-
-    q_rows = queries.select("vec_id", vec_col).collect()
-    q_ids = np.array([r[0] for r in q_rows])
-    q_mat = _norm_rows(_matrix([r[1] for r in q_rows]))
     dsub = dim // m
-    qc = q_mat @ cent.T  # (Q, n_cells)
-    probed = probed_from_qc(qc, nprobe)
-    enc = _prune_to_probed_cells(enc, probed, cent.shape[0])
-    # per-(query, cell) LUTs: (Q, n_cells, m, ksub); with OPQ the LUT
-    # side rotates the query (q.r = (Rq).(Rr)), the coarse term doesn't
-    q_lut = q_mat if rotation is None else q_mat @ rotation
+    # per-(query, cell) LUTs: (Q, n_cells, m, ksub)
     luts = np.einsum(
         "qjd,cjkd->qcjk", q_lut.reshape(len(q_ids), m, dsub), books
     )
 
-    side_bc_local = _broadcast_bounded(
-        vectors.sparkSession.sparkContext, (q_ids, qc, probed, luts, rerank)
-    )
+    def score(side, qi, qid, codes, cols, ids, cells):
+        qc_terms, probe_sets, tables = side
+        mask = np.isin(cells, probe_sets[qi]) & (ids != qid)
+        if not mask.any():
+            return None
+        cells_m = cells[mask]
+        codes_m = codes[mask]
+        sims = (
+            tables[qi][cells_m[:, None], cols[None, :], codes_m].sum(axis=1)
+            + qc_terms[qi][cells_m]
+        )
+        return sims, ids[mask]
 
-    def adc_part(batches):
-        qids, qc_terms, probe_sets, tables, topr = side_bc_local.value
-        state = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            codes = np.vstack(pdf["codes"].to_numpy())  # (rows, m)
-            cells = pdf["cell"].to_numpy()
-            ids = pdf["vec_id"].to_numpy()
-            cols = np.arange(codes.shape[1])
-            if state is None:
-                state = _RunningTopR(len(qids), topr)
-            for qi, qid in enumerate(qids):
-                mask = np.isin(cells, probe_sets[qi]) & (ids != qid)
-                if not mask.any():
-                    continue
-                cells_m = cells[mask]
-                codes_m = codes[mask]
-                sims = (
-                    tables[qi][cells_m[:, None], cols[None, :], codes_m].sum(axis=1)
-                    + qc_terms[qi][cells_m]
-                )
-                state.offer(qi, sims, ids[mask])
-        if state is None:
-            return
-        out = state.flush(qids)
-        if out is not None:
-            yield out
-
-    partial = ensure_parallelism(enc).mapInPandas(
-        adc_part, "query_id BIGINT, vec_id BIGINT, adc_sim DOUBLE"
+    return _adc_topk(
+        vectors, queries, enc, q_ids, (qc, probed, luts), score,
+        k, rerank, vec_col, ("cell",),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_sim").desc(), F.col("vec_id")
-    )
-    cand = (
-        partial.withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") <= rerank)
-        .select("query_id", "vec_id")
-    )
-    return _topk_on_candidates(cand, queries, vectors, k, vec_col)
 
 
 def spherical_kmeans_full(
@@ -2719,13 +2706,7 @@ def spherical_kmeans_full(
     driver-side Lloyd passes on the sample then warm-start the
     distributed refinement.  Rerun-stable end to end.
     Returns (centroids, assignment DataFrame (id, cell))."""
-    rows0 = (
-        vectors.select(id_col, vec_col)
-        .orderBy(F.md5(F.col(id_col).cast("string")))
-        .limit(init_sample)
-        .collect()
-    )
-    smat = _norm_rows(_matrix([r[1] for r in rows0]))
+    smat = _normed_sample(vectors, id_col, vec_col, init_sample)
     if len(smat) < k:
         raise ValueError(
             f"spherical_kmeans_full: k={k} exceeds the {len(smat)}-row "
@@ -2737,16 +2718,7 @@ def spherical_kmeans_full(
         nxt = int(np.argmin(best_sim))
         chosen.append(nxt)
         best_sim = np.maximum(best_sim, smat @ smat[nxt])
-    cent = smat[chosen].copy()
-    for _ in range(5):  # sample-side Lloyd warm-up
-        a = np.argmax(smat @ cent.T, axis=1)
-        for c in range(k):
-            members = smat[a == c]
-            if len(members):
-                m = members.sum(axis=0)
-                norm = np.linalg.norm(m)
-                if norm > 0:
-                    cent[c] = m / norm
+    cent = _spherical_lloyd(smat, smat[chosen].copy(), 5)  # sample warm-up
     base = vectors.select(id_col, vec_col)
 
     def partials(pdf: pd.DataFrame, side) -> pd.DataFrame:

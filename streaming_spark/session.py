@@ -7,7 +7,9 @@ Spark analog of the reference's per-chunk columnar exchange —
 reference FeatherInterface.cpp:254-355), UTC session timezone for
 deterministic timestamp semantics across engines.  Python workers fork
 from the engine's daemon (``worker_daemon``), with the engine's own
-parent directory on their ``PYTHONPATH``.
+parent directory on their ``PYTHONPATH`` and ``PYTHONSAFEPATH`` set, so
+a ``streaming_spark`` directory in the driver's cwd cannot shadow the
+engine in the workers.
 
 PySpark's DataFrame debugging is off.  With it on, every ``F.col`` and
 ``Column`` method walks the Python stack, retries a failing ``import
@@ -68,6 +70,9 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.python.daemon.module", "streaming_spark.worker_daemon")
         .config("spark.executorEnv.PYTHONPATH", ENGINE_ROOT)
+        # keep the driver's cwd off the daemon's sys.path (``python -m``
+        # would put it first, ahead of ENGINE_ROOT)
+        .config("spark.executorEnv.PYTHONSAFEPATH", "1")
         # no Python call-site capture on every Column call (module docstring)
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )

@@ -116,6 +116,10 @@ def preload() -> None:
 
 
 if __name__ == "__main__":
+    # PYTHONSAFEPATH (set by session.get_spark) has kept the cwd off this
+    # process's sys.path; drop it so the processes a task starts (the
+    # external commands of the pipes) see the usual sys.path
+    os.environ.pop("PYTHONSAFEPATH", None)
     if sys.version_info < (3, 12):
         install()
     from pyspark.daemon import manager

@@ -155,6 +155,34 @@ def test_zorder_clusters_better_than_linear(spark):
     assert rows["zorder"].files_with_matches < rows["linear"].files_with_matches
 
 
+def test_zorder_layout_is_deterministic(spark, tmp_path):
+    """The same input gives the same z-order files: two writes in one
+    session hold the same rows per file, and layout_zorder_pruning
+    returns the same rows twice.  Sampled range bounds (seeded by the
+    RDD id) moved the file boundaries on every write."""
+    import pyarrow.parquet as pq
+
+    from streaming_spark.queries.registry import REGISTRY
+    from tests.conftest import SF_SMOKE
+
+    li = spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet").select(
+        "l_orderkey", "l_partkey", "l_suppkey"
+    )
+    layouts = []
+    for run in range(2):
+        path = tmp_path / f"z{run}"
+        curation.write_zorder_layout(li, str(path), "l_partkey", "l_suppkey")
+        files = sorted(path.glob("part-*.parquet"))
+        layouts.append([pq.read_table(f).to_pylist() for f in files])
+    assert len(layouts[0]) == 16
+    assert layouts[0] == layouts[1]
+    runs = [
+        sorted(REGISTRY["layout_zorder_pruning"](spark, SF_SMOKE).collect())
+        for _ in range(2)
+    ]
+    assert runs[0] == runs[1]
+
+
 def test_zvalue2_bit_interleave_exact(spark):
     """Morton-code math on handcrafted values: zvalue2(x, y) must equal
     the reference bit interleave (x even positions, y odd)."""

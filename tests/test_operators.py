@@ -2952,6 +2952,49 @@ def test_ivfpq_local_codebooks_beat_shared(spark):
     assert r_local >= 0.9, r_local
 
 
+def test_ivfpq_local_with_shared_books_matches_shared(spark):
+    """Per-cell codebooks that are every cell's copy of the shared
+    residual codebooks reduce ivfpq_encode_local to ivfpq_encode (equal
+    codes) and ivfpq_topk_local to ivfpq_topk (equal rows), which pins
+    the encode map, the nearest-codeword kernel and the ADC scan the
+    two paths share."""
+    from streaming_spark.operators.similarity import (
+        ivf_centroids,
+        ivfpq_encode,
+        ivfpq_encode_local,
+        ivfpq_residual_codebooks,
+        ivfpq_topk,
+        ivfpq_topk_local,
+    )
+
+    rng = np.random.default_rng(31)
+    centers = rng.standard_normal((6, 32))
+    rows = [
+        (i, (centers[i % 6] + 0.3 * rng.standard_normal(32)).tolist())
+        for i in range(300)
+    ]
+    df = spark.createDataFrame(
+        rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>"
+    ).repartition(3)
+    queries = df.filter(F.col("vec_id") < 6)
+    cent = ivf_centroids(df, 32, 6)
+    shared = ivfpq_residual_codebooks(df, cent, 32, m=8, ksub=8)
+    tiled = np.broadcast_to(shared, (len(cent),) + shared.shape).copy()
+
+    def codes(frame):
+        return sorted((r.vec_id, r.cell, tuple(r.codes)) for r in frame.collect())
+
+    assert codes(ivfpq_encode_local(df, cent, tiled)) == codes(
+        ivfpq_encode(df, cent, shared)
+    )
+    kw = dict(dim=32, k=5, nprobe=2, m=8, ksub=8, rerank=16, centroids=cent)
+    local = ivfpq_topk_local(df, queries, codebooks=tiled, **kw).collect()
+    assert len(local) == 6 * 5
+    assert sorted(local) == sorted(
+        ivfpq_topk(df, queries, codebooks=shared, **kw).collect()
+    )
+
+
 def test_bpe_save_load_roundtrip(spark, tmp_path):
     """The persisted tokenizer artifact must round-trip exactly: loaded
     merges equal trained merges (order = rank table), metadata survives,

@@ -617,3 +617,58 @@ def test_create_dataframe_only_inside_local_frame():
                 offenders.append(f"{path.relative_to(root)}:{node.lineno}")
     assert offenders == [], f"createDataFrame outside local_frame: {offenders}"
 
+
+def _md5_order(node):
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "orderBy"
+        and any(
+            isinstance(a, ast.Call)
+            and isinstance(a.func, ast.Attribute)
+            and a.func.attr == "md5"
+            for a in node.args
+        )
+    )
+
+
+def _running_top_r(node):
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Name)
+        and node.func.id == "_RunningTopR"
+    )
+
+
+def _svd(node):
+    return (
+        isinstance(node, ast.Attribute)
+        and node.attr == "svd"
+        and isinstance(node.value, ast.Attribute)
+        and node.value.attr == "linalg"
+    )
+
+
+def test_quantizer_steps_have_one_owner():
+    """Each shared step of the quantizer family in similarity.py lives
+    in one function: the md5-ordered training sample in _md5_sample,
+    the per-partition ADC top-R in _adc_topk, and the Procrustes SVD in
+    _opq_alternation.  A second copy fails here."""
+    path = pathlib.Path(streaming_spark.__file__).parent / "operators/similarity.py"
+    tree = ast.parse(path.read_text(), filename=str(path))
+    owners = {
+        "_md5_sample": _md5_order,
+        "_adc_topk": _running_top_r,
+        "_opq_alternation": _svd,
+    }
+    found = {owner: [] for owner in owners}
+    for fn in ast.walk(tree):
+        if isinstance(fn, ast.FunctionDef) and fn.name in owners:
+            found[fn.name] = [
+                n.lineno for n in ast.walk(fn) if owners[fn.name](n)
+            ]
+    for owner, match in owners.items():
+        sites = [n.lineno for n in ast.walk(tree) if match(n)]
+        assert len(found[owner]) == 1, (owner, found[owner])
+        assert sites == found[owner], f"{owner}'s step also at lines {sites}"
+

@@ -231,3 +231,40 @@ spark.stop()
     subprocess.run(
         [sys.executable, "-c", code], env=env, cwd=tmp_path, check=True, timeout=600
     )
+
+
+def test_workers_ignore_an_engine_in_the_driver_cwd(tmp_path):
+    """A ``streaming_spark`` package in the driver's cwd does not shadow
+    the engine in the workers.  Spark starts the daemon with ``python
+    -m``, which puts the cwd first on ``sys.path`` unless
+    PYTHONSAFEPATH is set; the daemon then drops the variable, so child
+    processes of a task keep the usual ``sys.path``."""
+    decoy = tmp_path / "streaming_spark"
+    decoy.mkdir()
+    (decoy / "__init__.py").write_text('raise ImportError("decoy engine")\n')
+    code = f"""
+import sys
+sys.path.insert(0, {ROOT!r})
+import pandas as pd
+import streaming_spark
+from streaming_spark import get_spark, stream
+
+
+def where(pdf):
+    import os
+    import streaming_spark
+    safe = os.environ.get("PYTHONSAFEPATH", "")
+    return pd.DataFrame({{"engine": [streaming_spark.__file__], "safe": [safe]}})
+
+
+spark = get_spark(cpus=1, shuffle_partitions=1)
+got = stream(spark.range(4, numPartitions=1), where, "engine STRING, safe STRING")
+rows = got.collect()
+assert {{r.engine for r in rows}} == {{streaming_spark.__file__}}, rows
+assert {{r.safe for r in rows}} == {{""}}, rows
+spark.stop()
+"""
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    subprocess.run(
+        [sys.executable, "-c", code], env=env, cwd=tmp_path, check=True, timeout=600
+    )
