@@ -10,7 +10,8 @@ that capability Spark-first:
   over Arrow batches (``mapInPandas``/``mapInArrow``), with the reference's
   map+finalize contract (reference py_pkg/scidbstrm/__init__.py:117-139)
   and optional ``instance_id/chunk_no/value_no`` provenance coordinates
-  (reference FeatherInterface.cpp:96-107).
+  (reference FeatherInterface.cpp:96-107; ``value_no`` restarts at 0 in
+  each response chunk).
 - ``pipe_tsv()`` — the reference's TSV wire protocol to an *external*
   binary (header ``nlines\\n`` + escaped TSV body, ``\\N`` nulls,
   0-terminator handshake; reference TSVInterface.cpp:163-362).

@@ -230,6 +230,37 @@ def frame_windows(
     )
 
 
+def _write_range_layout(
+    df: DataFrame, path: str, key: str, n_files: int, drop: tuple = ()
+) -> None:
+    """Write ``df`` as ``n_files`` parquet files, file i holding the i-th
+    range of the numeric ``key``, sorted on it.  The ranges are cut at
+    the exact ``i/n_files`` quantiles, so the same input always yields
+    the same files (``repartitionByRange`` draws them from a sample
+    seeded by the RDD id, which moved them on every write).  Cost: one
+    exact quantile agg (it holds each distinct key's count), one hash
+    shuffle and an in-partition sort."""
+    cuts = [i / n_files for i in range(1, n_files)]
+    bounds = df.agg(F.percentile(key, cuts)).first()[0] if cuts else []
+    rank = sum(((F.col(key) > b).cast("int") for b in bounds), F.lit(0))
+    # a hash shuffle sends key k to partition pmod(hash(k), n_files); key
+    # range i by the smallest id that hashes to i, so range i is file i
+    keys = dict(
+        df.sparkSession.range(64 * n_files)
+        .groupBy(F.pmod(F.hash("id"), F.lit(n_files)))
+        .agg(F.min("id"))
+        .collect()
+    )
+    part = F.array(*[F.lit(keys[i]) for i in range(n_files)])[rank]
+    (
+        df.repartition(n_files, part.cast("bigint"))
+        .sortWithinPartitions(key)
+        .drop(*drop)
+        .write.mode("overwrite")
+        .parquet(path)
+    )
+
+
 def write_sorted_layout(
     df: DataFrame,
     path: str,
@@ -237,17 +268,13 @@ def write_sorted_layout(
     n_files: int = 8,
 ) -> None:
     """Materialize ``df`` as ``n_files`` parquet files range-partitioned
-    and sorted by ``range_col`` — the write-side layout that makes later
-    range scans prune: each file owns a disjoint key range, so parquet
-    footer min/max statistics skip whole files/row groups for selective
-    predicates.  This is the z-order-lite single-key layout; one range
-    shuffle (sampled boundaries) + in-partition sort, no driver data."""
-    (
-        df.repartitionByRange(n_files, F.col(range_col))
-        .sortWithinPartitions(range_col)
-        .write.mode("overwrite")
-        .parquet(path)
-    )
+    and sorted by the numeric ``range_col`` — the write-side layout that
+    makes later range scans prune: each file owns a disjoint key range,
+    so parquet footer min/max statistics skip whole files/row groups for
+    selective predicates.  This is the z-order-lite single-key layout;
+    the bounds are exact quantiles, so the files are the same on every
+    write (:func:`_write_range_layout`), and no driver data."""
+    _write_range_layout(df, path, range_col, n_files)
 
 
 def layout_file_stats(spark, path: str, range_col: str) -> DataFrame:
@@ -345,16 +372,12 @@ def write_zorder_layout(
     interleave of an 11-bit × 7-bit pair left a y-range query touching
     all 16 files, exactly like the linear layout).
 
-    The file bounds are the exact ``i/n_files`` quantiles of the z-value,
-    so the same input always yields the same files.  A
-    ``repartitionByRange`` would draw them from a sample seeded by the
-    RDD id, which differs on every run (the per-file row counts, and
-    with them the files a range query touches, changed between two
-    writes in one session).  Cost shape: the stats agg, one exact
-    quantile agg (it holds each distinct z-value's count), one hash
-    shuffle and an in-partition sort; the z computation is pure
-    codegen.  At 100 TB this is the layout pass you run once per ingest
-    so every later selective scan on either dimension prunes."""
+    The files are cut at exact z-value quantiles by
+    :func:`_write_range_layout`, so the same input always yields the
+    same files.  Cost shape: the stats agg plus that writer's quantile
+    agg, hash shuffle and sort; the z computation is pure codegen.  At
+    100 TB this is the layout pass you run once per ingest so every
+    later selective scan on either dimension prunes."""
     stats = df.agg(
         F.min(x_col).alias("__xmin"),
         F.max(x_col).alias("__xmax"),
@@ -369,24 +392,8 @@ def write_zorder_layout(
 
     z = zvalue2(scaled(x_col, "__xmin", "__xmax"), scaled(y_col, "__ymin", "__ymax"))
     zdf = df.crossJoin(F.broadcast(stats)).withColumn("__z", z)
-    cuts = [i / n_files for i in range(1, n_files)]
-    bounds = zdf.agg(F.percentile("__z", cuts)).first()[0] if cuts else []
-    rank = sum(((F.col("__z") > b).cast("int") for b in bounds), F.lit(0))
-    # a hash shuffle sends key k to partition pmod(hash(k), n_files); key
-    # z-range i by the smallest id that hashes to i, so range i is file i
-    keys = dict(
-        df.sparkSession.range(64 * n_files)
-        .groupBy(F.pmod(F.hash("id"), F.lit(n_files)))
-        .agg(F.min("id"))
-        .collect()
-    )
-    key = F.array(*[F.lit(keys[i]) for i in range(n_files)])[rank]
-    (
-        zdf.repartition(n_files, key.cast("bigint"))
-        .sortWithinPartitions("__z")
-        .drop("__z", "__xmin", "__xmax", "__ymin", "__ymax")
-        .write.mode("overwrite")
-        .parquet(path)
+    _write_range_layout(
+        zdf, path, "__z", n_files, drop=("__z", "__xmin", "__xmax", "__ymin", "__ymax")
     )
 
 

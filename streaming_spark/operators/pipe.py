@@ -1,60 +1,65 @@
-r"""``pipe_tsv()`` — the reference's TSV wire protocol to an external binary.
+r"""The three external pipes — ``pipe_tsv``, ``pipe_df`` and
+``pipe_arrow`` — on one Arrow path.
 
-Protocol (reference README.md:37-56, TSVInterface.cpp:163-362):
+Each is the reference's stream() to an external binary in one wire
+format: TSV (TSVInterface.cpp:163-362), R serialization (``rserial``,
+DFInterface.cpp:168-447) and Arrow IPC (``client``,
+FeatherInterface.cpp:201-235).  They share everything but the framing:
 
-1. parent writes a header line ``<nlines>\n`` then ``nlines`` TSV rows;
-2. child replies with its own ``<nlines>\n`` header + body;
-3. repeat per chunk; after the last chunk the parent writes ``0\n`` and
-   the child replies with one final message (possibly ``0\n``).
+- one child per partition (the reference forks one per instance,
+  ChildProcess.cpp:49-102), driven by :class:`_Child`, whose single
+  ``select`` loop drains the child's stdout while it writes;
+- ``mapInArrow``, with :func:`_rechunk` cutting messages of exactly
+  ``chunk_rows`` rows, except a partition's last, which may hold fewer;
+- for ``pipe_df`` and ``pipe_arrow``, one request/response loop,
+  :func:`_exchange`: the side input as one message and one discarded
+  reply, one reply per chunk, the terminator and its final reply.
 
-Escaping (reference TSVInterface.cpp:200-222): ``\t`` → ``\\t``, ``\n`` →
-``\\n``, ``\r`` → ``\\r``, ``\\`` → ``\\\\``; NULL → ``\N``; doubles print
-NaN as ``nan`` (reference TSVInterface.cpp:71, 237-247).
-
-Each response chunk becomes ONE string cell, header stripped — matching
-the reference's ``<response:string>`` output schema
-(TSVInterface.cpp:58-64); parse it downstream with
-:func:`parse_tsv_response` (the analog of accelerated_io_tools
-``parse()``, reference README.md:81-99).
-
-Execution model: one child process per partition (the reference forks one
-child per instance, ChildProcess.cpp:49-102), driven by :class:`_Child`,
-the one child core of all three pipes.  Its single ``select`` loop drains
-the child's stdout while it writes, so ``pipe_tsv`` can send every chunk
-before it reads the first reply — the pipelining a child that buffers
-needs — without a second thread.  Like every other operator that
-crosses the Python boundary it runs under ``mapInArrow``: chunks are
-framed from Arrow record batches (string columns escaped in Arrow) and
-the responses go back as one Arrow batch per partition.
+``pipe_tsv`` instead sends every chunk before it reads the first reply,
+since a TSV child may hold its replies until the terminator.  Its
+protocol (reference README.md:37-56): a ``<nlines>\n`` header then
+``nlines`` rows, escaped as ``\t`` → ``\\t``, ``\n`` → ``\\n``, ``\r``
+→ ``\\r``, ``\\`` → ``\\\\``, NULL → ``\N``, NaN → ``nan``
+(TSVInterface.cpp:71, 200-247); ``0\n`` terminates.  Each response chunk
+becomes ONE string cell, header stripped — the reference's
+``<response:string>`` output (TSVInterface.cpp:58-64); parse it with
+:func:`parse_tsv_response` (accelerated_io_tools ``parse()``, reference
+README.md:81-99).
 """
 
 from __future__ import annotations
 
 import os
 import select
-import struct
 import subprocess
 from typing import Iterator
 
-import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
+    DoubleType,
+    FloatType,
+    IntegerType,
     LongType,
     MapType,
+    ShortType,
     StringType,
     StructField,
     StructType,
     TimestampType,
 )
 
+from streaming_spark import client
+from streaming_spark.operators import rserial
 from streaming_spark.operators.stream import (
     _broadcast_bounded,
+    _partition_id,
+    _with_provenance,
     _with_provenance_schema,
 )
 
@@ -288,6 +293,27 @@ def _rechunk(batches: Iterator[pa.RecordBatch], rows: int) -> Iterator[pa.Table]
         yield pa.Table.from_batches(pending)
 
 
+def _exchange(op: str, command: str, timeout: float, side, chunks, write, read):
+    """The request/response loop of ``pipe_df`` and ``pipe_arrow`` (the
+    reference's streamData, PhysicalStream.cpp:74-100): one child; the
+    side input, when given, as ONE message whose reply is discarded; then
+    each chunk, answered by one reply; then the terminator and its final
+    reply; then the child's exit.  Yields the replies.  A pipe brings only
+    its framing: ``write(child, message)`` (``None`` is the terminator)
+    and ``read(child)``."""
+    with _Child(op, command, timeout) as child:
+        if side is not None:
+            write(child, side)
+            read(child)
+        for chunk in chunks:
+            write(child, chunk)
+            yield read(child)
+        write(child, None)
+        child.end_input()
+        yield read(child)
+        child.wait()
+
+
 def pipe_tsv(
     df: DataFrame,
     command: str,
@@ -332,8 +358,7 @@ def pipe_tsv(
         return body.decode("utf-8") or None
 
     def run_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        ctx = TaskContext.get()
-        instance_id = ctx.partitionId() if ctx is not None else 0
+        instance_id = _partition_id()
         with _Child("pipe_tsv", command, timeout) as child:
             # every chunk goes out before the first reply is read: a
             # child may hold its replies until the terminator
@@ -407,9 +432,11 @@ def pipe_df(
     output carries (instance_id, chunk_no, value_no) — the reference's
     output dimensions (DFInterface.cpp:82-85).
 
-    The exchange is strictly synchronous request/response per chunk (the
-    reference's streamData :137-158); a child that stops reading or
-    replying fails the task (:class:`_Child`).
+    Each message holds exactly ``chunk_rows`` rows (a partition's last
+    may hold fewer), and the exchange is strictly synchronous
+    request/response (:func:`_exchange`, the reference's streamData
+    :137-158); a child that stops reading or replying fails the task
+    (:class:`_Child`).
 
     ``side_input`` (a pandas DataFrame) is sent FIRST, before any data
     chunks, as one df message whose response is discarded — the
@@ -418,16 +445,6 @@ def pipe_df(
     poLCA.Rmd:70-78).  A child using ``df_child_loop(..., n_side=1,
     on_side=...)`` pops it.
     """
-    from pyspark.sql.types import (
-        DoubleType,
-        FloatType,
-        IntegerType,
-        ShortType,
-        StringType,
-    )
-
-    from streaming_spark.operators import rserial
-
     _check_allowed("pipe_df", command, allowed_commands)
 
     def rtype_of(field) -> str:
@@ -449,6 +466,7 @@ def pipe_df(
     out_rtypes = [rtype_of(f) for f in out_schema.fields]
     out_names = [f.name for f in out_schema.fields]
     full_schema = _with_provenance_schema(out_schema) if provenance else out_schema
+    arrow_schema = to_arrow_schema(full_schema)
     side_bc = (
         _broadcast_bounded(df.sparkSession.sparkContext, side_input)
         if side_input is not None
@@ -456,16 +474,14 @@ def pipe_df(
     )
     timeout = _CHILD_TIMEOUT_S
 
-    def exchange(child: _Child, pdf_or_none, instance_id: int, chunk_no: int):
-        if pdf_or_none is None:
+    def write(child: _Child, cols) -> None:
+        if cols is None:
             rserial.write_empty_message(child)
-            child.end_input()
         else:
-            rserial.write_df_message(
-                child, rserial.pandas_to_columns(pdf_or_none, in_rtypes)
-            )
-        cols = rserial.read_df_message(child)
-        if cols == {}:
+            rserial.write_df_message(child, cols)
+
+    def response(cols) -> pd.DataFrame | None:
+        if not cols:
             return None
         if len(cols) != len(out_names):
             raise RuntimeError(
@@ -481,67 +497,34 @@ def pipe_df(
                     f"pipe_df: child column {name!r} arrived as "
                     f"{out[name].dtype}, declared {rt}"
                 )
-        if provenance:
-            out.insert(0, "value_no", np.arange(len(out), dtype=np.int64))
-            out.insert(0, "chunk_no", np.int64(chunk_no))
-            out.insert(0, "instance_id", np.int64(instance_id))
         return out
 
-    def run_partition(batches):
-        ctx = TaskContext.get()
-        instance_id = ctx.partitionId() if ctx is not None else 0
-        with _Child("pipe_df", command, timeout) as child:
-            if side_bc is not None:
-                # second-array semantics: the side chunk goes down the same
-                # wire first; its response is discarded (the reference
-                # streams the extra array's chunks before the main one,
-                # PhysicalStream.cpp:74-100)
-                side_pdf = side_bc.value
-                rserial.write_df_message(
-                    child,
-                    rserial.pandas_to_columns(side_pdf, rserial.infer_rtypes(side_pdf)),
-                )
-                rserial.read_df_message(child)
+    def run_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        instance_id = _partition_id()
+        side = None
+        if side_bc is not None:
+            side = rserial.pandas_to_columns(
+                side_bc.value, rserial.infer_rtypes(side_bc.value)
+            )
+        chunks = (
+            rserial.pandas_to_columns(table.to_pandas(), in_rtypes)
+            for table in _rechunk(batches, chunk_rows)
+        )
+        replies = _exchange(
+            "pipe_df", command, timeout, side, chunks, write, rserial.read_df_message
+        )
+        chunk_no = 0
+        for out in map(response, replies):
+            if out is None or not len(out):
+                continue
+            if provenance:
+                out = _with_provenance(out, instance_id, chunk_no)
+            chunk_no += 1
+            yield pa.RecordBatch.from_pandas(
+                out, schema=arrow_schema, preserve_index=False
+            )
 
-            # coalesce Arrow batches up to chunk_rows per wire message: each
-            # exchange is a synchronous round trip, so bigger chunks amortize
-            # the per-message serialization + handshake (the reference's
-            # chunk == SciDB chunk; ours is a tunable batch)
-            chunk_no = 0
-            pending: list[pd.DataFrame] = []
-            pending_rows = 0
-
-            def flush_pending():
-                nonlocal pending, pending_rows, chunk_no
-                if not pending:
-                    return None
-                pdf = pending[0] if len(pending) == 1 else pd.concat(
-                    pending, ignore_index=True
-                )
-                pending, pending_rows = [], 0
-                out = exchange(child, pdf, instance_id, chunk_no)
-                if out is not None and len(out):
-                    chunk_no += 1
-                return out
-
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                pending.append(pdf)
-                pending_rows += len(pdf)
-                if pending_rows >= chunk_rows:
-                    out = flush_pending()
-                    if out is not None and len(out):
-                        yield out
-            out = flush_pending()
-            if out is not None and len(out):
-                yield out
-            out = exchange(child, None, instance_id, chunk_no)
-            if out is not None and len(out):
-                yield out
-            child.wait()
-
-    return df.mapInPandas(run_partition, full_schema)
+    return df.mapInArrow(run_partition, full_schema)
 
 
 def pipe_arrow(
@@ -553,12 +536,15 @@ def pipe_arrow(
     allowed_commands: list[str] | None = None,
 ) -> DataFrame:
     """The feather-protocol external pipe: each chunk crosses the child's
-    stdin/stdout as an 8-byte LE size + Arrow IPC record batch, the child
-    answers one message per chunk plus one final message after the 0-size
-    terminator (reference README.md:37-56, FeatherInterface.cpp:201-235).
+    stdin/stdout as an 8-byte LE size + Arrow IPC record batch
+    (``client.write_message``), the child answers one message per chunk
+    plus one final message after the 0-size terminator (reference
+    README.md:37-56, FeatherInterface.cpp:201-235).  Each message holds
+    exactly ``chunk_rows`` rows (a partition's last may hold fewer), and
+    the exchange is :func:`_exchange`, the one ``pipe_df`` runs.
 
     ``side_input`` (a pandas DataFrame) is sent FIRST, before any data
-    chunks — the reference's second-array semantics
+    chunks, as ONE message — the reference's second-array semantics
     (PhysicalStream.cpp:74-100); a child using ``client.read_func`` pops
     it and acks with an empty message.
 
@@ -568,9 +554,7 @@ def pipe_arrow(
     keywords, README.md:23-27).
     """
     _check_allowed("pipe_arrow", command, allowed_commands)
-    out_schema = (
-        StructType.fromDDL(schema) if isinstance(schema, str) else schema
-    )
+    out_schema = StructType.fromDDL(schema) if isinstance(schema, str) else schema
     side_bc = (
         _broadcast_bounded(df.sparkSession.sparkContext, side_input)
         if side_input is not None
@@ -578,53 +562,15 @@ def pipe_arrow(
     )
     timeout = _CHILD_TIMEOUT_S
 
-    def write_message(child: _Child, batch_or_none) -> None:
-        if batch_or_none is None:
-            child.write(struct.pack("<Q", 0))
-            child.end_input()
-            return
-        sink = pa.BufferOutputStream()
-        with pa.ipc.new_stream(sink, batch_or_none.schema) as w:
-            w.write_batch(batch_or_none)
-        buf = sink.getvalue()
-        child.write(struct.pack("<Q", buf.size))
-        child.write(buf)
-
-    def read_message(child: _Child):
-        header = child.read(8)
-        if len(header) < 8:
-            raise RuntimeError("pipe_arrow: child closed its output mid-protocol")
-        (size,) = struct.unpack("<Q", header)
-        if size == 0:
-            return None
-        payload = child.read(size)
-        if len(payload) < size:
-            raise RuntimeError("pipe_arrow: child closed its output mid-protocol")
-        return pa.ipc.open_stream(payload).read_all()
-
-    def emit(table) -> Iterator[pa.RecordBatch]:
-        # schema enforcement happens in mapInArrow against out_schema
-        if table is None or table.num_rows == 0:
-            return
-        yield from table.to_batches(max_chunksize=chunk_rows)
-
     def run_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        with _Child("pipe_arrow", command, timeout) as child:
-            if side_bc is not None:
-                side_tbl = pa.Table.from_pandas(
-                    side_bc.value, preserve_index=False
-                ).replace_schema_metadata(None)
-                for b in side_tbl.to_batches(max_chunksize=chunk_rows) or [
-                    pa.RecordBatch.from_pylist([], schema=side_tbl.schema)
-                ]:
-                    write_message(child, b)
-                read_message(child)  # child acks the side input (read_func)
-            for batch in batches:
-                for lo in range(0, batch.num_rows, chunk_rows):
-                    write_message(child, batch.slice(lo, chunk_rows))
-                    yield from emit(read_message(child))
-            write_message(child, None)
-            yield from emit(read_message(child))
-            child.wait()
+        side = side_bc.value if side_bc is not None else None
+        replies = _exchange(
+            "pipe_arrow", command, timeout, side, _rechunk(batches, chunk_rows),
+            client.write_message, client.read_message,
+        )
+        for table in replies:
+            # schema enforcement happens in mapInArrow against out_schema
+            if table is not None:
+                yield from table.to_batches(max_chunksize=chunk_rows)
 
     return df.mapInArrow(run_partition, out_schema)

@@ -65,7 +65,6 @@ _CHARSXP_FLAGS = 0x00040009  # CHARSXP with the reference's encoding bits
 
 NA_INT = -(2**31)
 NA_REAL_BITS = np.uint64(0x7FF00000000007A2)
-NA_REAL_BYTES = struct.pack("<Q", int(NA_REAL_BITS))
 
 # wire type tags, keyed the way callers declare columns
 RTYPE_INT = "int32"

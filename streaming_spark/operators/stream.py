@@ -39,6 +39,7 @@ from collections import deque
 from collections.abc import Callable, Iterator
 from typing import Any
 
+import numpy as np
 import pandas as pd
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, Window
@@ -88,6 +89,27 @@ def _with_provenance_schema(schema: StructType) -> StructType:
     return StructType(_PROVENANCE_FIELDS + list(schema.fields))
 
 
+def _partition_id() -> int:
+    """The running task's partition id, the reference's instance id (0
+    outside a task)."""
+    ctx = TaskContext.get()
+    return ctx.partitionId() if ctx is not None else 0
+
+
+def _with_provenance(
+    out: pd.DataFrame, instance_id: int, chunk_no: int
+) -> pd.DataFrame:
+    """``out`` with the leading ``instance_id, chunk_no, value_no``
+    coordinates of one response chunk (reference
+    FeatherInterface.cpp:96-107); ``value_no`` numbers the chunk's rows
+    from 0 (SURVEY §3.1 step 5)."""
+    out = out.copy()
+    out.insert(0, "value_no", np.arange(len(out), dtype=np.int64))
+    out.insert(0, "chunk_no", np.int64(chunk_no))
+    out.insert(0, "instance_id", np.int64(instance_id))
+    return out
+
+
 def stream(
     df: DataFrame,
     fn: Callable[..., pd.DataFrame | None],
@@ -110,7 +132,9 @@ def stream(
 
     With ``provenance=True`` the output gains leading ``instance_id,
     chunk_no, value_no`` columns mirroring the reference's output
-    coordinates (reference FeatherInterface.cpp:96-107).
+    coordinates (reference FeatherInterface.cpp:96-107): ``chunk_no``
+    counts the partition's non-empty response chunks and ``value_no``
+    restarts at 0 in each.
 
     ``chunk_rows`` is the per-call analog of the reference's
     ``chunk_size:`` keyword (reference StreamSettings.h:272): incoming
@@ -134,14 +158,12 @@ def stream(
     )
 
     def runner(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ctx = TaskContext.get()
-        instance_id = ctx.partitionId() if ctx is not None else 0
+        instance_id = _partition_id()
         side = side_bc.value if side_bc is not None else None
         chunk_no = 0
-        value_no = 0
 
         def emit(out: pd.DataFrame | None) -> Iterator[pd.DataFrame]:
-            nonlocal chunk_no, value_no
+            nonlocal chunk_no
             if out is None or len(out) == 0:
                 return
             if max_output_rows is not None and len(out) > max_output_rows:
@@ -151,12 +173,7 @@ def stream(
                     "child responses, TSVInterface.h:102)"
                 )
             if provenance:
-                out = out.copy()
-                n = len(out)
-                out.insert(0, "value_no", range(value_no, value_no + n))
-                out.insert(0, "chunk_no", chunk_no)
-                out.insert(0, "instance_id", instance_id)
-                value_no += n
+                out = _with_provenance(out, instance_id, chunk_no)
             chunk_no += 1
             yield out
 

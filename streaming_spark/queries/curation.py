@@ -287,7 +287,7 @@ def audio_frame_windows(spark, sf_dir):
 def layout_sorted_write(spark, sf_dir):
     """Write-side layout optimization end-to-end: lineitem is
     materialized as 8 parquet files range-partitioned + sorted on
-    l_orderkey (one sampled range shuffle), then read back and checked —
+    l_orderkey (exact-quantile bounds), then read back and checked —
     every file owns a DISJOINT key range (the property that lets parquet
     footer min/max stats skip whole files on selective range scans).
     The disjointness proof is computed Spark-side over the per-file

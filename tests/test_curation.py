@@ -126,6 +126,28 @@ def test_write_sorted_layout_disjoint_files(spark, tmp_path):
         assert hi1 < lo2
 
 
+def test_sorted_layout_is_deterministic(spark, tmp_path):
+    """The same input gives the same sorted-layout files: two writes in
+    one session hold the same rows per file.  Sampled range bounds
+    (``repartitionByRange``, seeded by the RDD id) moved the file
+    boundaries on every write."""
+    import pyarrow.parquet as pq
+
+    from tests.conftest import SF_SMOKE
+
+    li = spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet").select(
+        "l_orderkey", "l_quantity"
+    )
+    counts = []
+    for run in range(2):
+        path = tmp_path / f"s{run}"
+        curation.write_sorted_layout(li, str(path), "l_orderkey", n_files=8)
+        files = sorted(path.glob("part-*.parquet"))
+        counts.append([pq.ParquetFile(f).metadata.num_rows for f in files])
+    assert len(counts[0]) == 8
+    assert counts[0] == counts[1]
+
+
 def test_sample_domain_mix_exact_counts(spark, docs):
     out = curation.sample_domain_mix(
         docs, {"web": 2, "books": 1}, strata_col="source"

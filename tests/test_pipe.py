@@ -249,24 +249,61 @@ def _py_cmd(code: str) -> str:
     import base64
     import sys
 
+    from streaming_spark.session import ENGINE_ROOT
+
     b64 = base64.b64encode(code.encode()).decode()
     return (
-        f"PYTHONPATH=/root/repo {sys.executable} -uc "
+        f"PYTHONPATH={ENGINE_ROOT} {sys.executable} -uc "
         f"\"import base64; exec(base64.b64decode('{b64}'))\""
     )
 
 
-def test_pipe_arrow_chunk_count(spark):
-    """A child written against the reference's client API (map over
-    chunks) runs against pipe_arrow — per-chunk counts sum to the row
-    count (reference py_pkg/examples/0-iquery.txt pattern)."""
-    from streaming_spark.operators.pipe import pipe_arrow
+TSV_CLIENT_COUNT = (
+    "import sys\n"
+    "inp, out = sys.stdin.buffer, sys.stdout.buffer\n"
+    "while True:\n"
+    "    n = int(inp.readline())\n"
+    "    for _ in range(n):\n"
+    "        inp.readline()\n"
+    "    out.write(b'1\\n%d\\n' % n if n else b'0\\n')\n"
+    "    out.flush()\n"
+    "    if not n:\n"
+    "        break\n"
+)
 
-    df = spark.range(5000).repartition(2)
-    out = pipe_arrow(df, _py_cmd(ARROW_CLIENT_COUNT), "count BIGINT", chunk_rows=500)
-    got = out.toPandas()
-    assert got["count"].sum() == 5000
-    assert got["count"].max() <= 500
+DF_CLIENT_COUNT = (
+    "import pandas as pd\n"
+    "from streaming_spark.operators.rserial import df_child_loop\n"
+    "df_child_loop(lambda df: pd.DataFrame({'count': pd.array([len(df)], dtype='Int32')}))\n"
+)
+
+
+@pytest.mark.parametrize("pipe", ["pipe_tsv", "pipe_df", "pipe_arrow"])
+def test_pipe_arrow_chunk_count(spark, pipe):
+    """``chunk_rows`` means one thing on all three wires: every message
+    holds exactly that many rows (a partition's last may hold fewer),
+    whatever the input batches are.  1000 rows in 300-row batches with
+    ``chunk_rows=500``: a child counting each chunk sees [500, 500]."""
+    from streaming_spark.operators import pipe as pipe_mod
+
+    df = spark.range(0, 1000, 1, 1).select(F.col("id").cast("double").alias("v"))
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "300")
+    try:
+        if pipe == "pipe_tsv":
+            out = pipe_mod.pipe_tsv(df, _py_cmd(TSV_CLIENT_COUNT), chunk_rows=500)
+            counts = [int(r.response) for r in out.collect() if r.response]
+        else:
+            child, schema = {
+                "pipe_df": (DF_CLIENT_COUNT, "count INT"),
+                "pipe_arrow": (ARROW_CLIENT_COUNT, "count BIGINT"),
+            }[pipe]
+            out = getattr(pipe_mod, pipe)(df, _py_cmd(child), schema, chunk_rows=500)
+            counts = [r["count"] for r in out.collect()]
+    finally:
+        spark.conf.set(key, old)
+    assert counts == [500, 500]
 
 
 def test_pipe_arrow_map_finalize(spark):
@@ -557,6 +594,55 @@ def test_pipe_df_side_input(spark):
     out = pipe_df(df, _py_cmd(child), "i INT, label STRING", side_input=side)
     got = {(r.i, r.label) for r in out.collect()}
     assert got == {(0, "zero"), (1, "one"), (2, "two"), (3, "?")}
+
+
+SIDE_CHILDREN = {
+    "pipe_arrow": (
+        "import pandas as pd\n"
+        "import streaming_spark.client as scidbstrm\n"
+        "side = scidbstrm.read()\n"
+        "scidbstrm.write(None)\n"
+        "state = {'rows': 0}\n"
+        "def on_chunk(df):\n"
+        "    state['rows'] += len(df)\n"
+        "scidbstrm.map(on_chunk, lambda: pd.DataFrame("
+        "{'side_rows': [len(side)], 'data_rows': [state['rows']]}))\n",
+        "side_rows BIGINT, data_rows BIGINT",
+    ),
+    "pipe_df": (
+        "import pandas as pd\n"
+        "from streaming_spark.operators.rserial import df_child_loop\n"
+        "state = {'side': 0, 'rows': 0}\n"
+        "def on_side(df):\n"
+        "    state['side'] = len(df)\n"
+        "def on_chunk(df):\n"
+        "    state['rows'] += len(df)\n"
+        "def finalize():\n"
+        "    return pd.DataFrame({'side_rows': pd.array([state['side']], dtype='Int32'),\n"
+        "                         'data_rows': pd.array([state['rows']], dtype='Int32')})\n"
+        "df_child_loop(on_chunk, finalize, n_side=1, on_side=on_side)\n",
+        "side_rows INT, data_rows INT",
+    ),
+}
+
+
+@pytest.mark.parametrize("pipe", ["pipe_df", "pipe_arrow"])
+def test_pipe_side_input_larger_than_chunk(spark, pipe):
+    """A side input longer than ``chunk_rows`` still goes down as ONE
+    message answered by one reply, so a map+finalize child gets the
+    whole side table first and its finalize row comes back (3 side rows,
+    ``chunk_rows=2``, 10 data rows)."""
+    import pandas as pd2
+
+    from streaming_spark.operators import pipe as pipe_mod
+
+    child, schema = SIDE_CHILDREN[pipe]
+    side = pd2.DataFrame({"k": pd2.array([1, 2, 3], dtype="Int32")})
+    df = spark.range(1, 11).select(F.col("id").cast("double").alias("v")).coalesce(1)
+    out = getattr(pipe_mod, pipe)(
+        df, _py_cmd(child), schema, side_input=side, chunk_rows=2
+    )
+    assert [tuple(r) for r in out.collect()] == [(3, 10)]
 
 
 def test_pipe_df_ships_program(spark):

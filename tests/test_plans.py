@@ -672,3 +672,37 @@ def test_quantizer_steps_have_one_owner():
         assert len(found[owner]) == 1, (owner, found[owner])
         assert sites == found[owner], f"{owner}'s step also at lines {sites}"
 
+
+
+def test_pipes_share_one_arrow_path():
+    """The three external pipes run on one Arrow path: ``pipe.py`` never
+    calls ``mapInPandas``; the Arrow wire's ``"<Q"`` size framing lives
+    only in ``client.py``; and a child is started in two places only,
+    the request/response loop ``_exchange`` (pipe_df, pipe_arrow) and
+    ``pipe_tsv``'s send-all-then-read runner.  A second copy of the loop
+    would start a third."""
+    root = pathlib.Path(streaming_spark.__file__).parent
+    pipe = root / "operators/pipe.py"
+    tree = ast.parse(pipe.read_text(), filename=str(pipe))
+    in_pandas = [
+        n.lineno
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Attribute) and n.attr == "mapInPandas"
+    ]
+    assert in_pandas == [], f"mapInPandas in pipe.py at lines {in_pandas}"
+    framing = [
+        str(path.relative_to(root))
+        for path in sorted(root.rglob("*.py"))
+        if '"<Q"' in path.read_text() and path.name != "client.py"
+    ]
+    assert framing == [], f"Arrow size framing outside client.py: {framing}"
+    starts = sorted(
+        fn.name
+        for fn in tree.body
+        if isinstance(fn, ast.FunctionDef)
+        for n in ast.walk(fn)
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Name)
+        and n.func.id == "_Child"
+    )
+    assert starts == ["_exchange", "pipe_tsv"], starts

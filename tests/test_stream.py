@@ -94,11 +94,14 @@ def test_provenance_coordinates(spark):
         ).toPandas()
         assert set(out.columns) == {"instance_id", "chunk_no", "value_no", "n"}
         assert set(out["instance_id"]) == {0, 1}
-        # chunk_no counts up per partition; value_no counts emitted rows
+        # chunk_no counts up per partition; value_no restarts at 0 in
+        # each response chunk, as pipe_df numbers it, so every one-row
+        # chunk reads 0
         per_part = out.groupby("instance_id")["chunk_no"].apply(list)
         for chunks in per_part:
             assert chunks == sorted(chunks)
         assert out["n"].sum() == 200
+        assert (out["value_no"] == 0).all(), out["value_no"].tolist()
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
 
