@@ -64,22 +64,25 @@ its survivor landing.  So:
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from streaming_spark.io import local_frame
 from streaming_spark.operators.index_commit import (
     APPEND_PENDING,
+    PARAMS,
+    TAKEDOWN_PENDING,
+    clear_marker,
     partition_values,
+    read_marker,
     read_table_or_empty,
+    recorded_ids,
     write_marker,
 )
 from streaming_spark.operators.digest_index import (
-    _load_params as _dig_params,
+    DIGEST_INDEX,
     digest_index_append,
     digest_index_build,
 )
@@ -98,19 +101,30 @@ from streaming_spark.operators.text import (
 _LINES, _HASHES, _ND = "lines_idx", "hashes_idx", "nd_idx"
 _EXACT_SINK, _CONTAM_SINK = "exact_ids", "contam_ids"
 _META, _PENDING = "_meta.json", ".batch_pending"
-_PARAMS = "_params.json"
 
 
 def _last_batch_id(work_dir: str) -> int:
-    path = os.path.join(work_dir, _META)
-    if not os.path.isfile(path):
-        return -1
-    with open(path, encoding="utf-8") as f:
-        return int(json.load(f).get("last_batch_id", -1))
+    meta = read_marker(os.path.join(work_dir, _META)) or {}
+    return int(meta.get("last_batch_id", -1))
 
 
-def _write_json_atomic(path: str, payload: dict) -> None:
-    write_marker(path, payload)
+def _built(idx: str) -> bool:
+    return os.path.isfile(os.path.join(idx, PARAMS))
+
+
+def _refuse_pending(work_dir: str, what: str) -> str:
+    """Refuse a work dir whose ``.batch_pending`` marker says a batch
+    crashed mid-ingest; returns the marker's path."""
+    pending = os.path.join(work_dir, _PENDING)
+    pb = read_marker(pending)
+    if pb is not None:
+        raise RuntimeError(
+            f"{what}: {pending!r} exists — batch {pb.get('batch_id')} "
+            "crashed mid-ingest (its index appends may be partially "
+            "landed).  Recover first with curation_recover_batch(spark, "
+            "work_dir), then re-ingest."
+        )
+    return pending
 
 
 def default_quality_filter(docs: DataFrame, id_col: str = "doc_id", *,
@@ -182,16 +196,7 @@ def curation_ingest_batch(
     from streaming_spark.queries.curation import decontaminate_against
 
     os.makedirs(work_dir, exist_ok=True)
-    pending = os.path.join(work_dir, _PENDING)
-    if os.path.isfile(pending):
-        with open(pending, encoding="utf-8") as f:
-            pb = json.load(f)
-        raise RuntimeError(
-            f"curation_ingest_batch: {pending!r} exists — batch "
-            f"{pb.get('batch_id')} crashed mid-ingest (its index appends "
-            "may be partially landed).  Recover first with "
-            "curation_recover_batch(spark, work_dir), then re-ingest."
-        )
+    pending = _refuse_pending(work_dir, "curation_ingest_batch")
     if batch_id <= _last_batch_id(work_dir):
         # a replay of a COMPLETED batch: the index appends already
         # landed, so re-running them would double-land rows and flip
@@ -209,15 +214,10 @@ def curation_ingest_batch(
         n_in = docs.count()
     # the pending marker records the batch's ids (bounded) so the
     # composed recovery can tombstone them from every index
-    id_rows = (
-        batch_docs.select(id_col).distinct().limit(100_001).collect()
-    )
-    batch_ids = (
-        sorted(r[0] for r in id_rows) if len(id_rows) <= 100_000 else None
-    )
-    _write_json_atomic(
-        pending, {"batch_id": int(batch_id), "ids": batch_ids}
-    )
+    write_marker(pending, {
+        "batch_id": int(batch_id),
+        "ids": recorded_ids(batch_docs.select(id_col)),
+    })
     filtered = (
         quality_filter(docs, id_col=id_col, text_col=text_col)
         if quality_filter is not None
@@ -230,7 +230,7 @@ def curation_ingest_batch(
     lines_idx = os.path.join(work_dir, _LINES)
     dig = line_digests(filtered, text_col, id_col)
     dkw = dict(digest_kwargs or {})
-    if not os.path.isfile(os.path.join(lines_idx, "_params.json")):
+    if not _built(lines_idx):
         dec_l = digest_index_build(
             lines_idx, dig, digest_col="h",
             order_cols=(id_col, "line_no"), **dkw,
@@ -248,7 +248,7 @@ def curation_ingest_batch(
     # exact dedup on the cleaned digest: same split of the keep-min-id
     # window
     hashes_idx = os.path.join(work_dir, _HASHES)
-    if not os.path.isfile(os.path.join(hashes_idx, "_params.json")):
+    if not _built(hashes_idx):
         dec_e = digest_index_build(
             hashes_idx, cleaned, digest_col="cleaned_hash",
             order_cols=(id_col,), **dkw,
@@ -267,7 +267,7 @@ def curation_ingest_batch(
     # near-dup: the staged index's delta probe (signatures computed
     # once, banded join delta-vs-index + delta-vs-delta only)
     nd_idx = os.path.join(work_dir, _ND)
-    if not os.path.isfile(os.path.join(nd_idx, "_params.json")):
+    if not _built(nd_idx):
         neardup_index_build(
             nd_idx, exact_batch, text_col=text_col, id_col=id_col,
             **(neardup_kwargs or {}),
@@ -312,10 +312,10 @@ def curation_ingest_batch(
     # completed batch would destroy legitimate rows the skip rule never
     # re-ingests); the reverse order would let a replay re-run a
     # completed batch
-    _write_json_atomic(
+    write_marker(
         os.path.join(work_dir, _META), {"last_batch_id": int(batch_id)}
     )
-    os.remove(pending)
+    clear_marker(pending)
     if stats_out is not None:
         stats_out.update(
             skipped=False,
@@ -356,13 +356,12 @@ def curation_recover_batch(spark, work_dir: str,
     )
 
     pending = os.path.join(work_dir, _PENDING)
-    if not os.path.isfile(pending):
+    pb = read_marker(pending)
+    if pb is None:
         raise ValueError(
             f"curation_recover_batch: no {_PENDING} marker under "
             f"{work_dir!r} — nothing to recover."
         )
-    with open(pending, encoding="utf-8") as f:
-        pb = json.load(f)
     batch_id, ids = int(pb["batch_id"]), pb.get("ids")
     completed = batch_id <= _last_batch_id(work_dir)
     if pb.get("mode") == "backfill" and not completed:
@@ -394,7 +393,7 @@ def curation_recover_batch(spark, work_dir: str,
             (_ND, neardup_index_tombstone, neardup_index_compact),
         ):
             idx = os.path.join(work_dir, sub)
-            if os.path.isfile(os.path.join(idx, "_params.json")):
+            if _built(idx):
                 tomb(spark, idx, ids)
                 compact(spark, idx)
         for sink in (_EXACT_SINK, _CONTAM_SINK):
@@ -402,9 +401,35 @@ def curation_recover_batch(spark, work_dir: str,
                 os.path.join(work_dir, sink, f"batch={batch_id}"),
                 ignore_errors=True,
             )
-    os.remove(pending)
+    clear_marker(pending)
     if stats_out is not None:
         stats_out.update(batch_id=batch_id, completed=completed)
+
+
+def _crashed_append_ids(idx: str, expected_ids) -> list | None:
+    """The ids a crashed append recorded in ``idx``'s own
+    ``.append_pending`` marker (None when there is none) — refused when
+    they were not recorded or fall outside ``expected_ids``, the
+    containment guard for a FRESH backfill: such a marker is a
+    different crashed batch, which curation_recover_batch owns.  A
+    RESUME passes None (its own ``.batch_pending`` marker already
+    proves no other batch can have been mid-flight, so any sub-marker
+    is its own)."""
+    marker = os.path.join(idx, APPEND_PENDING)
+    pending = read_marker(marker)
+    if pending is None:
+        return None
+    ids = pending.get("ids")
+    if ids is None or (
+        expected_ids is not None and not set(ids) <= expected_ids
+    ):
+        raise RuntimeError(
+            f"curation_backfill: {marker!r} records a crashed append "
+            "outside this backfill's id set — recover it first "
+            "(curation_recover_batch for a crashed ordered ingest, "
+            "or the index docstring's manual recovery)."
+        )
+    return ids
 
 
 def _heal_digest_index(spark, idx: str, expected_ids) -> None:
@@ -415,30 +440,14 @@ def _heal_digest_index(spark, idx: str, expected_ids) -> None:
     here so the resume can proceed; any takedown a previous attempt
     issued but did not fold is compacted too (the re-append's
     tombstone-conflict gate requires an empty ledger, and ``_live_occ``
-    reads must not exclude ids the resume is about to re-key).
-    ``expected_ids`` is the containment guard for a FRESH backfill — a
-    marker outside it is a different crashed batch, which
-    curation_recover_batch owns; a RESUME passes None (its own
-    ``.batch_pending`` marker already proves no other batch can have
-    been mid-flight, so any sub-marker is its own)."""
+    reads must not exclude ids the resume is about to re-key)."""
     from streaming_spark.operators.digest_index import (
         digest_index_compact,
         digest_index_tombstone,
     )
 
-    marker = os.path.join(idx, APPEND_PENDING)
-    if os.path.isfile(marker):
-        with open(marker, encoding="utf-8") as f:
-            ids = json.load(f).get("ids")
-        if ids is None or (
-            expected_ids is not None and not set(ids) <= expected_ids
-        ):
-            raise RuntimeError(
-                f"curation_backfill: {marker!r} records a crashed append "
-                "outside this backfill's id set — recover it first "
-                "(curation_recover_batch for a crashed ordered ingest, "
-                "or the index docstring's manual recovery)."
-            )
+    ids = _crashed_append_ids(idx, expected_ids)
+    if ids is not None:
         digest_index_tombstone(spark, idx, ids)
         digest_index_compact(spark, idx)
     elif os.path.isdir(os.path.join(idx, "doc_tombstones")):
@@ -457,24 +466,11 @@ def _heal_neardup_index(spark, idx: str, expected_ids) -> None:
         neardup_index_tombstone,
     )
 
-    takedown = os.path.join(idx, ".takedown_pending")
-    if os.path.isfile(takedown):
-        with open(takedown, encoding="utf-8") as f:
-            ids = json.load(f).get("ids", [])
-        neardup_index_tombstone(spark, idx, ids)  # same-ids resume
-    append = os.path.join(idx, APPEND_PENDING)
-    if os.path.isfile(append):
-        with open(append, encoding="utf-8") as f:
-            ids = json.load(f).get("ids")
-        if ids is None or (
-            expected_ids is not None and not set(ids) <= expected_ids
-        ):
-            raise RuntimeError(
-                f"curation_backfill: {append!r} records a crashed append "
-                "outside this backfill's id set — recover it first "
-                "(curation_recover_batch for a crashed ordered ingest, "
-                "or the index docstring's manual recovery)."
-            )
+    takedown = read_marker(os.path.join(idx, TAKEDOWN_PENDING))
+    if takedown is not None:  # same-ids resume
+        neardup_index_tombstone(spark, idx, takedown.get("ids", []))
+    ids = _crashed_append_ids(idx, expected_ids)
+    if ids is not None:
         neardup_index_tombstone(spark, idx, ids)  # covering takedown
     if os.path.isdir(os.path.join(idx, "doc_tombstones")) or os.path.isdir(
         os.path.join(idx, "pair_tombstones")
@@ -596,7 +592,7 @@ def curation_backfill(
     lines_idx = os.path.join(work_dir, _LINES)
     hashes_idx = os.path.join(work_dir, _HASHES)
     nd_idx = os.path.join(work_dir, _ND)
-    if not os.path.isfile(os.path.join(hashes_idx, _PARAMS)):
+    if not _built(hashes_idx):
         raise ValueError(
             f"curation_backfill: no batches ingested under {work_dir!r} "
             "— a first batch is an ordered ingest (curation_ingest_batch)."
@@ -614,19 +610,18 @@ def curation_backfill(
         if quality_filter is not None
         else late_docs
     ).select(id_col, text_col).localCheckpoint(eager=True)
-    late_ids_rows = late.select(id_col).distinct().limit(100_001).collect()
-    if len(late_ids_rows) > 100_000:
+    late_ids = recorded_ids(late.select(id_col))
+    if late_ids is None:
         raise ValueError(
             "curation_backfill: the late batch exceeds the 100k-id "
             "marker bound — split it into smaller backfills."
         )
-    late_id_set = {r[0] for r in late_ids_rows}
+    late_id_set = set(late_ids)
 
     pending = os.path.join(work_dir, _PENDING)
     resuming = False
-    if os.path.isfile(pending):
-        with open(pending, encoding="utf-8") as f:
-            pb = json.load(f)
+    pb = read_marker(pending)
+    if pb is not None:
         if (
             pb.get("mode") == "backfill"
             and int(pb.get("batch_id", -1)) == int(batch_id)
@@ -647,7 +642,7 @@ def curation_backfill(
     # caller error)
     late_ids_df = late.select(id_col).distinct().localCheckpoint(eager=True)
     if not resuming:
-        lp = DI._load_params(lines_idx)
+        lp = DIGEST_INDEX.load_params(lines_idx)
         present = (
             read_table_or_empty(
                 spark, os.path.join(lines_idx, "occ"), DI._occ_schema(lp)
@@ -662,13 +657,9 @@ def curation_backfill(
                 "corpus-wide; a correction is takedown + backfill under "
                 "fresh ids."
             )
-        _write_json_atomic(
+        write_marker(
             pending,
-            {
-                "batch_id": int(batch_id),
-                "mode": "backfill",
-                "ids": sorted(late_id_set),
-            },
+            {"batch_id": int(batch_id), "mode": "backfill", "ids": late_ids},
         )
 
     # ---- step 1: land the late docs' line digests (order-independent
@@ -676,7 +667,7 @@ def curation_backfill(
     # append is atomic-or-marker by the index's own contract) — heal
     # any crashed sub-append first, then diff presence.
     _heal_digest_index(spark, lines_idx, None if resuming else late_id_set)
-    lp = DI._load_params(lines_idx)
+    lp = DIGEST_INDEX.load_params(lines_idx)
     dig_late = line_digests(late, text_col, id_col).localCheckpoint(
         eager=True
     )
@@ -777,7 +768,7 @@ def curation_backfill(
     _heal_digest_index(
         spark, hashes_idx, None if resuming else (late_id_set | aff_set)
     )
-    hp = DI._load_params(hashes_idx)
+    hp = DIGEST_INDEX.load_params(hashes_idx)
     stored = (
         DI._live_occ(spark, hashes_idx, hp)
         .join(F.broadcast(affected_ids), id_col, "left_semi")
@@ -879,10 +870,10 @@ def curation_backfill(
     shutil.rmtree(exact_sink, ignore_errors=True)
     _land_ids(new_keep, batch_id, exact_sink)
 
-    _write_json_atomic(
+    write_marker(
         os.path.join(work_dir, _META), {"last_batch_id": int(batch_id)}
     )
-    os.remove(pending)
+    clear_marker(pending)
     if stats_out is not None:
         stats_out.update(
             skipped=False,
@@ -910,43 +901,28 @@ def curation_survivors(spark, work_dir: str) -> DataFrame:
     # a crashed mid-ingest work dir must refuse loudly, not fold a
     # partial state into a silently smaller survivor set (the or-empty
     # sink guard below would otherwise mask exactly that)
-    pending = os.path.join(work_dir, _PENDING)
-    if os.path.isfile(pending):
-        with open(pending, encoding="utf-8") as f:
-            pb = json.load(f)
-        raise RuntimeError(
-            f"curation_survivors: {pending!r} exists — batch "
-            f"{pb.get('batch_id')} crashed mid-ingest.  Recover first "
-            "with curation_recover_batch(spark, work_dir)."
-        )
+    _refuse_pending(work_dir, "curation_survivors")
 
     # an empty work dir would otherwise surface digest_index's internal
     # "not a digest index" error, misdirecting the caller toward
     # digest_index_build when the fix is ingesting a batch (ADVICE r13)
     hashes_idx = os.path.join(work_dir, _HASHES)
-    if not os.path.isfile(os.path.join(hashes_idx, _PARAMS)):
+    if not _built(hashes_idx):
         raise ValueError(
             f"curation_survivors: no batches ingested under {work_dir!r} "
             "— run curation_ingest_batch first."
         )
-    p = _dig_params(hashes_idx)
+    p = DIGEST_INDEX.load_params(hashes_idx)
     id_col, id_type = p["order_cols"][0], p["order_types"][0]
 
     def sink_ids(name: str) -> DataFrame:
         # a sink whose every batch landed zero rows is a DIRECTORY with
-        # no files — spark.read.parquet cannot infer a schema from it
-        # (empirically: AnalysisException UNABLE_TO_INFER_SCHEMA), so
-        # the READ goes through an or-empty guard; the column selection
-        # stays OUTSIDE the try so schema drift surfaces loudly instead
-        # of being swallowed into an empty frame
-        path = os.path.join(work_dir, name)
-        from pyspark.errors import AnalysisException
-
-        try:
-            df = spark.read.parquet(path)
-        except AnalysisException:
-            return local_frame(spark, [], f"{id_col} {id_type}")
-        return df.select(id_col)
+        # no files, which parquet cannot infer a schema from: the READ
+        # goes through the or-empty guard, the column selection stays
+        # outside it so schema drift surfaces loudly
+        return read_table_or_empty(
+            spark, os.path.join(work_dir, name), f"{id_col} {id_type}"
+        ).select(id_col)
 
     exact_ids = sink_ids(_EXACT_SINK)
     pairs = neardup_index_pairs(spark, os.path.join(work_dir, _ND))

@@ -58,71 +58,30 @@ for the near-dup half (VERDICT r12 #1).
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from streaming_spark.operators.index_commit import (
-    APPEND_PENDING,
     Compaction,
-    admit_recovery_takedown,
+    IndexFamily,
+    Takedown,
+    bucket_expr,
     clear_marker,
-    ledger_ids,
+    doc_tombs,
     partition_values,
     read_table_or_empty,
-    refuse_parked_compact,
-    refuse_pending_append,
-    write_marker,
 )
 
-_PARAMS_NAME = "_params.json"
-_FORMAT = "streaming-spark-digestidx"
-
-
-# ---------------------------------------------------------------- params
-
-
-def _params_path(index_dir: str) -> str:
-    return os.path.join(index_dir, _PARAMS_NAME)
-
-
-def _load_params(index_dir: str) -> dict:
-    path = _params_path(index_dir)
-    if not os.path.isfile(path):
-        raise ValueError(
-            f"{index_dir!r} is not a digest index (no {_PARAMS_NAME}) — "
-            "create one with digest_index_build first."
-        )
-    with open(path, encoding="utf-8") as f:
-        p = json.load(f)
-    if p.get("format") != _FORMAT or p.get("version") != 1:
-        raise ValueError(f"unrecognized digest index format at {path!r}")
-    return p
-
-
-def _check_siblings(index_dir: str, what: str) -> None:
-    """Refuse an index whose on-disk state says a previous operation
-    crashed mid-mutation — same recover-first posture as the near-dup
-    and ANN index families."""
-    refuse_parked_compact(index_dir, what, "digest_index")
-    refuse_pending_append(
-        index_dir, what, "digest_index",
-        "occurrence rows may be partially live, so owners and decisions "
-        "could silently diverge from the batch arm",
-    )
-
-
-# ------------------------------------------------------------- sub-tables
-
-
-def _pb_expr(digest_col, n_prefixes: int):
-    return F.pmod(F.xxhash64(digest_col), F.lit(n_prefixes)).cast("int")
-
-
-def _ib_expr(id_col, n_id_buckets: int):
-    return F.pmod(F.xxhash64(id_col), F.lit(n_id_buckets)).cast("int")
+DIGEST_INDEX = IndexFamily(
+    "digest_index", "digest index", "streaming-spark-digestidx",
+    append_crash="occurrence rows may be partially live, so owners and "
+    "decisions could silently diverge from the batch arm",
+)
+_load_params = DIGEST_INDEX.load_params
+# the digest-prefix (pb=) and id-bucket (ib=) partition expressions
+_pb_expr = _ib_expr = bucket_expr
 
 
 def _occ_schema(p: dict) -> str:
@@ -132,11 +91,9 @@ def _occ_schema(p: dict) -> str:
 
 
 def _doc_tombs(spark, index_dir: str, p: dict) -> DataFrame:
-    return read_table_or_empty(
-        spark,
-        os.path.join(index_dir, "doc_tombstones"),
-        f"{p['order_cols'][0]} {p['order_types'][0]}",
-    ).distinct()
+    return doc_tombs(
+        spark, index_dir, f"{p['order_cols'][0]} {p['order_types'][0]}"
+    )
 
 
 def _live_occ(spark, index_dir: str, p: dict, pbs=None) -> DataFrame:
@@ -172,27 +129,16 @@ def digest_index_build(
     keep-first ordering (``("doc_id",)`` for whole-doc exact dedup,
     ``("doc_id", "line_no")`` for line occurrences); takedowns key on
     its FIRST column.  Refuses an existing index."""
-    if os.path.isfile(_params_path(index_dir)):
-        raise ValueError(
-            f"digest index already exists at {index_dir!r} — append to "
-            "it with digest_index_append, or choose a fresh directory."
-        )
     order_cols = list(order_cols)
-    params = {
-        "format": _FORMAT,
-        "version": 1,
-        "digest_col": digest_col,
-        "digest_type": df.schema[digest_col].dataType.simpleString(),
-        "order_cols": order_cols,
-        "order_types": [
-            df.schema[c].dataType.simpleString() for c in order_cols
-        ],
-        "n_prefixes": n_prefixes,
-        "n_id_buckets": n_id_buckets,
-    }
-    os.makedirs(index_dir, exist_ok=True)
-    with open(_params_path(index_dir), "w", encoding="utf-8") as f:
-        json.dump(params, f)
+    DIGEST_INDEX.create(
+        index_dir,
+        digest_col=digest_col,
+        digest_type=df.schema[digest_col].dataType.simpleString(),
+        order_cols=order_cols,
+        order_types=[df.schema[c].dataType.simpleString() for c in order_cols],
+        n_prefixes=n_prefixes,
+        n_id_buckets=n_id_buckets,
+    )
     return digest_index_append(index_dir, df, stats_out=stats_out)
 
 
@@ -234,44 +180,14 @@ def digest_index_append(
 
     ``stats_out`` keys: rows_appended, digests_probed, digests_seen,
     new_digests, prefixes_probed, dup_rows."""
-    p = _load_params(index_dir)
-    _check_siblings(index_dir, "digest_index_append")
+    p = DIGEST_INDEX.checked_params(index_dir, "digest_index_append")
     spark = delta.sparkSession
     dcol, ocols = p["digest_col"], p["order_cols"]
-    # loud type gate: the partition exprs hash the VALUES, so a delta
-    # whose column types drift from the frozen params (int vs bigint,
-    # string keys) would land under — and probe — the WRONG partitions
-    # silently; refuse instead (same frozen-params ethos as the ANN
-    # fingerprint binding)
-    for c, t in zip(
-        [dcol, *ocols], [p["digest_type"], *p["order_types"]]
-    ):
-        actual = delta.schema[c].dataType.simpleString()
-        if actual != t:
-            raise ValueError(
-                f"digest_index_append: column {c!r} is {actual}, index "
-                f"froze {t} — cast the delta (a mixed-type index would "
-                "hash to the wrong partitions)."
-            )
-
+    DIGEST_INDEX.gate_types(delta, dict(
+        zip([dcol, *ocols], [p["digest_type"], *p["order_types"]])
+    ))
     d = delta.select(dcol, *ocols).localCheckpoint(eager=True)
     n_delta = d.count()
-    # refuse ids still live in the tombstone ledger: re-ingesting a
-    # crashed batch BEFORE the compact step of the recovery sequence
-    # would land rows that merge-on-read immediately hides (decisions
-    # say kept, owners serve nothing) and that the eventual compact
-    # folds away — data loss, silently.  The ledger is small by
-    # contract, so this is one broadcast semi-join probe.
-    tombs = _doc_tombs(spark, index_dir, p)
-    if not d.join(
-        F.broadcast(tombs), p["order_cols"][0], "left_semi"
-    ).isEmpty():
-        raise ValueError(
-            "digest_index_append: the delta contains ids that are "
-            "still in the tombstone ledger — run digest_index_compact "
-            "first (re-ingesting before the fold would land rows the "
-            "compact then removes)."
-        )
     if n_delta == 0:
         if stats_out is not None:
             stats_out.update(
@@ -279,33 +195,13 @@ def digest_index_append(
                 new_digests=0, prefixes_probed=0, dup_rows=0,
             )
         return d.withColumn("is_dup", F.lit(False))
-    # enforce the 'delta ids are NEW' contract (ADVICE r13, parity with
-    # neardup_index_append): a replay of a committed batch would
-    # double-land occurrence rows and flip its decisions to is_dup —
-    # at-least-once ingest makes this reachable, so refuse.  The probe
-    # reads the occ table pruned to the delta ids' ib= partitions.
-    id0 = ocols[0]
     # d is already checkpointed, so the distinct is cheap to recompute —
     # no extra checkpoint/count jobs (gate-cost: every append runs this)
-    delta_ids = d.select(id0).distinct()
-    ibs = partition_values(delta_ids, _ib_expr(F.col(id0), p["n_id_buckets"]))
-    mb0 = F.broadcast if n_delta <= 50_000 else (lambda x: x)
-    if not (
-        read_table_or_empty(
-            spark, os.path.join(index_dir, "occ"), _occ_schema(p)
-        )
-        .filter(F.col("ib").isin(ibs))
-        .select(id0)
-        .join(mb0(delta_ids), id0, "left_semi")
-        .isEmpty()
-    ):
-        raise ValueError(
-            "digest_index_append: the delta contains ids that are "
-            "already indexed — delta ids must be NEW (a replayed batch "
-            "would double-land occurrence rows and flip its decisions "
-            "to is_dup); an upsert is digest_index_tombstone + compact "
-            "+ re-append under the same ids."
-        )
+    DIGEST_INDEX.refuse_known_ids(
+        index_dir, d.select(ocols[0]).distinct(), n_delta, "occ",
+        _occ_schema(p), "ib", p["n_id_buckets"],
+        "double-land occurrence rows and flip its decisions to is_dup",
+    )
 
     batch_digests = (
         d.select(dcol)
@@ -346,15 +242,8 @@ def digest_index_append(
     # pending marker BEFORE the landing (same posture and recovery
     # contract as neardup_index_append's).  The recording bound is on
     # DISTINCT order ids, not occurrence rows: the line family lands
-    # many rows per doc, and the recovery tombstone needs the doc ids
-    # (limit+1 keeps the collect bounded without a separate count job).
-    pending = os.path.join(index_dir, APPEND_PENDING)
-    id_rows = d.select(ocols[0]).distinct().limit(100_001).collect()
-    batch_ids = (
-        sorted(r[0] for r in id_rows) if len(id_rows) <= 100_000 else None
-    )
-    write_marker(pending, {"ids": batch_ids, "n": n_delta})
-
+    # many rows per doc, and the recovery tombstone needs the doc ids.
+    pending = DIGEST_INDEX.begin_append(index_dir, d.select(ocols[0]), n_delta)
     d.withColumn("pb", _pb_expr(F.col(dcol), p["n_prefixes"])).withColumn(
         "ib", _ib_expr(F.col(ocols[0]), p["n_id_buckets"])
     ).repartition("pb", "ib").write.mode("append").partitionBy(
@@ -393,21 +282,14 @@ def digest_index_tombstone(
     Doubles as the crashed-append recovery entry point: a takedown
     covering ALL of a pending append's recorded ids proceeds and clears
     the append-pending marker."""
-    p = _load_params(index_dir)
-    refuse_parked_compact(index_dir, "digest_index_tombstone", "digest_index")
-    tomb = ledger_ids(
-        spark, ids, p["order_cols"][0], p["order_types"][0]
-    ).localCheckpoint(eager=True)
-    id_list = sorted(r[0] for r in tomb.collect())  # ledger-small
-    recovering = admit_recovery_takedown(index_dir, "digest_index", id_list)
-
-    tomb.coalesce(1).write.mode("append").parquet(
-        os.path.join(index_dir, "doc_tombstones")
+    p = DIGEST_INDEX.checked_params(
+        index_dir, "digest_index_tombstone", takedown=True
     )
-    if recovering:
-        clear_marker(recovering)  # crashed-append recovery complete
+    t = Takedown(DIGEST_INDEX, spark, index_dir, ids, p["order_cols"][0],
+                 p["order_types"][0])
+    t.land()
     if stats_out is not None:
-        stats_out.update(tombstoned=len(id_list))
+        stats_out.update(tombstoned=len(t.ids))
 
 
 def digest_index_compact(spark, index_dir: str) -> dict:
@@ -423,8 +305,7 @@ def digest_index_compact(spark, index_dir: str) -> dict:
     excludes the folded rows).
 
     Returns stats: occ_rows_removed, parts_rewritten."""
-    p = _load_params(index_dir)
-    _check_siblings(index_dir, "digest_index_compact")
+    p = DIGEST_INDEX.checked_params(index_dir, "digest_index_compact")
     doc_t = _doc_tombs(spark, index_dir, p).localCheckpoint(eager=True)
     stats = {"occ_rows_removed": 0, "parts_rewritten": 0}
     id0 = p["order_cols"][0]
@@ -464,8 +345,7 @@ def digest_index_owners(spark, index_dir: str) -> DataFrame:
     tests/test_digest_index.py).  O(index) — the serve view for audits
     and backfills; per-batch ingest never needs it (append's pruned
     probe answers membership)."""
-    p = _load_params(index_dir)
-    _check_siblings(index_dir, "digest_index_owners")
+    p = DIGEST_INDEX.checked_params(index_dir, "digest_index_owners")
     dcol, ocols = p["digest_col"], p["order_cols"]
     live = _live_occ(spark, index_dir, p)
     return (

@@ -29,14 +29,26 @@ already (VERDICT r13 #4 asked for this seam).  Three commit primitives:
   operation refuses that state.  :func:`staged_swap` is the whole
   move around it: stage into the sibling, drop it on failure, swap.
 
-The moves built on them: victim-partition compaction
+The moves built on them, once for every family (:class:`IndexFamily`
+declares what differs per family): the ``_params.json`` file
+(refuse-existing at build, atomic write, format/version check on load);
+the crash-state refusals — compaction park (:func:`refuse_parked_compact`),
+``.takedown_pending`` and ``.append_pending`` markers, the
+whole-directory swap window (:func:`refuse_swapped_out`); the ingest
+guards — frozen-type gate, tombstone-ledger and "delta ids must be NEW"
+refusals, the ``.append_pending`` write with its bounded id record
+(:func:`recorded_ids`); the ``pmod(xxhash64(col), n)`` bucket expression
+(:func:`bucket_expr`); the doc-tombstone ledger — merge-on-read reader
+(:func:`doc_tombs`) and takedown landing (:class:`Takedown`: id
+normalisation by :func:`ledger_ids`, the crashed-append gate, the
+markers cleared once it lands); the
+swap recovery (:func:`recover_swap`); and victim-partition compaction
 (:class:`Compaction` — stage the affected partitions minus the ledger
 victims under ``.compact``, swap them in through a ``.compact_old``
-park, rows removed observed on the write), the crash gates
-(:func:`refuse_parked_compact`, :func:`refuse_pending_append`,
-:func:`admit_recovery_takedown`), takedown id normalisation
-(:func:`ledger_ids`) and the victims' partition-value collect
-(:func:`partition_values`).
+park, rows removed observed on the write) with the victims'
+partition-value collect (:func:`partition_values`).  A family keeps
+only what differs: its partition expressions, schemas, stats keys,
+error wording and algorithms.
 
 The local-filesystem implementation below is the default and the only
 one this repository ships.  **Object-store contract** for a deployment
@@ -72,6 +84,12 @@ from pyspark.sql import functions as F
 from streaming_spark.io import local_frame
 
 APPEND_PENDING = ".append_pending"
+TAKEDOWN_PENDING = ".takedown_pending"
+PARAMS = "_params.json"
+DOC_TOMBSTONES = "doc_tombstones"
+# a crash marker records a batch's ids only up to this many: the marker
+# stays small, and a larger batch is recovered by hand
+MAX_RECORDED_IDS = 100_000
 
 
 def write_marker(path: str, payload: dict) -> None:
@@ -94,6 +112,32 @@ def read_marker(path: str) -> dict | None:
 
 def clear_marker(path: str) -> None:
     os.remove(path)
+
+
+def recorded_ids(ids: DataFrame, n: int | None = None) -> list | None:
+    """The sorted distinct values of the one-column ``ids`` for a crash
+    marker, or None when there are more than :data:`MAX_RECORDED_IDS`.
+    ``n`` is the row count of an ``ids`` whose rows are already
+    distinct: the bound is then checked without a job, and the collect
+    runs only under it; otherwise a distinct collect limited to one
+    past the bound decides."""
+    if n is None:
+        rows = ids.distinct().limit(MAX_RECORDED_IDS + 1).collect()
+    elif n <= MAX_RECORDED_IDS:
+        rows = ids.collect()
+    else:
+        return None
+    if len(rows) > MAX_RECORDED_IDS:
+        return None
+    return sorted(r[0] for r in rows)
+
+
+def bucket_expr(col, n: int):
+    """The staged indexes' hash-bucket partition value of ``col``:
+    ``pmod(xxhash64(col), n)`` as an int.  It hashes the VALUE, so
+    xxhash64(int) != xxhash64(bigint) — the frozen-type gate keeps a
+    delta from landing under (and probing) the wrong buckets."""
+    return F.pmod(F.xxhash64(col), F.lit(n)).cast("int")
 
 
 def park_and_swap(
@@ -155,17 +199,53 @@ def swap_directory(target: str, staged: str) -> None:
     """Replace ``target`` wholesale with the fully-staged ``staged``
     sibling: park the old directory at ``<target>.old``, rename the
     staging in, drop the park.  A crash between the two renames leaves
-    the COMPLETE old directory at ``.old`` (never half-written); the
-    owning family's sibling check refuses that state with a rename-back
-    recovery hint.  A stale ``.old`` next to a complete ``target``
-    (crash after the second rename) is harmless garbage and is swept
-    here on the next swap."""
-    old = target.rstrip("/") + ".old"
+    the COMPLETE old directory at ``.old`` (never half-written):
+    :func:`refuse_swapped_out` refuses that state and
+    :func:`recover_swap` renames it back.  A stale ``.old`` next to a
+    complete ``target`` (crash after the second rename) is harmless
+    garbage and is swept here on the next swap."""
+    old = _parked(target)
     shutil.rmtree(old, ignore_errors=True)
     if os.path.isdir(target):
         os.rename(target, old)
     os.rename(staged, target)
     shutil.rmtree(old, ignore_errors=True)
+
+
+def _parked(target: str) -> str:
+    return target.rstrip("/") + ".old"
+
+
+def _swapped_out(target: str) -> bool:
+    """:func:`swap_directory`'s crash window: ``target`` missing, its
+    complete old contents parked at ``.old``."""
+    return os.path.isdir(_parked(target)) and not os.path.isdir(target)
+
+
+def refuse_swapped_out(target: str, what: str, op: str) -> None:
+    """Refuse ``target`` when ``op`` crashed in its swap window: the
+    index would read as absent, and a write would silently start a
+    fresh one while the data sits at ``.old``."""
+    if _swapped_out(target):
+        old = _parked(target)
+        raise RuntimeError(
+            f"{what}: {target!r} is missing but {old!r} exists — a "
+            f"previous {op} crashed between its two renames.  Recover "
+            "first: rename the .old directory back to "
+            f"{target!r} (it was never half-written), then re-run the "
+            f"{op}."
+        )
+
+
+def recover_swap(target: str, suffix: str) -> None:
+    """Undo a :func:`staged_swap` of ``target`` a crash left mid-flight,
+    for an owner whose resume re-derives the same rewrite: rename a
+    swapped-out ``target`` back, drop a stale park and the
+    ``<target><suffix>`` staging."""
+    if _swapped_out(target):
+        os.rename(_parked(target), target)
+    shutil.rmtree(_parked(target), ignore_errors=True)
+    shutil.rmtree(target.rstrip("/") + suffix, ignore_errors=True)
 
 
 @contextlib.contextmanager
@@ -236,52 +316,6 @@ def refuse_parked_compact(
         )
 
 
-def refuse_pending_append(
-    index_dir: str, what: str, family: str, why: str
-) -> None:
-    """Refuse an index whose append marker exists: an append crashed
-    mid-landing (``why`` says what that leaves inconsistent)."""
-    pending = os.path.join(index_dir, APPEND_PENDING)
-    if os.path.isfile(pending):
-        raise RuntimeError(
-            f"{what}: {pending!r} exists — a previous {family}_append "
-            f"crashed mid-landing ({why}).  Recover first: run "
-            f"{family}_tombstone with the ids recorded in the marker (it "
-            f"clears this marker on completion), then {family}_compact, "
-            "then re-ingest the batch under the same ids."
-        )
-
-
-def admit_recovery_takedown(index_dir: str, family: str, ids) -> str | None:
-    """The crashed-append gate of a takedown: one covering ALL the ids
-    the append marker recorded is the documented recovery (the
-    half-landed rows vanish merge-on-read) and proceeds; any other
-    refuses, as does every takedown when the batch was too large for
-    its ids to be recorded.  Returns the marker path when this takedown
-    is the recovery — the caller clears it once its ledger landed."""
-    marker = os.path.join(index_dir, APPEND_PENDING)
-    pending = read_marker(marker)
-    if pending is None:
-        return None
-    what = f"{family}_tombstone: {marker!r} exists"
-    if pending.get("ids") is None:
-        raise RuntimeError(
-            f"{what} but the crashed batch was too large "
-            f"({pending.get('n')} rows) for its ids to be recorded — "
-            "recover manually: DELETE the marker file first (this "
-            "takedown refuses while it exists), then tombstone the "
-            "batch's ids (caller-known), compact, then re-ingest."
-        )
-    if not set(pending["ids"]) <= set(ids):
-        raise RuntimeError(
-            f"{what} — a previous {family}_append crashed mid-landing.  "
-            "Recover first: re-run the takedown including ALL the ids "
-            "recorded in the marker (it clears the marker), then "
-            "compact, then re-ingest the batch."
-        )
-    return marker
-
-
 def ledger_ids(spark, ids, col: str, dtype: str) -> DataFrame:
     """A takedown's ids — a frame (its ``col`` column, else its first)
     or a driver-side list — as a distinct one-column frame of the
@@ -293,6 +327,232 @@ def ledger_ids(spark, ids, col: str, dtype: str) -> DataFrame:
         return ids.select(F.col(src).cast(dtype).alias(col)).distinct()
     rows = [(i,) for i in ids]
     return local_frame(spark, rows, f"`{col}` {dtype}").distinct()
+
+
+def doc_tombs(spark, index_dir: str, schema: str) -> DataFrame:
+    """The doc-tombstone ledger, merge-on-read: its distinct ids (a
+    resumed takedown's duplicate landing collapses here), or an empty
+    frame of ``schema`` before the first takedown."""
+    return read_table_or_empty(
+        spark, os.path.join(index_dir, DOC_TOMBSTONES), schema
+    ).distinct()
+
+
+class IndexFamily:
+    """One staged-index family as the lifecycle sees it: the ``name``
+    its operations carry, the ``noun`` its errors use, its params
+    ``fmt`` tag, what a crashed append leaves inconsistent
+    (``append_crash``), whether its takedowns bracket their mutations
+    with a ``.takedown_pending`` marker, and the operation that
+    whole-swaps its directory, if any (``swap_op``)."""
+
+    def __init__(self, name: str, noun: str, fmt: str, append_crash: str,
+                 takedown_marker: bool = False, swap_op: str | None = None):
+        self.name, self.noun, self.fmt = name, noun, fmt
+        self.append_crash = append_crash
+        self.takedown_marker, self.swap_op = takedown_marker, swap_op
+
+    def create(self, index_dir: str, **params) -> None:
+        """Refuse an existing index, then freeze ``params``."""
+        if os.path.isfile(os.path.join(index_dir, PARAMS)):
+            raise ValueError(
+                f"{self.noun} already exists at {index_dir!r} — append to "
+                f"it with {self.name}_append, or choose a fresh directory."
+            )
+        os.makedirs(index_dir, exist_ok=True)
+        self.write_params(
+            index_dir, {"format": self.fmt, "version": 1, **params}
+        )
+
+    @staticmethod
+    def write_params(index_dir: str, params: dict) -> None:
+        """Atomic: a crash mid-write leaves no params file.  A torn one
+        would refuse the next build and fail every other call."""
+        write_marker(os.path.join(index_dir, PARAMS), params)
+
+    def load_params(self, index_dir: str) -> dict:
+        path = os.path.join(index_dir, PARAMS)
+        p = read_marker(path)
+        if p is None:
+            raise ValueError(
+                f"{index_dir!r} is not a {self.noun} (no {PARAMS}) — "
+                f"create one with {self.name}_build first."
+            )
+        if p.get("format") != self.fmt or p.get("version") != 1:
+            raise ValueError(f"unrecognized {self.noun} format at {path!r}")
+        return p
+
+    def checked_params(
+        self, index_dir: str, what: str, takedown: bool = False
+    ) -> dict:
+        """The params of an index ``what`` may operate on, after every
+        crash-state refusal: the swap window (a family with a
+        ``swap_op``), the compaction park and — except for a
+        ``takedown``, which is their recovery path and admits them
+        itself (:class:`Takedown`) — the takedown and append markers."""
+        if self.swap_op:
+            refuse_swapped_out(index_dir, what, self.swap_op)
+        p = self.load_params(index_dir)
+        refuse_parked_compact(index_dir, what, self.name)
+        if takedown:
+            return p
+        marker = os.path.join(index_dir, TAKEDOWN_PENDING)
+        if self.takedown_marker and os.path.isfile(marker):
+            raise RuntimeError(
+                f"{what}: {marker!r} exists — a previous "
+                f"{self.name}_tombstone crashed mid-mutation (the index "
+                "may be between states).  Recover first: re-run "
+                f"{self.name}_tombstone with the ids recorded in the "
+                "marker (every step is idempotent); it clears the marker "
+                "on completion."
+            )
+        marker = os.path.join(index_dir, APPEND_PENDING)
+        if os.path.isfile(marker):
+            raise RuntimeError(
+                f"{what}: {marker!r} exists — a previous {self.name}_append "
+                f"crashed mid-landing ({self.append_crash}).  Recover "
+                f"first: run {self.name}_tombstone with the ids recorded "
+                "in the marker (it clears this marker on completion), then "
+                f"{self.name}_compact, then re-ingest the batch under the "
+                "same ids."
+            )
+        return p
+
+    def gate_types(self, delta: DataFrame, frozen: dict) -> None:
+        """Refuse a delta whose column types drift from the ``frozen``
+        ``{column: type}`` params: the partition expressions hash the
+        VALUES, so a drifted delta would land under — and probe — the
+        wrong partitions silently."""
+        for c, t in frozen.items():
+            actual = delta.schema[c].dataType.simpleString()
+            if actual != t:
+                raise ValueError(
+                    f"{self.name}_append: column {c!r} is {actual}, index "
+                    f"froze {t} — cast the delta (a mixed-type index would "
+                    "hash to the wrong partitions)."
+                )
+
+    def refuse_known_ids(self, index_dir: str, ids: DataFrame, n: int,
+                         table: str, schema: str, bucket: str,
+                         n_buckets: int, harm: str) -> None:
+        """An append's id refusals, for the one-column ``ids`` of an
+        ``n``-row delta.  Ids still in the tombstone ledger: landing
+        them before the recovery's compact would land rows merge-on-read
+        hides and the compact then removes (the ledger is small by
+        contract: one broadcast semi-join).  Ids already in ``table``:
+        delta ids must be NEW — an at-least-once replay would
+        double-land (``harm``).  That probe reads the table's id column
+        pruned to the ids' ``bucket`` partitions."""
+        spark, col = ids.sparkSession, ids.columns[0]
+        tombs = doc_tombs(
+            spark, index_dir, f"{col} {ids.schema[0].dataType.simpleString()}"
+        )
+        if not ids.join(F.broadcast(tombs), col, "left_semi").isEmpty():
+            raise ValueError(
+                f"{self.name}_append: the delta contains ids that are still "
+                f"in the tombstone ledger — run {self.name}_compact first "
+                "(re-ingesting before the fold would land rows the compact "
+                "then removes)."
+            )
+        parts = partition_values(ids, bucket_expr(F.col(col), n_buckets))
+        mb = F.broadcast if n <= 50_000 else (lambda df: df)
+        if not (
+            read_table_or_empty(spark, os.path.join(index_dir, table), schema)
+            .filter(F.col(bucket).isin(parts))
+            .select(col)
+            .join(mb(ids), col, "left_semi")
+            .isEmpty()
+        ):
+            raise ValueError(
+                f"{self.name}_append: the delta contains ids that are "
+                "already indexed — delta ids must be NEW (a replayed batch "
+                f"would {harm}); an upsert is {self.name}_tombstone + "
+                "compact + re-append under the same ids."
+            )
+
+    @staticmethod
+    def begin_append(index_dir: str, ids: DataFrame, n: int,
+                     n_ids: int | None = None) -> str:
+        """Write the append-pending marker ahead of a landing that is
+        not atomic, recording the batch's ``ids`` (see
+        :func:`recorded_ids`) and row count ``n``; returns its path, to
+        clear once the landing completes."""
+        marker = os.path.join(index_dir, APPEND_PENDING)
+        write_marker(marker, {"ids": recorded_ids(ids, n_ids), "n": n})
+        return marker
+
+
+class Takedown:
+    """One takedown of a ``family`` index: its ids as a checkpointed
+    ledger frame (``tomb``) and a sorted list (``ids``, ledger-small by
+    contract).  It passes a crashed append's marker only as that
+    append's recovery, and the
+    family's ``.takedown_pending`` marker only as its same-ids resume.
+    Call :meth:`begin` before the first mutation, :meth:`land` last."""
+
+    def __init__(self, family: IndexFamily, spark, index_dir: str, ids,
+                 col: str, dtype: str):
+        self.index_dir = index_dir
+        self.tomb = ledger_ids(spark, ids, col, dtype).localCheckpoint(
+            eager=True
+        )
+        self.ids = sorted(r[0] for r in self.tomb.collect())
+        self.recovering = self._admit(family.name)
+        self.marker = None
+        if family.takedown_marker:
+            self.marker = os.path.join(index_dir, TAKEDOWN_PENDING)
+            pending = read_marker(self.marker) or {"ids": self.ids}
+            if sorted(pending.get("ids", [])) != self.ids:
+                raise RuntimeError(
+                    f"{family.name}_tombstone: {self.marker!r} records a "
+                    "pending takedown of different ids "
+                    f"({pending.get('ids', [])[:5]}…) — finish it first by "
+                    "re-running with exactly those ids."
+                )
+
+    def _admit(self, family: str) -> str | None:
+        """The crashed-append gate: a takedown covering ALL the ids the
+        append marker recorded is the documented recovery (the
+        half-landed rows vanish merge-on-read) and proceeds; any other
+        refuses, as does every takedown when the batch was too large
+        for its ids to be recorded.  Returns the marker path when this
+        takedown is the recovery."""
+        marker = os.path.join(self.index_dir, APPEND_PENDING)
+        pending = read_marker(marker)
+        if pending is None:
+            return None
+        what = f"{family}_tombstone: {marker!r} exists"
+        if pending.get("ids") is None:
+            raise RuntimeError(
+                f"{what} but the crashed batch was too large "
+                f"({pending.get('n')} rows) for its ids to be recorded — "
+                "recover manually: DELETE the marker file first (this "
+                "takedown refuses while it exists), then tombstone the "
+                "batch's ids (caller-known), compact, then re-ingest."
+            )
+        if not set(pending["ids"]) <= set(self.ids):
+            raise RuntimeError(
+                f"{what} — a previous {family}_append crashed mid-landing.  "
+                "Recover first: re-run the takedown including ALL the ids "
+                "recorded in the marker (it clears the marker), then "
+                "compact, then re-ingest the batch."
+            )
+        return marker
+
+    def begin(self) -> None:
+        if self.marker and not os.path.isfile(self.marker):
+            write_marker(self.marker, {"ids": self.ids})
+
+    def land(self) -> None:
+        """Append the doc ledger (one coalesced file; Spark's committed
+        write lands it or not), then clear the takedown's own marker
+        and the crashed-append marker it recovers."""
+        self.tomb.coalesce(1).write.mode("append").parquet(
+            os.path.join(self.index_dir, DOC_TOMBSTONES)
+        )
+        for marker in (self.marker, self.recovering):
+            if marker:
+                clear_marker(marker)
 
 
 def _on_session_clone(df: DataFrame) -> DataFrame:

@@ -84,9 +84,7 @@ tests/py_pkg_examples.sh:40-47); the index is the engine-side upgrade.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -98,77 +96,26 @@ from streaming_spark.operators.dedup import (
     verify_jaccard,
 )
 from streaming_spark.operators.index_commit import (
-    APPEND_PENDING,
     Compaction,
-    admit_recovery_takedown,
+    IndexFamily,
+    Takedown,
+    bucket_expr,
     clear_marker,
-    ledger_ids,
+    doc_tombs,
     link_tree,
     partition_values,
-    read_marker,
     read_table_or_empty,
-    refuse_parked_compact,
-    refuse_pending_append,
+    recover_swap,
     staged_swap,
-    swap_directory,
-    write_marker,
 )
 
-_PARAMS_NAME = "_params.json"
-_FORMAT = "streaming-spark-neardup"
-
-
-# ---------------------------------------------------------------- params
-
-
-def _params_path(index_dir: str) -> str:
-    return os.path.join(index_dir, _PARAMS_NAME)
-
-
-def _load_params(index_dir: str) -> dict:
-    path = _params_path(index_dir)
-    if not os.path.isfile(path):
-        old = index_dir.rstrip("/") + ".old"
-        if os.path.isfile(os.path.join(old, _PARAMS_NAME)):
-            raise RuntimeError(
-                f"{index_dir!r} is missing but {old!r} is a complete "
-                "index — a neardup_index_reshard crashed between its two "
-                "renames.  Recover: rename the .old directory back to "
-                f"{index_dir!r} (it was never half-written), then re-run "
-                "the reshard."
-            )
-        raise ValueError(
-            f"{index_dir!r} is not a near-dup index (no {_PARAMS_NAME}) — "
-            "create one with neardup_index_build first."
-        )
-    with open(path, encoding="utf-8") as f:
-        p = json.load(f)
-    if p.get("format") != _FORMAT or p.get("version") != 1:
-        raise ValueError(f"unrecognized near-dup index format at {path!r}")
-    return p
-
-
-def _check_siblings(index_dir: str, what: str) -> None:
-    """Refuse an index whose on-disk state says a previous operation
-    crashed mid-mutation: a compact mid-swap (partitions parked, absent
-    from the tables), a takedown mid-mutation, or an append
-    mid-landing — same posture as the digest and ANN families."""
-    refuse_parked_compact(index_dir, what, "neardup_index")
-    marker = os.path.join(index_dir, ".takedown_pending")
-    if os.path.isfile(marker):
-        raise RuntimeError(
-            f"{what}: {marker!r} exists — a previous "
-            "neardup_index_tombstone crashed mid-mutation (the pair set "
-            "may be between states).  Recover first: re-run "
-            "neardup_index_tombstone with the ids recorded in the marker "
-            "(every step is idempotent); it clears the marker on "
-            "completion."
-        )
-    refuse_pending_append(
-        index_dir, what, "neardup_index",
-        "band rows may be live without their batch's pairs, so the pair "
-        "set has silently diverged from the batch arm",
-    )
+NEARDUP_INDEX = IndexFamily(
+    "neardup_index", "near-dup index", "streaming-spark-neardup",
+    append_crash="band rows may be live without their batch's pairs, so "
+    "the pair set has silently diverged from the batch arm",
+    takedown_marker=True, swap_op="neardup_index_reshard",
+)
+_load_params = NEARDUP_INDEX.load_params
 
 
 def _pb_combos(df: DataFrame, p: dict) -> list:
@@ -190,8 +137,7 @@ def _pb_combos(df: DataFrame, p: dict) -> list:
 # ------------------------------------------------------------- sub-tables
 
 
-def _sb_expr(id_col, n_id_buckets: int):
-    return F.pmod(F.xxhash64(id_col), F.lit(n_id_buckets)).cast("int")
+_sb_expr = bucket_expr  # the id-bucket (sb=) partition expression
 
 
 def _pb_expr(bh_col, n_prefixes: int):
@@ -242,9 +188,7 @@ def _live_bands(spark, index_dir: str, p: dict, combo_filter=None) -> DataFrame:
 
 
 def _doc_tombs(spark, index_dir: str, p: dict) -> DataFrame:
-    return read_table_or_empty(
-        spark, os.path.join(index_dir, "doc_tombstones"), f"id {p['id_type']}"
-    ).distinct()
+    return doc_tombs(spark, index_dir, f"id {p['id_type']}")
 
 
 def _pair_tombs(spark, index_dir: str, p: dict) -> DataFrame:
@@ -348,33 +292,24 @@ def neardup_index_build(
     ``n_id_buckets`` / ``n_band_prefixes`` choose partition granularity
     for the pruned probe reads (fixture-small defaults; size them to
     ~128 MB partitions at deployment).  Refuses an existing index."""
-    if os.path.isfile(_params_path(index_dir)):
-        raise ValueError(
-            f"near-dup index already exists at {index_dir!r} — append to "
-            "it with neardup_index_append, or choose a fresh directory."
-        )
     if num_perm < bands:
         raise ValueError(
             f"num_perm={num_perm} cannot fill {bands} bands"
         )
-    os.makedirs(index_dir, exist_ok=True)
-    params = {
-        "format": _FORMAT,
-        "version": 1,
-        "text_col": text_col,
-        "id_col": id_col,
-        "id_type": docs.schema[id_col].dataType.simpleString(),
-        "threshold": threshold,
-        "num_perm": num_perm,
-        "bands": bands,
-        "shingle_k": shingle_k,
-        "seed": seed,
-        "max_bucket": max_bucket,
-        "n_id_buckets": n_id_buckets,
-        "n_band_prefixes": n_band_prefixes,
-    }
-    with open(_params_path(index_dir), "w", encoding="utf-8") as f:
-        json.dump(params, f)
+    NEARDUP_INDEX.create(
+        index_dir,
+        text_col=text_col,
+        id_col=id_col,
+        id_type=docs.schema[id_col].dataType.simpleString(),
+        threshold=threshold,
+        num_perm=num_perm,
+        bands=bands,
+        shingle_k=shingle_k,
+        seed=seed,
+        max_bucket=max_bucket,
+        n_id_buckets=n_id_buckets,
+        n_band_prefixes=n_band_prefixes,
+    )
     neardup_index_append(index_dir, docs, stats_out=stats_out)
 
 
@@ -451,21 +386,10 @@ def neardup_index_append(
     so recall decays; the action is :func:`neardup_index_reshard` —
     re-band / raise the cap from the staged signatures, no corpus
     re-scan."""
-    p = _load_params(index_dir)
-    _check_siblings(index_dir, "neardup_index_append")
+    p = NEARDUP_INDEX.checked_params(index_dir, "neardup_index_append")
     spark = delta.sparkSession
     cap = p["max_bucket"]
-    # loud type gate (mirrors digest_index_append): the sb partition
-    # expr hashes the id VALUE, and xxhash64(int) != xxhash64(bigint) —
-    # a delta whose id type drifts from the frozen params would land
-    # under and probe the wrong partitions silently
-    actual = delta.schema[p["id_col"]].dataType.simpleString()
-    if actual != p["id_type"]:
-        raise ValueError(
-            f"neardup_index_append: id column {p['id_col']!r} is "
-            f"{actual}, index froze {p['id_type']} — cast the delta (a "
-            "mixed-type index would hash to the wrong partitions)."
-        )
+    NEARDUP_INDEX.gate_types(delta, {p["id_col"]: p["id_type"]})
 
     delta_sigs = minhash_signatures(
         delta, p["text_col"], p["id_col"], p["num_perm"], p["shingle_k"],
@@ -483,48 +407,13 @@ def neardup_index_append(
                     saturated_buckets=0, saturation_frac=0.0,
                 )
             return
-        # refuse ids still live in the tombstone ledger: re-ingesting a
-        # crashed batch BEFORE the compact step of the recovery
-        # sequence would land rows merge-on-read hides and the eventual
-        # compact REMOVES (same-id fold) — silent data loss.  The
-        # ledger is small by contract; one broadcast semi-join probe.
-        if not delta_sigs.select("id").join(
-            F.broadcast(_doc_tombs(spark, index_dir, p)), "id", "left_semi"
-        ).isEmpty():
-            raise ValueError(
-                "neardup_index_append: the delta contains ids that are "
-                "still in the tombstone ledger — run "
-                "neardup_index_compact first (re-ingesting before the "
-                "fold would land rows the compact then removes)."
-            )
-        # enforce the 'delta ids are NEW' contract (ADVICE r13): a
-        # replay of a fully-committed batch would double-land its
-        # sig/band rows, inflating bucket sizes past max_bucket and
-        # flipping decisions — at-least-once ingest (foreachBatch)
-        # makes this reachable, so refuse instead of documenting.  The
-        # probe reads the sig table's id column pruned to the delta's
-        # sb= partitions (any non-tombstoned id present in sigs is
-        # indexed: orphan states are marker-refused above).
-        delta_sbs = partition_values(
-            delta_sigs, _sb_expr(F.col("id"), p["n_id_buckets"])
+        # any non-tombstoned id present in sigs is indexed: orphan
+        # states are marker-refused above
+        NEARDUP_INDEX.refuse_known_ids(
+            index_dir, delta_sigs.select("id"), n_delta, "sigs",
+            _sigs_schema(p), "sb", p["n_id_buckets"],
+            "double-land band rows and corrupt bucket sizes",
         )
-        mb0 = F.broadcast if n_delta <= 50_000 else (lambda df: df)
-        if not (
-            read_table_or_empty(
-                spark, os.path.join(index_dir, "sigs"), _sigs_schema(p)
-            )
-            .filter(F.col("sb").isin(delta_sbs))
-            .select("id")
-            .join(mb0(delta_sigs.select("id")), "id", "left_semi")
-            .isEmpty()
-        ):
-            raise ValueError(
-                "neardup_index_append: the delta contains ids that are "
-                "already indexed — delta ids must be NEW (a replayed "
-                "batch would double-land band rows and corrupt bucket "
-                "sizes); an upsert is neardup_index_tombstone + compact "
-                "+ re-append under the same ids."
-            )
         delta_bands = (
             _banded(delta_sigs, p["bands"], sig_len=p["num_perm"])
             .withColumn("pb", _pb_expr(F.col("bh"), p["n_band_prefixes"]))
@@ -534,19 +423,13 @@ def neardup_index_append(
         delta_bands.count()
         first_ingest = not os.path.isdir(os.path.join(index_dir, "bands"))
 
-        # pending marker BEFORE the first landing (atomic tmp+rename,
-        # same posture as .takedown_pending): a crash anywhere in the
-        # three-write landing leaves the marker on disk and every other
-        # operation refuses the index until the batch is recovered —
-        # nothing proceeds silently over a half-landed batch.  Ids are
-        # recorded (bounded) so the recovery tombstone can be verified.
-        pending = os.path.join(index_dir, APPEND_PENDING)
-        batch_ids = (
-            sorted(r["id"] for r in delta_sigs.select("id").collect())
-            if n_delta <= 100_000
-            else None
+        # pending marker BEFORE the first landing: a crash anywhere in
+        # the three-write landing leaves the marker on disk and every
+        # other operation refuses the index until the batch is
+        # recovered — nothing proceeds silently over a half-landed batch
+        pending = NEARDUP_INDEX.begin_append(
+            index_dir, delta_sigs.select("id"), n_delta, n_ids=n_delta
         )
-        write_marker(pending, {"ids": batch_ids, "n": n_delta})
 
         # land FIRST: the probe below then reads the post-append band
         # table, so every bucket size it sees is already the
@@ -810,42 +693,16 @@ def neardup_index_tombstone(
     computation excludes the in-flight victims from the "previous
     tombstones" set so it is stable whether or not the final landing
     already happened."""
-    p = _load_params(index_dir)
-    # the takedown's resume path must pass its own pending marker, so
-    # it refuses only a crashed compact's park, not every sibling state
-    refuse_parked_compact(
-        index_dir, "neardup_index_tombstone", "neardup_index"
+    p = NEARDUP_INDEX.checked_params(
+        index_dir, "neardup_index_tombstone", takedown=True
     )
     cap = p["max_bucket"]
-    tomb = ledger_ids(spark, ids, "id", p["id_type"]).localCheckpoint(
-        eager=True
-    )
-    id_list = sorted(r["id"] for r in tomb.collect())  # ledger-small
-    # the crashed-append recovery entry point (see neardup_index_append)
-    recovering = admit_recovery_takedown(index_dir, "neardup_index", id_list)
-
-    marker = os.path.join(index_dir, ".takedown_pending")
-    existing_marker = read_marker(marker)
-    if existing_marker is not None:
-        pending = existing_marker.get("ids", [])
-        if sorted(pending) != id_list:
-            raise RuntimeError(
-                f"neardup_index_tombstone: {marker!r} records a pending "
-                f"takedown of different ids ({pending[:5]}…) — finish it "
-                "first by re-running with exactly those ids."
-            )
-
-    # heal a ledger swap the previous attempt may have left mid-flight:
-    # ledger parked but the rewrite not yet renamed in → restore the
-    # park (the recompute below reproduces the same rewrite); a stale
-    # park next to a complete ledger just gets dropped
+    t = Takedown(NEARDUP_INDEX, spark, index_dir, ids, "id", p["id_type"])
+    tomb, id_list = t.tomb, t.ids
+    # heal a ledger swap the previous attempt may have left mid-flight
+    # (the recompute below reproduces the same rewrite)
     ledger_dir = os.path.join(index_dir, "pair_tombstones")
-    old_ledger = ledger_dir + ".old"
-    new_ledger = ledger_dir + ".new"
-    if os.path.isdir(old_ledger) and not os.path.isdir(ledger_dir):
-        os.rename(old_ledger, ledger_dir)
-    shutil.rmtree(old_ledger, ignore_errors=True)
-    shutil.rmtree(new_ledger, ignore_errors=True)
+    recover_swap(ledger_dir, ".new")
 
     # sizes use the PREVIOUS tombstone set (ledger minus the in-flight
     # victims): stable across a resume whether or not the final doc-
@@ -940,26 +797,16 @@ def neardup_index_tombstone(
                 ).localCheckpoint(eager=True)
 
     # ---- mutation phase: everything above was read-only (eager
-    # checkpoints), so the marker lands only now — atomically (tmp +
-    # rename: a torn marker would brick the index with an unreadable
-    # recovery hint)
-    if not os.path.isfile(marker):
-        write_marker(marker, {"ids": id_list})
+    # checkpoints), so the marker lands only now
+    t.begin()
     if n_readmitted:
         to_append.write.mode("append").parquet(
             os.path.join(index_dir, "pairs")
         )
     if n_resurrected:
-        keep.coalesce(1).write.mode("overwrite").parquet(new_ledger)
-        swap_directory(ledger_dir, new_ledger)
-    # the doc-ledger landing is last (one coalesced file; a resume's
-    # duplicate append is collapsed by the reader's distinct)
-    tomb.coalesce(1).write.mode("append").parquet(
-        os.path.join(index_dir, "doc_tombstones")
-    )
-    clear_marker(marker)
-    if recovering:
-        clear_marker(recovering)  # crashed-append recovery complete
+        with staged_swap(ledger_dir, ".new") as new_ledger:
+            keep.coalesce(1).write.mode("overwrite").parquet(new_ledger)
+    t.land()
     if stats_out is not None:
         stats_out.update(
             tombstoned=len(id_list),
@@ -986,8 +833,7 @@ def neardup_index_compact(spark, index_dir: str) -> dict:
 
     Returns stats: sig_rows_removed, band_rows_removed,
     pair_rows_removed, sig_parts_rewritten, band_parts_rewritten."""
-    p = _load_params(index_dir)
-    _check_siblings(index_dir, "neardup_index_compact")
+    p = NEARDUP_INDEX.checked_params(index_dir, "neardup_index_compact")
     doc_t = _doc_tombs(spark, index_dir, p).localCheckpoint(eager=True)
     pair_t = _pair_tombs(spark, index_dir, p).localCheckpoint(eager=True)
     stats = {
@@ -1061,8 +907,7 @@ def neardup_index_members(spark, index_dir: str) -> DataFrame:
     against (curation_backfill reconciles it with the exact-dedup
     owners view: members not in the keep set are taken down, keepers
     not yet members are appended)."""
-    p = _load_params(index_dir)
-    _check_siblings(index_dir, "neardup_index_members")
+    p = NEARDUP_INDEX.checked_params(index_dir, "neardup_index_members")
     sigs = read_table_or_empty(
         spark, os.path.join(index_dir, "sigs"), _sigs_schema(p)
     )
@@ -1117,7 +962,7 @@ def neardup_index_reshard(
     sibling is removed and re-staged on retry); a crash BETWEEN the two
     renames leaves the complete old index at ``<index_dir>.old`` and
     every subsequent operation refuses with the rename-back recovery
-    hint (see ``_load_params``).  Refuses an index with a pending
+    hint (index_commit.refuse_swapped_out).  Refuses an index with a pending
     append/takedown marker or a parked compact.
 
     Cost shape: the banded candidate join + verification over the whole
@@ -1141,8 +986,7 @@ def neardup_index_reshard(
 
     ``stats_out`` keys: rows_live, pairs_after, folded_doc_tombstones,
     folded_pair_tombstones, plus the new parameter values."""
-    p = _load_params(index_dir)
-    _check_siblings(index_dir, "neardup_index_reshard")
+    p = NEARDUP_INDEX.checked_params(index_dir, "neardup_index_reshard")
     new_p = dict(p)
     for key, val in (
         ("bands", bands),
@@ -1179,9 +1023,7 @@ def neardup_index_reshard(
         with staged_swap(index_dir, ".reshard") as tmp:
             n_live = live_sigs.count()
             os.makedirs(tmp)
-            params = os.path.join(tmp, _PARAMS_NAME)
-            with open(params, "w", encoding="utf-8") as f:
-                json.dump(new_p, f)
+            NEARDUP_INDEX.write_params(tmp, new_p)
             if new_p["n_id_buckets"] == p["n_id_buckets"] and n_doc_t == 0:
                 # the sigs table's layout depends only on n_id_buckets
                 # and its rows only on the doc-tombstone fold: unchanged
@@ -1256,8 +1098,7 @@ def neardup_index_pairs(spark, index_dir: str) -> DataFrame:
     ``dedup_minhash_lsh`` output over the live corpus under the index's
     frozen parameters (the invariant every maintenance op preserves;
     pinned by tests/test_neardup_index.py)."""
-    p = _load_params(index_dir)
-    _check_siblings(index_dir, "neardup_index_pairs")
+    p = NEARDUP_INDEX.checked_params(index_dir, "neardup_index_pairs")
     doc_t = _doc_tombs(spark, index_dir, p)
     return (
         read_table_or_empty(

@@ -2955,20 +2955,13 @@ def _check_index_siblings(staged_dir: str, what: str) -> None:
     missing dir, treat it as a first write, and silently start a fresh
     index with the fingerprint gate bypassed while the data sits at
     ``.old``."""
-    import os
-
-    from streaming_spark.operators.index_commit import refuse_parked_compact
+    from streaming_spark.operators.index_commit import (
+        refuse_parked_compact,
+        refuse_swapped_out,
+    )
 
     refuse_parked_compact(staged_dir, what, "ann_index", sibling=True)
-    base = staged_dir.rstrip("/")
-    old = base + ".old"
-    if os.path.isdir(old) and not os.path.isdir(base):
-        raise RuntimeError(
-            f"{what}: staged dir {base!r} is missing but {old!r} exists "
-            "— a previous ann_index_refresh crashed between its two "
-            "renames.  Recover first: rename the .old directory back to "
-            "the staged path."
-        )
+    refuse_swapped_out(staged_dir, what, "ann_index_refresh")
 
 
 def _require_bycell_layout(staged_dir: str, what: str) -> None:
