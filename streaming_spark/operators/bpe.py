@@ -289,8 +289,9 @@ def bpe_save(
     session-level memo in queries/northstar.py covers one driver; this
     covers the pipeline boundary: train once, encode from any later job).
     ``ensure_ascii`` keeps byte-level latin-1 symbols print-safe; merge
-    ORDER is the rank table, so it round-trips as an ordered list."""
-    import json
+    ORDER is the rank table, so it round-trips as an ordered list.  The
+    write is atomic: a crash mid-save keeps the previous artifact."""
+    from streaming_spark.operators.index_commit import write_marker
 
     artifact = {
         "format": "streaming-spark-bpe",
@@ -300,8 +301,7 @@ def bpe_save(
         "special_tokens": list(special_tokens),
         "merges": [[a, b] for a, b in merges],
     }
-    with open(path, "w", encoding="utf-8") as f:
-        json.dump(artifact, f, ensure_ascii=True)
+    write_marker(path, artifact)
 
 
 def bpe_load(path: str) -> dict:

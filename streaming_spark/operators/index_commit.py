@@ -95,7 +95,8 @@ MAX_RECORDED_IDS = 100_000
 def write_marker(path: str, payload: dict) -> None:
     """Atomically write a JSON marker (tmp + rename): observers see the
     complete marker or none — a torn marker would brick an index with
-    an unreadable recovery hint."""
+    an unreadable recovery hint.  The tokenizer and ANN artifact saves
+    write through here for the same reason."""
     tmp = path + ".tmp"
     with open(tmp, "w", encoding="utf-8") as f:
         json.dump(payload, f)

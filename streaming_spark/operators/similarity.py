@@ -22,6 +22,18 @@ Families:
 
 Each shared step has one owner:
 
+- exact top-r selection under (sim DESC, id ASC):
+  ``_top_by_sim_then_id``; non-finite sims are never returned, every
+  finite candidate is ranked;
+- per-query exact top-k with equal ids skipped: ``_topk_rows`` (one
+  sims block; the broadcast arm of ``exact_nn_topk``), chunked by
+  ``_topk_against`` (its blocked arm);
+- running top-R across a partition's chunks: ``_RunningTopR``
+  (``cosine_topk`` and the ADC scan);
+- final per-query rank window: ``_rank_window``;
+- small-table collect into (ids, row-normalized float64 matrix):
+  ``_collect_queries``;
+- IVF probe rule: ``probed_from_qc``;
 - training sample: ``_md5_sample`` (md5-of-id order, bounded collect);
 - spherical Lloyd update: ``_spherical_lloyd``;
 - PQ codebook k-means: ``_train_pq_books``;
@@ -119,94 +131,65 @@ def cosine_topk(
 
     Output: (query_id, neighbor_id, sim, rank), self-matches excluded.
     """
-    qrows = queries.select(id_col, vec_col).collect()  # queries are small by contract
-    q_ids = np.array([r[0] for r in qrows])
-    q_mat = _matrix([r[1] for r in qrows])
-    q_norm = _norm_rows(q_mat)
+    q_ids, q_norm = _collect_queries(queries, vec_col, id_col)
 
     # Partial stage: ONE top-(k+1) emission per PARTITION, accumulated
-    # across that partition's Arrow chunks with a vectorized running
-    # merge (no per-query Python loop).  The +1 slot absorbs a query's
-    # own row when it lives in this partition; self-matches are dropped
-    # JVM-side below, so the final window still sees >= k true
-    # neighbors per partition.  This keeps the global shuffle at
-    # O(partitions x Q x k) — independent of partition row count —
-    # where a per-chunk emission grows with corpus_rows / chunk_size
-    # (at 1M x 64-dim: ~100 chunks -> 1.1M partial rows vs 32
-    # partitions -> 35k).
-
+    # across that partition's Arrow chunks by a _RunningTopR.  The +1
+    # slot absorbs a query's own row when it lives in this partition;
+    # self-matches are dropped JVM-side below, so the final window still
+    # sees >= k true neighbors per partition.  This keeps the global
+    # shuffle at O(partitions x Q x k) — independent of partition row
+    # count — where a per-chunk emission grows with corpus_rows /
+    # chunk_size (at 1M x 64-dim: ~100 chunks -> 1.1M partial rows vs
+    # 32 partitions -> 35k).  Offers go one query ROW at a time,
+    # deliberately not argpartition(axis=1): the vectorized form
+    # allocates two (Q, rows)-sized temporaries per chunk (~160 MB at
+    # Q=1000, 10k-row chunks) — measured 10-40x slowdowns with bimodal
+    # stalls when 32 workers churn those mmap-sized blocks concurrently.
     q_bc = _broadcast_bounded(
         vectors.sparkSession.sparkContext, (q_ids, q_norm)
     )
 
     def part_topk(batches):
         q_ids, q_norm = q_bc.value
-        n_q = len(q_ids)
-        kk1 = k + 1
-        best_s = best_n = None
+        state = None
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             mat = _norm_rows(_matrix(pdf[vec_col]))
-            sims = _nan_to_neginf(q_norm @ mat.T)  # (Q, rows); one
-            # chunk-level NaN scan — the selection helper requires it
+            sims = q_norm @ mat.T  # (Q, rows)
             ids = pdf[id_col].to_numpy()
-            kk = min(kk1, sims.shape[1])
-            # per-ROW argpartition, deliberately not axis=1: the
-            # vectorized form allocates two (Q, rows)-sized temporaries
-            # per chunk (negated copy + full index array, ~160 MB at
-            # Q=1000, 10k-row chunks) — measured 10-40x slowdowns with
-            # bimodal stalls when 32 workers churn those mmap-sized
-            # blocks concurrently; the row loop peaks at one (rows,)
-            # scratch per call (measured ~2 s/corpus at 1M pre-r11; the
-            # exact tie-refine adds two comparison scans per row).
-            # _top_by_sim_then_id keeps boundary ties deterministic:
-            # duplicate vectors tie bit-exactly, and the final window
-            # breaks ties by neighbor_id ASC — the partial must too.
-            cand_s = np.empty((n_q, kk))
-            cand_i = np.empty((n_q, kk), dtype=np.int64)
-            for r in range(n_q):
-                ix = _top_by_sim_then_id(sims[r], ids, kk)
-                cand_i[r] = ix
-                cand_s[r] = sims[r, ix]
-            cand_n = ids[cand_i]
-            if best_s is None:
-                best_s, best_n = cand_s, cand_n
-            else:
-                best_s = np.concatenate([best_s, cand_s], axis=1)
-                best_n = np.concatenate([best_n, cand_n], axis=1)
-            if best_s.shape[1] > kk1:  # compact the running top-(k+1)
-                new_s = np.empty((n_q, kk1))
-                new_n = np.empty((n_q, kk1), dtype=np.int64)
-                for r in range(n_q):  # width <= 2(k+1): trivially cheap
-                    sel = _top_by_sim_then_id(best_s[r], best_n[r], kk1)
-                    new_s[r] = best_s[r, sel]
-                    new_n[r] = best_n[r, sel]
-                best_s, best_n = new_s, new_n
-        if best_s is None:
-            return
-        width = best_s.shape[1]
-        yield pd.DataFrame(
-            {
-                "query_id": np.repeat(q_ids, width),
-                "neighbor_id": best_n.reshape(-1),
-                "sim": best_s.reshape(-1),
-            }
-        )
+            if state is None:
+                state = _RunningTopR(len(q_ids), k + 1)
+            for qi in range(len(q_ids)):
+                state.offer(qi, sims[qi], ids)
+        out = None if state is None else state.flush(q_ids)
+        if out is not None:
+            yield out.set_axis(["query_id", "neighbor_id", "sim"], axis=1)
 
     partials = (
         ensure_parallelism(vectors.select(id_col, vec_col))
         .mapInPandas(part_topk, "query_id BIGINT, neighbor_id BIGINT, sim DOUBLE")
         .filter(F.col("query_id") != F.col("neighbor_id"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id")
+    return _rank_window(partials, k).select(
+        "query_id", "neighbor_id", F.round("sim", 4).alias("sim"), "rank"
     )
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("sim", 4).alias("sim"), "rank")
-    )
+
+
+def _rank_window(
+    df: DataFrame,
+    k: int,
+    sim: str = "sim",
+    neighbor: str = "neighbor_id",
+    rank: str = "rank",
+) -> DataFrame:
+    """THE final per-query rank: ``row_number`` over each ``query_id``
+    ordered (sim DESC, neighbor ASC), kept through rank ``k`` — the
+    window every top-k family ends in, and the total order every partial
+    stage above it selects under (:func:`_top_by_sim_then_id`)."""
+    w = Window.partitionBy("query_id").orderBy(F.col(sim).desc(), F.col(neighbor))
+    return df.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= k)
 
 
 def _nan_to_neginf(sims: np.ndarray) -> np.ndarray:
@@ -451,13 +434,8 @@ def _topk_on_candidates(
             _cosine_expr("q_vec", "v_vec").alias("sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("sim", 4).alias("sim"), "rank")
+    return _rank_window(scored, k).select(
+        "query_id", "neighbor_id", F.round("sim", 4).alias("sim"), "rank"
     )
 
 
@@ -677,8 +655,8 @@ def ivf_assign(
             return None
         mat = _norm_rows(_matrix(pdf[vec_col]))
         sims = mat @ cent.T  # (rows, n_cells)
-        p = min(nprobe, cent.shape[0])
-        top = np.argpartition(-sims, p - 1, axis=1)[:, :p]
+        top = probed_from_qc(sims, nprobe)
+        p = top.shape[1]
         ids = pdf[id_col].to_numpy()
         out = {
             out_id: np.repeat(ids, p),
@@ -804,13 +782,14 @@ def _self_topk_broadcast(
     Tie-break (sim DESC, neighbor_id ASC) matches the blocked arm and
     the all-pairs oracles bit for bit; sims stay unrounded float64."""
     out_schema = "query_id BIGINT, neighbor_id BIGINT, sim DOUBLE, rank INT"
-    rows = base.collect()  # small-side contract: N x dim floats fit in driver
+    # small-side contract: N x dim floats fit in driver
+    all_ids, all_mat = _collect_queries(base, "__vec")
     if stats_out is not None:
         # this arm scores every ordered pair by design — the same
         # telemetry contract as the blocked arm (including the empty
         # staged_dirs: this arm never stages, but a caller following
         # the release contract must not KeyError on the auto routing)
-        n = len(rows)
+        n = len(all_ids)
         stats_out.update(
             n_rows=n,
             n_blocks=0,
@@ -818,48 +797,18 @@ def _self_topk_broadcast(
             total_pairs=n * (n - 1),
             staged_dirs=[],
         )
-    if len(rows) < 2:
+    if len(all_ids) < 2:
         return local_frame(base.sparkSession, [], out_schema)
-    all_ids = np.array([r[0] for r in rows])
-    all_mat = _norm_rows(_matrix([r[1] for r in rows]))
 
     def local(pdf: pd.DataFrame, side) -> pd.DataFrame:
         ids_v, mat_v = side
         if len(pdf) == 0:
             return None
         m = _norm_rows(_matrix(pdf["__vec"]))
-        sims = m @ mat_v.T  # (rows, N)
         my = pdf["vec_id"].to_numpy()
-        n_all = sims.shape[1]
-        out_q, out_n, out_s, out_r = [], [], [], []
-        for row in range(len(m)):
-            s = sims[row]
-            # argpartition prefilter: the k+1 largest sims (+1 covers
-            # self) plus EVERY entry tying the cutoff value, so the
-            # exact (sim DESC, id ASC) tie-break below never loses a
-            # boundary tie to the partition's arbitrary split
-            kk = min(k + 1, n_all - 1)
-            cand = np.argpartition(-s, kk)[: kk + 1]
-            cand = np.flatnonzero(s >= s[cand].min())
-            order = cand[np.lexsort((ids_v[cand], -s[cand]))]
-            rank = 0
-            for j in order:
-                if ids_v[j] == my[row]:
-                    continue  # self
-                rank += 1
-                out_q.append(my[row])
-                out_n.append(ids_v[j])
-                out_s.append(s[j])
-                out_r.append(rank)
-                if rank == k:
-                    break
+        q, nb, sim, rank = _topk_rows(m @ mat_v.T, my, ids_v, k)
         return pd.DataFrame(
-            {
-                "query_id": out_q,
-                "neighbor_id": out_n,
-                "sim": out_s,
-                "rank": np.array(out_r, dtype=np.int32),
-            }
+            {"query_id": q, "neighbor_id": nb, "sim": sim, "rank": rank}
         )
 
     return stream(
@@ -876,40 +825,68 @@ def _self_topk_broadcast(
 _PASS_B_TASK_BYTES = 64 << 20
 
 
-def _topk_against(q_ids, q_mat, m_ids, m_mat, k, s_q=None):
-    """The one exact per-task top-k loop every arm of ``exact_nn_topk``
-    shares (pass A's fused task, pass B's grouped tasks — extracting it
-    makes the arms' "identical math" contract mechanical instead of
-    maintained by hand): chunked float64 matmul of queries against
-    members, equal ids never score, per-query order (sim DESC, id ASC)
-    with boundary ties kept through the k-th score then truncated to
-    k.  When ``s_q`` (a preallocated per-query array) is given, each
-    query that found a FULL k rows records its k-th-best score there —
-    the pass-A pruning bound, captured in the same pass.  Returns the
-    (qa, vec_id, cos_sim) column arrays (empty lists when nothing
-    scored)."""
+def _topk_rows(sims, q_ids, m_ids, k, s_q=None):
+    """THE per-query exact top-k over one (queries x members) ``sims``
+    block, shared by every arm of ``exact_nn_topk`` (the broadcast
+    arm's batch, and through :func:`_topk_against` pass A's and pass
+    B's tasks — the arms' "identical math" contract holds by
+    construction): pairs with EQUAL ids never score, each query keeps
+    its top-k by (sim DESC, id ASC) (:func:`_top_by_sim_then_id`), and
+    a non-finite sim (a NaN-poisoned vector) is never returned while
+    every finite candidate is ranked.  When ``s_q`` (a per-query
+    array) is given, each query that found a FULL k rows records its
+    k-th-best score there — the pass-A pruning bound, captured in the
+    same pass.  Returns (query, neighbor, sim, rank) column arrays,
+    each query's rows in rank order."""
+    sims = _nan_to_neginf(sims)
     out_q: list = []
     out_n: list = []
     out_s: list = []
+    for r, qid in enumerate(q_ids):
+        s = np.where(m_ids == qid, -np.inf, sims[r])
+        top = _top_by_sim_then_id(s, m_ids, k)
+        top = top[np.isfinite(s[top])]
+        if len(top) == 0:
+            continue
+        order = top[np.lexsort((m_ids[top], -s[top]))]
+        out_q.append(np.full(len(order), qid, dtype=np.int64))
+        out_n.append(m_ids[order])
+        out_s.append(s[order])
+        if s_q is not None and len(order) == k:
+            s_q[r] = s[order[-1]]
+    if not out_q:
+        return (
+            np.empty(0, dtype=np.int64),
+            m_ids[:0],
+            np.empty(0),
+            np.empty(0, dtype=np.int32),
+        )
+    rank = [np.arange(1, len(a) + 1, dtype=np.int32) for a in out_q]
+    return (
+        np.concatenate(out_q),
+        np.concatenate(out_n),
+        np.concatenate(out_s),
+        np.concatenate(rank),
+    )
+
+
+def _topk_against(q_ids, q_mat, m_ids, m_mat, k, s_q=None):
+    """:func:`_topk_rows` of queries against members, the float64
+    matmul chunked over queries so task memory stays O(chunk ·
+    |members|) however many queries probe one block."""
     chunk = 2048
-    for c0 in range(0, len(q_ids), chunk):
-        sims = q_mat[c0 : c0 + chunk] @ m_mat.T
-        for r in range(sims.shape[0]):
-            s = sims[r]
-            qid = q_ids[c0 + r]
-            vi = np.flatnonzero(m_ids != qid)
-            if len(vi) == 0:
-                continue
-            if len(vi) > k:
-                part = vi[np.argpartition(-s[vi], k - 1)[:k]]
-                vi = vi[s[vi] >= s[part].min()]  # keep boundary ties
-            order = vi[np.lexsort((m_ids[vi], -s[vi]))][:k]
-            out_q.append(np.full(len(order), qid, dtype=np.int64))
-            out_n.append(m_ids[order])
-            out_s.append(s[order])
-            if s_q is not None and len(order) == k:
-                s_q[c0 + r] = s[order][-1]
-    return out_q, out_n, out_s
+    # one pass even with no queries, so the columns come back typed
+    parts = [
+        _topk_rows(
+            q_mat[c0 : c0 + chunk] @ m_mat.T,
+            q_ids[c0 : c0 + chunk],
+            m_ids,
+            k,
+            None if s_q is None else s_q[c0 : c0 + chunk],
+        )
+        for c0 in range(0, max(len(q_ids), 1), chunk)
+    ]
+    return [np.concatenate(col) for col in zip(*parts)]
 
 
 def _grouped_self_topk(tagged: DataFrame, keys: list[str], k: int) -> DataFrame:
@@ -926,39 +903,19 @@ def _grouped_self_topk(tagged: DataFrame, keys: list[str], k: int) -> DataFrame:
     with EQUAL ids never score (the self row, and duplicated-id inputs
     — the broadcast arm's skip-self contract).  A members-only group in
     a two-sided stage (a salt bucket that drew no queries) emits
-    nothing.  The matmul is chunked over queries so task memory stays
-    O(chunk · |members|) however many queries probe one block."""
+    nothing."""
     out_schema = "qa BIGINT, vec_id BIGINT, cos_sim DOUBLE"
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "qa": np.array([], dtype=np.int64),
-                "vec_id": np.array([], dtype=np.int64),
-                "cos_sim": np.array([], dtype=np.float64),
-            }
-        )
         ids = pdf["id"].to_numpy()
         mat = _norm_rows(_matrix(pdf["__vec"]))
         if bool(pdf["selftask"].iloc[0]):
-            q_ids, q_mat = ids, mat
-            m_ids, m_mat = ids, mat
+            q_ids, q_mat, m_ids, m_mat = ids, mat, ids, mat
         else:
             qm = pdf["side"].to_numpy() == 1
-            q_ids, q_mat = ids[qm], mat[qm]
-            m_ids, m_mat = ids[~qm], mat[~qm]
-            if len(q_ids) == 0 or len(m_ids) == 0:
-                return empty
-        out_q, out_n, out_s = _topk_against(q_ids, q_mat, m_ids, m_mat, k)
-        if not out_q:
-            return empty
-        return pd.DataFrame(
-            {
-                "qa": np.concatenate(out_q),
-                "vec_id": np.concatenate(out_n),
-                "cos_sim": np.concatenate(out_s),
-            }
-        )
+            q_ids, q_mat, m_ids, m_mat = ids[qm], mat[qm], ids[~qm], mat[~qm]
+        qa, nb, sim, _ = _topk_against(q_ids, q_mat, m_ids, m_mat, k)
+        return pd.DataFrame({"qa": qa, "vec_id": nb, "cos_sim": sim})
 
     return tagged.groupBy(*keys).applyInPandas(fn, out_schema)
 
@@ -1089,6 +1046,8 @@ def exact_nn_topk(
     identically to an oracle."""
     from streaming_spark.scratch import stage, unpin
 
+    if k < 1:
+        raise ValueError(f"exact_nn_topk: k must be >= 1, got {k}")
     spark = vectors.sparkSession
     base = vectors.select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__vec")
@@ -1196,7 +1155,7 @@ def exact_nn_topk(
         # own-cell exact top-k + the per-query k-th-best bound, via the
         # SHARED scoring loop (the same code object pass B runs — the
         # arms' "identical math" contract is mechanical, not manual)
-        out_q, out_n, out_s = _topk_against(ids, mat, ids, mat, k, s_q=s_q)
+        qa, nb, sim, _ = _topk_against(ids, mat, ids, mat, k, s_q=s_q)
         # probe bounds for every query in the cell, own-cell excluded.
         # CELL granularity (r9): the per-cell alpha is the cell's max
         # member angle, and the bound is monotone increasing in alpha,
@@ -1212,31 +1171,20 @@ def exact_nn_topk(
         bound = np.cos(np.maximum(0.0, theta[:, cells_v] - alpha_v[None, :]))
         mask = (bound >= s_q[:, None] - 1e-9) & (cells_v[None, :] != own[:, None])
         ri, ci = np.where(mask)
-        parts = [
-            pd.DataFrame(
-                {
-                    "qa": ids[ri],
-                    "vec_id": np.full(len(ri), -1, dtype=np.int64),
-                    "cos_sim": np.full(len(ri), -2.0),
-                    "probe_cell": cells_v[ci].astype(np.int32),
-                    "kind": np.ones(len(ri), dtype=np.int32),
-                }
-            )
-        ]
-        if out_q:
-            nk = sum(len(a) for a in out_q)
-            parts.append(
-                pd.DataFrame(
-                    {
-                        "qa": np.concatenate(out_q),
-                        "vec_id": np.concatenate(out_n),
-                        "cos_sim": np.concatenate(out_s),
-                        "probe_cell": np.full(nk, -1, dtype=np.int32),
-                        "kind": np.zeros(nk, dtype=np.int32),
-                    }
-                )
-            )
-        return pd.concat(parts, ignore_index=True)
+        nk, np_ = len(qa), len(ri)
+        return pd.DataFrame(
+            {
+                "qa": np.concatenate([ids[ri], qa]),
+                "vec_id": np.concatenate([np.full(np_, -1, dtype=np.int64), nb]),
+                "cos_sim": np.concatenate([np.full(np_, -2.0), sim]),
+                "probe_cell": np.concatenate(
+                    [cells_v[ci].astype(np.int32), np.full(nk, -1, dtype=np.int32)]
+                ),
+                "kind": np.concatenate(
+                    [np.ones(np_, dtype=np.int32), np.zeros(nk, dtype=np.int32)]
+                ),
+            }
+        )
 
     fused, fused_dir = stage(
         assigned_vec.select("vec_id", "__vec", "cell")
@@ -1337,12 +1285,7 @@ def exact_nn_topk(
         F.col("vec_id").alias("neighbor_id"),
         F.col("cos_sim").alias("sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim", "rank")
-    )
+    return _rank_window(scored, k).select("query_id", "neighbor_id", "sim", "rank")
 
 
 def cosine_pairs(
@@ -1447,11 +1390,12 @@ def _cosine_pairs_broadcast(
     stats_out: dict | None = None,
 ) -> DataFrame:
     emb = vectors.select(id_col, vec_col)
-    rows = emb.collect()  # small-side contract: N x dim floats fit in driver
-    if len(rows) < 2:
+    # small-side contract: N x dim floats fit in driver
+    ids, mat = _collect_queries(emb, vec_col, id_col)
+    if len(ids) < 2:
         if stats_out is not None:
             stats_out.update(
-                n_rows=len(rows),
+                n_rows=len(ids),
                 n_blocks=0,
                 n_tasks=0,
                 candidates=0,
@@ -1461,12 +1405,10 @@ def _cosine_pairs_broadcast(
             vectors.sparkSession,
             [], "id_a BIGINT, id_b BIGINT, cos_sim DOUBLE"
         )
-    ids = np.array([r[0] for r in rows])
-    mat = _norm_rows(_matrix([r[1] for r in rows]))
     if stats_out is not None:
         # the broadcast arm scores every pair by design (output-bound
         # shuffle, in-partition matmul) — candidates = the ceiling
-        n = len(rows)
+        n = len(ids)
         stats_out.update(
             n_rows=n,
             n_blocks=0,
@@ -2073,17 +2015,17 @@ def pq_encode(
 
 
 class _RunningTopR:
-    """Per-partition running top-``topr`` per query for the ADC scan
-    (:func:`_adc_topk`, its one user, which serves pq_topk, ivfpq_topk
-    and ivfpq_topk_local): each chunk OFFERs a query's candidate
-    (sims, ids), the state keeps the best ``topr`` seen so far, and
-    FLUSH emits one partial frame per partition.  This bounds the
-    global candidate window's shuffle input at O(partitions × Q × topr)
-    instead of O(chunks × Q × topr) — same
-    argument as cosine_topk's partial stage (a production 128 MB
-    partition holds ~50 Arrow chunks).  Padding rows carry sim = -inf;
-    flush drops on NON-FINITE SIM, never on the id (a corpus is free to
-    use negative vec_ids).
+    """Per-partition running top-``topr`` per query, shared by
+    :func:`cosine_topk`'s partial stage and the ADC scan
+    (:func:`_adc_topk`, which serves pq_topk, ivfpq_topk and
+    ivfpq_topk_local): each chunk OFFERs a query's candidate (sims,
+    ids), the state keeps the best ``topr`` seen so far, and FLUSH
+    emits one partial frame per partition.  This bounds the global
+    window's shuffle input at O(partitions × Q × topr) instead of
+    O(chunks × Q × topr) (a production 128 MB partition holds ~50
+    Arrow chunks).  Padding rows and NaN-poisoned candidates carry
+    sim = -inf; flush drops on NON-FINITE SIM, never on the id (a
+    corpus is free to use negative vec_ids).
 
     Retention is DETERMINISTIC under the (sim DESC, vec_id ASC) total
     order (_top_by_sim_then_id): ADC sims tie frequently — vectors
@@ -2125,14 +2067,17 @@ class _RunningTopR:
 
 
 def _collect_queries(
-    queries: DataFrame, vec_col: str
+    queries: DataFrame, vec_col: str, id_col: str = "vec_id"
 ) -> tuple[np.ndarray, np.ndarray]:
-    """An ADC serve's query batch, collected driver-side to build the
-    LUTs (the bounded-queries contract of cosine_topk's broadcast):
-    ids and row-normalized vectors."""
-    q_rows = queries.select("vec_id", vec_col).collect()
-    q_ids = np.array([r[0] for r in q_rows])
-    return q_ids, _norm_rows(_matrix([r[1] for r in q_rows]))
+    """A small table collected driver-side as (ids, row-normalized
+    float64 matrix) — the bounded side every broadcast arm ships (a
+    query batch, an ADC serve's LUT input, a small-table self join).
+    An empty table gives a (0, 0) matrix."""
+    rows = queries.select(id_col, vec_col).collect()
+    ids = np.array([r[0] for r in rows])
+    if not rows:
+        return ids, np.empty((0, 0))
+    return ids, _norm_rows(_matrix([r[1] for r in rows]))
 
 
 def _adc_topk(
@@ -2187,13 +2132,8 @@ def _adc_topk(
     partial = ensure_parallelism(enc).mapInPandas(
         adc_part, "query_id BIGINT, vec_id BIGINT, adc_sim DOUBLE"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_sim").desc(), F.col("vec_id")
-    )
-    cand = (
-        partial.withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") <= rerank)
-        .select("query_id", "vec_id")
+    cand = _rank_window(partial, rerank, "adc_sim", "vec_id", "r").select(
+        "query_id", "vec_id"
     )
     return _topk_on_candidates(cand, queries, vectors, k, vec_col)
 
@@ -2850,8 +2790,10 @@ def ann_index_save(
     Arrays are stored as nested lists of float64 — exact for the
     round-trip (Python floats are IEEE doubles and json round-trips
     them via repr), so a loaded index reproduces bit-identical
-    assignments, codes and ADC scores."""
-    import json
+    assignments, codes and ADC scores.  The write is atomic (tmp +
+    rename): a crash mid-save keeps the previous quantizer, which a
+    staged index's fingerprint still names."""
+    from streaming_spark.operators.index_commit import write_marker
 
     artifact = {
         "format": "streaming-spark-ann",
@@ -2868,8 +2810,7 @@ def ann_index_save(
         "codebooks": None if codebooks is None else codebooks.tolist(),
         "rotation": None if rotation is None else rotation.tolist(),
     }
-    with open(path, "w", encoding="utf-8") as f:
-        json.dump(artifact, f)
+    write_marker(path, artifact)
 
 
 def ann_index_load(path: str) -> dict:

@@ -277,9 +277,9 @@ def unigram_encode_counts(
 def unigram_save(path: str, pieces: dict[str, float], coverage: float = 1.0) -> None:
     """Persist a trained piece table as a versioned JSON artifact
     (train-once / encode-many pipeline boundary — same contract as
-    bpe_save / ann_index_save).  Pieces stored sorted for a stable
-    byte-identical artifact."""
-    import json
+    bpe_save / ann_index_save, atomic write included).  Pieces stored
+    sorted for a stable byte-identical artifact."""
+    from streaming_spark.operators.index_commit import write_marker
 
     artifact = {
         "format": "streaming-spark-unigram",
@@ -287,8 +287,7 @@ def unigram_save(path: str, pieces: dict[str, float], coverage: float = 1.0) -> 
         "coverage": coverage,
         "pieces": {p: pieces[p] for p in sorted(pieces)},
     }
-    with open(path, "w", encoding="utf-8") as f:
-        json.dump(artifact, f, ensure_ascii=True)
+    write_marker(path, artifact)
 
 
 def unigram_load(path: str) -> dict:

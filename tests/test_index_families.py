@@ -13,14 +13,17 @@ import os
 import pathlib
 import shutil
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 import streaming_spark
+from streaming_spark.operators import bpe
 from streaming_spark.operators import digest_index as di
 from streaming_spark.operators import index_commit as ic
 from streaming_spark.operators import neardup_index as ni
 from streaming_spark.operators import similarity as sim
+from streaming_spark.operators import unigram
 from streaming_spark.queries.registry import T
 from tests.conftest import SF_CORRECT, SF_SMOKE
 from tests.test_neardup_index import _batch, _pairs, _synth_corpus, _word_docs
@@ -253,6 +256,49 @@ def test_params_write_is_atomic(spark, tmp_path, monkeypatch, family):
     assert not os.path.exists(os.path.join(d, "_params.json"))
     build(d)
     assert os.path.isfile(os.path.join(d, "_params.json"))
+
+
+def _bpe(path, v):
+    bpe.bpe_save(path, [("a", "b")] if v == 0 else [("c", "d"), ("e", "f")])
+
+
+def _unigram(path, v):
+    unigram.unigram_save(path, {"a": -1.0} if v == 0 else {"b": -2.0})
+
+
+def _ann(path, v):
+    sim.ann_index_save(path, dim=2, centroids=np.eye(2) * (1.0 + v))
+
+
+_ARTIFACTS = {
+    "bpe": (_bpe, bpe.bpe_load),
+    "unigram": (_unigram, unigram.unigram_load),
+    "ann": (_ann, sim.ann_index_load),
+}
+
+
+@pytest.mark.parametrize("kind", sorted(_ARTIFACTS))
+def test_artifact_save_is_atomic(tmp_path, monkeypatch, kind):
+    """A save that crashes while writing over an existing tokenizer or
+    ANN artifact keeps the previous one: it still loads, unchanged.  A
+    lost quantizer would strand a staged ANN index, whose serve refuses
+    any other fingerprint."""
+    save, load = _ARTIFACTS[kind]
+    path = str(tmp_path / f"{kind}.json")
+    save(path, 0)
+    before = repr(load(path))
+
+    def torn_dump(obj, f, *a, **kw):
+        f.write(json.dumps(obj)[:20])
+        raise OSError("disk full mid-write")
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(OSError, match="mid-write"):
+        save(path, 1)
+    monkeypatch.undo()
+    assert repr(load(path)) == before
+    save(path, 1)
+    assert repr(load(path)) != before
 
 
 class _Crash(Exception):

@@ -669,8 +669,14 @@ def test_similarity_arms_agree_on_zero_vectors_and_empty_input(spark):
 def test_exact_nn_topk_arms_agree(spark):
     """The broadcast arm (auto's pick at this size) and the blocked arm
     must return identical (query, rank) → (neighbor, sim) maps — the
-    auto routing is a physical choice, never a semantic one."""
-    from streaming_spark.operators.similarity import exact_nn_topk
+    auto routing is a physical choice, never a semantic one.  With a
+    NaN-poisoned vector in the corpus both arms follow one rule: a
+    non-finite sim is never returned and every finite candidate is
+    ranked, as a numpy brute force over the finite sims ranks them."""
+    from streaming_spark.operators.similarity import (
+        exact_nn_topk,
+        ivf_centroids,
+    )
 
     rng = np.random.default_rng(31)
     vecs = rng.standard_normal((70, 12)).astype(np.float32)
@@ -689,6 +695,51 @@ def test_exact_nn_topk_arms_agree(spark):
     blocked = snap(exact_nn_topk(df, k=2, mode="blocked"))
     assert auto == blocked
     assert len(auto) == 70 * 2
+
+    # NaN case: row 7 is poisoned; the 5 finite rows hold 4 neighbors
+    # each, so k=5 also asks for more neighbors than exist
+    fin = rng.standard_normal((5, 6))
+    poison = [np.nan] + [1.0] * 5
+    rows = [(i, fin[i].tolist()) for i in range(5)] + [(7, poison)]
+    df = spark.createDataFrame(
+        rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>"
+    ).repartition(3)
+    cent = ivf_centroids(df.filter(F.col("vec_id") != 7), 6, 2)
+    unit = fin / np.linalg.norm(fin, axis=1, keepdims=True)
+    sims = unit @ unit.T
+    for k in (2, 5):
+        want = {}
+        for q in range(5):
+            nbs = sorted((-sims[q, j], j) for j in range(5) if j != q)[:k]
+            for rank, (neg, j) in enumerate(nbs, 1):
+                want[(q, rank)] = (j, round(-neg, 9))
+        assert snap(exact_nn_topk(df, k=k, mode="broadcast")) == want
+        assert snap(
+            exact_nn_topk(df, k=k, mode="blocked", centroids=cent)
+        ) == want
+
+
+@pytest.mark.parametrize("mode", ["broadcast", "blocked"])
+def test_exact_nn_topk_rejects_k_below_one(spark, mode):
+    """k < 1 is refused with ValueError before any Spark job, in every
+    mode (it used to fail inside a blocked task and return rank-1 rows
+    from the broadcast arm)."""
+    from streaming_spark.operators.similarity import exact_nn_topk
+
+    df = spark.createDataFrame(
+        [(i, [1.0, float(i)]) for i in range(4)],
+        "vec_id BIGINT, embedding ARRAY<DOUBLE>",
+    )
+    sc = spark.sparkContext
+    group = f"nn-k0-{mode}"
+    sc.setJobGroup(group, group)
+    try:
+        for k in (0, -1):
+            with pytest.raises(ValueError, match="k must be >= 1"):
+                exact_nn_topk(df, k=k, mode=mode)
+    finally:
+        sc.setJobGroup("", "")
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
 
 
 def test_exact_nn_topk_salted_tasks_agree(spark, monkeypatch):
@@ -4228,7 +4279,9 @@ def test_cosine_topk_nan_vector_does_not_crash(spark):
     not NaN components) must degrade, not crash: the partial-selection
     helper treats NaN sims as -inf, so a chunk with fewer healthy rows
     than k still fills its rectangular buffers and the healthy top-k
-    comes back correct."""
+    comes back correct.  A non-finite sim is never returned: with k
+    above the healthy neighbor count, the 7 healthy rows come back and
+    the poisoned one does not."""
     rows = [(0, [1.0, 0.0, 0.0, 0.0])]
     for i in range(1, 8):
         v = [1.0, 0.1 * i, 0.0, 0.0]
@@ -4245,6 +4298,13 @@ def test_cosine_topk_nan_vector_does_not_crash(spark):
     )
     assert [r.neighbor_id for r in got] == [1, 2, 3]
     assert all(np.isfinite(r.sim) for r in got)
+    wide = (
+        cosine_topk(df, df.filter(F.col("vec_id") == 0), k=9)
+        .orderBy("rank")
+        .collect()
+    )
+    assert [r.neighbor_id for r in wide] == [1, 2, 3, 4, 5, 6, 7]
+    assert all(np.isfinite(r.sim) for r in wide)
 
 
 def test_simhash_full_width_band(spark):

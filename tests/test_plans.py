@@ -652,26 +652,67 @@ def _svd(node):
 def test_quantizer_steps_have_one_owner():
     """Each shared step of the quantizer family in similarity.py lives
     in one function: the md5-ordered training sample in _md5_sample,
-    the per-partition ADC top-R in _adc_topk, and the Procrustes SVD in
-    _opq_alternation.  A second copy fails here."""
+    the per-partition running top-R built once in _adc_topk and once in
+    cosine_topk, and the Procrustes SVD in _opq_alternation.  A second
+    copy fails here."""
     path = pathlib.Path(streaming_spark.__file__).parent / "operators/similarity.py"
     tree = ast.parse(path.read_text(), filename=str(path))
-    owners = {
-        "_md5_sample": _md5_order,
-        "_adc_topk": _running_top_r,
-        "_opq_alternation": _svd,
+    funcs = {
+        fn.name: fn for fn in tree.body if isinstance(fn, ast.FunctionDef)
     }
-    found = {owner: [] for owner in owners}
-    for fn in ast.walk(tree):
-        if isinstance(fn, ast.FunctionDef) and fn.name in owners:
-            found[fn.name] = [
-                n.lineno for n in ast.walk(fn) if owners[fn.name](n)
-            ]
-    for owner, match in owners.items():
+    owners = [
+        (_md5_order, ("_md5_sample",)),
+        (_running_top_r, ("_adc_topk", "cosine_topk")),
+        (_svd, ("_opq_alternation",)),
+    ]
+    for match, names in owners:
+        found = []
+        for name in names:
+            lines = [n.lineno for n in ast.walk(funcs[name]) if match(n)]
+            assert len(lines) == 1, (name, lines)
+            found += lines
         sites = [n.lineno for n in ast.walk(tree) if match(n)]
-        assert len(found[owner]) == 1, (owner, found[owner])
-        assert sites == found[owner], f"{owner}'s step also at lines {sites}"
+        assert sorted(sites) == sorted(found), f"{names}' step also at {sites}"
 
+
+def _np_call(node, name):
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == name
+        and isinstance(node.func.value, ast.Name)
+        and node.func.value.id == "np"
+    )
+
+
+def test_exact_scoring_steps_have_one_owner():
+    """The exact-scoring steps of similarity.py have one owner each:
+    ``np.argpartition`` runs only in the (sim DESC, id ASC) selection
+    ``_top_by_sim_then_id`` and the IVF probe rule ``probed_from_qc``;
+    one ``np.lexsort`` orders a query's top-k rows; ``row_number``
+    appears only in the rank window ``_rank_window``.  A hand copy of
+    any of them fails here."""
+    path = pathlib.Path(streaming_spark.__file__).parent / "operators/similarity.py"
+    tree = ast.parse(path.read_text(), filename=str(path))
+    owned = {}
+    for fn in tree.body:
+        if isinstance(fn, ast.FunctionDef):
+            owned.update({id(n): fn.name for n in ast.walk(fn)})
+
+    def sites(match):
+        return [
+            (owned.get(id(n)), n.lineno) for n in ast.walk(tree) if match(n)
+        ]
+
+    argpart = sites(lambda n: _np_call(n, "argpartition"))
+    allowed = {"_top_by_sim_then_id", "probed_from_qc"}
+    assert [s for s in argpart if s[0] not in allowed] == [], argpart
+    lexsort = sites(lambda n: _np_call(n, "lexsort"))
+    assert len(lexsort) <= 1, lexsort
+    row_number = sites(
+        lambda n: isinstance(n, ast.Attribute) and n.attr == "row_number"
+    )
+    assert [s for s in row_number if s[0] != "_rank_window"] == [], row_number
 
 
 def test_pipes_share_one_arrow_path():
