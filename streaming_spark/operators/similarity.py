@@ -854,20 +854,10 @@ def _topk_rows(sims, q_ids, m_ids, k, s_q=None):
         out_s.append(s[order])
         if s_q is not None and len(order) == k:
             s_q[r] = s[order[-1]]
-    if not out_q:
-        return (
-            np.empty(0, dtype=np.int64),
-            m_ids[:0],
-            np.empty(0),
-            np.empty(0, dtype=np.int32),
-        )
+    if not out_q:  # typed empty columns
+        out_q, out_n, out_s = [np.empty(0, dtype=np.int64)], [m_ids[:0]], [np.empty(0)]
     rank = [np.arange(1, len(a) + 1, dtype=np.int32) for a in out_q]
-    return (
-        np.concatenate(out_q),
-        np.concatenate(out_n),
-        np.concatenate(out_s),
-        np.concatenate(rank),
-    )
+    return tuple(np.concatenate(c) for c in (out_q, out_n, out_s, rank))
 
 
 def _topk_against(q_ids, q_mat, m_ids, m_mat, k, s_q=None):
